@@ -2,6 +2,8 @@
 fixtures and published row-level expectations
 (/root/reference/tests/test_american_football.py:246-386)."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -9,6 +11,12 @@ from unravelsports_spark.datasets.bdb import BigDataBowlDataset
 from unravelsports_spark.models.af_graph_converter import AmericanFootballGraphConverter
 
 FILES = "/root/reference/tests/files"
+
+if not os.path.isdir(FILES):
+    pytest.skip(
+        "needs the reference checkout's fixture files, which are not present",
+        allow_module_level=True,
+    )
 
 
 @pytest.fixture(scope="module")

@@ -2,6 +2,8 @@
 inference, orientation flip, splits. Mirrors reference load() semantics
 (kloppy_polars.py:813-921)."""
 
+import re
+
 import numpy as np
 import pandas as pd
 import pytest
@@ -16,7 +18,7 @@ from unravelsports_spark.operators.kinematics import (
     apply_speed_acceleration_filters,
     finalize_kinematics,
 )
-from unravelsports_spark.operators.melt import TrackedObject
+from unravelsports_spark.operators.melt import TrackedObject, melt_wide_tracking
 from unravelsports_spark.operators.orientation import convert_orientation_to_ball_owning
 from unravelsports_spark.operators.possession import infer_ball_ownership, infer_goalkeepers
 from unravelsports_spark.settings import DefaultSettings
@@ -231,3 +233,42 @@ def test_discover_objects_explicit_team_mapping(spark):
     objs = discover_objects(wide, team_of=lambda oid: team.get(oid))
     got = {o.object_id: o.team_id for o in objs}
     assert got == {"home_1": "tA", "home_2": "tA", "away_9": "tB", "ball": "ball"}
+
+
+def test_kinematics_keep_matches_apart(spark):
+    """A union of matches that share object ids and timestamps equals the
+    per-match results: the kinematics windows and the smoothing are keyed
+    by game."""
+    wide = _wide_fixture(spark)
+    moved = wide.select(
+        *[(F.col(c) * 3 - 1).alias(c) if c.endswith(("_x", "_y")) else c for c in wide.columns]
+    )
+    a, b = melt_wide_tracking(wide, OBJECTS, "g1"), melt_wide_tracking(moved, OBJECTS, "g2")
+
+    def kinematics(df):
+        return add_acceleration(add_velocity(df)).drop("dx", "dy", "dz")
+
+    cols = ["game_id", "frame_id", "id", "vx", "vy", "v", "ax", "ay", "a", "dt"]
+    per_match = sorted(kinematics(a).unionByName(kinematics(b)).select(*cols).collect())
+    union = sorted(kinematics(a.unionByName(b)).select(*cols).collect())
+    assert union == per_match
+    assert {r.game_id for r in union} == {"g1", "g2"}
+
+
+def _node_names(df):
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return [m.group(1) for m in re.finditer(r"^[\s:|+\-]*(?:\*\(\d+\)\s*)?([A-Za-z]+)", plan, re.M)]
+
+
+def test_load_wide_plans_each_stage_once(spark):
+    """One match's executed plan runs the Savitzky–Golay kernel once, joins
+    nothing, and shuffles at most three times: twice on the (game, id,
+    period) series key around the kernel, once on the frame key."""
+    ds = TrackingDataset.load_wide(
+        _wide_fixture(spark), OBJECTS, DefaultSettings(home_team_id="home", away_team_id="away"),
+        game_id="g",
+    )
+    names = _node_names(ds.data)
+    assert names.count("FlatMapGroupsInPandas") == 1, names
+    assert not [n for n in names if "Join" in n], names
+    assert len([n for n in names if n.endswith("Exchange")]) <= 3, names

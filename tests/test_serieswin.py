@@ -83,3 +83,18 @@ def test_serieswin_null_order_falls_back(spark):
         moving_sum_count(df, "event_type", "event_id", F.col("value"), 3, n_ranges=64), mcols
     )
     assert mgot == mbase
+
+
+@pytest.mark.parametrize("n_ranges", [1, 2, 5, 64])
+def test_moving_sum_null_values_across_buckets(spark, n_ranges):
+    """NULL values under a non-null integral order take the decomposed path:
+    a frame whose in-bucket values are all NULL still sums the carry from
+    the buckets before it (ids 0–9, NULL at 5 and 6: at id 6 the frame
+    3..6 sums to 7.0)."""
+    rows = [("a", i, None if i in (5, 6) else float(i)) for i in range(10)]
+    df = spark.createDataFrame(rows, "event_type string, event_id bigint, value double")
+    cols = ["event_type", "event_id", "win_sum", "win_n"]
+    base = _canon(moving_sum_count(df, "event_type", "event_id", F.col("value"), 3, n_ranges=None), cols)
+    got = _canon(moving_sum_count(df, "event_type", "event_id", F.col("value"), 3, n_ranges=n_ranges), cols)
+    assert got == base
+    assert repr(("a", 6, 7.0, 4)) in base

@@ -3,6 +3,8 @@
 TTI scalar (tests/test_soccer.py:514-566, BASELINE.md known-good kernel
 scalar) — the strongest cross-implementation check available without kloppy."""
 
+import os
+
 import numpy as np
 import pytest
 
@@ -10,6 +12,12 @@ from unravelsports_spark.datasets.sportec import load_sportec, parse_meta
 from unravelsports_spark.models.pressing_intensity import PressingIntensity
 
 FILES = "/root/reference/tests/files"
+
+if not os.path.isdir(FILES):
+    pytest.skip(
+        "needs the reference checkout's fixture files, which are not present",
+        allow_module_level=True,
+    )
 GOLDEN_TTI_00 = 2.6428493704618106
 
 

@@ -3,8 +3,15 @@
 `load_wide` mirrors KloppyPolarsDataset.load() (/root/reference/unravel/
 soccer/dataset/kloppy_polars.py:813-921) as a linear Spark pipeline:
 melt → velocity → acceleration → caps → cleanup → possession/carrier
-inference → orientation flip → GK inference → dedup + sort. Every stage
-except Savitzky–Golay smoothing is pure Catalyst.
+inference → orientation flip → GK inference → dedup. Every stage except
+Savitzky–Golay smoothing is pure Catalyst. The executed plan of one match
+runs each stage once: the melt is a single generator over the wide frame,
+kinematics and smoothing are keyed by the (game, id, period) series,
+possession is one window pass over a frame shuffle, and the dedup reuses
+that frame partitioning. That is one Python kernel and three exchanges
+per match: the series key is shuffled before the kernel and again after
+it, because a grouped-map's output does not carry its input's
+partitioning.
 
 Dataset utilities mirror unravel/utils/utils.py:41-78 and
 unravel/utils/objects/graph_dataset.py:120-384:
@@ -74,7 +81,11 @@ class TrackingDataset:
             settings.orientation = "BALL_OWNING_TEAM"
         if infer_goalkeepers_flag:
             df = infer_goalkeepers(df, settings.pitch_dimensions.pitch_length)
-        df = df.dropDuplicates([Column.OBJECT_ID, Column.FRAME_ID, Column.PERIOD_ID])
+        # game_id is constant here; keying on it lets the dedup reuse the
+        # possession pass's frame partitioning instead of shuffling again
+        df = df.dropDuplicates(
+            [Column.GAME_ID, Column.OBJECT_ID, Column.FRAME_ID, Column.PERIOD_ID]
+        )
         return cls(data=df, settings=settings)
 
     # -- ML utilities -------------------------------------------------------

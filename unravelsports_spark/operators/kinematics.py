@@ -3,9 +3,11 @@ optional Savitzky–Golay smoothing (W6), speed/acceleration caps (P6).
 
 Re-expresses /root/reference/unravel/soccer/dataset/kloppy_polars.py:313-491
 and unravel/soccer/dataset/utils.py:6-39 Spark-first: the diff/divide/fill
-chain is pure Catalyst window work (whole-stage codegen, one shuffle on the
-(id, period) partition key shared by both stages); only the polynomial
-smoothing needs Python, as an Arrow grouped-map over (id, period) series.
+chain is pure Catalyst window work (whole-stage codegen) partitioned by the
+(game, id, period) series key; only the polynomial smoothing needs Python,
+as an Arrow grouped-map over the same series, which runs on the velocity
+window's partitioning. The game is part of the key, so a union of matches
+that reuse object ids keeps every series separate.
 """
 
 from __future__ import annotations
@@ -23,7 +25,7 @@ DEFAULT_PLAYER_SMOOTHING = {"window_length": 7, "polyorder": 1}
 DEFAULT_BALL_SMOOTHING = {"window_length": 3, "polyorder": 1}
 
 def _obj_window():
-    return Window.partitionBy(Column.OBJECT_ID, Column.PERIOD_ID).orderBy(
+    return Window.partitionBy(*Group.BY_OBJECT_PERIOD).orderBy(
         F.asc_nulls_last(Column.TIMESTAMP), F.asc_nulls_last(Column.TEAM_ID)
     )
 
@@ -71,7 +73,7 @@ def _smooth_velocity(df: DataFrame, player_smoothing, ball_smoothing) -> DataFra
                 )
         return pdf
 
-    return df.groupBy(Column.OBJECT_ID, Column.PERIOD_ID).applyInPandas(smooth, out_schema)
+    return df.groupBy(*Group.BY_OBJECT_PERIOD).applyInPandas(smooth, out_schema)
 
 
 def add_acceleration(df: DataFrame) -> DataFrame:

@@ -3,10 +3,12 @@
 Re-expresses /root/reference/unravel/soccer/dataset/kloppy_polars.py:546-723
 Spark-first:
 
-- J1: players ⟕ per-frame ball position (both sides co-partition on the frame
-  key — a single shuffle, no broadcast needed since both scale with frames);
-- A4: conditional argmin-within-group via `min_by` over a (dist, id) struct —
-  deterministic tie-break, no second shuffle beyond the frame aggregation;
+- A4 as one window pass over the frame key: every row sees its frame's ball
+  position (``first`` over the ball row), the closest player by a
+  conditional ``min_by`` over a (dist, id) struct — a deterministic
+  tie-break to the lowest id — and any provider-given owner. One shuffle on
+  the frame key and no join back onto the input, so the upstream
+  kinematics subtree (and its Python smoothing kernel) is planned once;
 - W2: goalkeeper inference via partitioned min over (frame, team).
 """
 
@@ -21,61 +23,53 @@ from ..schema import BALL, Column, Group
 def infer_ball_ownership(df: DataFrame, ball_carrier_threshold: float = 25.0) -> DataFrame:
     """Fill null ball_owning_team_id / derive is_ball_carrier from the closest
     player to the ball within the threshold; frames still lacking an owner are
-    dropped (reference :546-667)."""
-    ball = df.filter(F.col(Column.TEAM_ID) == BALL).select(
-        *Group.BY_FRAME,
-        F.col(Column.X).alias("ball_x"),
-        F.col(Column.Y).alias("ball_y"),
-        F.col(Column.Z).alias("ball_z"),
-    )
-    players = df.filter(F.col(Column.TEAM_ID) != BALL)
-    dist = F.sqrt(
-        (F.col(Column.X) - F.col("ball_x")) ** 2
-        + (F.col(Column.Y) - F.col("ball_y")) ** 2
-        + (F.col(Column.Z) - F.col("ball_z")) ** 2
-    )
-    players_ball = players.join(ball, on=Group.BY_FRAME, how="left").withColumn(
-        "ball_dist", dist
-    )
+    dropped (reference :546-667), as are rows with a null frame key, which
+    belong to no frame. Output columns: the frame key, the input's
+    other columns, ``ball_owning_team_id``, ``is_ball_carrier``."""
+    frame = Window.partitionBy(*Group.BY_FRAME)
+    is_player = F.col(Column.TEAM_ID) != BALL
 
-    bop_col = (
+    def first_where(cond, c):
+        return F.first(F.when(cond, c), ignorenulls=True).over(frame)
+
+    def ball(c: str):
+        return first_where(F.col(Column.TEAM_ID) == BALL, F.col(c))
+
+    dist = F.sqrt(
+        (F.col(Column.X) - ball(Column.X)) ** 2
+        + (F.col(Column.Y) - ball(Column.Y)) ** 2
+        + (F.col(Column.Z) - ball(Column.Z)) ** 2
+    )
+    closest = F.min_by(
+        F.struct(F.col(Column.TEAM_ID).alias("team"), F.col(Column.OBJECT_ID).alias("player")),
+        F.when(is_player, F.struct("_dist", Column.OBJECT_ID)),
+    ).over(frame)
+    within = F.min("_dist").over(frame) < ball_carrier_threshold
+    bop = (
         F.col(Column.BALL_OWNING_PLAYER_ID)
         if Column.BALL_OWNING_PLAYER_ID in df.columns
         else F.lit(None).cast("string")
     )
-    per_frame = players_ball.withColumn("_bop", bop_col).groupBy(*Group.BY_FRAME).agg(
-        F.first(Column.BALL_OWNING_TEAM_ID, ignorenulls=True).alias("_bot0"),
-        F.first("_bop", ignorenulls=True).alias("_bop0"),
-        F.min("ball_dist").alias("_min_dist"),
-        F.min_by(Column.TEAM_ID, F.struct("ball_dist", Column.OBJECT_ID)).alias("_closest_team"),
-        F.min_by(Column.OBJECT_ID, F.struct("ball_dist", Column.OBJECT_ID)).alias("_closest_player"),
+    owner_team = F.coalesce(
+        first_where(is_player, F.col(Column.BALL_OWNING_TEAM_ID)),
+        F.when(within, F.col("_closest.team")),
     )
-    within = F.col("_min_dist") < ball_carrier_threshold
-    inferred = per_frame.select(
-        *Group.BY_FRAME,
-        F.coalesce(F.col("_bot0"), F.when(within, F.col("_closest_team"))).alias(
-            Column.BALL_OWNING_TEAM_ID
-        ),
-        F.coalesce(F.col("_bop0"), F.when(within, F.col("_closest_player"))).alias(
-            Column.BALL_OWNING_PLAYER_ID
-        ),
-    )
-    # the inferred owner must be on the owning team: carrier flag only set for
-    # the owning player's row (reference :613-667)
-    drop = [Column.BALL_OWNING_TEAM_ID]
-    if Column.BALL_OWNING_PLAYER_ID in df.columns:
-        drop.append(Column.BALL_OWNING_PLAYER_ID)
-    return (
-        df.drop(*drop)
-        .join(inferred, on=Group.BY_FRAME, how="left")
-        .withColumn(
-            Column.IS_BALL_CARRIER,
-            F.col(Column.OBJECT_ID) == F.col(Column.BALL_OWNING_PLAYER_ID),
-        )
+    owner_player = F.coalesce(first_where(is_player, bop), F.when(within, F.col("_closest.player")))
+    d = (
+        df.withColumn("_dist", F.when(is_player, dist))
+        .withColumn("_closest", closest)
+        .withColumn("_bot", owner_team)
+        # the carrier flag is set only on the owning player's row
+        # (reference :613-667)
+        .withColumn(Column.IS_BALL_CARRIER, F.col(Column.OBJECT_ID) == owner_player)
         .fillna({Column.IS_BALL_CARRIER: False})
-        .drop(Column.BALL_OWNING_PLAYER_ID)
-        .na.drop(subset=[Column.BALL_OWNING_TEAM_ID])
     )
+    drop = {Column.BALL_OWNING_TEAM_ID, Column.BALL_OWNING_PLAYER_ID, *Group.BY_FRAME}
+    rest = [c for c in df.columns if c not in drop]
+    carrier = [] if Column.IS_BALL_CARRIER in rest else [Column.IS_BALL_CARRIER]
+    return d.select(
+        *Group.BY_FRAME, *rest, F.col("_bot").alias(Column.BALL_OWNING_TEAM_ID), *carrier
+    ).na.drop(subset=[Column.BALL_OWNING_TEAM_ID, *Group.BY_FRAME])
 
 
 def infer_goalkeepers(df: DataFrame, pitch_length: float = 105.0) -> DataFrame:

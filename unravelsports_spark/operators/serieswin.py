@@ -159,8 +159,10 @@ def moving_sum_count(
     return (
         joined.withColumn(
             out_sum,
+            # SUM ignores NULLs: an all-NULL side contributes nothing, and
+            # the frame is NULL only when both sides are
             F.when(m <= 0, F.col("_lsum")).otherwise(
-                F.col("_lsum") + F.coalesce(cs, F.lit(0))
+                F.coalesce(F.col("_lsum") + cs, F.col("_lsum"), cs)
             ),
         )
         .withColumn(

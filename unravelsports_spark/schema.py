@@ -44,7 +44,7 @@ class Column:
 class Group:
     BY_FRAME = [Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID]
     BY_FRAME_TEAM = BY_FRAME + [Column.TEAM_ID]
-    BY_OBJECT_PERIOD = [Column.OBJECT_ID, Column.PERIOD_ID]
+    BY_OBJECT_PERIOD = [Column.GAME_ID, Column.OBJECT_ID, Column.PERIOD_ID]
     BY_TIMESTAMP = BY_FRAME + [Column.TIMESTAMP]
 
 
