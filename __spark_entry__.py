@@ -23,23 +23,20 @@ def entry(spark: SparkSession) -> DataFrame:
 
 
 # Keys already driver-certified (green rows+schema+hash in CORRECTNESS_r01..
-# r14). The driver checks a bounded prefix of this dict, so enumerate
+# r15). Certification checks a bounded prefix of this dict, so enumerate
 # never-certified queries first to widen certification breadth; no keys are
-# renamed. Round-15 ROTATION (VERDICT r14 action #7, the documented plan
-# executed verbatim): all 47 hash-green r14 keys (CORRECTNESS_r14.json,
-# 47/47 exact + 3/3 rows-only) ENTER this set. The leaving cohort is the
-# 15-key r10 remainder (j8_asof_join, t_filter_funnel, d_semdedup_recall,
-# m_graph_custom_cells + s_ann_recall .. s_ann_from_index — last
-# driver-hashed r10) plus the OLDEST 32 of the 47-key r11 cohort
-# (d_mllib_minhash_join .. s_ann_ivfpq, list order = the cohort's registry
-# order, last driver-hashed r11). Priority-0 lands EXACTLY on 47:
-#   15 r10 remainder + 32 r11 leavers = 47 p0 (no new registrations this
-#   round — r15 is an optimization round),
-# leaving slots 48-50 for the three rows-only model checks whose turn it
-# is (m_efpi_possession, m_savgol_events, m_graph_convert_delaunay — last
-# driver-run r13, ordered first via _ROWS_ONLY_STALE below); with that,
-# every rows-only check has been driver-run within r13-r15 and no
-# certified key is older than r12 after this round's gate.
+# renamed. This rotation: all 47 hash-green r15 keys (CORRECTNESS_r15.json)
+# ENTER this set. The leaving cohort is 47 keys:
+#   - out for re-hash: 10 model twins ported to models/frames.py and
+#     8 r15 rewrites (w7_row_index, w8_rank_distributions, w9_interpolate_gaps,
+#     w10_moving_avg, t_nb_confusion, t_prep_to_shards_e2e,
+#     t_full_pipeline_e2e, d_label_communities);
+#   - the other 12 keys of the r11 remainder (s_kmeans_fit ..
+#     t_text_normalize);
+#   - the OLDEST 17 of the r12 cohort (t_langid_confusion ..
+#     d_minhash_accuracy, list order = registry order).
+# Priority-0 lands on 47, leaving slots 48-50 for the three rows-only
+# model checks whose turn it is (_ROWS_ONLY_STALE below).
 # q1_pricing_summary keeps its documented rotation exemption (ADVICE r6
 # #2): smoke-run by entry() every round + fresh-process re-verified.
 _CERTIFIED = frozenset(
@@ -51,91 +48,82 @@ _CERTIFIED = frozenset(
         # r8/r10 fresh-process oracle compares re-verified it hash-exact
         # at sf0.01.
         "q1_pricing_summary",
-        # ROUND-15 ROTATION (VERDICT r14 #7, the documented plan): the
-        # 15-key r10 remainder (j8_asof_join .. s_ann_from_index, last
-        # driver-hashed r10) LEAVES this round, plus the OLDEST 32 of the
-        # 47-key r11 cohort (d_mllib_minhash_join .. s_ann_ivfpq, list
-        # order = registry order, last driver-hashed r11) — 15 + 32 = 47
-        # priority-0 slots, exactly filling the window ahead of the three
-        # rows-only model checks below. After this round no certified key
-        # is older than r12.
-        # r11 green (CORRECTNESS_r11.json) REMAINDER: the youngest 15 of
-        # the r11 cohort stay certified one more round and LEAD the r16
-        # leaving cohort.
-        "t_prep_to_shards_e2e",
-        "s_kmeans_fit", "t_full_pipeline_e2e", "t_ngram_novelty",
-        "d_label_communities", "d_kcore_peeling", "d_containment_top_pairs",
-        "d_cross_source_overlap", "a24_l_diversity", "d_cluster_safe_split",
-        "s_embedding_dim_stats", "o17_jsonl_roundtrip", "mm_video_scene_cuts",
-        "mm_audio_segments", "t_text_normalize",
-        # r12 green (CORRECTNESS_r12.json, 47/47 hash-exact): the held r7
-        # key (t_langid_confusion), the 43-key r8-cohort re-certs, and the
-        # three r12 registrations (t_boilerplate_strip, d_simhash_neardup,
-        # t_html_extract).
-        "t_langid_confusion", "s_ann_mllib_brp", "f9_json_extract",
-        "o12_row_synthesis", "mm_decode_stats", "mm_decode_real",
-        "st_sliding_window", "st_session_window", "j8f_asof_forward",
-        "a9_approx_distinct", "mm_audio_real", "j9_interval_join",
-        "mm_video_real", "a17_sortedness", "a18_outliers", "mm_gif_real",
-        "d_minhash_accuracy", "o13_reservoir_sample", "a11_histogram",
-        "a12_corr_exact", "a13_rollup", "o14_pivot", "w8_rank_distributions",
-        "d_edit_distance", "a14_cube", "f11_string_agg", "f12_array_agg_sorted",
-        "f13_bitwise_agg", "a16_profile", "w10_moving_avg", "o15_morton_key",
-        "j10_full_outer", "st_session_window_native", "f14_variant_json",
+        # r12 green (CORRECTNESS_r12.json) REMAINDER: the youngest 27 of
+        # the r12 cohort; they lead the next leaving cohort.
+        "o13_reservoir_sample", "a11_histogram", "a12_corr_exact",
+        "a13_rollup", "o14_pivot", "d_edit_distance", "a14_cube",
+        "f11_string_agg", "f12_array_agg_sorted", "f13_bitwise_agg",
+        "a16_profile", "o15_morton_key", "j10_full_outer",
+        "st_session_window_native", "f14_variant_json",
         "f15_sql_text", "q7_volume_shipping", "q10_returned_items",
-        "a22_touch_attribution", "t_bm25_topk", "d_countmin_heavyhitters",
-        "d_dup_spans", "t_mixture_temperature", "d_semdedup_lsh", "m_pi_cells",
+        "a22_touch_attribution", "t_bm25_topk",
+        "d_countmin_heavyhitters", "d_dup_spans",
+        "t_mixture_temperature", "d_semdedup_lsh",
         "t_boilerplate_strip", "d_simhash_neardup", "t_html_extract",
-        # r13 green (CORRECTNESS_r13.json, 47/47 hash-exact): the 6-key r8
-        # remainder re-certs, the 37-key r9-cohort re-certs, and the four
-        # r13 registrations (o18_csv_roundtrip, a25_t_closeness,
-        # o19_warc_roundtrip, d_release_diff).
-        "p1_p2_project_filter", "f7_f8_conditional_literals", "p3_filter_eq",
-        "p4_range_between", "p5_modulo_sample", "p6_conditional_cap",
-        "p7_sign_flip", "p8_bool_derive", "j1_dim_join", "j2_agg_back_join",
-        "j3_semi_join", "j4_anti_join", "j5_enrich_revenue",
-        "j7_distinct_join", "a2_distinct_count", "a3_group_stats",
-        "a4_argmin_in_group", "d_jaccard_top_pairs", "w6_savgol_oracle",
-        "t_repetition_stats", "t_sequence_packing", "a15_hll_sketch_union",
-        "w9_interpolate_gaps", "t_bigram_logprob", "t_bpe_merges",
-        "t_bpe_tokenized_stats", "d_semdedup_multitable", "m_graph_cells",
-        "m_delaunay_cells", "m_af_cells", "m_efpi_cells", "m_savgol_cells",
-        "t_dsir_scores", "t_corpus_kl", "t_dsir_resample", "t_nb_confusion",
-        "d_bloom_decontamination", "t_shard_manifest", "d_incremental_dedup",
+        # r13 green (CORRECTNESS_r13.json, 47/47 hash-exact).
+        "p1_p2_project_filter", "f7_f8_conditional_literals",
+        "p3_filter_eq", "p4_range_between", "p5_modulo_sample",
+        "p6_conditional_cap", "p7_sign_flip", "p8_bool_derive",
+        "j1_dim_join", "j2_agg_back_join", "j3_semi_join",
+        "j4_anti_join", "j5_enrich_revenue", "j7_distinct_join",
+        "a2_distinct_count", "a3_group_stats", "a4_argmin_in_group",
+        "d_jaccard_top_pairs", "w6_savgol_oracle",
+        "t_repetition_stats", "t_sequence_packing",
+        "a15_hll_sketch_union", "t_bigram_logprob", "t_bpe_merges",
+        "t_bpe_tokenized_stats", "d_semdedup_multitable",
+        "m_savgol_cells", "t_dsir_scores", "t_corpus_kl",
+        "t_dsir_resample", "d_bloom_decontamination",
+        "t_shard_manifest", "d_incremental_dedup",
         "d_semantic_contamination", "o16_frequent_part_pairs",
-        "w13_event_transitions", "w14_daily_anomalies", "o18_csv_roundtrip",
-        "a25_t_closeness", "o19_warc_roundtrip", "d_release_diff",
-        # r14 green (CORRECTNESS_r14.json, 47/47 hash-exact): the 5-key r9
-        # remainder re-certs, the 32-key r10 leavers re-cert, and the ten
-        # r14 registrations (crawl triad, TFRecord, six model-fp twins).
+        "w13_event_transitions", "w14_daily_anomalies",
+        "o18_csv_roundtrip", "a25_t_closeness", "o19_warc_roundtrip",
+        "d_release_diff",
+        # r14 green (CORRECTNESS_r14.json, 47/47 hash-exact).
         "a5_conditional_sum", "a7_global_distinct", "w1_lag_diff",
         "w2_partitioned_min", "w3_rank_topk", "w4_sessionize",
-        "w5_tumbling_window", "o5_top_k_limit", "o6_union_all", "o8_unpivot",
-        "o9_explode_tokens", "o11_concat_key", "f1_string_ops",
-        "f2_temporal_trunc", "f3_math_ops", "w7_row_index", "f6_array_ops",
-        "f4_null_handling", "f5_casts", "t_token_stats",
-        "t_quality_by_source", "t_fingerprint", "d_exact_dedup_stats",
-        "d_minhash_signatures", "d_lsh_candidate_pairs", "d_dup_clusters",
-        "d_simhash", "s_ann_bruteforce", "s_ann_top_pairs",
-        "d_embedding_neardup", "s_ann_lsh", "s_ann_ivf",
-        "m_pressing_intensity_fp", "m_graph_convert_fp",
-        "m_graph_convert_delaunay_fp", "m_af_graph_convert_fp",
-        "m_efpi_possession_fp", "m_savgol_events_fp", "q6_forecast_revenue",
-        "mm_audio_spectral", "mm_image_phash", "t_unigram_vocab",
-        "t_unigram_tokens", "t_robots_filter", "t_frontier_plan",
-        "t_sitemap_extract", "o20_tfrecord_roundtrip",
+        "w5_tumbling_window", "o5_top_k_limit", "o6_union_all",
+        "o8_unpivot", "o9_explode_tokens", "o11_concat_key",
+        "f1_string_ops", "f2_temporal_trunc", "f3_math_ops",
+        "f6_array_ops", "f4_null_handling", "f5_casts",
+        "t_token_stats", "t_quality_by_source", "t_fingerprint",
+        "d_exact_dedup_stats", "d_minhash_signatures",
+        "d_lsh_candidate_pairs", "d_dup_clusters", "d_simhash",
+        "s_ann_bruteforce", "s_ann_top_pairs", "d_embedding_neardup",
+        "s_ann_lsh", "s_ann_ivf", "m_savgol_events_fp",
+        "q6_forecast_revenue", "mm_audio_spectral", "mm_image_phash",
+        "t_unigram_vocab", "t_unigram_tokens", "t_robots_filter",
+        "t_frontier_plan", "t_sitemap_extract",
+        "o20_tfrecord_roundtrip",
+        # r15 green (CORRECTNESS_r15.json, 47/47 hash-exact).
+        "d_mllib_minhash_join", "j8_asof_join",
+        "mm_image_dhash_dedup", "j6_label_join", "t_bpe_token_stats",
+        "t_pii_scrub", "t_url_domains", "d_contamination",
+        "k_salted_agg", "t_tfidf_terms", "t_vocab_top100",
+        "t_domain_mixture", "a10_quantiles", "s_kmeans_assign",
+        "t_sentences", "t_chunking", "d_pair_degrees",
+        "w11_scd2_intervals", "d_triangle_count", "t_bigram_pmi",
+        "t_filter_funnel", "a20_retention_cohorts",
+        "a21_ordered_funnel", "q3_shipping_priority",
+        "q5_local_supplier_volume", "w12_sliding_distinct_users",
+        "q18_large_volume_customer", "t_unigram_logprob",
+        "t_corpus_prep_e2e", "d_cluster_keep_best", "d_pagerank",
+        "d_semdedup_recall", "m_graph_custom_cells", "s_ann_pq",
+        "s_ann_ivfpq_residual", "s_ann_ivfpq", "s_ann_recall",
+        "d_lsh_recall", "t_hybrid_rrf", "d_cdc_chunks",
+        "t_wordpiece_vocab", "t_wordpiece_tokens", "mm_audio_mfcc",
+        "t_ppl_bucket_sample", "s_cluster_balanced_sample",
+        "a23_k_anonymity", "s_ann_from_index",
     }
 )
 
 
 # The six rows-only model checks overflow one 50-slot window, so they
-# alternate rounds. These three last ran rows-green in r13 (the other
-# three — m_pressing_intensity, m_graph_convert, m_af_graph_convert — ran
-# in r14), so it is their turn (VERDICT r14 #7); with p0 = 47 they take
-# slots 48-50, and every rows-only check has then been driver-run within
-# r13-r15. Each also has a hash-certified full-output _fp twin (r14).
-_ROWS_ONLY_STALE = ("m_efpi_possession", "m_savgol_events",
-                    "m_graph_convert_delaunay")
+# alternate rounds. These three last ran rows-green in r14 (the other three
+# ran in r15), so it is their turn; their PI and graph kernels also moved
+# onto models/frames.py, and m_af_graph_convert now reads the generated
+# BDB sample. Each also has a hash-certified full-output _fp twin.
+_ROWS_ONLY_STALE = ("m_pressing_intensity", "m_graph_convert",
+                    "m_af_graph_convert")
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

@@ -68,6 +68,40 @@ def test_nb_argmax_tiebreak_picks_lowest_label(spark):
     assert sum(r["n_docs"] for r in conf) == 2
 
 
+def test_nb_null_label_matches_duckdb_oracle(spark):
+    """A NULL label in the training half is never a class (it cannot
+    equi-join the model grid) but still counts toward the prior's document
+    total; a NULL label in the test half is scored like any other document
+    and reported as actual NULL — exactly what nb_confusion_sql computes."""
+    import duckdb
+    import pandas as pd
+
+    from unravelsports_spark.operators.nbayes import nb_confusion_sql
+
+    rows = [
+        (0, "en", "the cat sat on the mat"),
+        (1, "en", "the dog sat"),
+        (2, None, "der hund und die katze"),
+        (3, None, "the mat und die katze"),
+        (4, "de", "die katze sass auf der matte"),
+        (5, "de", "der hund sass"),
+        (6, "en", "a cat and a dog"),
+        (7, "de", "die matte"),
+    ]
+    schema = "doc_id long, lang string, text string"
+    conf = nb_confusion(spark.createDataFrame(rows, schema), label_col="lang", n_buckets=64)
+    con = duckdb.connect()
+    con.register("documents", pd.DataFrame(rows, columns=["doc_id", "lang", "text"]))
+    expected = con.execute(nb_confusion_sql("lang", 64)).fetchall()
+    con.close()
+
+    def key(r):
+        return tuple((v is None, v) for v in r)
+
+    assert sorted(map(tuple, conf.collect()), key=key) == sorted(expected, key=key)
+    assert any(r[0] is None for r in expected)  # the NULL test doc is scored
+
+
 def test_nb_confusion_covers_heldout_half_exactly(spark):
     docs = read_table(spark, SF, "documents")
     conf = nb_confusion(docs, label_col="lang")

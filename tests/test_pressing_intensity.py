@@ -97,3 +97,42 @@ def test_time_filter_and_validation(tracking, settings):
         pi.fit(start_time=0, end_time=None, period_id=None)
     out = pi.fit(start_time=0, end_time=400, period_id=1).output
     assert 0 < out.count() <= 11
+
+
+def _parent_order_frames(pdf, settings, orient):
+    """Frames in the order the per-group kernel sorted them before the
+    shared run kernel: (frame, orient key, id) with an explicit ascending
+    flag for the key and its NULL (ball) rows last."""
+    team = pdf["team_id"]
+    side = settings.home_team_id if orient in ("home_away", "away_home") else pdf["ball_owning_team_id"]
+    key = (team == side).astype(object)
+    key[team == "ball"] = None
+    descending = orient in ("home_away", "ball_owning")
+    pdf = pdf.assign(_orient_key=key).sort_values(
+        ["frame_id", "_orient_key", "id"],
+        ascending=[True, not descending, True],
+        na_position="last",
+        kind="stable",
+    )
+    for frame_id, g in pdf.groupby("frame_id", sort=False):
+        yield frame_id, {c: g[c].to_numpy() for c in g.columns}
+
+
+@pytest.mark.parametrize("method", ["teams", "full"])
+@pytest.mark.parametrize("orient", ["ball_owning", "pressing", "home_away", "away_home"])
+def test_every_orientation_matches_direct_kernel(tracking, settings, method, orient):
+    from unravelsports_spark.models.pressing_intensity import _pi_frame
+
+    params = dict(method=method, ball_method="max", speed_threshold=2.0, reaction_time=0.7,
+                  time_threshold=1.5, sigma=0.45, orient=orient)
+    got = {r.frame_id: r for r in fit(tracking, settings, **params)}
+    pdf = synthetic_tracking_pandas(n_frames=40, seed=11)
+    frames = list(_parent_order_frames(pdf, settings, orient))
+    assert sorted(got) == [f for f, _ in frames]
+    for frame_id, d in frames:
+        tti, pti, columns, rows = _pi_frame(d, params, settings)
+        r = got[frame_id]
+        assert list(r.columns) == list(columns)
+        assert list(r.rows) == list(rows)
+        np.testing.assert_array_equal(np.array(r.time_to_intercept), tti)
+        np.testing.assert_array_equal(np.array(r.probability_to_intercept), pti)

@@ -34,8 +34,10 @@ PINS = {
     "mm_audio_mfcc": "8dddd56b809495596a5926f48c6863df",
     "t_wordpiece_tokens": "66b54c7e232f0a346c70fc0d8f74826c",
     # plans/model_twins.py (kernel-cell VALUES twins, tools/gen_plans.py —
-    # their kernels are additionally pinned by reference goldens)
-    "m_af_cells": "2c00e721447e9f7f6b25ccc362a33687",
+    # their kernels are additionally pinned by reference goldens; the two
+    # AF pins were re-snapshotted, with the AF kernel unchanged, when the
+    # input moved to the generated BDB sample)
+    "m_af_cells": "1e3ace99b4351ea0023c0d17d29ec30d",
     "m_delaunay_cells": "43e27084aa6f1480733fda759c059d52",
     "m_efpi_cells": "f51862f817c0d281505f2db0f133eac0",
     "m_graph_cells": "ee220cfa184f58813326cd8ee84795bf",
@@ -50,7 +52,7 @@ PINS = {
     "m_pressing_intensity_fp": "4f66c385010d3420bb7071542999ad4e",
     "m_graph_convert_fp": "31b9fdd96f3ac651dca762ec0ba3c49b",
     "m_graph_convert_delaunay_fp": "20123e1cda3714b37c054121fe723fa4",
-    "m_af_graph_convert_fp": "099146622a2d4dcd8890d9e9ec09f0c5",
+    "m_af_graph_convert_fp": "8e69f5f4ce3166794df68ab673d3acba",
     "m_efpi_possession_fp": "e60b61455488dad02ce8d356358ac66b",
     # sf-scale input (events) — also in the sweep's EXPECTED_SNAPSHOT
     "m_savgol_events_fp": "a747ebb4aea8fa995944207f493ab2de",

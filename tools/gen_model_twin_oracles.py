@@ -1,6 +1,8 @@
 #!/usr/bin/env python
 """Regenerate the literal VALUES oracles for the model full-output
-fingerprint twins (plans/model_twins.py: the six m_*_fp queries).
+fingerprint twins (plans/model_twins.py: the six m_*_fp queries) and for
+m_af_cells, the one all-BIGINT cell twin whose input is generated here
+(datasets/synthetic.py:synthetic_bdb_csvs).
 
 Run after an INTENDED kernel/assembly change, paste the printed SQL into
 ORACLE_SQL.update in plans/model_twins.py, and update the corresponding
@@ -25,6 +27,7 @@ from unravelsports_spark.session import get_spark  # noqa: E402
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
 
 TWINS = [
+    "m_af_cells",
     "m_pressing_intensity_fp",
     "m_graph_convert_fp",
     "m_graph_convert_delaunay_fp",

@@ -1,10 +1,10 @@
 """American-football graph converter.
 
-Re-expresses /root/reference/unravel/american_football/graphs/
+Re-expresses the reference's unravel/american_football/graphs/
 graph_converter.py (validity filters :206-244, kernel :316-449) on the shared
 Spark machinery: anti-join frame-validity filters (J4/A6), the soccer sort
-expression (O2), and a batched Arrow grouped-map kernel over the fixed AF
-feature stacks (functions/af_kernels.py)."""
+expression (O2), and the fixed AF feature stacks (functions/af_kernels.py)
+run per frame through models/frames.py."""
 
 from __future__ import annotations
 
@@ -12,7 +12,6 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -23,8 +22,8 @@ from ..functions.af_kernels import (
     compute_af_edge_features,
     compute_af_node_features,
 )
-from ..session import repartition_for_kernel
 from ..settings import AmericanFootballGraphSettings
+from .frames import map_runs
 from .graph_converter import graph_frames_schema
 
 BY_FRAME = ["game_id", "period_id", "frame_id"]
@@ -83,52 +82,38 @@ class AmericanFootballGraphConverter:
             "team_id", "position_name", "ball_owning_team_id", "height_cm",
             "weight_kg", "id", graph_id_col, label_col,
         ]
-        array_cols = [c for c in kernel_cols if c not in ("game_id", "period_id", "frame_id")]
 
-        def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(["frame_id", "_sort_key", "id"], kind="stable")
-            arrays = {c: pdf[c].to_numpy() for c in array_cols}
-            frame_ids = pdf["frame_id"].to_numpy()
-            bounds = np.flatnonzero(np.r_[True, frame_ids[1:] != frame_ids[:-1], True])
-            meta = pdf[["game_id", "period_id", "frame_id"]]
-            out = []
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                d = {k: v[s:e] for k, v in arrays.items()}
+        def graphs(runs):
+            for d in runs:
                 if not prediction and not np.all(d[label_col] == d[label_col][0]):
                     raise ValueError("label not constant within a frame group")
                 adj = compute_af_adjacency_matrix(settings, d["team_id"])
                 node = compute_af_node_features(d, settings)
                 edge = compute_af_edge_features(adj, d, settings)
-                m = meta.iloc[s]
                 label_val = d[label_col][0]
-                out.append(
-                    {
-                        "game_id": str(m["game_id"]),
-                        "period_id": int(m["period_id"]),
-                        "frame_id": int(frame_ids[s]),
-                        "a": list(adj.astype(float)),
-                        "e": list(edge),
-                        "x": list(node),
-                        "a_shape_0": adj.shape[0], "a_shape_1": adj.shape[1],
-                        "e_shape_0": edge.shape[0], "e_shape_1": edge.shape[1],
-                        "x_shape_0": node.shape[0], "x_shape_1": node.shape[1],
-                        graph_id_col: str(d[graph_id_col][0]),
-                        label_col: None if label_val is None or (isinstance(label_val, float) and np.isnan(label_val)) else int(label_val),
-                        "object_ids": [str(v) for v in d["id"]],
-                        "ball_owning_team_id": str(d["ball_owning_team_id"][0]),
-                    }
+                yield (
+                    str(d["game_id"][0]),
+                    int(d["period_id"][0]),
+                    int(d["frame_id"][0]),
+                    list(adj.astype(float)),
+                    list(edge),
+                    list(node),
+                    *adj.shape,
+                    *edge.shape,
+                    *node.shape,
+                    str(d[graph_id_col][0]),
+                    None if label_val is None or (isinstance(label_val, float) and np.isnan(label_val)) else int(label_val),
+                    [str(v) for v in d["id"]],
+                    str(d["ball_owning_team_id"][0]),
                 )
-            return pd.DataFrame(out, columns=[f.name for f in schema.fields])
 
         chunk = (F.col("frame_id") / self.frames_per_batch).cast("long")
-        keys = ["game_id", "period_id", "_chunk"]
         staged = (
             df.select(*kernel_cols)
             .withColumn("_sort_key", sort_key)
             .withColumn("_chunk", chunk)
         )
-        return (
-            repartition_for_kernel(staged, keys)
-            .groupBy(*keys)
-            .applyInPandas(run_batch, schema=schema)
+        return map_runs(
+            staged, ["game_id", "period_id", "_chunk"],
+            ["frame_id"], ["_sort_key", "id"], graphs, schema,
         )

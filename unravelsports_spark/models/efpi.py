@@ -1,18 +1,19 @@
 """EFPI formation detection on Spark.
 
-Re-expresses /root/reference/unravel/soccer/models/formations/efpi.py
+Re-expresses the reference's unravel/soccer/models/formations/efpi.py
 (kernel :150-338, fit :340-748) Spark-first:
 
 - temporal segmentation is native DataFrame work: possession sessionization
   (W4 lag+cumsum window), period grouping, or tumbling time buckets (W5);
   overlapping-substitution handling is an aggregate + rank window + anti-join
   (A2/W3/J4); segment mean positions are one hash aggregation (A3);
-- the per-segment matching kernel (cost tensor vs formation templates +
-  Hungarian assignment, K12) runs in an Arrow grouped-map pandas UDF;
+- the matching kernel (cost tensor vs formation templates + Hungarian
+  assignment, K12) runs once per frame or segment through models/frames.py;
 - the cross-segment hysteresis state (K13, reference detection.py:92-148) is
-  sequential per match, so the kernel groups by game_id and iterates segments
-  in order inside one call — state never crosses games, which is exactly the
-  partitioning a 100 TB many-match corpus needs.
+  sequential per match, so with it on the kernel groups by game_id and
+  walks the runs in order inside one call — state never crosses games,
+  which is exactly the partitioning a 100 TB many-match corpus needs. With
+  it off, games split further into frame chunks or segment buckets.
 
 Template coordinates come from our own generator (models/formations.py) since
 mplsoccer is unavailable; detection semantics (scale-to-bounds, min-cost
@@ -25,7 +26,6 @@ from dataclasses import dataclass, field
 from typing import List, Optional, Union
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -33,9 +33,9 @@ from pyspark.sql import types as T
 
 from ..functions.assignment import linear_sum_assignment
 from ..schema import BALL, Column, Group
-from ..session import repartition_for_kernel
 from ..settings import DefaultSettings
 from .formations import Formations
+from .frames import map_runs
 
 _OUT_FIELDS = [
     T.StructField(Column.GAME_ID, T.StringType()),
@@ -179,32 +179,26 @@ def _detect_group(d, forms, state_cfg, orientation, home_team_id):
             )
 
 
-def _frames_rows(pdf, forms, state_cfg, orientation, home_id, strict=True):
-    """Ordered per-frame detection over one game's rows, mutating `forms`
-    hysteresis state (K13) as it goes. Shared by the batch kernel and the
-    Structured Streaming stateful operator (streaming/efpi_stream.py) so the
-    two paths cannot diverge. Returns output tuples (game_id, period_id,
-    frame_id, id, team_id, position, formation, ball_owning_team_id).
-    ``strict=False`` (chunked batch kernel) emits null position/formation
-    where the reference would raise on a missing team state — the chunked
-    caller forward-fills those from the previous chunk's output."""
-    pdf = pdf.sort_values([Column.FRAME_ID, Column.OBJECT_ID], kind="stable")
-    arrays = {c: pdf[c].to_numpy() for c in (
-        "x", "y", "team_id", "ball_owning_team_id", "id", "position_name")}
-    frame_ids = pdf[Column.FRAME_ID].to_numpy()
-    periods = pdf[Column.PERIOD_ID].to_numpy()
-    game = pdf[Column.GAME_ID].iloc[0]
-    bounds = np.flatnonzero(np.r_[True, frame_ids[1:] != frame_ids[:-1], True])
+def _frames_rows(runs, forms, state_cfg, orientation, home_id, strict=True):
+    """Ordered per-frame detection over one game's frame runs
+    (models/frames.py:split_runs by frame_id), mutating `forms` hysteresis
+    state (K13) as it goes. Shared by the batch kernel and the Structured
+    Streaming stateful operator (streaming/efpi_stream.py) so the two paths
+    cannot diverge. Returns output tuples (game_id, period_id, frame_id, id,
+    team_id, position, formation, ball_owning_team_id). ``strict=False``
+    (chunked batch kernel) emits null position/formation where the
+    reference would raise on a missing team state — the chunked caller
+    forward-fills those from the previous chunk's output."""
     out = []
-    for s, e in zip(bounds[:-1], bounds[1:]):
-        d = {k: v[s:e] for k, v in arrays.items()}
+    for d in runs:
         _detect_group(d, forms, state_cfg, orientation, home_id)
         positions, formation_names = forms.lookup(d["id"], d["team_id"], strict=strict)
-        for i in range(e - s):
-            out.append(
-                (game, periods[s], frame_ids[s], d["id"][i], d["team_id"][i],
-                 positions[i], formation_names[i], d["ball_owning_team_id"][i])
-            )
+        head = (d[Column.GAME_ID][0], d[Column.PERIOD_ID][0], d[Column.FRAME_ID][0])
+        out.extend(
+            head + row
+            for row in zip(d["id"], d["team_id"], positions, formation_names,
+                           d["ball_owning_team_id"])
+        )
     return out
 
 
@@ -394,33 +388,21 @@ class EFPI:
             and self.stateless_chunk_frames is not None
         )
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        def detect(runs):
             forms = Formations(pl_len, pl_wid, forms_cfg)
-            out = _frames_rows(
-                pdf, forms, state_cfg, orientation, home_id, strict=not chunked
-            )
-            return pd.DataFrame(out, columns=[f.name for f in schema.fields])
+            return _frames_rows(runs, forms, state_cfg, orientation, home_id, strict=not chunked)
 
         cols = [Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID, Column.X, Column.Y,
                 Column.TEAM_ID, Column.BALL_OWNING_TEAM_ID, Column.OBJECT_ID,
                 Column.POSITION_NAME]
         sel = df.select(*cols)
-        # With hysteresis ON the state is serial within a match: frame-mode
-        # groups by game_id alone — parallelism = number of games, memory
-        # bounded by one match (inherent to the semantics; the streaming
-        # variant streaming/efpi_stream.py shards the same state
-        # incrementally for the one-giant-match case). With hysteresis OFF
-        # (change_threshold=None) every frame re-detects from scratch, so the
-        # kernel is embarrassingly parallel across frames: shard each game
-        # into frame-ranges and get intra-game parallelism too. (A frame
-        # whose team detection fails borrows the last successful detection;
-        # a chunk-LEADING failure has no in-chunk state to borrow, so the
-        # kernel emits null position/formation there — strict=False, where
-        # the reference's unsharded run would reach back to earlier frames —
-        # and the forward fill below patches those nulls from the previous
-        # chunks' output, restoring the exact unsharded borrow semantics
-        # across chunk boundaries; VERDICT r4 item 6.)
-        if state_cfg["change_threshold"] is None and self.stateless_chunk_frames is not None:
+        # With hysteresis ON the state is serial within a match, so frames
+        # group by game_id alone (streaming/efpi_stream.py carries the same
+        # state incrementally). With it OFF every frame re-detects from
+        # scratch, so each game splits into frame chunks; a chunk-leading
+        # detection failure emits nulls (strict=False) that the forward fill
+        # below patches from the previous chunks (see stateless_chunk_frames).
+        if chunked:
             sel = sel.withColumn(
                 "_chunk",
                 F.floor(F.col(Column.FRAME_ID) / F.lit(self.stateless_chunk_frames)).cast("long"),
@@ -428,11 +410,7 @@ class EFPI:
             keys = [Column.GAME_ID, "_chunk"]
         else:
             keys = [Column.GAME_ID]
-        out = (
-            repartition_for_kernel(sel, keys)
-            .groupBy(*keys)
-            .applyInPandas(kernel, schema)
-        )
+        out = map_runs(sel, keys, [Column.FRAME_ID], [Column.OBJECT_ID], detect, schema)
         if chunked:
             # cross-chunk detection carry: last-non-null per (game, object)
             # in frame order IS the team state the unsharded kernel would
@@ -461,41 +439,19 @@ class EFPI:
             fields = fields[:2] + [T.StructField(seg_col, T.LongType())] + fields[2:]
         schema = T.StructType(fields)
 
-        def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        # each (period, segment, owning-team) run is one detection group —
+        # a duration bucket can contain possessions of both teams
+        by = [Column.PERIOD_ID, *([seg_col] if seg_col else []), Column.BALL_OWNING_TEAM_ID]
+
+        def detect(runs):
             forms = Formations(pl_len, pl_wid, forms_cfg)
-            # sort so each (period, segment, owning-team) run is contiguous —
-            # a duration bucket can contain possessions of both teams
-            sort_keys = (
-                [Column.PERIOD_ID]
-                + ([seg_col] if seg_col else [])
-                + [Column.BALL_OWNING_TEAM_ID, Column.OBJECT_ID]
-            )
-            pdf = pdf.sort_values(sort_keys, kind="stable")
-            arrays = {c: pdf[c].to_numpy() for c in (
-                "x", "y", "team_id", "ball_owning_team_id", "id", "position_name")}
-            game = pdf[Column.GAME_ID].iloc[0]
-            periods = pdf[Column.PERIOD_ID].to_numpy()
-            segs = pdf[seg_col].to_numpy() if seg_col else None
-            bot_arr = pdf[Column.BALL_OWNING_TEAM_ID].to_numpy()
-            key_cols = [periods.astype(str), bot_arr.astype(str)] + (
-                [segs.astype(str)] if seg_col else []
-            )
-            keys = np.stack(key_cols, axis=1)
-            changed = np.r_[True, np.any(keys[1:] != keys[:-1], axis=1)]
-            bounds = np.flatnonzero(np.r_[changed, True])
-            out = []
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                d = {k: v[s:e] for k, v in arrays.items()}
+            for d in runs:
                 _detect_group(d, forms, state_cfg, orientation, home_id)
                 positions, formation_names = forms.lookup(d["id"], d["team_id"])
-                for i in range(e - s):
-                    row = [game, periods[s]]
-                    if seg_col:
-                        row.append(segs[s])
-                    row += [d["id"][i], d["team_id"][i], positions[i],
-                            formation_names[i], d["ball_owning_team_id"][i]]
-                    out.append(tuple(row))
-            return pd.DataFrame(out, columns=[f.name for f in schema.fields])
+                head = tuple(d[c][0] for c in [Column.GAME_ID, *by[:-1]])
+                for row in zip(d["id"], d["team_id"], positions, formation_names,
+                               d["ball_owning_team_id"]):
+                    yield head + row
 
         # Same parallelism split as _fit_frames: hysteresis state is serial
         # within a match, but with change_threshold=None every segment
@@ -503,17 +459,11 @@ class EFPI:
         # A whole (period, segment) always lands in one bucket, so each
         # detection group stays intact.
         if state_cfg["change_threshold"] is None:
-            seg_hash = F.xxhash64(
-                Column.PERIOD_ID, *( [seg_col] if seg_col else [] )
-            )
+            seg_hash = F.xxhash64(*by[:-1])
             seg_df = seg_df.withColumn(
                 "_segchunk", F.pmod(seg_hash, F.lit(self.stateless_segment_buckets))
             )
             keys = [Column.GAME_ID, "_segchunk"]
         else:
             keys = [Column.GAME_ID]
-        return (
-            repartition_for_kernel(seg_df, keys)
-            .groupBy(*keys)
-            .applyInPandas(kernel, schema)
-        )
+        return map_runs(seg_df, keys, by, [Column.OBJECT_ID], detect, schema)

@@ -1,23 +1,19 @@
 """Soccer graph converter: canonical tracking table → per-frame GNN graph
 tuples (adjacency, node features, edge features, label) on Spark.
 
-Re-expresses /root/reference/unravel/soccer/graphs/graph_converter.py
+Re-expresses the reference's unravel/soccer/graphs/graph_converter.py
 (pipeline :165-238, padding :240-440, kernel :602-725) and
 unravel/utils/objects/default_graph_converter.py:315-393 Spark-first:
 
 - sample / incomplete-frame drop / padding are native DataFrame ops (modulo
   filter P5, semi-join J3, aggregate + sequence/explode row synthesis O12);
-- the per-frame kernel is an Arrow grouped-map pandas UDF batched over
-  (game_id, period_id, frame-chunk) groups — one shuffle total, frames looped
-  inside the UDF so Arrow/serialization overhead is amortized; each frame's
-  matrices are pure NumPy (functions/graph_features.py, golden-tested);
+- the per-frame kernel runs through models/frames.py over (game_id,
+  period_id, chunk of `frames_per_batch` frames) groups; each frame's
+  matrices are pure NumPy (functions/graph_features.py, golden-tested), and
+  default features are vectorized over same-size frames
+  (functions/graph_features_batch.py);
 - output is a DataFrame of nested arrays + shape columns, written/read as
   parquet (the reference's gzip-pickle sink S4 ↔ our parquet graph sink).
-
-Scale posture: groups are bounded by frames_per_batch so executor memory is
-flat; everything before the single groupBy is embarrassingly parallel over
-input splits, and the group key starts with game_id so a 100 TB / many-match
-corpus spreads evenly across a large cluster.
 """
 
 from __future__ import annotations
@@ -26,9 +22,8 @@ from dataclasses import dataclass, field
 from typing import Callable, List, Optional
 
 import numpy as np
-import pandas as pd
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -50,8 +45,8 @@ from ..functions.graph_features_batch import (
     compute_node_features_batch,
 )
 from ..schema import BALL, Column, Group
-from ..session import repartition_for_kernel
 from ..settings import GraphSettings
+from .frames import map_runs
 
 MATRIX = T.ArrayType(T.ArrayType(T.DoubleType()))
 
@@ -237,15 +232,8 @@ class SoccerGraphConverter:
         node_funcs, edge_funcs = self.node_feature_funcs, self.edge_feature_funcs
         opts = self.feature_opts
         global_cols, global_type = self.global_feature_cols, self.global_feature_type
-        extra_cols = self.additional_feature_cols
         graph_id_col, label_col, prediction = self.graph_id_col, self.label_col, self.prediction
         random_seed = self.random_seed
-
-        array_cols = [
-            "x", "y", "z", "v", "vx", "vy", "vz", "a", "ax", "ay", "az",
-            "team_id", "position_name", "ball_owning_team_id", "is_ball_carrier", "id",
-            graph_id_col, label_col, *global_cols, *extra_cols,
-        ]
 
         # Batched fast path: default features + dense adjacency → vectorize
         # over same-size frames (graph_features_batch.py; several-fold less
@@ -281,24 +269,14 @@ class SoccerGraphConverter:
                     results[i] = (adj, np.nan_to_num(edge_b[j][nz]), node_b[j])
             return results
 
-        def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            pdf = pdf.sort_values(
-                by=[Column.FRAME_ID, "_sort_key", Column.OBJECT_ID],
-                kind="stable",
-            )
-            arrays = {c: pdf[c].to_numpy() for c in array_cols}
-            frame_ids = pdf[Column.FRAME_ID].to_numpy()
-            bounds = np.flatnonzero(np.r_[True, frame_ids[1:] != frame_ids[:-1], True])
-            meta = pdf[[Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID]]
-
-            frames, starts = [], []
-            for s, e in zip(bounds[:-1], bounds[1:]):
-                d = {k: v[s:e] for k, v in arrays.items()}
+        def graphs(runs):
+            frames = []
+            for d in runs:
                 if drop_incomplete and len(np.unique(d["team_id"])) != 3:
                     continue
                 if random_seed is not False and random_seed is not None:
-                    n = e - s
-                    seed = None if random_seed is True else int(random_seed) + int(frame_ids[s])
+                    n = len(d["team_id"])
+                    seed = None if random_seed is True else int(random_seed) + int(d[Column.FRAME_ID][0])
                     perm = np.random.default_rng(seed).permutation(n)
                     d = {k: v[perm] for k, v in d.items()}
                 if not np.all(d[graph_id_col] == d[graph_id_col][0]):
@@ -306,7 +284,6 @@ class SoccerGraphConverter:
                 if not prediction and not np.all(d[label_col] == d[label_col][0]):
                     raise ValueError("label not constant within a frame group")
                 frames.append(d)
-                starts.append(s)
 
             if use_batch:
                 results = compute_batched(frames)
@@ -319,8 +296,7 @@ class SoccerGraphConverter:
                     node, _ = compute_node_features(node_funcs, opts, settings, **fk)
                     results.append((adj, edge, node))
 
-            out = []
-            for s, d, (adj, edge, node) in zip(starts, frames, results):
+            for d, (adj, edge, node) in zip(frames, results):
                 if global_cols:
                     bad = [c for c in global_cols if not np.all(d[c] == d[c][0])]
                     if bad:
@@ -329,41 +305,32 @@ class SoccerGraphConverter:
                     ball_rows = np.where(d["team_id"] == settings.ball_id)[0]
                     ball_idx = ball_rows if len(ball_rows) else 0
                     node = add_global_features(node, gvals, global_type, ball_idx)
-                m = meta.iloc[s]
                 label_val = d[label_col][0]
-                out.append(
-                    {
-                        Column.GAME_ID: m[Column.GAME_ID],
-                        Column.PERIOD_ID: m[Column.PERIOD_ID],
-                        "frame_id": int(m[Column.FRAME_ID]),
-                        # list-of-rows (ndarray) cells: Arrow consumes these
-                        # without a per-element Python round-trip
-                        "a": list(adj.astype(float)),
-                        "e": list(edge),
-                        "x": list(node),
-                        "a_shape_0": adj.shape[0],
-                        "a_shape_1": adj.shape[1],
-                        "e_shape_0": edge.shape[0],
-                        "e_shape_1": edge.shape[1],
-                        "x_shape_0": node.shape[0],
-                        "x_shape_1": node.shape[1],
-                        graph_id_col: str(d[graph_id_col][0]),
-                        label_col: None if label_val is None or (isinstance(label_val, float) and np.isnan(label_val)) else int(label_val),
-                        "object_ids": list(d["id"]),
-                        "ball_owning_team_id": d["ball_owning_team_id"][0],
-                    }
+                yield (
+                    d[Column.GAME_ID][0],
+                    d[Column.PERIOD_ID][0],
+                    int(d[Column.FRAME_ID][0]),
+                    # list-of-rows (ndarray) cells: Arrow consumes these
+                    # without a per-element Python round-trip
+                    list(adj.astype(float)),
+                    list(edge),
+                    list(node),
+                    *adj.shape,
+                    *edge.shape,
+                    *node.shape,
+                    str(d[graph_id_col][0]),
+                    None if label_val is None or (isinstance(label_val, float) and np.isnan(label_val)) else int(label_val),
+                    list(d["id"]),
+                    d["ball_owning_team_id"][0],
                 )
-            return pd.DataFrame(out, columns=[f.name for f in schema.fields])
 
         chunk = (F.col(Column.FRAME_ID) / self.frames_per_batch).cast("long")
-        keys = [Column.GAME_ID, Column.PERIOD_ID, "_chunk"]
         staged = (
             df.select(*kernel_cols)
             .withColumn("_sort_key", sort_key)
             .withColumn("_chunk", chunk)
         )
-        return (
-            repartition_for_kernel(staged, keys)
-            .groupBy(*keys)
-            .applyInPandas(run_batch, schema=schema)
+        return map_runs(
+            staged, [Column.GAME_ID, Column.PERIOD_ID, "_chunk"],
+            [Column.FRAME_ID], ["_sort_key", Column.OBJECT_ID], graphs, schema,
         )

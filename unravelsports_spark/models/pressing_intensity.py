@@ -1,22 +1,17 @@
 """Pressing Intensity (TTI / PTI matrices per frame) on Spark.
 
-Re-expresses /root/reference/unravel/soccer/models/pressing_intensity.py
+Re-expresses the reference's unravel/soccer/models/pressing_intensity.py
 (fit: :339-565, kernel: :152-326) Spark-first:
 
 - the relational part (time filter P4, orientation sort key O3) is native
   DataFrame code so Catalyst pushes the filters into the parquet scan;
-- the per-frame matrix kernel is an Arrow grouped-map pandas UDF. Instead of
-  one Python call per frame (23-row groups — pathological UDF overhead), we
-  group by (game_id, period_id, frame_chunk) and loop frames inside one call:
-  per-call overhead is amortized over `frames_per_batch` frames while keeping
-  full parallelism across matches/periods on a large cluster. At 100 TB
-  ("many games") the single shuffle on the group key is the only data
-  movement.
+- the per-frame matrix kernel runs through models/frames.py, one call per
+  (game_id, period_id, chunk of `frames_per_batch` frames).
 
-Ordering note (SURVEY §7.4.1): Spark's groupBy does not preserve order, so the
-orientation sort (reference :520-552) is re-established *inside* the kernel
-with a stable sort; ties within a team break by object_id (the reference
-inherits kloppy's player order instead — documented divergence).
+Ordering note (SURVEY §7.4.1): the orientation order (reference :520-552)
+is re-established inside each group by frames.py's stable sort; ties within
+a team break by object_id (the reference inherits kloppy's player order
+instead — documented divergence).
 """
 
 from __future__ import annotations
@@ -25,14 +20,13 @@ from dataclasses import dataclass, field
 from typing import Optional
 
 import numpy as np
-import pandas as pd
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
 from ..functions.intercept import probability_to_intercept, time_to_intercept
-from ..schema import BALL, Column, Group
-from ..session import repartition_for_kernel
+from ..schema import BALL, Column
 from ..settings import DefaultSettings
+from .frames import map_runs
 
 _RESULT_SCHEMA = T.StructType(
     [
@@ -200,7 +194,8 @@ class PressingIntensity:
             )
 
         # orientation sort key (reference :520-548): ball rows order last
-        # (null), descending picks home/owning side first
+        # (null; NOT null stays null), the descending orientations negate
+        # the key so the home/owning side sorts first
         if orient in ("home_away", "away_home"):
             key = (
                 F.when(F.col(Column.TEAM_ID) == self.settings.home_team_id, True)
@@ -226,54 +221,22 @@ class PressingIntensity:
             "orient": orient,
         }
         settings = self.settings
-        ascending = not descending
 
-        def run_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-            # re-establish deterministic order inside the group: frame, then
-            # orient key (nulls last), then object_id as tie-break
-            pdf = pdf.sort_values(
-                by=[Column.FRAME_ID, "_orient_key", Column.OBJECT_ID],
-                ascending=[True, ascending, True],
-                na_position="last",
-                kind="stable",
-            )
-            out = []
-            arrays = {
-                c: pdf[c].to_numpy()
-                for c in ("x", "y", "z", "vx", "vy", "vz", "v", "team_id",
-                          "ball_owning_team_id", "id", "is_ball_carrier")
-            }
-            frame_ids = pdf[Column.FRAME_ID].to_numpy()
-            boundaries = np.flatnonzero(np.r_[True, frame_ids[1:] != frame_ids[:-1], True])
-            meta = pdf[[Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID, Column.TIMESTAMP]]
-            for s, e in zip(boundaries[:-1], boundaries[1:]):
-                d = {k: v[s:e] for k, v in arrays.items()}
+        def frames(runs):
+            for d in runs:
                 tti, pti, cols, rows = _pi_frame(d, params, settings)
-                m = meta.iloc[s]
-                out.append(
-                    {
-                        Column.GAME_ID: m[Column.GAME_ID],
-                        Column.PERIOD_ID: m[Column.PERIOD_ID],
-                        Column.FRAME_ID: m[Column.FRAME_ID],
-                        Column.TIMESTAMP: m[Column.TIMESTAMP],
-                        "time_to_intercept": list(tti),
-                        "probability_to_intercept": list(pti),
-                        "columns": list(cols),
-                        "rows": list(rows),
-                    }
-                )
-            return pd.DataFrame(out, columns=[f.name for f in _RESULT_SCHEMA.fields])
+                yield (d[Column.GAME_ID][0], d[Column.PERIOD_ID][0], d[Column.FRAME_ID][0],
+                       d[Column.TIMESTAMP][0], list(tti), list(pti), list(cols), list(rows))
 
         chunk = (F.col(Column.FRAME_ID) / self.frames_per_batch).cast("long")
-        keys = [Column.GAME_ID, Column.PERIOD_ID, "_chunk"]
         staged = (
             df.select(*_KERNEL_COLS)
-            .withColumn("_orient_key", key)
+            .withColumn("_orient_key", ~key if descending else key)
             .withColumn("_chunk", chunk)
         )
-        self.output = (
-            repartition_for_kernel(staged, keys)
-            .groupBy(*keys)
-            .applyInPandas(run_batch, schema=_RESULT_SCHEMA)
+        # ties within a team break by object_id
+        self.output = map_runs(
+            staged, [Column.GAME_ID, Column.PERIOD_ID, "_chunk"],
+            [Column.FRAME_ID], ["_orient_key", Column.OBJECT_ID], frames, _RESULT_SCHEMA,
         )
         return self

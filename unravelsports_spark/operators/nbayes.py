@@ -105,10 +105,12 @@ def nb_confusion(
     # every dbc row holds >= 1 token, so the label sets of the two
     # aggregates coincide (matching the r14 inner join's label set)
     n_train = sum(n_docs[lab] for lab in tots)
+    # NULL-labelled training docs count toward the prior's total but are no
+    # class: they could never equi-join the grid (the oracle's priors join)
     grid_src = df.sparkSession.createDataFrame(
         [
             (lab, b, counts.get((lab, b), 0), tots[lab], n_docs[lab], n_train)
-            for lab in sorted(tots)
+            for lab in sorted(tots.keys() - {None})
             for b in range(n_buckets)
         ],
         "label string, bucket bigint, c bigint, tot bigint, n_docs bigint, n_train bigint",

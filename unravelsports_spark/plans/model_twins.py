@@ -156,8 +156,8 @@ def m_delaunay_cells(spark, sf_dir):
 
 @query("m_af_cells")
 def m_af_cells(spark, sf_dir):
-    """American-football graph conversion (K2/K6/K7) twin over the public BDB
-    sample: exact graph count (263) + shape sums in one aggregate row."""
+    """American-football graph conversion (K2/K6/K7) twin over the generated
+    BDB sample: exact graph count (24) + shape sums in one aggregate row."""
     from .models_plans import m_af_graph_convert
 
     out = m_af_graph_convert(spark, sf_dir)
@@ -352,8 +352,8 @@ def m_graph_convert_delaunay_fp(spark, sf_dir):
 @query("m_af_graph_convert_fp")
 def m_af_graph_convert_fp(spark, sf_dir):
     """FULL-output fingerprint of the american-football graph conversion
-    (K2/K6/K7) over the public BDB sample: m_af_cells certifies shape
-    sums; this twin folds all 263 play-frame graphs' complete assemblies
+    (K2/K6/K7) over the generated BDB sample: m_af_cells certifies shape
+    sums; this twin folds all 24 play-frame graphs' complete assemblies
     (20-feature nodes, 9-channel edges, padding, node order) into the
     order-insensitive fp_sum."""
     from .models_plans import af_graph_frames
@@ -493,7 +493,7 @@ ORACLE_SQL.update(
     """,
         "m_af_cells": """
     SELECT * FROM (VALUES
-      (CAST(263 AS BIGINT), CAST(6049 AS BIGINT), CAST(75481 AS BIGINT), CAST(6049 AS BIGINT), CAST(20 AS BIGINT), CAST(9 AS BIGINT))
+      (CAST(24 AS BIGINT), CAST(552 AS BIGINT), CAST(6888 AS BIGINT), CAST(552 AS BIGINT), CAST(20 AS BIGINT), CAST(9 AS BIGINT))
     ) AS t(n_graphs, sum_a0, sum_e0, sum_x0, n_node_features, n_edge_features)
     """,
         "m_efpi_cells": """
@@ -563,7 +563,7 @@ ORACLE_SQL.update(
     """,
         "m_af_graph_convert_fp": """
     SELECT * FROM (VALUES
-      (CAST(263 AS BIGINT), CAST(576202963033 AS BIGINT))
+      (CAST(24 AS BIGINT), CAST(56371971252 AS BIGINT))
     ) AS t(n_graphs, fp_sum)
     """,
         "m_efpi_possession_fp": """

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from ..datasets.synthetic import AWAY, HOME, synthetic_tracking_df
+from ..datasets.synthetic import AWAY, HOME, synthetic_bdb_csvs, synthetic_tracking_df
 from ..models.efpi import EFPI
 from ..models.graph_converter import SoccerGraphConverter
 from ..models.pressing_intensity import PressingIntensity
@@ -21,57 +21,53 @@ _N_FRAMES = 100
 _SEED = 17
 
 
-def _generator_token() -> str:
-    """Content token for the staged fixture path: a hash of the generator's
-    SOURCE, so changing synthetic_tracking_df invalidates every previously
-    staged directory automatically (ADVICE r5 — (n_frames, seed) alone would
-    silently reuse stale data across code changes)."""
+def _staged(name: str, write) -> str:
+    """Run ``write(path)`` once per process into a temp directory and return
+    it. Model queries scan these staged files instead of shipping a pandas
+    table from Python to the JVM on every call (~2.5 s of each query's wall).
+
+    The path embeds a hash of datasets/synthetic.py's source, so a generator
+    change never reuses stale data. The write goes to a process-unique
+    directory, then an atomic rename: concurrent processes see no directory
+    or a complete one, and the loser of a rename race uses the winner's."""
     import hashlib
     import inspect
-
-    src = inspect.getsource(synthetic_tracking_df)
-    return hashlib.sha256(src.encode()).hexdigest()[:12]
-
-
-def _tracking(spark):
-    """The seeded synthetic tracking fixture, staged to parquet once per
-    process: createDataFrame re-serialized the full 100k-row pandas table
-    driver->JVM on EVERY query call (~2.5 s of each model query's wall was
-    fixture shipping, not engine work); reading the staged parquet is also
-    the realistic input shape — a scan, with column pruning available.
-
-    The path embeds a generator-source hash (stale-fixture guard) and the
-    write goes to a process-unique temp dir then an atomic rename, so
-    concurrent pytest/bench processes never observe a half-written
-    directory: rename either succeeds (this process staged it) or fails
-    because a racing process won, in which case its complete copy is used."""
     import os
     import shutil
     import tempfile
     import uuid
 
-    global _TRACKING_PATH
-    if _TRACKING_PATH is None or not os.path.exists(_TRACKING_PATH):
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"spark_graft_tracking_{_N_FRAMES}_{_SEED}_{_generator_token()}",
-        )
+    from ..datasets import synthetic
+
+    if name not in _STAGED or not os.path.exists(_STAGED[name]):
+        token = hashlib.sha256(inspect.getsource(synthetic).encode()).hexdigest()[:12]
+        path = os.path.join(tempfile.gettempdir(), f"spark_graft_{name}_{token}")
         done = os.path.join(path, "_SUCCESS")
         if not os.path.exists(done):
             staging = f"{path}.{uuid.uuid4().hex}.tmp"
-            synthetic_tracking_df(spark, n_frames=_N_FRAMES, seed=_SEED).write.mode(
-                "overwrite"
-            ).parquet(staging)
+            write(staging)
+            open(os.path.join(staging, "_SUCCESS"), "a").close()
             try:
                 os.rename(staging, path)
             except OSError:
                 # a concurrent process renamed first; its copy is complete
                 shutil.rmtree(staging, ignore_errors=True)
-        _TRACKING_PATH = path
-    return spark.read.parquet(_TRACKING_PATH)
+        _STAGED[name] = path
+    return _STAGED[name]
 
 
-_TRACKING_PATH = None
+_STAGED: dict = {}
+
+
+def _tracking(spark):
+    """The seeded synthetic tracking fixture, staged to parquet."""
+    path = _staged(
+        f"tracking_{_N_FRAMES}_{_SEED}",
+        lambda p: synthetic_tracking_df(spark, n_frames=_N_FRAMES, seed=_SEED)
+        .write.mode("overwrite")
+        .parquet(p),
+    )
+    return spark.read.parquet(path)
 
 
 def _settings():
@@ -107,17 +103,13 @@ def m_graph_convert(spark, sf_dir):
 
 
 def af_graph_frames(spark):
-    """Raw AF graph frames on the public BDB sample — shared by
-    m_af_graph_convert, m_af_cells, and the r14 full-output fingerprint
-    twin (model_twins.m_af_graph_convert_fp)."""
-    import os
-
+    """Raw AF graph frames on the generated BDB sample — shared by
+    m_af_graph_convert, m_af_cells, and the full-output fingerprint twin
+    (model_twins.m_af_graph_convert_fp)."""
     from ..datasets.bdb import BigDataBowlDataset
     from ..models.af_graph_converter import AmericanFootballGraphConverter
 
-    # sample location is configurable so the registry doesn't hard-couple to
-    # the reference checkout's path (ADVICE r3)
-    files = os.environ.get("SPARK_GRAFT_BDB_DIR", "/root/reference/tests/files")
+    files = _staged("bdb", synthetic_bdb_csvs)
     ds = BigDataBowlDataset(
         tracking_file_path=f"{files}/bdb_coords-1.csv",
         players_file_path=f"{files}/bdb_players-1.csv",
@@ -131,11 +123,11 @@ def af_graph_frames(spark):
 
 @query("m_af_graph_convert")
 def m_af_graph_convert(spark, sf_dir):
-    """American-football graph conversion (K2/K6/K7) on the public BDB
-    sample shipped with the reference checkout — 263 play-frame graphs with
-    20-feature nodes and 9-channel edges. Rows-only (grouped-map kernel);
-    shape/value parity is asserted against the reference's published
-    expectations in tests/test_american_football.py."""
+    """American-football graph conversion (K2/K6/K7) on the generated BDB
+    sample (datasets/synthetic.py:synthetic_bdb_csvs) — 24 play-frame graphs
+    with 20-feature nodes and 9-channel edges. Rows-only (grouped-map
+    kernel); shape/value parity with the reference's published expectations
+    is asserted on its own fixtures in tests/test_american_football.py."""
     return af_graph_frames(spark).select(
         "game_id", "frame_id", "graph_id", "label",
         "a_shape_0", "a_shape_1", "e_shape_0", "e_shape_1",

@@ -10,12 +10,12 @@ exactly `applyInPandasWithState` — the per-game `DetectedFormation` dict is
 serialized into GroupState between micro-batches and rehydrated on the next
 trigger.
 
-The per-frame computation is `models.efpi._frames_rows`, the same function
-the batch kernel calls, so batch and streaming results are identical when
-frames arrive in order (tests/test_streaming_efpi.py proves two micro-batches
-== one batch run). Late/out-of-order frames within a micro-batch are ordered
-by the in-kernel sort; across micro-batches the operator is order-sensitive
-by design — hysteresis is a sequential semantic, matching the reference.
+Each micro-batch is cut into ordered frame runs by `models.frames.split_runs`
+and detected by `models.efpi._frames_rows`, the same pair the batch kernel
+uses, so batch and streaming results are identical when frames arrive in
+order (tests/test_streaming_efpi.py proves two micro-batches == one batch
+run). Across micro-batches the operator is order-sensitive by design —
+hysteresis is a sequential semantic, matching the reference.
 
 Scale: state is one tiny dict per game (two teams × ≤11 labels), keyed by
 game_id — the same "many games, embarrassingly parallel after one shuffle"
@@ -36,6 +36,7 @@ from pyspark.sql.streaming.state import GroupStateTimeout
 
 from ..models.efpi import _OUT_FIELDS, _frames_rows
 from ..models.formations import DetectedFormation, Formations
+from ..models.frames import split_runs
 from ..schema import Column
 from ..settings import DefaultSettings
 
@@ -103,7 +104,8 @@ def streaming_formation_detection(
         forms = Formations(pl_len, pl_wid, formations)
         if state.exists:
             _restore_state(forms, state.get[0])
-        out = _frames_rows(pdf, forms, state_cfg, orientation, home_id)
+        runs = split_runs(pdf, [Column.FRAME_ID], [Column.OBJECT_ID])
+        out = _frames_rows(runs, forms, state_cfg, orientation, home_id)
         state.update((_serialize_state(forms),))
         yield pd.DataFrame(out, columns=out_cols)
 
