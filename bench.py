@@ -161,6 +161,8 @@ def main() -> None:
     from unravelsports_spark.plans import ORACLE_SQL, QUERIES
     from unravelsports_spark.settings import DefaultSettings, GraphSettings
 
+    from tools.registry import counted_run, gate_duckdb
+
     spark = get_spark("unravelsports-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
     sf = sf_from_dir(SF_DIR)
@@ -182,11 +184,8 @@ def main() -> None:
         # pay the fixed per-job cost once per job, so a 5-job query carries
         # ~5 floors of scheduling overhead — n_jobs makes the floor-adjusted
         # ratios interpretable instead of hiding it
-        sc = spark.sparkContext
-        sc.setJobGroup(f"count:{name}", name)
-        QUERIES[name](spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        n_jobs[name] = len(sc.statusTracker().getJobIdsForGroup(f"count:{name}"))
-        sc.setJobGroup("", "")
+        _, counters = counted_run(spark, f"count:{name}", lambda: QUERIES[name](spark, SF_DIR))
+        n_jobs[name] = counters.jobs
         release_tracked()
 
     # DuckDB oracle wall time on the same parquet, same box — the 2×-gate
@@ -194,14 +193,7 @@ def main() -> None:
     # single-node columnar engine is the operative baseline). The
     # floor-adjusted ratio subtracts the fixed per-job scheduling cost that
     # dominates sub-second queries on local[32] but vanishes at scale.
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ["region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = gate_duckdb(SF_DIR)
     oracle_sec: dict[str, float] = {}
     ratio_floor_adj: dict[str, float] = {}
     ratio_jobs_adj: dict[str, float] = {}

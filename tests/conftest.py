@@ -44,15 +44,8 @@ def _release_tracked_caches():
 
 @pytest.fixture(scope="session")
 def duck():
-    import duckdb
+    from tools.registry import gate_duckdb
 
-    con = duckdb.connect()
-    for t in [
-        "region", "nation", "customer", "supplier", "part",
-        "orders", "lineitem", "events", "documents", "embeddings",
-    ]:
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{SF_CORRECT}/{t}.parquet')"
-        )
+    con = gate_duckdb(SF_CORRECT)
     yield con
     con.close()

@@ -313,36 +313,6 @@ def test_bpe_merge_training(spark):
     assert toks[4] == ["york", "new"]
 
 
-def test_incremental_matches_recount_trainer(spark):
-    """The incremental pair-count trainer (the 32k-merge scale path) must
-    learn byte-identical merge sequences to the recount-per-round trainer —
-    on a hand corpus with overlap/tie structure AND on the real documents
-    fixture."""
-    from unravelsports_spark.operators.bpe import (
-        bpe_train_merges,
-        bpe_train_merges_incremental,
-    )
-
-    docs = [
-        (1, "new york city"),
-        (2, "new york state"),
-        (3, "new york city hall"),
-        (4, "york new"),
-        (5, "city of angels"),
-        (6, "b b b b"),          # overlap-chain: counts must not double
-        (7, "city hall of new york"),
-    ]
-    df = spark.createDataFrame(docs, "doc_id bigint, text string")
-    ref = [tuple(r) for r in bpe_train_merges(df, num_merges=6).collect()]
-    inc = [tuple(r) for r in bpe_train_merges_incremental(df, num_merges=6).collect()]
-    assert inc == ref
-
-    real = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    ref_r = [tuple(r) for r in bpe_train_merges(real, num_merges=5).collect()]
-    inc_r = [tuple(r) for r in bpe_train_merges_incremental(real, num_merges=5).collect()]
-    assert inc_r == ref_r
-
-
 def _ref_pagerank(edges, iters=3, damping=0.85):
     sym = set()
     for a, b in edges:

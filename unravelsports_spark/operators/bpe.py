@@ -7,11 +7,9 @@ aggregation, (3) a one-row argmax to the driver (count DESC, then
 lexicographic pair — fully deterministic), and (4) a pure-projection fold
 applying the merge greedily left-to-right inside each document via
 ``F.aggregate``. The corpus itself never shuffles; only (pair → count)
-rows do. Production fast-BPE implementations update pair counts
-incrementally per merge; at corpus scale the recount-per-round form keeps
-every pass embarrassingly parallel and is how distributed trainers
-(e.g. Spark/MapReduce wordpiece pipelines) actually run small merge
-budgets.
+rows do. The recount-per-round form keeps every pass embarrassingly
+parallel and is how distributed trainers (e.g. Spark/MapReduce wordpiece
+pipelines) actually run small merge budgets.
 
 Merged tokens are joined with ``~`` (outside the ``[a-z0-9]+`` token
 alphabet), and the running tokenization is carried as one
@@ -141,142 +139,6 @@ def _pair_structs(arr):
     return F.arrays_zip(
         F.slice(arr, 1, F.greatest(n - 1, F.lit(0))).alias("a"),
         F.slice(arr, 2, F.greatest(n - 1, F.lit(0))).alias("b"),
-    )
-
-
-def bpe_train_merges_incremental(
-    df: DataFrame,
-    num_merges: int = 5,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
-    """:func:`bpe_train_merges` with incremental pair-count maintenance —
-    the variant that reaches real vocab budgets (32k merges) at corpus scale.
-
-    The recount-per-round trainer re-explodes the WHOLE corpus every round;
-    after the first few merges almost no document contains the winning pair,
-    so nearly all of that work recomputes unchanged counts. This trainer
-    keeps the (pair → count) table as persisted state and, each round:
-
-    1. takes the argmax merge from the maintained count table (1 row);
-    2. filters the corpus to documents actually containing the winning
-       adjacent pair — a codegen'd regex on the carried tokenization string,
-       no explode for the untouched remainder;
-    3. explodes ONLY the affected documents twice (pairs before / after the
-       greedy fold) and aggregates the signed difference — the bounded
-       delta;
-    4. merges the delta into the count table (full-outer sum, zero rows
-       dropped) and rewrites affected documents in place via a conditional
-       projection (unaffected rows pass through untouched).
-
-    Counts after every round are exactly the recount-from-scratch counts
-    (unaffected documents contribute zero delta by construction), so the
-    learned merge sequence is identical — asserted in
-    tests/test_bpe.py::test_incremental_matches_recount_trainer. Determinism
-    matches the recount path: count DESC, then lexicographic (a, b).
-
-    Scale shape per round: one filter scan of the corpus (no shuffle), one
-    delta aggregation over affected docs only, one broadcast-size outer
-    merge of the count table. The corpus shuffles zero times; the count
-    table (≤ vocab² observed pairs, in practice ~vocab size) is the only
-    iterated state — the same "small iterated state, big static corpus"
-    decomposition as pagerank (operators/components.py).
-
-    Measured envelope (local[32], sf0.01 documents, 12 merges): recount
-    ≈0.69 s/round vs incremental ≈2.1 s/round — at tiny scale and small
-    budgets the early winning pairs occur in most documents, so the delta
-    explode covers nearly the whole corpus while the maintenance machinery
-    (regex filter, outer merge, materialize) is pure overhead. The variants
-    cross over when the affected-document fraction falls (real corpora,
-    budgets in the thousands, where round N's winning pair touches a
-    vanishing share of documents): recount's per-round cost is a full
-    corpus explode + shuffle forever, incremental's decays with the
-    affected fraction. Use recount for small merge budgets, incremental for
-    vocab-scale training.
-    """
-    spark = df.sparkSession
-    persisted = []
-
-    def keep(d):
-        d = d.persist()
-        persisted.append(d)
-        return d
-
-    toks = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_RE), 0)
-    cur = keep(
-        df.select(id_col, F.concat_ws(SEP, toks).alias("s")).filter(F.col("s") != "")
-    )
-    arr0 = F.split(F.col("s"), SEP)
-    counts = keep(
-        cur.select(F.explode(_pair_structs(arr0)).alias("p"))
-        .groupBy(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
-        .agg(F.count("*").cast("long").alias("cnt"))
-    )
-    merges = []
-    try:
-        for step_no in range(1, num_merges + 1):
-            best = (
-                counts.filter(F.col("cnt") > 0)
-                .orderBy(F.col("cnt").desc(), "a", "b")
-                .limit(1)
-                .collect()
-            )
-            if not best:
-                break
-            a, b, cnt = best[0].a, best[0].b, int(best[0].cnt)
-            merges.append((step_no, a, b, cnt))
-            if step_no == num_merges:
-                break  # no need to maintain state past the last learned merge
-            # tokens are [a-z0-9~]+ — regex-metachar-free, so the literal
-            # boundary pattern is safe
-            pat = f"(^|{SEP}){a}{SEP}{b}({SEP}|$)"
-            hit = F.col("s").rlike(pat)
-            affected = cur.filter(hit)
-            folded = keep(
-                affected.select(
-                    id_col, F.col("s").alias("s_old"),
-                    _merge_via_regex(F.col("s"), a, b).alias("s_new"),
-                )
-            )
-            old_pairs = folded.select(
-                F.explode(_pair_structs(F.split(F.col("s_old"), SEP))).alias("p")
-            ).select("p.a", "p.b", F.lit(-1).alias("d"))
-            new_pairs = folded.select(
-                F.explode(_pair_structs(F.split(F.col("s_new"), SEP))).alias("p")
-            ).select("p.a", "p.b", F.lit(1).alias("d"))
-            delta = (
-                old_pairs.unionAll(new_pairs)
-                .groupBy("a", "b")
-                .agg(F.sum("d").cast("long").alias("dcnt"))
-                .filter(F.col("dcnt") != 0)
-            )
-            counts = keep(
-                counts.join(delta, ["a", "b"], "full_outer")
-                .select(
-                    "a", "b",
-                    (
-                        F.coalesce(F.col("cnt"), F.lit(0))
-                        + F.coalesce(F.col("dcnt"), F.lit(0))
-                    )
-                    .cast("long")
-                    .alias("cnt"),
-                )
-                .filter(F.col("cnt") > 0)
-            )
-            cur = keep(
-                cur.select(
-                    id_col,
-                    F.when(hit, _merge_via_regex(F.col("s"), a, b))
-                    .otherwise(F.col("s"))
-                    .alias("s"),
-                )
-            )
-            counts.count()  # materialize before the next argmax reads it
-    finally:
-        for p in persisted:
-            p.unpersist()
-    return spark.createDataFrame(
-        merges, "step int, left_tok string, right_tok string, pair_count bigint"
     )
 
 

@@ -14,7 +14,7 @@ Oracle styles used here:
   distortion), so it is test-covered but not hash-certified.
 - literal VALUES (mm_image_phash / t_unigram_vocab): the m_*_cells pattern —
   deterministic fixtures, snapshotted from the test-verified operators
-  (regenerate with tools/gen_corpus5_oracles.py after an intended change).
+  (regenerate with ``tools/registry.py values`` after an intended change).
 - sf0.01 snapshot (t_unigram_tokens): the segmentation itself is not
   SQL-expressible (Viterbi); deterministic output pinned at the gate scale,
   same class as the MLlib/HLL snapshot oracles (plans/snapshots.py).
@@ -354,7 +354,9 @@ def t_unigram_tokens(spark, sf_dir):
 
 
 # Literal VALUES oracles for the deterministic twins above — snapshotted
-# from the test-verified operators via tools/gen_corpus5_oracles.py.
+# from the test-verified operators via ``tools/registry.py values``, which
+# prints rows sorted: t_unigram_vocab is stored in rank order, so its
+# regeneration also reorders the rows.
 ORACLE_SQL.update(
     {
         "mm_image_phash": """

@@ -12,11 +12,11 @@ Oracle styles used here (same taxonomy as corpus5):
   shape from test_cluster_balanced_sample.
 - literal VALUES (t_wordpiece_vocab / mm_audio_mfcc): deterministic
   fixtures snapshotted from the test-verified operators (regenerate via
-  tools/gen_corpus6_oracles.py after an INTENDED change; the md5 pins in
+  ``tools/registry.py values`` after an INTENDED change; the md5 pins in
   tests/test_snapshot_pins.py make any regeneration a visible diff).
 - sf0.01 snapshot (t_wordpiece_tokens): greedy longest-match segmentation
   is not SQL-expressible — same class as t_unigram_tokens, listed in the
-  sweep's EXPECTED_SNAPSHOT set.
+  registry tool's EXPECTED_SNAPSHOT set.
 """
 
 from __future__ import annotations
@@ -494,8 +494,10 @@ def s_ann_from_index(spark, sf_dir):
 
 # Literal VALUES / snapshot oracles for the deterministic twins above —
 # snapshotted from the test-verified operators via
-# tools/gen_corpus6_oracles.py (md5-pinned in tests/test_snapshot_pins.py;
-# regenerating requires touching BOTH files, by design).
+# ``tools/registry.py values`` (md5-pinned in tests/test_snapshot_pins.py;
+# regenerating requires touching BOTH files, by design). ``values`` prints
+# rows sorted: t_wordpiece_vocab is stored in rank order, so its
+# regeneration also reorders the rows.
 ORACLE_SQL.update(
     {
         "t_wordpiece_vocab": """

@@ -415,7 +415,7 @@ def m_savgol_events_fp(spark, sf_dir):
 
 
 # Literal VALUES oracles snapshotted from the golden-verified kernel outputs
-# (regenerate with tools/gen_model_twin_oracles.py after any intended kernel
+# (regenerate with ``tools/registry.py values`` after any intended kernel
 # change; an unintended change flips the driver hash instead).
 from .relational import ORACLE_SQL
 
