@@ -107,14 +107,15 @@ def test_period_and_duration_modes(spark, settings):
     assert set(out["1s_id"]) == {0}
 
 
-def test_substitution_drop(spark, settings):
+@pytest.mark.parametrize("every", ["period", "possession", "1s"])
+def test_substitution_drop(spark, settings, every):
     base = synthetic_tracking_df(spark, n_frames=20, seed=5)
     # fake a 12th home outfielder appearing mid-window → must be dropped
     sub = base.filter("id = 'h_p05' and frame_id >= 18").withColumn(
         "id", F.lit("h_p99")
     )
     df = base.unionByName(sub)
-    model = EFPI(df, DefaultSettings(home_team_id=HOME, away_team_id=AWAY)).fit(every="period")
+    model = EFPI(df, DefaultSettings(home_team_id=HOME, away_team_id=AWAY)).fit(every=every)
     out = model.output.toPandas()
     assert "h_p99" not in set(out.id)
 
@@ -193,6 +194,8 @@ def test_validation_errors(spark, settings):
     df = planted_tracking(spark)
     with pytest.raises(ValueError):
         EFPI(df, settings).fit(every="5x")
+    with pytest.raises(ValueError):
+        EFPI(df, settings).fit(every="0s")
     with pytest.raises(ValueError):
         EFPI(df, settings).fit(substitutions="bogus")
     with pytest.raises(NotImplementedError):

@@ -800,3 +800,85 @@ def test_sequence_packing_two_level_prefix_sum(spark):
     assert "hashpartitioning(source#" in plan
     assert "_pkb" in plan
     assert "BroadcastHashJoin" in plan
+
+
+@pytest.fixture(scope="module")
+def one_read_stages(spark, tmp_path_factory):
+    """The model stages that aggregate over their own input, each built
+    over a tracking table written to parquet."""
+    from unravelsports_spark.datasets.bdb import BigDataBowlDataset
+    from unravelsports_spark.datasets.synthetic import (
+        AWAY,
+        HOME,
+        synthetic_bdb_csvs,
+        synthetic_tracking_pandas,
+    )
+    from unravelsports_spark.datasets.tracking import TrackingDataset
+    from unravelsports_spark.models.af_graph_converter import AmericanFootballGraphConverter
+    from unravelsports_spark.models.efpi import EFPI
+    from unravelsports_spark.models.graph_converter import SoccerGraphConverter
+    from unravelsports_spark.operators.melt import TrackedObject
+    from unravelsports_spark.settings import DefaultSettings, GraphSettings
+
+    root = tmp_path_factory.mktemp("one_read")
+    long = synthetic_tracking_pandas(n_frames=20, seed=1)
+    spark.createDataFrame(long).write.parquet(str(root / "tracking"))
+    coords = long.pivot_table(
+        index=["period_id", "timestamp", "frame_id"], columns="id", values=["x", "y", "z"]
+    )
+    wide = coords.set_axis([f"{oid}_{axis}" for axis, oid in coords.columns], axis=1).reset_index()
+    wide["ball_state"] = "alive"
+    wide["ball_owning_team_id"] = None
+    wide.astype({"ball_owning_team_id": "string"}).to_parquet(root / "wide.parquet")
+    objects = [
+        TrackedObject(r.id, r.team_id, r.position_name)
+        for r in long.drop_duplicates("id").itertuples()
+    ]
+    synthetic_bdb_csvs(str(root / "bdb"))
+    bdb = BigDataBowlDataset(*(str(root / "bdb" / f"bdb_{t}-1.csv")
+                               for t in ("coords", "players", "plays")))
+    bdb.load(spark)
+    bdb.add_dummy_labels()
+    bdb.add_graph_ids()
+    bdb.data.write.parquet(str(root / "af"))
+
+    def tracking():
+        return spark.read.parquet(str(root / "tracking"))
+
+    def settings():
+        return DefaultSettings(home_team_id=HOME, away_team_id=AWAY)
+
+    return {
+        **{
+            f"efpi_{every}": lambda every=every: EFPI(tracking(), settings()).fit(every=every).output
+            for every in ("possession", "period", "2s")
+        },
+        "goalkeepers": lambda: TrackingDataset.load_wide(
+            spark.read.parquet(str(root / "wide.parquet")), objects, settings(),
+            infer_goalkeepers_flag=True,
+        ).data,
+        "graphs_pad": lambda: SoccerGraphConverter(
+            tracking(), GraphSettings(home_team_id=HOME, away_team_id=AWAY), pad=True
+        ).to_graph_frames(),
+        "af_graphs": lambda: AmericanFootballGraphConverter(
+            spark.read.parquet(str(root / "af")), bdb.settings
+        ).to_graph_frames(),
+    }
+
+
+@pytest.mark.parametrize(
+    "stage", ["efpi_possession", "efpi_period", "efpi_2s", "goalkeepers", "graphs_pad", "af_graphs"]
+)
+def test_model_stage_reads_its_input_once(one_read_stages, stage):
+    """EFPI segmentation, goalkeeper inference, graph padding and the AF
+    validity filter are window passes over their input: the executed plan
+    scans the table once, joins nothing and needs no dynamic pruning, and
+    goalkeeper inference runs the smoothing kernel once."""
+    df = one_read_stages[stage]()
+    df.write.format("noop").mode("overwrite").save()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan") == 1, plan
+    assert "Join" not in plan, plan
+    assert "dynamicpruning" not in plan, plan
+    if stage == "goalkeepers":
+        assert plan.count("FlatMapGroupsInPandas") == 1, plan

@@ -8,9 +8,7 @@ position/formation against the batch EFPI path.
 """
 
 import os
-import shutil
 
-import pytest
 from pyspark.sql import functions as F
 
 from unravelsports_spark.datasets.synthetic import AWAY, HOME, synthetic_tracking_df
@@ -18,18 +16,8 @@ from unravelsports_spark.models.efpi import EFPI
 from unravelsports_spark.settings import DefaultSettings
 from unravelsports_spark.streaming.efpi_stream import streaming_formation_detection
 
-TMP = "/root/repo/.tmp_test/efpi_stream"
 
-
-@pytest.fixture()
-def tmpdir():
-    shutil.rmtree(TMP, ignore_errors=True)
-    os.makedirs(TMP, exist_ok=True)
-    yield TMP
-    shutil.rmtree(TMP, ignore_errors=True)
-
-
-def test_streaming_equals_batch_across_microbatches(spark, tmpdir):
+def test_streaming_equals_batch_across_microbatches(spark, tmp_path):
     settings = DefaultSettings(home_team_id=HOME, away_team_id=AWAY)
     tracking = synthetic_tracking_df(spark, n_frames=60, n_games=1, seed=5).cache()
     split_frame = sorted(r.frame_id for r in tracking.select("frame_id").distinct().collect())[30]
@@ -43,7 +31,7 @@ def test_streaming_equals_batch_across_microbatches(spark, tmpdir):
     )
     want = {(r.frame_id, r.id): (r.position, r.formation) for r in batch}
 
-    src = f"{tmpdir}/src"
+    src = f"{tmp_path}/src"
     os.makedirs(src, exist_ok=True)
     schema = tracking.schema
     tracking.filter(F.col("frame_id") < split_frame).coalesce(1).write.mode(
@@ -58,7 +46,7 @@ def test_streaming_equals_batch_across_microbatches(spark, tmpdir):
         out.writeStream.format("memory")
         .queryName("efpi_stream")
         .outputMode("append")
-        .option("checkpointLocation", f"{tmpdir}/ckpt")
+        .option("checkpointLocation", f"{tmp_path}/ckpt")
         .start()
     )
     try:

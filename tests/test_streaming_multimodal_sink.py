@@ -35,16 +35,10 @@ from unravelsports_spark.streaming.windows import (
 
 from .conftest import SF_SMOKE
 
-TMP = "/root/repo/.tmp_test"
 
-
-
-
-@pytest.fixture(scope="module", autouse=True)
-def tmpdir():
-    os.makedirs(TMP, exist_ok=True)
-    yield TMP
-    shutil.rmtree(TMP, ignore_errors=True)
+@pytest.fixture(scope="module")
+def workdir(tmp_path_factory):
+    return str(tmp_path_factory.mktemp("streaming"))
 
 
 def test_tumbling_sliding_session_batch(spark):
@@ -57,10 +51,10 @@ def test_tumbling_sliding_session_batch(spark):
     assert g.count() > 0
 
 
-def test_streaming_micro_batch(spark, tmpdir):
+def test_streaming_micro_batch(spark, workdir):
     """Real Structured Streaming run: file source → watermarked tumbling agg
     → memory sink, availableNow trigger."""
-    src = f"{tmpdir}/stream_src"
+    src = f"{workdir}/stream_src"
     os.makedirs(src, exist_ok=True)
     shutil.copy(f"{SF_SMOKE}/events.parquet", f"{src}/events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -84,8 +78,8 @@ def test_streaming_micro_batch(spark, tmpdir):
     assert rows > 0
 
 
-def test_stateful_running_counts_streaming(spark, tmpdir):
-    src = f"{tmpdir}/state_src"
+def test_stateful_running_counts_streaming(spark, workdir):
+    src = f"{workdir}/state_src"
     os.makedirs(src, exist_ok=True)
     shutil.copy(f"{SF_SMOKE}/events.parquet", f"{src}/events.parquet")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -153,12 +147,12 @@ def test_multimodal_plumbing(spark):
     assert len({bytes(r.payload) for r in rs}) == len(rs)
 
 
-def test_graph_sink_roundtrip(spark, tmpdir):
+def test_graph_sink_roundtrip(spark, workdir):
     tracking = synthetic_tracking_df(spark, n_frames=6, seed=2)
     gdf = SoccerGraphConverter(
         tracking, GraphSettings(home_team_id=HOME, away_team_id=AWAY)
     ).to_graph_frames()
-    path = f"{tmpdir}/graphs"
+    path = f"{workdir}/graphs"
     write_graph_frames(gdf, path)
     back = read_graph_frames(spark, path)
     assert back.count() == 6
@@ -347,12 +341,12 @@ def test_gnn_loader_batches(spark):
         build_crystal_gnn(15, 6)
 
 
-def test_streaming_dedup(spark, tmpdir):
+def test_streaming_dedup(spark, workdir):
     """Watermarked streaming dedup: duplicate fingerprints across one
     micro-batch collapse to the first occurrence; batch twin agrees."""
     from unravelsports_spark.streaming.windows import streaming_dedup
 
-    src = f"{tmpdir}/dedup_src"
+    src = f"{workdir}/dedup_src"
     os.makedirs(src, exist_ok=True)
     pdf = pd.DataFrame(
         {
@@ -382,13 +376,13 @@ def test_streaming_dedup(spark, tmpdir):
     assert batch.count() == 3
 
 
-def test_tracking_sink_partition_pruning(spark, tmpdir):
+def test_tracking_sink_partition_pruning(spark, workdir):
     """Partitioned tracking sink: game_id filter must prune at the directory
     level (PartitionFilters), never scan other matches."""
     from unravelsports_spark.sources.tracking_sink import read_tracking, write_tracking
 
     tracking = synthetic_tracking_df(spark, n_frames=8, n_games=3, seed=6)
-    path = f"{tmpdir}/tracking"
+    path = f"{workdir}/tracking"
     write_tracking(tracking, path)
     back = read_tracking(spark, path)
     assert back.count() == tracking.count()
@@ -403,12 +397,12 @@ def test_tracking_sink_partition_pruning(spark, tmpdir):
     assert "PushedFilters: [isnotnull(frame_id" in plan2.lower() or "LessThan(frame_id,3)" in plan2
 
 
-def test_stream_stream_interval_join(spark, tmpdir):
+def test_stream_stream_interval_join(spark, workdir):
     """Watermarked stream-stream interval join: purchases attribute to views
     within the trailing window; batch twin produces the same pairs."""
     from unravelsports_spark.streaming.joins import interval_join
 
-    lsrc, rsrc = f"{tmpdir}/ssj_l", f"{tmpdir}/ssj_r"
+    lsrc, rsrc = f"{workdir}/ssj_l", f"{workdir}/ssj_r"
     base = pd.Timestamp("2024-01-01 00:00:00")
     purchases = pd.DataFrame(
         {"user_id": [1, 1, 2], "ts": [base + pd.Timedelta(minutes=m) for m in (40, 90, 50)],
@@ -636,7 +630,7 @@ def test_dedup_ledger_compaction_idempotent(spark, tmp_path):
     assert sorted(r.doc_id for r in spark.read.parquet(out).collect()) == [1, 2, 12]
 
 
-def test_transform_with_state_matches_apply_in_pandas(spark, tmpdir):
+def test_transform_with_state_matches_apply_in_pandas(spark, workdir):
     """The new transformWithStateInPandas API must agree with the
     applyInPandasWithState formulation across two micro-batches. Skipped
     where google.protobuf (the TWS state-server protocol) is absent — the
@@ -651,7 +645,7 @@ def test_transform_with_state_matches_apply_in_pandas(spark, tmpdir):
             stateful_running_counts_tws(df, "event_type")
         pytest.skip("google.protobuf unavailable: transformWithState runtime cannot start")
 
-    src = f"{tmpdir}/tws_src"
+    src = f"{workdir}/tws_src"
     os.makedirs(src, exist_ok=True)
     spark.createDataFrame(
         [("a",), ("a",), ("b",)], "event_type string"

@@ -2,18 +2,18 @@
 
 Re-expresses the reference's unravel/american_football/graphs/
 graph_converter.py (validity filters :206-244, kernel :316-449) on the shared
-Spark machinery: anti-join frame-validity filters (J4/A6), the soccer sort
+Spark machinery: frame-validity filters as window counts (A6), the soccer sort
 expression (O2), and the fixed AF feature stacks (functions/af_kernels.py)
 run per frame through models/frames.py."""
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Optional
 
 import numpy as np
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.af_kernels import (
@@ -22,11 +22,10 @@ from ..functions.af_kernels import (
     compute_af_edge_features,
     compute_af_node_features,
 )
+from ..schema import Group, any_null
 from ..settings import AmericanFootballGraphSettings
 from .frames import map_runs
 from .graph_converter import graph_frames_schema
-
-BY_FRAME = ["game_id", "period_id", "frame_id"]
 
 
 @dataclass
@@ -54,15 +53,13 @@ class AmericanFootballGraphConverter:
 
     def _valid_frames(self, df: DataFrame) -> DataFrame:
         """Drop frames with < min_object_count objects or no football row
-        (reference :206-244, anti-joins)."""
-        counts = df.groupBy(*BY_FRAME).agg(
-            F.count("*").alias("size"),
-            F.sum(F.when(F.col("team_id") == FOOTBALL, 1).otherwise(0)).alias("football_count"),
-        )
-        bad = counts.filter(
-            (F.col("size") < self.min_object_count) | (F.col("football_count") == 0)
-        ).select(*BY_FRAME)
-        return df.join(bad, on=BY_FRAME, how="left_anti")
+        (reference :206-244), counted by frame windows; rows with a NULL frame
+        key belong to no frame and are kept."""
+        frame = Window.partitionBy(*Group.BY_FRAME)
+        size = F.count("*").over(frame)
+        football = F.count(F.when(F.col("team_id") == FOOTBALL, 1)).over(frame)
+        valid = any_null(Group.BY_FRAME) | ((size >= self.min_object_count) & (football > 0))
+        return df.withColumn("_valid", valid).filter("_valid").drop("_valid")
 
     def to_graph_frames(self) -> DataFrame:
         df = self.dataset

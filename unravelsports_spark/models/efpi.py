@@ -5,8 +5,8 @@ Re-expresses the reference's unravel/soccer/models/formations/efpi.py
 
 - temporal segmentation is native DataFrame work: possession sessionization
   (W4 lag+cumsum window), period grouping, or tumbling time buckets (W5);
-  overlapping-substitution handling is an aggregate + rank window + anti-join
-  (A2/W3/J4); segment mean positions are one hash aggregation (A3);
+  overlapping substitutions drop by count and rank windows (A2/W3), so the
+  input is read once; segment mean positions are one hash aggregation (A3);
 - the matching kernel (cost tensor vs formation templates + Hungarian
   assignment, K12) runs once per frame or segment through models/frames.py;
 - the cross-segment hysteresis state (K13, reference detection.py:92-148) is
@@ -32,7 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..functions.assignment import linear_sum_assignment
-from ..schema import BALL, Column, Group
+from ..schema import BALL, Column, Group, any_null
 from ..settings import DefaultSettings
 from .formations import Formations
 from .frames import map_runs
@@ -49,9 +49,9 @@ _OUT_FIELDS = [
 
 
 def _parse_every(every: str) -> int:
-    """'5m' / '30s' / '1h' → millis."""
+    """'5m' / '30s' / '1h' → millis; the duration must be positive."""
     units = {"s": 1_000, "m": 60_000, "h": 3_600_000}
-    if every[-1] not in units or not every[:-1].isdigit():
+    if every[-1] not in units or not every[:-1].isdigit() or int(every[:-1]) == 0:
         raise ValueError(f"invalid 'every' duration string: {every!r}")
     return int(every[:-1]) * units[every[-1]]
 
@@ -202,6 +202,60 @@ def _frames_rows(runs, forms, state_cfg, orientation, home_id, strict=True):
     return out
 
 
+def _segment_rows(df: DataFrame, every: str) -> tuple[DataFrame, list[str]]:
+    """Rows with their segment id column (none for periods), minus each
+    overlapping team-segment's surplus objects; window passes only."""
+    segment_id = f"{every}_id"
+    if every == "possession":
+        # W4 sessionization over the rows: a frame's first row opens a
+        # possession when the owning team or the period changed (a NULL
+        # comparison counts as a change); NULL frame keys get no possession
+        wg = Window.partitionBy(Column.GAME_ID).orderBy(Column.FRAME_ID, Column.PERIOD_ID)
+        frame, period = F.col(Column.FRAME_ID), F.col(Column.PERIOD_ID)
+        owner = F.col(Column.BALL_OWNING_TEAM_ID)
+        same_frame = frame.eqNullSafe(F.lag(frame).over(wg)) & period.eqNullSafe(
+            F.lag(period).over(wg)
+        )
+        flip = (owner != F.lag(owner).over(wg)) | (period != F.lag(period).over(wg))
+        new_frame = (F.row_number().over(wg) == 1) | ~same_frame
+        opens = new_frame & F.coalesce(flip, F.lit(True))
+        running = F.sum(opens.cast("int")).over(
+            wg.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        rows = df.withColumn(segment_id, F.when(~any_null(Group.BY_FRAME), running))
+        seg_expr = [segment_id]
+    elif every == "period":
+        rows = df
+        seg_expr = []
+    else:
+        bucket_ms = _parse_every(every)
+        rows = df.withColumn(
+            segment_id, (F.col(Column.TIMESTAMP) / bucket_ms).cast("long") * bucket_ms
+        )
+        seg_expr = [segment_id]
+
+    # substitution overlap: a team-segment with > 10 distinct outfield
+    # players (A2) keeps its 11 longest-appearing objects, GK included
+    # (reference efpi.py:606-645), ties to the lowest id (W3). Rows with
+    # a NULL id or team-segment key are always kept.
+    team_seg = [Column.GAME_ID, Column.PERIOD_ID, Column.TEAM_ID, *seg_expr]
+    ws = Window.partitionBy(*team_seg)
+    outfield_id = F.when(
+        (F.col(Column.TEAM_ID) != BALL) & (F.col(Column.POSITION_NAME) != "GK"),
+        F.col(Column.OBJECT_ID),
+    )
+    rank = F.dense_rank().over(ws.orderBy(F.col("_len").desc(), Column.OBJECT_ID))
+    keep = (F.col("_objects") <= 10) | (rank <= 11) | any_null([*team_seg, Column.OBJECT_ID])
+    rows = (
+        rows.withColumn("_objects", F.size(F.collect_set(outfield_id).over(ws)))
+        .withColumn("_len", F.count("*").over(Window.partitionBy(*team_seg, Column.OBJECT_ID)))
+        .withColumn("_keep", keep)
+        .filter("_keep")
+        .drop("_objects", "_len", "_keep")
+    )
+    return rows, seg_expr
+
+
 @dataclass
 class EFPI:
     dataset: DataFrame
@@ -271,65 +325,10 @@ class EFPI:
             self.segments = None
             return self
 
-        segment_id = f"{every}_id"
         df = df.withColumn(
             "is_attacking", F.col(Column.BALL_OWNING_TEAM_ID) == F.col(Column.TEAM_ID)
         )
-
-        if every == "possession":
-            # W4 sessionization on the distinct frame table, joined back
-            frames = df.select(*Group.BY_FRAME, Column.BALL_OWNING_TEAM_ID).dropDuplicates(
-                Group.BY_FRAME
-            )
-            wg = Window.partitionBy(Column.GAME_ID).orderBy(Column.FRAME_ID)
-            flip = (
-                (F.col(Column.BALL_OWNING_TEAM_ID) != F.lag(Column.BALL_OWNING_TEAM_ID).over(wg))
-                | (F.col(Column.PERIOD_ID) != F.lag(Column.PERIOD_ID).over(wg))
-            )
-            seg = frames.withColumn(
-                segment_id,
-                F.sum(F.when(flip | flip.isNull(), 1).otherwise(0)).over(
-                    wg.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-                ),
-            ).select(*Group.BY_FRAME, segment_id)
-            df1 = df.join(seg, on=Group.BY_FRAME, how="left")
-            seg_expr = [segment_id]
-        elif every == "period":
-            df1 = df
-            seg_expr = []
-        else:
-            bucket_ms = _parse_every(every)
-            df1 = df.withColumn(
-                segment_id, (F.col(Column.TIMESTAMP) / bucket_ms).cast("long") * bucket_ms
-            )
-            seg_expr = [segment_id]
-
-        # substitution overlap: team-segment with > 10 distinct outfield
-        # players (A2) → drop the shortest-appearing surplus (W3 rank + J4)
-        team_seg = [Column.GAME_ID, Column.PERIOD_ID, Column.TEAM_ID, *seg_expr]
-        outfield = df1.filter(
-            (F.col(Column.TEAM_ID) != BALL) & (F.col(Column.POSITION_NAME) != "GK")
-        )
-        overlapping = (
-            outfield.groupBy(*team_seg)
-            .agg(F.countDistinct(Column.OBJECT_ID).alias("objects"))
-            .filter(F.col("objects") > 10)
-            .select(*team_seg)
-        )
-        # rank over ALL rows of the overlapping team-segment (GK included,
-        # reference efpi.py:606-645) so the surviving 11 = GK + 10 outfield
-        lengths = (
-            df1.join(overlapping, on=team_seg, how="left_semi")
-            .groupBy(*team_seg, Column.OBJECT_ID)
-            .agg(F.count("*").alias("length"))
-        )
-        wr = Window.partitionBy(*team_seg).orderBy(F.col("length").desc(), Column.OBJECT_ID)
-        to_drop = (
-            lengths.withColumn("rank", F.row_number().over(wr))
-            .filter(F.col("rank") > 11)
-            .select(*team_seg, Column.OBJECT_ID)
-        )
-        df1 = df1.join(to_drop, on=[*team_seg, Column.OBJECT_ID], how="left_anti")
+        df1, seg_expr = _segment_rows(df, every)
 
         # A3 segment mean coordinates per object
         obj_keys = [

@@ -5,8 +5,8 @@ Re-expresses the reference's unravel/soccer/graphs/graph_converter.py
 (pipeline :165-238, padding :240-440, kernel :602-725) and
 unravel/utils/objects/default_graph_converter.py:315-393 Spark-first:
 
-- sample / incomplete-frame drop / padding are native DataFrame ops (modulo
-  filter P5, semi-join J3, aggregate + sequence/explode row synthesis O12);
+- sample and padding are native DataFrame ops (modulo filter P5, window +
+  sequence/explode row synthesis O12); incomplete frames drop in the kernel;
 - the per-frame kernel runs through models/frames.py over (game_id,
   period_id, chunk of `frames_per_batch` frames) groups; each frame's
   matrices are pure NumPy (functions/graph_features.py, golden-tested), and
@@ -23,7 +23,7 @@ from typing import Callable, List, Optional
 
 import numpy as np
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -44,7 +44,7 @@ from ..functions.graph_features_batch import (
     compute_edge_channels_batch,
     compute_node_features_batch,
 )
-from ..schema import BALL, Column, Group
+from ..schema import BALL, Column, Group, any_null
 from ..settings import GraphSettings
 from .frames import map_runs
 
@@ -124,22 +124,12 @@ class SoccerGraphConverter:
             return df
         return df.filter(F.col(Column.FRAME_ID) % int(round(1.0 / self.sample_rate)) == 0)
 
-    def _remove_incomplete_frames(self, df: DataFrame) -> DataFrame:
-        """J3: keep frames with exactly 3 distinct team ids (2 teams + ball),
-        reference graph_converter.py:224-238."""
-        valid = (
-            df.groupBy(*Group.BY_FRAME)
-            .agg(F.countDistinct(Column.TEAM_ID).alias("n_teams"))
-            .filter(F.col("n_teams") == 3)
-            .select(*Group.BY_FRAME)
-        )
-        return df.join(valid, on=Group.BY_FRAME, how="left_semi")
-
     def _apply_padding(self, df: DataFrame) -> DataFrame:
-        """O12 re-expressed: per-(frame, team) deficit → sequence/explode row
-        synthesis, plus anti-join ball-row synthesis; then a completeness
-        filter (reference graph_converter.py:240-440). No driver-side loops —
-        the whole stage is a handful of hash aggregations at scale."""
+        """O12 as windows over one frame-key exchange (reference
+        graph_converter.py:240-440): each (frame, team, owner) group's first
+        row explodes into itself plus its deficit of pad rows, which copy its
+        keep/global values; a frame's first row adds a ball pad if it has no
+        ball. A window over the result keeps complete frames with a key."""
         keep = [Column.TIMESTAMP, Column.BALL_STATE, self.label_col, self.graph_id_col]
         group = [Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID, Column.TEAM_ID,
                  Column.BALL_OWNING_TEAM_ID]
@@ -152,61 +142,53 @@ class SoccerGraphConverter:
                 Column.SPEED, Column.AX, Column.AY, Column.AZ, Column.ACCELERATION)},
         }
         schema = dict(df.dtypes)
-        user_cols = [
-            c for c in df.columns
-            if c not in set(keep) | set(group) | set(empty_defaults) | set(self.global_feature_cols)
-        ]
+        shared = set(keep) | set(group) | set(self.global_feature_cols)
 
-        firsts = [F.first(c).alias(c) for c in keep + self.global_feature_cols]
-        counts = df.groupBy(*group).agg(F.count("*").alias("cnt"), *firsts)
-        target = F.when(F.col(Column.TEAM_ID) == BALL, 1).otherwise(11)
-        deficits = counts.withColumn("repeats", target - F.col("cnt")).filter(F.col("repeats") > 0)
-        player_pad = deficits.withColumn("_i", F.explode(F.sequence(F.lit(1), F.col("repeats")))).drop(
-            "cnt", "repeats", "_i"
+        frame = Window.partitionBy(*Group.BY_FRAME)
+        team = Window.partitionBy(*group)
+        is_ball = F.col(Column.TEAM_ID) == BALL
+
+        def first_row(w):
+            return F.row_number().over(w.orderBy(Column.OBJECT_ID)) == 1
+
+        target = F.when(is_ball, 1).otherwise(11)
+        deficit = F.greatest(target - F.count("*").over(team), F.lit(0))
+        no_ball = F.count(F.when(is_ball, 1)).over(frame) == 0
+        staged = (
+            df.withColumn("_n", F.when(first_row(team), deficit).otherwise(0).cast("int"))
+            .withColumn("_ball", (first_row(frame) & no_ball).cast("int"))
+            .withColumn("_i", F.explode(F.sequence(F.lit(0), F.col("_n") + F.col("_ball"))))
         )
+        real = F.col("_i") == 0
+        ball_pad = F.col("_i") > F.col("_n")
 
-        frame_cols = [Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID]
-        all_frames = df.select(
-            *frame_cols, Column.BALL_OWNING_TEAM_ID, *keep, *self.global_feature_cols
-        ).dropDuplicates(frame_cols)
-        with_ball = df.filter(F.col(Column.TEAM_ID) == BALL).select(*frame_cols).distinct()
-        ball_pad = (
-            all_frames.join(with_ball, on=frame_cols, how="left_anti")
-            .withColumn(Column.TEAM_ID, F.lit(BALL))
-        )
+        def padded(c):
+            if c in empty_defaults:
+                return F.when(real, F.col(c)).otherwise(empty_defaults[c].cast(schema[c]))
+            if c == Column.TEAM_ID:
+                return F.when(ball_pad, F.lit(BALL)).otherwise(F.col(c))
+            return F.col(c) if c in shared else F.when(real, F.col(c))
 
-        pad = player_pad.unionByName(ball_pad, allowMissingColumns=True)
-        for c, default in empty_defaults.items():
-            pad = pad.withColumn(c, default.cast(schema[c]))
-        for c in user_cols:
-            pad = pad.withColumn(c, F.lit(None).cast(schema[c]))
-        pad = pad.select(*df.columns)
+        result = staged.select(*[padded(c).alias(c) for c in df.columns])
 
-        result = df.unionByName(pad)
-
-        is_ball = (F.col(Column.TEAM_ID) == BALL).cast("int")
+        is_ball_n = is_ball.cast("int")
         is_owning = (F.col(Column.TEAM_ID) == F.col(Column.BALL_OWNING_TEAM_ID)).cast("int")
         complete = (
-            result.groupBy(*Group.BY_FRAME)
-            .agg(
-                F.sum(is_ball).alias("n_ball"),
-                F.sum(is_owning).alias("n_own"),
-                F.sum(1 - is_ball - is_owning).alias("n_other"),
-            )
-            .filter((F.col("n_ball") == 1) & (F.col("n_own") == 11) & (F.col("n_other") == 11))
-            .select(*Group.BY_FRAME)
+            ~any_null(Group.BY_FRAME)
+            & (F.sum(is_ball_n).over(frame) == 1)
+            & (F.sum(is_owning).over(frame) == 11)
+            & (F.sum(1 - is_ball_n - is_owning).over(frame) == 11)
         )
-        return result.join(complete, on=Group.BY_FRAME, how="left_semi")
+        return result.withColumn("_complete", complete).filter("_complete").drop("_complete")
 
     # -- kernel stage -------------------------------------------------------
 
     def to_graph_frames(self) -> DataFrame:
         df = self._sample(self.dataset)
-        # pad=False drops incomplete frames INSIDE the kernel (a per-group
-        # check that costs nothing) instead of the J3 semi-join pre-stage —
-        # two fewer shuffles; identical semantics (the relational form
-        # remains available as _remove_incomplete_frames / the j3_semi_join
-        # query). pad=True needs the relational padding stage.
+        # pad=False drops incomplete frames (not exactly 2 teams + ball,
+        # reference graph_converter.py:224-238) INSIDE the kernel, a
+        # per-group check that costs no shuffle. pad=True needs the
+        # relational padding stage.
         drop_incomplete = not self.pad
         if self.pad:
             df = self._apply_padding(df)

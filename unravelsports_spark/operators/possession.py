@@ -9,7 +9,8 @@ Spark-first:
   tie-break to the lowest id — and any provider-given owner. One shuffle on
   the frame key and no join back onto the input, so the upstream
   kinematics subtree (and its Python smoothing kernel) is planned once;
-- W2: goalkeeper inference via partitioned min over (frame, team).
+- W2: goalkeeper inference via one partitioned min over (frame, team)
+  across all rows, ball rows included.
 """
 
 from __future__ import annotations
@@ -74,25 +75,27 @@ def infer_ball_ownership(df: DataFrame, ball_carrier_threshold: float = 25.0) ->
 
 def infer_goalkeepers(df: DataFrame, pitch_length: float = 105.0) -> DataFrame:
     """W2: per (frame, team), the player closest to their own goal becomes GK;
-    all other position_name values are cleared (reference :669-723). Assumes
-    BALL_OWNING orientation (owning team attacks left-to-right)."""
+    other players' position_name is cleared, ball rows keep theirs and rows
+    with a NULL team_id are dropped (reference :669-723). Assumes BALL_OWNING
+    orientation (owning team attacks left-to-right)."""
     goal_x = pitch_length / 2.0
-    players = df.filter(F.col(Column.TEAM_ID) != BALL)
     dist_left = F.sqrt((F.col(Column.X) + goal_x) ** 2 + F.col(Column.Y) ** 2)
     dist_right = F.sqrt((F.col(Column.X) - goal_x) ** 2 + F.col(Column.Y) ** 2)
     w = Window.partitionBy(*Group.BY_FRAME_TEAM)
-    players = (
-        players.withColumn("_dl", dist_left)
+    return (
+        df.filter(F.col(Column.TEAM_ID).isNotNull())
+        .withColumn("_dl", dist_left)
         .withColumn("_dr", dist_right)
         .withColumn("_mdl", F.min("_dl").over(w))
         .withColumn("_mdr", F.min("_dr").over(w))
         .withColumn(
             Column.POSITION_NAME,
-            F.when(
+            F.when(F.col(Column.TEAM_ID) == BALL, F.col(Column.POSITION_NAME))
+            .when(
                 F.col(Column.TEAM_ID) == F.col(Column.BALL_OWNING_TEAM_ID),
                 F.when(F.col("_dl") == F.col("_mdl"), "GK"),
-            ).otherwise(F.when(F.col("_dr") == F.col("_mdr"), "GK")),
+            )
+            .otherwise(F.when(F.col("_dr") == F.col("_mdr"), "GK")),
         )
         .drop("_dl", "_dr", "_mdl", "_mdr")
     )
-    return df.filter(F.col(Column.TEAM_ID) == BALL).unionByName(players)

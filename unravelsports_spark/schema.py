@@ -8,6 +8,7 @@ object (player or ball) per frame.
 
 from __future__ import annotations
 
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 BALL = "ball"
@@ -46,6 +47,11 @@ class Group:
     BY_FRAME_TEAM = BY_FRAME + [Column.TEAM_ID]
     BY_OBJECT_PERIOD = [Column.GAME_ID, Column.OBJECT_ID, Column.PERIOD_ID]
     BY_TIMESTAMP = BY_FRAME + [Column.TIMESTAMP]
+
+
+def any_null(keys):
+    """True where any of ``keys`` is NULL: rows an equi-join never matches."""
+    return F.array_contains(F.array(*[F.col(k).isNull() for k in keys]), True)
 
 
 #: Canonical Spark schema of the tracking table (timestamp kept as millis in a
