@@ -1,8 +1,9 @@
-"""Driver-contract invariants: the certification window arithmetic that
-each round's rotation edits by hand (memory: one slip under- or
-over-fills the 50-slot window and silently drops a certification)."""
+"""Entry-contract invariants: the order of queries() that decides which 50
+queries a round certifies, computed from the CORRECTNESS_r*.json records
+and the map of queries touched since them."""
 
 import importlib.util
+import json
 from pathlib import Path
 
 WINDOW = 50
@@ -19,79 +20,87 @@ def _load_entry():
     return mod
 
 
-def test_certification_window_filled_no_oracle_check_dropped():
-    """The driver checks the first 50 queries. Two invariants: every
-    priority-0 (never-certified, oracle-backed) query must FIT in the
-    window (an oracle-backed check past slot 50 is silently skipped), and
-    the window must be FULL (an under-filled window wastes certification
-    slots on already-green queries). Rows-only model checks (priority 1)
-    MAY overflow past slot 50 in a round whose stale-rotation debt fills
-    priority 0 — each carries a hash-certified m_*_cells twin and a
-    recent rows-green, so one skipped round loses nothing."""
+def test_touched_map_names_registered_queries():
+    """A typo'd map key would never become due, and never expire."""
+    mod = _load_entry()
+    from unravelsports_spark.plans import QUERIES
+
+    assert set(mod._TOUCHED) <= set(QUERIES)
+
+
+def test_queries_are_due_keys_then_stalest_first():
+    """On the committed records: the due keys fit in the window (a due key
+    past slot 50 is not checked), queries() lists them first, and the rest
+    follow by non-decreasing last-verified round. Same 210 keys, same
+    oracles."""
     mod = _load_entry()
     from unravelsports_spark.plans import ORACLE_SQL, QUERIES
 
-    p0 = [n for n in QUERIES if n not in mod._CERTIFIED and n in ORACLE_SQL]
-    p1 = [n for n in QUERIES if n not in mod._CERTIFIED and n not in ORACLE_SQL]
-    assert len(p0) <= WINDOW, (len(p0), "oracle-backed check pushed out of window")
-    assert len(p0) + len(p1) >= WINDOW, (len(p0), len(p1), "window under-filled")
-
-
-def test_certified_names_exist_and_oracles_align():
-    """Every _CERTIFIED key names a registered query (a typo'd key would
-    silently rotate the real query forever), and every oracle belongs to a
-    registered query."""
-    mod = _load_entry()
-    from unravelsports_spark.plans import ORACLE_SQL, QUERIES
-
-    unknown = mod._CERTIFIED - set(QUERIES)
-    assert not unknown, unknown
-    assert set(ORACLE_SQL) <= set(QUERIES)
-
-
-def test_queries_order_puts_uncertified_first():
-    """queries() must enumerate never-certified oracle-backed entries
-    before rows-only checks before certified ones — the property the
-    driver's bounded-prefix check depends on."""
-    mod = _load_entry()
-    from unravelsports_spark.plans import ORACLE_SQL
-
+    seen = mod.last_verified(mod._HERE)
+    due = {n for n in QUERIES if mod.is_due(n, seen)}
     names = list(mod.queries())
-    osql = mod.oracle_sql()
-    assert set(osql) == set(ORACLE_SQL)
-
-    def prio(n):
-        if n not in mod._CERTIFIED and n in ORACLE_SQL:
-            return 0
-        if n not in mod._CERTIFIED:
-            return 1
-        return 2
-
-    prios = [prio(n) for n in names]
-    assert prios == sorted(prios)
-    assert prios[:WINDOW].count(2) == 0  # window holds no already-certified
+    assert len(due) <= WINDOW, sorted(due)
+    assert set(names[: len(due)]) == due
+    rest = [seen.get(n, 0) for n in names[len(due):]]
+    assert rest == sorted(rest)
+    assert sorted(names) == sorted(QUERIES)
+    assert mod.oracle_sql() == ORACLE_SQL
 
 
-def test_stale_rows_only_checks_lead_the_tail():
-    """The six rows-only model checks overflow one 50-slot window, so they
-    alternate rounds (VERDICT r10 #1): the _ROWS_ONLY_STALE trio (last
-    driver-run two rounds ago) must precede the fresh trio in queries()
-    order, and when priority-0 leaves exactly 3 free slots they are the
-    ones that run."""
+def _records(tmp_path, rounds):
+    for rnd, recs in rounds.items():
+        (tmp_path / f"CORRECTNESS_r{rnd:02d}.json").write_text(json.dumps(recs))
+    return tmp_path
+
+
+_GREEN = {"rows_match": True, "schema_match": True, "hash_match": True,
+          "spark_rows": 3, "oracle_rows": 3, "err": None}
+_WRONG = dict(_GREEN, hash_match=False)
+_ROWS = {"rows_match": None, "schema_match": None, "hash_match": None,
+         "spark_rows": 100, "oracle_rows": None, "err": "no_oracle"}
+_FAILED = dict(_ROWS, err="Traceback ...")
+
+
+def test_order_from_handwritten_records(tmp_path):
+    """Records r15-r17 in the recorded format: a key never recorded green
+    is due; a map entry expires once a later record shows the key green;
+    hash_match false, a failed rows-only run or one with no rows refreshes
+    nothing; rows-only keys order by their last rows-green record."""
     mod = _load_entry()
     from unravelsports_spark.plans import ORACLE_SQL, QUERIES
 
-    names = list(mod.queries())
-    stale = [names.index(n) for n in mod._ROWS_ONLY_STALE]
-    fresh = [
-        names.index(n)
-        for n in QUERIES
-        if n not in mod._CERTIFIED
-        and n not in ORACLE_SQL
-        and n not in mod._ROWS_ONLY_STALE
-    ]
-    assert fresh, "no fresh rows-only checks — update _ROWS_ONLY_STALE"
-    assert max(stale) < min(fresh), (stale, fresh)
+    assert mod._TOUCHED["w7_row_index"] == 15
+    assert mod._TOUCHED["m_pressing_intensity"] == 15
+    d = _records(tmp_path, {
+        15: {"w7_row_index": _GREEN, "a5_conditional_sum": _GREEN,
+             "m_pressing_intensity": _ROWS, "m_savgol_events": _ROWS},
+        16: {"w7_row_index": _GREEN, "a5_conditional_sum": _WRONG,
+             "m_pressing_intensity": _FAILED,
+             "m_savgol_events": dict(_ROWS, spark_rows=0)},
+        17: {"m_efpi_possession": _ROWS},
+    })
+    seen = mod.last_verified(d)
+    assert seen == {"w7_row_index": 16, "a5_conditional_sum": 15,
+                    "m_pressing_intensity": 15, "m_savgol_events": 15,
+                    "m_efpi_possession": 17}
+    due = {n for n in QUERIES if mod.is_due(n, seen)}
+    assert "q1_pricing_summary" in due and "q1_pricing_summary" in ORACLE_SQL
+    assert "m_pressing_intensity" in due  # mapped at 15, last green r15
+    assert due == set(QUERIES) - {"w7_row_index", "a5_conditional_sum",
+                                  "m_savgol_events", "m_efpi_possession"}
+    names = mod.certification_order(d)
+    assert names[len(due):] == ["a5_conditional_sum", "m_savgol_events",
+                                "w7_row_index", "m_efpi_possession"]
+
+
+def test_no_records_gives_registry_order(tmp_path):
+    """Without records every key is due, so the order is the registry's."""
+    mod = _load_entry()
+    from unravelsports_spark.plans import QUERIES
+
+    assert mod.last_verified(tmp_path) == {}
+    assert all(mod.is_due(n, {}) for n in QUERIES)
+    assert mod.certification_order(tmp_path) == list(QUERIES)
 
 
 def test_read_table_cache_single_generation(spark, tmp_path):

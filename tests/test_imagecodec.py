@@ -414,8 +414,9 @@ def test_audio_spectral_features_pure_tones(spark):
 def test_image_phash_brightness_invariant_and_discriminative(spark):
     """pHash: uniform brightness/contrast scaling multiplies every DCT
     coefficient by the same positive factor, so the median-threshold bits
-    are invariant; structurally different images must differ; tiny inputs
-    upsample to finite hashes."""
+    are invariant (exactly so for an exact integer scale: the hash is
+    integer arithmetic); structurally different images must differ; tiny
+    inputs upsample to finite hashes."""
     import numpy as np
 
     from unravelsports_spark.functions.imagecodec import encode_png
@@ -425,6 +426,7 @@ def test_image_phash_brightness_invariant_and_discriminative(spark):
     base = rng.integers(10, 120, (64, 64)).astype(np.float64)
     scaled = np.clip(base * 1.8, 0, 255)  # same structure, brighter
     other = rng.integers(10, 120, (64, 64)).astype(np.float64)
+    dim = rng.integers(10, 85, (64, 64)).astype(np.float64)
 
     def png(g):
         return encode_png(np.repeat(g.astype(np.uint8)[:, :, None], 3, axis=2))
@@ -433,6 +435,7 @@ def test_image_phash_brightness_invariant_and_discriminative(spark):
     rows = [
         (1, png(base)), (2, png(scaled)), (3, png(other)),
         (4, encode_png(np.repeat(tiny[:, :, None], 3, axis=2))),
+        (5, png(dim)), (6, png(dim * 3)),
     ]
     df = spark.createDataFrame(rows, "id int, payload binary")
     got = {r["id"]: r["phash"] for r in image_phash(df).collect()}
@@ -443,6 +446,7 @@ def test_image_phash_brightness_invariant_and_discriminative(spark):
     assert ham(got[1], got[2]) <= 2   # brightness-scaled: near-identical
     assert ham(got[1], got[3]) >= 16  # different content: far apart
     assert isinstance(got[4], int)    # tiny image: finite hash
+    assert got[5] == got[6]           # exact ×3 scale: identical bits
 
 
 def test_audio_mfcc_properties(spark):

@@ -20,6 +20,7 @@ column thanks to parquet column pruning.
 from __future__ import annotations
 
 import hashlib
+import math
 from typing import Iterator
 
 import numpy as np
@@ -442,14 +443,14 @@ def video_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     return df.mapInPandas(run, schema)
 
 
-def _gray_block_mean(gray: np.ndarray, n_rows: int, n_cols: int) -> np.ndarray:
-    """Block-mean resample of a 2-D grayscale array to (n_rows, n_cols) —
-    the shared boundary discipline of dHash and pHash. Inputs smaller
-    than the grid upsample by nearest-neighbor repeat first (injective,
-    so distinct tiny images keep distinct hashes; without it the linspace
-    boundaries repeat and the block means divide by zero — every
-    thumbnail would collapse onto one hash); unequal splits stay true
-    means via explicit block areas."""
+def _block_sums(gray: np.ndarray, n_rows: int, n_cols: int) -> tuple[np.ndarray, np.ndarray]:
+    """Block sums of a 2-D grayscale array on an (n_rows, n_cols) grid and
+    each block's area — the shared boundary discipline of dHash and pHash.
+    Inputs smaller than the grid upsample by nearest-neighbor repeat first
+    (injective, so distinct tiny images keep distinct hashes; without it
+    the linspace boundaries repeat and the block means divide by zero —
+    every thumbnail would collapse onto one hash); unequal splits stay true
+    means through the explicit block areas."""
     h, w = gray.shape
     if h < n_rows:
         gray = np.repeat(gray, -(-n_rows // h), axis=0)
@@ -462,7 +463,7 @@ def _gray_block_mean(gray: np.ndarray, n_rows: int, n_cols: int) -> np.ndarray:
     grid = np.add.reduceat(cols, rb, axis=0)
     rw = np.diff(np.append(rb, h)).reshape(-1, 1)
     cw = np.diff(np.append(cb, w)).reshape(1, -1)
-    return grid / (rw * cw)
+    return grid, rw * cw
 
 
 def _bits_to_signed64(bits) -> int:
@@ -497,7 +498,8 @@ def image_dhash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     def one(p: bytes) -> int:
         img = decode_image(bytes(p)).astype(np.int64)
         gray = img.mean(axis=2) if img.ndim == 3 else img
-        grid = _gray_block_mean(gray, 8, 9)
+        sums, areas = _block_sums(gray, 8, 9)
+        grid = sums / areas
         bits = (grid[:, 1:] > grid[:, :-1]).astype(np.uint64).ravel()
         return _bits_to_signed64(bits)
 
@@ -583,31 +585,21 @@ def audio_spectral_features(df: DataFrame, payload_col: str = "payload") -> Data
     return df.mapInPandas(run, schema)
 
 
-#: per-size DCT basis memo (same worker-process lifetime discipline as
-#: _MEL_FB_CACHE): image_phash calls _dct2 once per IMAGE — rebuilding the
-#: 32x32 cosine basis per call was ~40% of the DCT step
-_DCT_BASIS_CACHE: dict[int, "np.ndarray"] = {}
-
-
-def _dct2(block: np.ndarray) -> np.ndarray:
-    """Orthonormal 2-D DCT-II via explicit cosine basis matmuls (numpy
-    only — scipy.fft.dctn is not in this container). For an N-point DCT:
-    C[k, x] = a_k · cos(π·(2x+1)·k / (2N)), a_0 = sqrt(1/N),
-    a_k = sqrt(2/N); dct2(B) = C · B · Cᵀ."""
-    n, m = block.shape
-
-    def basis(N: int) -> np.ndarray:
-        cached = _DCT_BASIS_CACHE.get(N)
-        if cached is not None:
-            return cached
-        k = np.arange(N).reshape(-1, 1)
-        x = np.arange(N).reshape(1, -1)
-        c = np.cos(np.pi * (2 * x + 1) * k / (2 * N))
-        c[0] *= np.sqrt(1.0 / N)
-        c[1:] *= np.sqrt(2.0 / N)
-        return _DCT_BASIS_CACHE.setdefault(N, c)
-
-    return basis(n) @ block @ basis(m).T
+#: Rows 0–7 of the 32-point DCT-II basis in fixed point (× 2**20, rounded),
+#: cos(π·(2x+1)·k / 64) with the orthonormal a_0/a_k = sqrt(1/2) folded into
+#: row 0 (the common factor of the other rows is dropped: the median
+#: threshold is scale-invariant). Every entry lies ≥ 0.008 from a rounding
+#: tie, so the table is the same wherever the float cosine is computed.
+_PHASH_BASIS = np.array(
+    [
+        [
+            round(2**20 * (0.5**0.5 if k == 0 else 1.0) * math.cos(math.pi * (2 * x + 1) * k / 64))
+            for x in range(32)
+        ]
+        for k in range(8)
+    ],
+    dtype=object,
+)
 
 
 def image_phash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -615,8 +607,11 @@ def image_phash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     (long): decode, grayscale, block-mean resample to 32×32, 2-D DCT-II,
     keep the 8×8 low-frequency block, threshold each coefficient against
     the MEDIAN of the 63 non-DC coefficients (DC itself is forced to 0 —
-    it only encodes mean brightness). Robust to recompression, resizing
-    and uniform brightness/contrast scaling (a positive scale multiplies
+    it only encodes mean brightness). Every step is exact integer
+    arithmetic (channel sums, block means scaled by the lcm of the block
+    areas, the fixed-point basis above), so no coefficient near the median
+    can flip with the BLAS or CPU the hash runs on. Robust to
+    recompression, resizing and uniform brightness/contrast scaling (a positive scale multiplies
     every DCT coefficient, so the median comparison is invariant) — the
     frequency-domain complement of :func:`image_dhash`'s gradient hash.
 
@@ -627,14 +622,16 @@ def image_phash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     )
 
     def one(p: bytes) -> int:
-        img = decode_image(bytes(p)).astype(np.float64)
-        gray = img.mean(axis=2) if img.ndim == 3 else img
-        grid = _gray_block_mean(gray, 32, 32)
-        low = _dct2(grid)[:8, :8].copy()
-        low[0, 0] = 0.0
-        med = float(np.median(low.ravel()[1:]))
-        bits = (low.ravel() > med).astype(np.uint64)
-        return _bits_to_signed64(bits)
+        img = decode_image(bytes(p)).astype(np.int64)
+        gray = img.sum(axis=2) if img.ndim == 3 else img
+        sums, areas = _block_sums(gray, 32, 32)
+        # block means × lcm(areas): exact integers; Python ints from here on
+        scale = math.lcm(*np.unique(areas).tolist())
+        grid = sums.astype(object) * (scale // areas).astype(object)
+        low = (_PHASH_BASIS @ grid @ _PHASH_BASIS.T).ravel()
+        low[0] = 0
+        med = sorted(low[1:])[31]
+        return _bits_to_signed64(c > med for c in low)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

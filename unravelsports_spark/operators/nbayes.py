@@ -86,7 +86,8 @@ def nb_confusion(
     # r14 chain of distributed grid jobs (range × crossJoin × left-join,
     # each a 32-task cache scan + broadcast build) collapses to two tiny
     # collects and one O(model) broadcast build: 17 jobs / 327 tasks →
-    # 11 jobs / 166 tasks measured at sf0.1 (plans/r15).
+    # 11 jobs / 166 tasks measured at sf0.1
+    # (``git show 2ed894b:plans/r15/t_nb_confusion_after.txt``).
     train = dbc.filter("is_train")
     tb_rows = train.groupBy("label", "bucket").agg(F.sum("n").alias("c")).collect()
     cd_rows = (

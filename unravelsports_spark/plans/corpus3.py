@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 from ..operators.components import pagerank
 from ..operators.retrieval import bm25_scores, countmin_estimates, unigram_logprob
 from ..session import read_table
-from .pipeline import _lsh_sql
+from .pipeline import _lsh_sql, d_lsh_candidate_pairs
 from .relational import query
 
 _TOK = "regexp_extract_all(lower(text), '[a-z0-9]+')"
@@ -488,14 +488,10 @@ def d_cluster_keep_best(spark, sf_dir):
     quality are co-keyed joins. The oracle recomputes the closure with a
     recursive CTE."""
     from ..operators.components import connected_components
-    from ..operators.dedup import doc_shingles, lsh_candidate_pairs, minhash_signatures
     from ..operators.text import with_quality
 
     docs = read_table(spark, sf_dir, "documents")
-    shingled = doc_shingles(docs, distinct=False)
-    sigs = minhash_signatures(shingled, num_hashes=8)
-    pairs = lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-    cc = connected_components(pairs)
+    cc = connected_components(d_lsh_candidate_pairs(spark, sf_dir))
     members = cc.unionByName(
         cc.select(F.col("component").alias("id"), "component").distinct()
     )
@@ -728,12 +724,7 @@ def d_pagerank(spark, sf_dir):
     nodes. Each iteration is one co-partitioned hash join + one map-side
     combinable aggregation; DECIMAL contribution sums + per-iteration
     round(9) keep both engines bit-identical."""
-    from ..operators.dedup import doc_shingles, lsh_candidate_pairs, minhash_signatures
-
-    shingled = doc_shingles(read_table(spark, sf_dir, "documents"), distinct=False)
-    sigs = minhash_signatures(shingled, num_hashes=8)
-    pairs = lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-    return pagerank(pairs, iters=3, damping=0.85)
+    return pagerank(d_lsh_candidate_pairs(spark, sf_dir), iters=3, damping=0.85)
 
 
 # ---------------------------------------------------------------------------

@@ -1340,12 +1340,9 @@ def d_label_communities(spark, sf_dir):
     aggregations (vote counts, per-node max_by argmax — no window over
     the corpus); the histogram is two more tiny combinable aggs."""
     from ..operators.components import label_propagation
-    from ..operators.dedup import doc_shingles, lsh_candidate_pairs, minhash_signatures
+    from .pipeline import d_lsh_candidate_pairs
 
-    shingled = doc_shingles(read_table(spark, sf_dir, "documents"), distinct=False)
-    sigs = minhash_signatures(shingled, num_hashes=8)
-    pairs = lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-    labels = label_propagation(pairs, iters=3)
+    labels = label_propagation(d_lsh_candidate_pairs(spark, sf_dir), iters=3)
     sizes = labels.groupBy("label").agg(F.count("*").alias("community_size"))
     return (
         sizes.groupBy("community_size")
@@ -1408,12 +1405,9 @@ def d_kcore_peeling(spark, sf_dir):
     semi-joins, all on the pruned pair set; fixed rounds keep it exactly
     oracle-checkable (unrolled CTEs)."""
     from ..operators.components import kcore_peel
-    from ..operators.dedup import doc_shingles, lsh_candidate_pairs, minhash_signatures
+    from .pipeline import d_lsh_candidate_pairs
 
-    shingled = doc_shingles(read_table(spark, sf_dir, "documents"), distinct=False)
-    sigs = minhash_signatures(shingled, num_hashes=8)
-    pairs = lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-    return kcore_peel(pairs, k=2, rounds=4)
+    return kcore_peel(d_lsh_candidate_pairs(spark, sf_dir), k=2, rounds=4)
 
 
 # ---------------------------------------------------------------------------

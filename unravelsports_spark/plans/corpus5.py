@@ -364,12 +364,12 @@ ORACLE_SQL.update(
       (CAST(0 AS BIGINT), CAST(-796639149958253559 AS BIGINT)),
       (CAST(1 AS BIGINT), CAST(-2748565064733148377 AS BIGINT)),
       (CAST(2 AS BIGINT), CAST(-3056751518483616982 AS BIGINT)),
-      (CAST(3 AS BIGINT), CAST(446920382454627329 AS BIGINT)),
+      (CAST(3 AS BIGINT), CAST(14574818227059713 AS BIGINT)),
       (CAST(4 AS BIGINT), CAST(7404381586088336595 AS BIGINT)),
       (CAST(5 AS BIGINT), CAST(1757094836499081098 AS BIGINT)),
       (CAST(6 AS BIGINT), CAST(-4482550311305827990 AS BIGINT)),
       (CAST(7 AS BIGINT), CAST(3097451047555205606 AS BIGINT)),
-      (CAST(8 AS BIGINT), CAST(-3302631051862493042 AS BIGINT)),
+      (CAST(8 AS BIGINT), CAST(5767018255185975436 AS BIGINT)),
       (CAST(9 AS BIGINT), CAST(-196931230679899493 AS BIGINT)),
       (CAST(10 AS BIGINT), CAST(3729145816445636510 AS BIGINT)),
       (CAST(11 AS BIGINT), CAST(5926349089983706285 AS BIGINT)),

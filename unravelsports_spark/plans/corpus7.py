@@ -129,15 +129,10 @@ def d_cluster_safe_split(spark, sf_dir):
     exchange in the audit; the split itself adds one broadcast-sized left
     join to the component map."""
     from ..operators.corpus_splits import cluster_safe_split, split_audit
-    from ..operators.dedup import (
-        doc_shingles,
-        lsh_candidate_pairs,
-        minhash_signatures,
-    )
+    from .pipeline import d_lsh_candidate_pairs
 
     docs = read_table(spark, sf_dir, "documents")
-    sigs = minhash_signatures(doc_shingles(docs, distinct=False), num_hashes=8)
-    pairs = lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
+    pairs = d_lsh_candidate_pairs(spark, sf_dir)
     return split_audit(cluster_safe_split(docs.select("doc_id"), pairs))
 
 

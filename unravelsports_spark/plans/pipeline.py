@@ -256,10 +256,7 @@ def d_dup_clusters(spark, sf_dir):
     keep/drop dedup decisions at corpus scale."""
     from ..operators.components import connected_components
 
-    shingled = doc_shingles(read_table(spark, sf_dir, "documents"), distinct=False)
-    sigs = minhash_signatures(shingled, num_hashes=8)
-    pairs = lsh_candidate_pairs(sigs, bands=4, rows_per_band=2)
-    cc = connected_components(pairs)
+    cc = connected_components(d_lsh_candidate_pairs(spark, sf_dir))
     # cc rows are (member -> component) for non-root members; add the root
     return cc.groupBy("component").agg((F.count("*") + 1).alias("n_members"))
 

@@ -39,9 +39,9 @@ def o13_reservoir_sample(spark, sf_dir):
     Scale note (examined r14, left alone): although ``l_returnflag`` has
     only 3 values, the filtered row_number window is NOT a 3-reducer
     bottleneck — Spark 4's InferWindowGroupLimit plans a map-side
-    ``WindowGroupLimit … Partial`` BEFORE the exchange (see
-    plans/r14/o13_reservoir_sample_before.txt), so each map partition
-    ships only its local top-5 per group and the 3 reducers rank
+    ``WindowGroupLimit … Partial`` BEFORE the exchange (see ``git show
+    2ed894b:plans/r14/o13_reservoir_sample_before.txt``), so each map
+    partition ships only its local top-5 per group and the 3 reducers rank
     ~5·P·groups candidate rows. A hand-written two-phase top-k was built,
     verified hash-exact, measured — and reverted: it duplicated what the
     optimizer already does and added a second exchange."""
