@@ -45,7 +45,8 @@ _TOUCHED = dict.fromkeys(
         "m_efpi_possession_fp", "m_pressing_intensity", "m_graph_convert",
         "m_af_graph_convert", "m_efpi_possession", "m_graph_convert_delaunay",
         # integer pHash (dHash shares its block sums); the LSH pair chain
-        # shared through d_lsh_candidate_pairs
+        # shared through d_lsh_candidate_pairs; the graph operators' one
+        # pinned edge table and the two-parent convergence check
         "mm_image_phash", "mm_image_dhash_dedup", "d_dup_clusters",
         "d_cluster_keep_best", "d_pagerank", "d_kcore_peeling",
         "d_cluster_safe_split",

@@ -110,10 +110,10 @@ HEADLINE = [
     # through a per-invocation tmpdir like o18/o19. Scale behavior:
     # robots/frontier probed in SCALING.md; sitemap is the
     # extract_html_text projection class.
-    # NOT headlined: d_kcore_peeling — its wall is ~7 sequential
-    # materialization-job floors over a ~650-row edge list (profiled:
-    # LSH edge build+checkpoint 1.6 s of 2.1 s total; the MATERIALIZED
-    # DuckDB oracle runs the same chain in-memory in 0.6 s), i.e. a
+    # NOT headlined: d_kcore_peeling — its wall is the edge-table build
+    # plus one live-set materialization per round (five at 4 rounds) over
+    # a ~650-row edge list, each job reporting its curve row through an
+    # observation; the LSH pair chain under it dominates, i.e. a
     # local-mode fixed-cost artifact like s_ann_lsh, not plan quality.
     # Its scale behavior is probed directly instead (SCALING.md: 1.1x /
     # 3.1x per decade at 10x/100x).

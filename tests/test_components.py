@@ -34,21 +34,40 @@ def _union_find(n, edges):
     return out
 
 
+def _expected_components(edges):
+    """Union-find rows (id, component) for every non-root node, sorted —
+    the row set connected_components must return (roots and isolated nodes
+    do not appear)."""
+    touched = sorted({v for e in edges for v in e})
+    uf = _union_find(max(touched, default=-1) + 1, edges)
+    return sorted((v, uf[v]) for v in touched if uf[v] != v)
+
+
+def _components_rows(df):
+    # a list, not a dict: a node listed twice must show up as a mismatch
+    return sorted(map(tuple, connected_components(df).collect()))
+
+
 @pytest.mark.parametrize("seed,n,m", [(1, 30, 25), (2, 60, 80)])
 def test_connected_components_random(spark, seed, n, m):
     rng = random.Random(seed)
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
     edges = [(a, b) for a, b in edges if a != b]
-    expect = _union_find(n, edges)
     df = spark.createDataFrame(edges, "id_a int, id_b int")
-    got = {r["id"]: r["component"] for r in connected_components(df).collect()}
-    # non-isolated nodes must match union-find exactly
-    touched = {v for e in edges for v in e}
-    for v in touched:
-        want = expect[v]
-        if want == v and all(expect[u] != v for u in touched if u != v):
-            continue  # singleton after self-loop removal
-        assert got.get(v, v) == want, (v, got.get(v), want)
+    assert _components_rows(df) == _expected_components(edges)
+
+
+def test_connected_components_two_root_parents_not_converged(spark):
+    """A round can end with no node both a src and a dst while one node
+    still points at two roots, (4, 0) and (4, 2): that is not a star
+    forest, and stopping there split the component at 2 (nodes 2, 6, 10
+    and 11 were mapped to 2 instead of 0)."""
+    edges = [(1, 5), (2, 11), (10, 4), (4, 9), (3, 9), (0, 9), (10, 2),
+             (6, 10), (6, 11), (8, 5), (8, 7)]
+    df = spark.createDataFrame(edges, "id_a int, id_b int")
+    got = _components_rows(df)
+    assert got == _expected_components(edges)
+    assert {c for _, c in got} == {0, 1}
 
 
 def test_connected_components_chain(spark):
@@ -165,30 +184,80 @@ def test_kcore_peel_everything_peels(spark):
     assert all(g[1] >= n[1] for g, n in zip(got, got[1:]))  # monotone
 
 
-@pytest.mark.parametrize("seed,n,m", [(7, 25, 40), (13, 40, 55)])
-def test_kcore_peel_matches_python_reference(spark, seed, n, m):
-    """Random graphs vs a brute-force Python peeling trace."""
-    from unravelsports_spark.operators.components import kcore_peel
-
+def _random_edges(seed, n, m):
     rng = random.Random(seed)
-    edges = {(a, b) for a, b in ((rng.randrange(n), rng.randrange(n)) for _ in range(m)) if a != b}
-    sym = {(a, b) for a, b in edges} | {(b, a) for a, b in edges}
-    rounds, k = 3, 2
+    return sorted({(rng.randrange(n), rng.randrange(n)) for _ in range(m)})
+
+
+def _python_peel(edges, k, rounds):
+    """Brute-force peeling trace: pairs with a NULL endpoint and self-loops
+    drop out, duplicates collapse; per round (round, nodes, edges), then
+    every node of current degree < k goes with its edges."""
+    pairs = {(a, b) for a, b in edges if a is not None and b is not None and a != b}
+    cur = pairs | {(b, a) for a, b in pairs}
     expect = []
-    cur = set(sym)
     for i in range(rounds + 1):
-        nodes = {a for a, _ in cur}
-        expect.append((i, len(nodes), sum(1 for a, b in cur if a < b)))
-        if i == rounds:
-            break
+        expect.append((i, len({a for a, _ in cur}), sum(1 for a, b in cur if a < b)))
         deg = {}
         for a, _ in cur:
             deg[a] = deg.get(a, 0) + 1
         keep = {a for a, d in deg.items() if d >= k}
         cur = {(a, b) for a, b in cur if a in keep and b in keep}
-    df = spark.createDataFrame(sorted(edges), "id_a int, id_b int")
+    return expect
+
+
+@pytest.mark.parametrize(
+    "edges,k",
+    [
+        pytest.param(_random_edges(7, 25, 40), 2, id="7-25-40"),
+        pytest.param(_random_edges(13, 40, 55), 2, id="13-40-55"),
+        pytest.param(
+            [(1, None), (None, 2), (None, None), (1, 2), (2, 3), (3, 1), (3, 4)],
+            2,
+            id="null-ids",
+        ),
+        pytest.param(
+            [(1, 1), (1, 2), (2, 1), (1, 2), (2, 3), (3, 3), (3, 1), (3, 4), (4, 3)],
+            2,
+            id="self-loops-duplicates",
+        ),
+        pytest.param([], 2, id="empty"),
+        pytest.param([(1, 2), (2, 3), (3, 4), (4, 5)], 2, id="fully-peeled"),
+        pytest.param([(0, i) for i in range(1, 201)], 2, id="hub-200-spokes"),
+        pytest.param(_random_edges(21, 14, 60), 3, id="k3"),
+    ],
+)
+def test_kcore_peel_matches_python_reference(spark, edges, k):
+    """kcore_peel's curve == the brute-force Python peel, row for row and in
+    round order, on random graphs and the degenerate inputs."""
+    from unravelsports_spark.operators.components import kcore_peel
+
+    rounds = 4
+    df = spark.createDataFrame(edges, "id_a int, id_b int")
     got = [tuple(r) for r in kcore_peel(df, k=k, rounds=rounds).collect()]
-    assert got == expect
+    assert got == _python_peel(edges, k, rounds)
+
+
+def test_kcore_peel_releases_its_edge_cache(spark):
+    """Every table the graph operators persist is tracked: after the result
+    is consumed and release_tracked() runs, the session's cache manager
+    holds nothing."""
+    from unravelsports_spark.cache import release_tracked
+    from unravelsports_spark.operators.components import (
+        kcore_peel,
+        label_propagation,
+        pagerank,
+    )
+
+    release_tracked()
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    df = spark.createDataFrame(_random_edges(5, 20, 40), "id_a int, id_b int")
+    for op in (kcore_peel, pagerank, label_propagation):
+        op(df).collect()
+        assert not cache.isEmpty()  # the edge table was cached
+        release_tracked()
+        assert cache.isEmpty(), op.__name__
 
 
 def test_kcore_peel_k3(spark):
@@ -224,19 +293,45 @@ def test_reliable_checkpoint_variants_match_default(spark, tmp_path):
     assert kc_reliable == kc_default
 
 
+def _sym(edges):
+    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
+    return edges.unionByName(rev).filter(F.col("src") != F.col("dst")).distinct()
+
+
+def _large_star(edges):
+    """Naive reference: connect every strictly-larger neighbor to the
+    neighborhood minimum (including self)."""
+    nbr = _sym(edges)
+    m = nbr.groupBy("src").agg(F.min(F.least(F.col("dst"), F.col("src"))).alias("m"))
+    return (
+        nbr.join(m, "src")
+        .filter(F.col("dst") > F.col("src"))
+        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+        .distinct()
+    )
+
+
+def _small_star(edges):
+    """Naive reference: point every smaller-or-equal neighbor at the
+    neighborhood minimum."""
+    nbr = _sym(edges).filter(F.col("dst") < F.col("src"))
+    m = nbr.groupBy("src").agg(F.min("dst").alias("m"))
+    return (
+        nbr.join(m, "src")
+        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
+        .unionByName(m.select(F.col("src"), F.col("m").alias("dst")))
+        .filter(F.col("src") != F.col("dst"))
+        .distinct()
+    )
+
+
 @pytest.mark.parametrize("seed,n,m", [(11, 25, 20), (12, 40, 60), (13, 12, 40)])
 def test_star_round_equals_composed_stars(spark, seed, n, m):
     """r14 optimization guard: the fused one-round kernel (_star_round over
     the canonical edge form) is SET-identical to the composed
     _small_star(_large_star(sym)) it replaced — per round, not just at the
     fixed point."""
-    from unravelsports_spark.operators.components import (
-        _canon,
-        _large_star,
-        _small_star,
-        _star_round,
-        _sym,
-    )
+    from unravelsports_spark.operators.components import _canon, _star_round
 
     rng = random.Random(seed)
     edges = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]

@@ -717,17 +717,24 @@ def test_w7_row_index_level_decomposition(spark):
     assert "windowspecdefinition(s_acctbal" in plan
 
 
-def test_pagerank_lpa_edge_cache_never_reshuffles_above_broadcast_cap(spark):
+def test_pagerank_lpa_edge_cache_never_reshuffles_above_broadcast_cap(spark, monkeypatch):
     """VERDICT r14 #8: the pagerank/LPA r14 claim — the persisted edge
-    table's pinned hash(key) layout removes the per-iteration edge shuffle
+    table's pinned hash(src) layout removes the per-iteration edge shuffle
     — was only plan-proven at sf0.01 where AQE broadcasts the node side.
     Force every join above the broadcast cap and assert the claim holds in
     the non-broadcast regime: across the unrolled iterations, NO exchange
-    ever sits directly on a cached table scan (the edge/degree caches are
-    consumed in their persisted layout; only derived node-sized tables may
-    move), and the iteration joins really plan as non-broadcast joins."""
+    ever sits directly on a cached table scan (the edge cache is consumed
+    in its persisted layout; only derived tables may move), and the
+    iteration joins really plan as non-broadcast joins. kcore_peel shares
+    the edge table; its per-round degree plans are the frames it hands to
+    _materialize, captured here."""
     from unravelsports_spark.cache import release_tracked
-    from unravelsports_spark.operators.components import label_propagation, pagerank
+    from unravelsports_spark.operators import components
+    from unravelsports_spark.operators.components import (
+        kcore_peel,
+        label_propagation,
+        pagerank,
+    )
 
     def cache_scans_under_exchange(df):
         """Structurally walk the physical plan (InMemoryTableScan is a LEAF
@@ -773,11 +780,21 @@ def test_pagerank_lpa_edge_cache_never_reshuffles_above_broadcast_cap(spark):
     ).filter("id_a != id_b")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    rounds = []
+    materialize = components._materialize
+    monkeypatch.setattr(
+        components,
+        "_materialize",
+        lambda df, reliable: rounds.append(df) or materialize(df, reliable),
+    )
     try:
-        for df in (pagerank(pairs, iters=2), label_propagation(pairs, iters=2)):
+        kcore_peel(pairs, k=2, rounds=2).collect()
+        assert len(rounds) == 3
+        for df in (pagerank(pairs, iters=2), label_propagation(pairs, iters=2), *rounds):
             plan = df._jdf.queryExecution().executedPlan().toString()
             assert "BroadcastHashJoin" not in plan
-            assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
+            if df is not rounds[0]:  # round 0 aggregates the edge table alone
+                assert "SortMergeJoin" in plan or "ShuffledHashJoin" in plan
             assert "InMemoryTableScan" in plan  # the caches are actually used
             # a cached table re-shuffled wholesale would be the
             # per-iteration edge/degree re-shuffle the r14 layout removed

@@ -58,10 +58,10 @@ NOTES = {
     "s_ann_ivfpq_residual": "residual encoding against literal coarse+PQ codebooks with per-cell ADC tables - still a single projection + filter + TakeOrderedAndProject, zero joins.",
     "t_hybrid_rrf": "r8: BM25 side is the literal-stats wide plan (no broadcast), the dense side one Arrow cosine pass; BOTH rankers end in TakeOrderedAndProject and every row_number window sits on a limit-bounded <=20-row list; the fusion full-outer join touches only the two lists. 5 jobs total (qrow collect + 2-job stats agg + 2-job fused collect).",
     "t_ngram_novelty": "r7 shingle-df novelty: NO posting-list join-back - uniqueness collapses inside one map-side-combinable (count, min doc_id) aggregate per shingle; the source rollup joins two |docs|-sized frames via BroadcastHashJoin, zero SortMergeJoin.",
-    "d_label_communities": "r7 synchronous label propagation: per round one co-partitioned hash join (symmetric edges x labels) + two combinable aggs (vote counts, per-node max_by argmax - no window over the corpus); deterministic lowest-label ties certify 3 unrolled iterations exactly.",
+    "d_label_communities": "r7 synchronous label propagation: per round one co-partitioned hash join (symmetric edges pinned on src x labels on src; dst is the voter) + two combinable aggs (vote counts, per-node max_by argmax - no window over the corpus); deterministic lowest-label ties certify 3 unrolled iterations exactly.",
     "d_cdc_chunks": "r9 two-phase rollup: boundary hashes, filter, and start/stop pairing stay doc-bounded array arithmetic in ONE projection; chunks then group by (source, chunk_hash) - duplicates collapse map-side before the wire - and per-source counts read off the deduplicated table (the old multi-COUNT(DISTINCT) Expand pushed every chunk row through the aggregate three times); the 20-row per-source doc count inlines as a literal map.",
     "d_containment_top_pairs": "r7 asymmetric containment: the shingle inverted-index self-join aggregates ONCE per unordered pair; both directions explode out of that single frame (no union double-execution); size denominators join on the src id; top-k is a TakeOrderedAndProject heap.",
-    "d_kcore_peeling": "r7 k-core: per round one combinable degree agg + two node-id semi-joins; each round's edge set is eagerly localCheckpoint-ed so the final union's count branches scan materialized blocks instead of racing the cache and re-evaluating the peeling chain per branch.",
+    "d_kcore_peeling": "r7 k-core: the symmetric edge table is persisted once, hash-pinned on src; the loop carries only the node-sized live set. Per round one degree agg over edges semi-joined to the live set on both endpoints, materialized as the next live set; an observation on the degree frame reads (n_nodes, n_edges) in that same job, so the query itself is the literal curve below.",
     "q3_shipping_priority": "TPC-H Q3 shape: segment/date predicates at all three parquet scans, two BroadcastHashJoins at this SF (plain shuffle joins under AQE at scale), top-10 via TakeOrderedAndProject - no global sort; revenue in exact cent x basis-point int64 units.",
     "q5_local_supplier_volume": "TPC-H Q5 shape: nation/region broadcast through supplier BEFORE the fact join (only region-local suppliers shuffle); the c_nationkey = s_nationkey correlation is a join predicate, not a post-join filter; two-phase _pid revenue sum keeps int64 codegen on rows, DECIMAL(38,0) on partials.",
     "a20_retention_cohorts": "retention matrix: per-user MIN is map-side combinable; the agg-back join and both aggs share the user_id hash partitioning; distinct-count expansion bounded by users x active weeks.",

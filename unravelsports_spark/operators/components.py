@@ -18,7 +18,7 @@ the corpus, so this runs on the pruned pair set, never all-pairs.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -36,54 +36,34 @@ def _materialize(df: DataFrame, reliable: bool) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def _sym(edges: DataFrame) -> DataFrame:
-    rev = edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return edges.unionByName(rev).filter(F.col("src") != F.col("dst")).distinct()
+def _edge_table(pairs: DataFrame, src: str, dst: str) -> tuple[DataFrame, int]:
+    """The one edge table of the iterated graph operators, and its node
+    count: symmetric, self-loop-free (a NULL endpoint drops the pair),
+    distinct, persisted (tracked for ``cache.release_tracked``) and already
+    materialized.
 
-
-def _large_star(edges: DataFrame) -> DataFrame:
-    """Connect every strictly-larger neighbor to the neighborhood minimum
-    (including self)."""
-    nbr = _sym(edges)
-    m = nbr.groupBy("src").agg(F.min(F.least(F.col("dst"), F.col("src"))).alias("m"))
-    return (
-        nbr.join(m, "src")
-        .filter(F.col("dst") > F.col("src"))
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .distinct()
-    )
-
-
-def _small_star(edges: DataFrame) -> DataFrame:
-    """Point every smaller-or-equal neighbor at the neighborhood minimum."""
-    nbr = _sym(edges).filter(F.col("dst") < F.col("src"))
-    m = nbr.groupBy("src").agg(F.min("dst").alias("m"))
-    out = (
-        nbr.join(m, "src")
-        .select(F.col("dst").alias("src"), F.col("m").alias("dst"))
-        .unionByName(m.select(F.col("src"), F.col("m").alias("dst")))
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-    return out
-
-
-def _sym_partitioned(pairs: DataFrame, src: str, dst: str, key: str) -> DataFrame:
-    """Symmetric distinct edge set laid out for an iterated consumer:
-    hash-partitioned on ``key`` (src or dst) with a PINNED partition count
+    It is hash-partitioned on ``src`` with a PINNED partition count
     (spark.sql.shuffle.partitions — scale-adaptive config, not a constant).
-
-    The layout is free (guide §2.4): the symmetrize dedup needs one
-    exchange anyway, and hash(key) satisfies the (src, dst) dedup
-    clustering, so repartition + dropDuplicates replaces distinct's own
-    exchange instead of adding one. The count is pinned because an
-    AQE-coalescible exchange would cache the table at whatever width AQE
-    picked at build time, and a later iteration join against a
-    differently-numbered side would re-shuffle the EDGE side — exactly the
-    per-iteration full-edge shuffle this layout exists to remove; pinning
-    keeps the cached width equal to every aggregation's width so the
+    The consumers key on src: the pagerank contribution join and degree
+    aggregation, the LPA label probe, the k-core degree and src semi-join. The
+    layout is free (guide §2.4): the symmetrize dedup needs one exchange
+    anyway, and hash(src) satisfies the (src, dst) dedup clustering, so
+    repartition + dropDuplicates replaces distinct's own exchange instead of
+    adding one. The count is pinned because an AQE-coalescible exchange would
+    cache the table at whatever width AQE picked at build time, and a later
+    join against a differently-numbered side would re-shuffle the EDGE side;
+    pinning keeps the cached width equal to every aggregation's width so the
     node-sized side is the only thing that can move (the
-    repartition_for_kernel trade, session.py)."""
+    repartition_for_kernel trade, session.py).
+
+    The node count builds the cache before any consumer is planned: an
+    unmaterialized AQE-cached plan reports UnknownPartitioning, and the
+    planner then puts a full-edge exchange above the cache scan in every
+    iteration (caught by the non-broadcast plan walk in
+    tests/test_plan_quality.py). A persisted table keeps its layout once
+    built; a localCheckpoint of it would not."""
+    from ..cache import tracked_persist
+
     try:
         n = int(pairs.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     except ValueError:
@@ -93,12 +73,14 @@ def _sym_partitioned(pairs: DataFrame, src: str, dst: str, key: str) -> DataFram
         n = pairs.sparkSession.sparkContext.defaultParallelism
     raw = pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     rev = raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    return (
+    edges = tracked_persist(
         raw.unionByName(rev)
         .filter(F.col("src") != F.col("dst"))
-        .repartition(n, F.col(key))
+        .repartition(n, F.col("src"))
         .dropDuplicates(["src", "dst"])
     )
+    n_nodes = edges.select("src").distinct().count()
+    return edges, n_nodes
 
 
 def _canon(edges: DataFrame) -> DataFrame:
@@ -118,7 +100,8 @@ def _canon(edges: DataFrame) -> DataFrame:
 def _star_round(edges: DataFrame) -> DataFrame:
     """One large-star + small-star round over a CANONICAL edge set
     (src > dst, distinct) — set-identical to
-    ``_small_star(_large_star(sym))`` (property-tested head-to-head) with
+    a large-star then a small-star step over the symmetric set (the naive
+    reference in tests/test_components.py, property-tested head-to-head) with
     the shuffles the composed form pays between the steps removed
     (optimization guide §2.4):
 
@@ -176,17 +159,22 @@ def connected_components(
     for _ in range(max_iter):
         edges = _materialize(_star_round(edges), reliable)
         # converged when the edge set is a star forest: no dst is also a
-        # src. One map-side-combinable aggregation over the materialized
-        # round (single exchange) instead of the distinct + semi-join form.
+        # src, and no src has two parents (two roots of one component). One
+        # map-side-combinable aggregation over the materialized round
+        # (single exchange) instead of the distinct + semi-join form.
         roles = edges.select(F.col("src").alias("n"), F.lit(1).alias("r")).unionByName(
             edges.select(F.col("dst").alias("n"), F.lit(2).alias("r"))
         )
-        both = (
+        open_nodes = (
             roles.groupBy("n")
-            .agg(F.min("r").alias("lo"), F.max("r").alias("hi"))
-            .filter((F.col("lo") == 1) & (F.col("hi") == 2))
+            .agg(
+                F.min("r").alias("lo"),
+                F.max("r").alias("hi"),
+                F.count(F.when(F.col("r") == 1, 1)).alias("parents"),
+            )
+            .filter(((F.col("lo") == 1) & (F.col("hi") == 2)) | (F.col("parents") > 1))
         )
-        if both.isEmpty():
+        if open_nodes.isEmpty():
             break
     return edges.select(F.col("src").alias("id"), F.col("dst").alias("component"))
 
@@ -214,26 +202,9 @@ def pagerank(
     DECIMAL(26,12); each iteration's rank is rounded to 9 decimals so the
     next round's inputs are engine-identical.
     """
-    from ..cache import tracked_persist
-
-    # edges feed every iteration's join and deg feeds every iteration's
-    # rank rebuild; persist both so the upstream pair pipeline (LSH chain at
-    # corpus scale) runs once — the n_nodes count below materializes them.
-    # tracked_persist registers them for cache.release_tracked() cleanup
-    # after the caller consumes the rank table.
-    # The persisted edge table is hash-partitioned on src: every iteration's
-    # contribution join and the degree aggregation key on src, so the cached
-    # layout already satisfies their distributions and only the rank side
-    # (node-sized, not edge-sized) can ever move per iteration — previously
-    # the distinct left the cache partitioned on (src, dst) and a non-
-    # broadcast plan re-shuffled the full edge set each round. The layout is
-    # FREE: the symmetrize dedup itself needs one exchange anyway, and
-    # hash(src) satisfies the (src, dst) dedup clustering (guide §2.4: two
-    # operations keyed the same way share one exchange), so repartition +
-    # dropDuplicates replaces distinct's own exchange instead of adding one.
-    edges = tracked_persist(_sym_partitioned(pairs, src, dst, key="src"))
-    deg = tracked_persist(edges.groupBy("src").agg(F.count("*").alias("deg")))
-    n_nodes = deg.count()  # scalar; the node table itself never leaves executors
+    edges, n_nodes = _edge_table(pairs, src, dst)
+    # an exchange-free aggregation over the src-pinned cache
+    deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     ranks = deg.select(
         "src", "deg", F.round(F.lit(1.0) / F.lit(n_nodes), 9).alias("pr")
     )
@@ -278,76 +249,57 @@ def kcore_peel(
     curve is hash-certifiable cross-engine (same contract as the
     unrolled-iteration pagerank/LPA oracles).
 
-    Scale shape: per round one map-side-combinable degree aggregation
-    (which also yields the round's survivor-curve row: n_nodes = |deg|,
-    n_edges = sum(deg) div 2 on the symmetric set) plus two semi-joins of
-    the edge list against ONE shared surviving-node subtree — the second
-    filter reuses the first's exchange/broadcast because the symmetric
-    edge set lets the dst filter run as a src filter on the
-    column-swapped (set-identical) table. Each round's edge set is
-    MATERIALIZED eagerly (localCheckpoint, the connected_components
-    pattern): it feeds the next round AND its own count branch in the
-    final union, and union children share no common subplan — with lazy
-    persist the branches would race the cache inside one job and
-    re-evaluate the whole peeling chain per branch (measured 11.7 s vs
-    1.7 s at sf0.1). The edge list is the LSH candidate set, orders
-    smaller than the corpus, so a bounded number of checkpoint actions
-    is driver-trivial.
+    Scale shape: the edge table is built once (:func:`_edge_table`,
+    persisted and pinned on src) and never rewritten; the loop carries only
+    node state, the live set. Each round computes the degree over the edges
+    with BOTH endpoints live (two semi-joins against the node-sized live
+    set; round 0 uses every edge), keeps the nodes with degree >= k as the
+    next live set and materializes it (:func:`_materialize`). That one job
+    also yields the round's curve row: an ``observe`` on the degree frame
+    reads n_nodes = |deg| and n_edges = sum(deg) div 2 (every undirected
+    edge counts twice in the degree total of the symmetric set), so no
+    count job or union of per-round branches follows the loop. The curve
+    comes back as a literal (round, n_nodes, n_edges) frame.
 
     Cluster caveat (ADVICE r7 #3, same trade as connected_components):
     eager localCheckpoint runs jobs at plan-construction time and stores
     blocks NON-reliably — losing an executor after a round checkpoints
     fails the query (lineage is truncated, Spark cannot recompute) and it
     must be rerun from the start. That is the right default here: the
-    checkpointed frames are candidate-set-sized, rounds are few, and a
-    rerun is cheap relative to reliable-checkpoint I/O per round. For
-    very long cluster runs, set ``spark.sparkContext.setCheckpointDir``
-    and pass ``reliable=True`` — each round then writes a reliable
-    checkpoint, trading per-round HDFS I/O for executor-loss resilience.
+    checkpointed live sets are node-sized, rounds are few, and a rerun is
+    cheap relative to reliable-checkpoint I/O per round. For very long
+    cluster runs, set ``spark.sparkContext.setCheckpointDir`` and pass
+    ``reliable=True`` — each round then writes a reliable checkpoint,
+    trading per-round HDFS I/O for executor-loss resilience.
     """
-    edges = _materialize(
-        _sym(pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))),
-        reliable,
-    )
-    counts = []
+    edges, _ = _edge_table(pairs, src, dst)
+    live = edges
+    curve = []
     for i in range(rounds + 1):
-        # One degree table per round serves BOTH the survivor curve and the
-        # peel (guide §2.4): on the symmetric self-loop-free edge set,
-        # n_nodes = |deg| and n_edges = sum(deg) div 2 exactly (every
-        # undirected edge contributes 2 to the degree total), replacing the
-        # old count_distinct + count(src < dst) full-edge aggregation with a
-        # rollup of the node-sized table the peel needs anyway.
-        deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
-        counts.append(
-            deg.agg(
-                F.lit(i).cast("int").alias("round"),
+        obs = Observation()
+        deg = (
+            live.groupBy("src")
+            .agg(F.count("*").alias("deg"))
+            .observe(
+                obs,
                 F.count("*").alias("n_nodes"),
-                # sum() is NULL on a fully-peeled (empty) round; the old
-                # count() form yielded 0 there — keep that contract.
+                # sum() is NULL on a fully-peeled (empty) round: report 0
                 F.coalesce(F.expr("sum(deg) div 2"), F.lit(0).cast("long")).alias(
                     "n_edges"
                 ),
-            ).select("round", "n_nodes", "n_edges")
+            )
         )
-        if i == rounds:
-            break
-        keep = deg.filter(F.col("deg") >= k).select("src")
-        # Both endpoint filters run against the SAME keep subtree: filter on
-        # src, swap the columns (a free projection — the edge set is
-        # symmetric, so the swapped set is the same set), filter on src
-        # again. The old form joined keep once on src and a renamed copy on
-        # dst — two distinct broadcast subtrees, so keep was aggregated and
-        # broadcast twice per round; now the second join reuses the first
-        # exchange (ReusedExchange / one shuffle of the node set at scale).
-        keep_src = edges.join(keep, "src", "left_semi")
-        swapped = keep_src.select(
-            F.col("dst").alias("src"), F.col("src").alias("dst")
+        alive = _materialize(deg.filter(F.col("deg") >= k).select("src"), reliable)
+        curve.append((i, obs.get["n_nodes"], obs.get["n_edges"]))
+        live = edges.join(alive, "src", "left_semi").join(
+            alive.select(F.col("src").alias("dst")), "dst", "left_semi"
         )
-        edges = _materialize(swapped.join(keep, "src", "left_semi"), reliable)
-    out = counts[0]
-    for c in counts[1:]:
-        out = out.unionByName(c)
-    return out.orderBy("round")
+    # a VALUES literal, not createDataFrame: a Python list becomes a pickled
+    # RDD that starts Python workers, which nothing else here needs
+    rows = ", ".join(f"({i}, {n}L, {e}L)" for i, n, e in curve)
+    return edges.sparkSession.sql(
+        f"SELECT * FROM VALUES {rows} AS curve(round, n_nodes, n_edges)"
+    )
 
 
 def label_propagation(
@@ -371,28 +323,10 @@ def label_propagation(
     vote counts, then a combinable max_by argmax per node — no window, no
     global sort). Edges persist across rounds; all arithmetic is exact
     integers."""
-    from ..cache import tracked_persist
-
-    # Partition the persisted edge table on dst — the key every iteration's
-    # label join probes — so the cached layout satisfies the join
-    # distribution and only the node-sized label table can move per round.
-    # Free like the pagerank layout above: repartition + dropDuplicates
-    # share the one exchange the symmetrize dedup pays anyway (guide §2.4).
-    edges = tracked_persist(_sym_partitioned(pairs, src, dst, key="dst"))
-    # Materialize the cache BEFORE the loop is planned: an unmaterialized
-    # AQE-cached plan reports UnknownPartitioning, so the planner inserted a
-    # full-edge exchange above the cache scan in EVERY iteration's join —
-    # exactly the re-shuffle the pinned layout exists to remove. pagerank
-    # gets this for free from its n_nodes count; LPA had no materializing
-    # action (r15; caught by the non-broadcast plan walk in
-    # tests/test_plan_quality.py). The count is the cache build the first
-    # consumer would have paid anyway, surfaced as its own job.
-    edges.count()
-    # derive the node set from the DST endpoint: identical set on the
-    # symmetric table, but dst matches the cache's pinned hash(dst) layout,
-    # so the init distinct runs exchange-free where select(src).distinct()
-    # re-shuffled the full edge column (r15)
-    labels = edges.select(F.col("dst").alias("id")).distinct().withColumn(
+    edges, _ = _edge_table(pairs, src, dst)
+    # the node set comes off the src endpoint in the cache's hash(src)
+    # layout, so the init distinct runs exchange-free
+    labels = edges.select(F.col("src").alias("id")).distinct().withColumn(
         "label", F.col("id")
     )
     for _ in range(iters):
@@ -402,8 +336,8 @@ def label_propagation(
         # aggregations run exchange-free on top of it (previously the
         # (id, label) agg and the (id) agg each shuffled).
         votes = (
-            edges.join(labels, edges.dst == labels.id)
-            .select(edges.src.alias("id"), "label")
+            edges.join(labels, edges.src == labels.id)
+            .select(edges.dst.alias("id"), "label")
             .repartition(F.col("id"))
         )
         counted = votes.groupBy("id", "label").agg(F.count("*").alias("cnt"))

@@ -1401,9 +1401,11 @@ def d_kcore_peeling(spark, sf_dir):
     (peeled in round 1) — the third graph lens after connected components
     (d_dup_clusters) and communities (d_label_communities).
 
-    Scale shape: per round one combinable degree agg + two node-id
-    semi-joins, all on the pruned pair set; fixed rounds keep it exactly
-    oracle-checkable (unrolled CTEs)."""
+    Scale shape: one persisted edge table pinned on src, built once; per
+    round one degree agg over the edges with both endpoints in the live set
+    (two semi-joins against the node-sized set), whose materializing job
+    also reports the curve row through an observation; fixed rounds keep
+    it exactly oracle-checkable (unrolled CTEs)."""
     from ..operators.components import kcore_peel
     from .pipeline import d_lsh_candidate_pairs
 
