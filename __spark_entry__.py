@@ -50,6 +50,9 @@ _TOUCHED = dict.fromkeys(
         "mm_image_phash", "mm_image_dhash_dedup", "d_dup_clusters",
         "d_cluster_keep_best", "d_pagerank", "d_kcore_peeling",
         "d_cluster_safe_split",
+        # one Lloyd trainer for the PQ family; m_savgol_cells on savgol_by_key
+        "s_ann_pq", "s_kmeans_fit", "s_ann_ivfpq", "s_ann_ivfpq_residual",
+        "s_ann_recall", "m_savgol_cells",
     ),
     15,
 )

@@ -78,6 +78,19 @@ def test_connected_components_chain(spark):
     assert all(got[v] == 0 for v in range(1, 17))
 
 
+def test_connected_components_long_path_runs_to_fixpoint(spark):
+    """A 5,000-node path with sequential ids needs 13 star rounds; a
+    12-round cap returned it with hundreds of nodes still pointing at an
+    intermediate root instead of 0."""
+    n = 5000
+    edges = [(i, i + 1) for i in range(n - 1)]
+    df = spark.createDataFrame(edges, "id_a int, id_b int")
+    got = connected_components(df).collect()
+    assert len(got) == n - 1
+    assert [r["id"] for r in got if r["component"] != 0] == []
+    assert sorted(r["id"] for r in got) == list(range(1, n))
+
+
 def test_connected_components_degenerate_inputs(spark):
     # self-loops and duplicate edges must not break or pollute the output
     edges = [(1, 1), (2, 3), (3, 2), (2, 3), (4, 4), (5, 6)]

@@ -343,7 +343,9 @@ def test_image_dhash_tiny_images_stay_distinct(spark):
         "id int, payload binary",
     )
     with warnings.catch_warnings():
-        warnings.simplefilter("error")  # a div-by-zero RuntimeWarning fails
+        # only numpy's RuntimeWarning: a ResourceWarning from PySpark's own
+        # sockets is not this test's business
+        warnings.simplefilter("error", RuntimeWarning)
         got = {r["id"]: r["dhash"] for r in image_dhash(df).collect()}
     assert got[1] != got[2]
     # the degenerate pre-fix value collapsed BOTH onto 0x6d6d6d006d6d6d
@@ -368,10 +370,35 @@ def test_image_dhash_odd_sizes_finite(spark):
     ]
     df = spark.createDataFrame(rows, "id int, payload binary")
     with warnings.catch_warnings():
-        warnings.simplefilter("error")
+        warnings.simplefilter("error", RuntimeWarning)
         got = image_dhash(df).collect()
     assert len(got) == len(sizes)
     assert all(isinstance(r["dhash"], int) for r in got)
+
+
+def test_block_sums_small_and_odd_sizes_divide_cleanly():
+    """The warning filters above run in the driver, but the hash runs in
+    Python workers, so a numpy warning there never reaches them. This is
+    the in-process check: block sums and means of the same sizes (1×1 up
+    to 40×9, plus the 6×6 ramps) on the dHash and pHash grids, with every
+    numpy floating-point error raised."""
+    import numpy as np
+
+    from unravelsports_spark.operators.multimodal import _block_sums
+
+    rng = np.random.default_rng(7)
+    ramp = np.tile(np.linspace(0, 255, 6, dtype=np.uint8), (6, 1)).astype(np.int64)
+    grays = [ramp, ramp[:, ::-1].copy()] + [
+        rng.integers(0, 256, (h, w, 3)).mean(axis=2)
+        for h, w in [(1, 1), (2, 3), (7, 9), (8, 8), (13, 5), (9, 40), (40, 9)]
+    ]
+    for gray in grays:
+        for n_rows, n_cols in [(8, 9), (32, 32)]:
+            with np.errstate(all="raise"):
+                sums, areas = _block_sums(gray, n_rows, n_cols)
+                means = sums / areas
+            assert sums.shape == areas.shape == (n_rows, n_cols), gray.shape
+            assert (areas > 0).all() and np.isfinite(means).all(), gray.shape
 
 
 def test_audio_spectral_features_pure_tones(spark):

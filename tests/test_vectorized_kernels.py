@@ -196,7 +196,8 @@ def test_sign_lsh_bev_matches_keys_plus_join(spark):
 
 def test_with_codes_matches_scalar_assignment(spark):
     """Arrow int64 assignment == scalar fold semantics (ties -> lowest
-    cluster), on a fixture with engineered exact ties."""
+    cluster), for two codebooks assigned in ONE pass, on a fixture with
+    engineered exact ties."""
     from unravelsports_spark.operators.pq import _with_codes
 
     # 2 subspaces of 3 dims; cluster 1 duplicates cluster 0 in subspace 0 so
@@ -205,12 +206,18 @@ def test_with_codes_matches_scalar_assignment(spark):
         [[0, 0, 0], [0, 0, 0], [5, 5, 5]],
         [[1, 2, 3], [3, 2, 1], [0, 0, 0]],
     ]
+    # a second, 1-subspace codebook over all 6 dims; cluster 2 duplicates
+    # cluster 1, so it never wins
+    coarse = [[[0] * 6, [4, -4, 4, -4, 4, -4], [4, -4, 4, -4, 4, -4]]]
     rng = random.Random(5)
     rows = [
         (i, [rng.randint(-10, 10) for _ in range(6)]) for i in range(50)
     ]
     df = spark.createDataFrame(rows, "vec_id long, iq array<bigint>")
-    got = {r["vec_id"]: (r["a0"], r["a1"]) for r in _with_codes(df, codebook).collect()}
+    got = {
+        r["vec_id"]: (r["a0"], r["a1"], r["c0"])
+        for r in _with_codes(df, [("a", codebook), ("c", coarse)]).collect()
+    }
 
     def assign(sub, cents):
         best = None
@@ -221,9 +228,14 @@ def test_with_codes_matches_scalar_assignment(spark):
         return best[1]
 
     for vid, iq in rows:
-        exp = (assign(iq[:3], codebook[0]), assign(iq[3:], codebook[1]))
+        exp = (
+            assign(iq[:3], codebook[0]),
+            assign(iq[3:], codebook[1]),
+            assign(iq, coarse[0]),
+        )
         assert got[vid] == exp, vid
-        assert got[vid][0] != 1  # the engineered tie resolves to cluster 0
+    assert {a0 for a0, _, _ in got.values()} <= {0, 2}
+    assert 2 not in {c0 for _, _, c0 in got.values()}
 
 
 def test_savgol_by_key_bucket_invariant(spark):
@@ -347,10 +359,37 @@ def test_cosine_vs_queries_with_cell_matches_two_pass_form(spark):
     assert 21 not in {c for cs in cells.values() for c in cs}
 
 
+def _lloyd_reference(vecs, m_subspaces, k, n_rounds):
+    """Driver-side integer Lloyd over id-ordered int vectors: the k
+    smallest-id vectors seed, ties go to the lowest cluster, each member
+    dim updates to floor(sum / count), an empty cluster keeps its
+    centroid."""
+    X = np.asarray(vecs, dtype=np.int64)
+    sd = X.shape[1] // m_subspaces
+    book = [
+        [[int(v) for v in X[c, m * sd : (m + 1) * sd]] for c in range(k)]
+        for m in range(m_subspaces)
+    ]
+    for _ in range(n_rounds):
+        for m in range(m_subspaces):
+            S = X[:, m * sd : (m + 1) * sd]
+            C = np.asarray(book[m], dtype=np.int64)
+            codes = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+            for c in range(k):
+                members = S[codes == c]
+                if len(members):
+                    book[m][c] = [
+                        math.floor(int(t) / len(members)) for t in members.sum(axis=0)
+                    ]
+    return book
+
+
 def test_pq_train_codebooks_equals_sequential(spark):
-    """The fused multi-codebook trainer must return EXACTLY the codebooks
-    the single trainers produce (shared max-k seed prefix, fused per-round
-    stats) — the job-count optimization cannot move a single int."""
+    """Specs trained together come back EXACTLY as each trained alone (the
+    shared max-k seed prefix and the fused per-round stats cannot move a
+    single int) and equal to a driver-side integer Lloyd; a 0-round spec
+    returns its seeds; a spec whose subspaces do not divide the dimension
+    is refused."""
     from unravelsports_spark.operators.pq import (
         _int_grid, pq_train_codebook, pq_train_codebooks,
     )
@@ -360,9 +399,15 @@ def test_pq_train_codebooks_equals_sequential(spark):
 
     emb = read_table(spark, SF_CORRECT, "embeddings")
     iq = emb.select(F.col("vec_id").alias("_id"), _int_grid("embedding").alias("iq"))
-    fused = pq_train_codebooks(iq, [(1, 8, 1), (4, 16, 2)])
-    solo = [
-        pq_train_codebook(emb, m_subspaces=1, k=8, n_rounds=1),
-        pq_train_codebook(emb, m_subspaces=4, k=16, n_rounds=2),
-    ]
-    assert fused == solo
+    coarse, pq, seeded = pq_train_codebooks(iq, [(1, 8, 1), (4, 16, 2), (2, 4, 0)])
+    assert coarse == pq_train_codebook(emb, m_subspaces=1, k=8, n_rounds=1)
+    assert pq == pq_train_codebook(emb, m_subspaces=4, k=16, n_rounds=2)
+
+    vecs = [list(r["iq"]) for r in iq.orderBy("_id").collect()]
+    assert coarse == _lloyd_reference(vecs, 1, 8, 1)
+    assert pq == _lloyd_reference(vecs, 4, 16, 2)
+    half = len(vecs[0]) // 2
+    assert seeded == [[v[m * half : (m + 1) * half] for v in vecs[:4]] for m in range(2)]
+
+    with pytest.raises(ValueError, match="not divisible by m_subspaces=5"):
+        pq_train_codebooks(iq, [(4, 16, 1), (5, 8, 1)])

@@ -137,21 +137,28 @@ def load_sportec(
     pdf = parse_tracking(tracking_path, meta, limit=limit)
     base_cols = [f.name for f in TRACKING_SCHEMA.fields
                  if f.name in pdf.columns]
+    # the settings carry the thresholds every stage below applies, so
+    # downstream models read the values this ingest actually used
+    settings = DefaultSettings(
+        home_team_id=meta.home_team_id,
+        away_team_id=meta.away_team_id,
+        provider="sportec",
+        ball_carrier_threshold=ball_carrier_threshold,
+        max_player_speed=max_player_speed,
+        max_ball_speed=max_ball_speed,
+        max_player_acceleration=max_player_acceleration,
+        max_ball_acceleration=max_ball_acceleration,
+    )
     df = spark.createDataFrame(pdf[base_cols])
     df = add_velocity(df, player_smoothing, ball_smoothing)
     df = add_acceleration(df)
     df = apply_speed_acceleration_filters(
         df,
-        max_ball_speed=max_ball_speed,
-        max_player_speed=max_player_speed,
-        max_ball_acceleration=max_ball_acceleration,
-        max_player_acceleration=max_player_acceleration,
+        max_ball_speed=settings.max_ball_speed,
+        max_player_speed=settings.max_player_speed,
+        max_ball_acceleration=settings.max_ball_acceleration,
+        max_player_acceleration=settings.max_player_acceleration,
     )
     df = finalize_kinematics(df)
-    df = infer_ball_ownership(df, ball_carrier_threshold)
-    settings = DefaultSettings(
-        home_team_id=meta.home_team_id,
-        away_team_id=meta.away_team_id,
-        provider="sportec",
-    )
+    df = infer_ball_ownership(df, settings.ball_carrier_threshold)
     return df, settings

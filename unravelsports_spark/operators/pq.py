@@ -20,13 +20,15 @@ rounds as CTEs and must match hash-exactly.
 
 Scale shape (Spark):
 
-- codebook training is the standard distributed Lloyd: assignment is a
-  zero-join PROJECTION against literal centroids (the k×D sufficient
-  statistics collected to the driver per round are ~kB — same contract as
-  MLlib's k-means and this repo's ``s_kmeans_fit``); the per-dim update
-  aggregation is map-side combinable, so the shuffle carries
-  (M × k × D/M) rows, not the corpus;
-- encoding is a pure projection (no join, no shuffle);
+- codebook training is the standard distributed Lloyd, and
+  :func:`pq_train_codebooks` is its only loop: the single-codebook
+  trainers (raw vectors, IVF residuals, ``s_kmeans_fit``) call it with one
+  spec, the IVF-PQ queries with two. Assignment is a zero-join Arrow pass
+  against the driver-held centroids (the k×D sufficient statistics
+  collected per round are ~kB — same contract as MLlib's k-means); the
+  per-dim update aggregation is map-side combinable, so the shuffle
+  carries (M × k × D/M) rows, not the corpus;
+- encoding is the same assignment kernel (no join, no shuffle);
 - the ADC scan is a projection + ``TakeOrderedAndProject`` top-k — the
   corpus is read once, never joined, never globally sorted.
 """
@@ -61,10 +63,10 @@ def _dist2(a, b):
     )
 
 
-def _with_codes(df: DataFrame, codebook, iq_col: str = "iq", prefix: str = "a"):
-    """Append per-subspace nearest-centroid assignment columns
-    (``{prefix}0..{prefix}M-1``, int) to a frame with an int-grid array
-    column — vectorized in Arrow batches.
+def _with_codes(df: DataFrame, tagged, iq_col: str = "iq"):
+    """Append nearest-centroid assignment columns for every ``(prefix,
+    codebook)`` in ``tagged`` in ONE Arrow pass: ``{prefix}0..{prefix}M-1``
+    (int), one per subspace of that codebook.
 
     Every quantity is int64 (exact, order-free), so the numpy evaluation is
     IDENTICAL to the expression form by construction — no float rounding
@@ -77,126 +79,13 @@ def _with_codes(df: DataFrame, codebook, iq_col: str = "iq", prefix: str = "a"):
     import numpy as np
     from pyspark.sql import types as T
 
-    m_subspaces = len(codebook)
-    sub_dim = len(codebook[0][0])
-    C = [np.asarray(codebook[m], dtype=np.int64) for m in range(m_subspaces)]
-    schema = T.StructType(
-        list(df.schema.fields)
-        + [T.StructField(f"{prefix}{m}", T.IntegerType()) for m in range(m_subspaces)]
-    )
-
-    def assign(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            IQ = np.stack(pdf[iq_col].to_numpy()).astype(np.int64)
-            out = pdf.copy()
-            for m in range(m_subspaces):
-                S = IQ[:, m * sub_dim : (m + 1) * sub_dim]
-                diff = S[:, None, :] - C[m][None, :, :]
-                dist = (diff * diff).sum(axis=2)
-                out[f"{prefix}{m}"] = dist.argmin(axis=1).astype(np.int32)
-            yield out
-
-    return df.mapInPandas(assign, schema)
-
-
-def pq_train_codebook(
-    df: DataFrame,
-    m_subspaces: int = 4,
-    k: int = 16,
-    n_rounds: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    iq_df: DataFrame | None = None,
-) -> list[list[list[int]]]:
-    """Lloyd-train the PQ codebook; returns ``codebook[m][c] = int centroid``.
-
-    Seeds are the ``k`` vectors with smallest ids (deterministic); each round
-    collects only the (m, cluster, dim) → (sum, count) sufficient statistics.
-    Driver payload bound: exactly k·D rows per round (M subspaces × k
-    clusters × D/M dims) — independent of corpus size; the assignment pass
-    is a zero-join literal-codebook projection. Empty clusters keep their
-    previous centroid.
-
-    ``iq_df`` (optional): a pre-built ``(_id, iq: array<bigint>)`` int-grid
-    frame — pass the SAME (ideally persisted) frame to multiple trainings
-    and the ADC scans so the quantization projection runs once per caller,
-    not once per step; a caller-persisted frame is left cached (see
-    ``_train_on_iq``)."""
-    iq = (
-        iq_df
-        if iq_df is not None
-        else df.select(F.col(id_col).alias("_id"), _int_grid(vec_col).alias("iq"))
-    )
-    return _train_on_iq(iq, m_subspaces, k, n_rounds)
-
-
-def _train_on_iq(
-    iq: DataFrame, m_subspaces: int, k: int, n_rounds: int
-) -> list[list[list[int]]]:
-    """Core integer Lloyd trainer over a ``(_id, iq: array<bigint>)`` frame —
-    shared by the raw-vector path and the residual path (IVF-PQ).
-
-    The int-grid frame is persisted for the training's lifetime (released
-    in the ``finally``): every round scans it, plus the dim probe and the
-    seed collect — without the cache each of those actions re-ran the
-    upstream quantization lineage (residual path: a join) from the source.
-    Same discipline as MLlib's trainers; cached footprint is the corpus's
-    int arrays, the thing a multi-pass trainer must hold anyway. A frame
-    the CALLER already persisted is respected — left cached on exit, so one
-    cache can serve several trainings plus the retrieval scans."""
-    caller_cached = iq.is_cached
-    if not caller_cached:
-        iq = iq.persist()
-    try:
-        # dim comes from the seed rows — no separate first() probe job
-        seeds = [
-            list(r["iq"])
-            for r in iq.orderBy("_id").limit(k).select("iq").collect()
-        ]
-        if len(seeds) < k:
-            raise ValueError(
-                f"need at least k={k} vectors to seed the codebook, got {len(seeds)}"
-            )
-        dim = len(seeds[0])
-        sub_dim = dim // m_subspaces
-        if dim % m_subspaces:
-            raise ValueError(
-                f"dimension {dim} is not divisible by m_subspaces={m_subspaces}"
-            )
-        codebook = [
-            [seeds[c][m * sub_dim : (m + 1) * sub_dim] for c in range(k)]
-            for m in range(m_subspaces)
-        ]
-
-        for _ in range(n_rounds):
-            assigned = _with_codes(iq.select("iq"), codebook)
-            stats = _round_stats(assigned, m_subspaces, sub_dim)
-            new_cb = [[list(c) for c in cb] for cb in codebook]
-            for r in stats:
-                new_cb[r["m"]][r["cluster"]][r["d"]] = r["c_int"]
-            codebook = new_cb
-        return codebook
-    finally:
-        if not caller_cached:
-            iq.unpersist()
-
-
-def _with_multi_codes(df: DataFrame, tagged, iq_col: str = "iq"):
-    """`_with_codes` for several codebooks in ONE Arrow pass: ``tagged`` is
-    a list of (prefix, codebook); appends every codebook's per-subspace
-    assignment columns. Identical int64 argmin semantics per codebook."""
-    import numpy as np
-    from pyspark.sql import types as T
-
     plans = []
     fields = list(df.schema.fields)
     for prefix, codebook in tagged:
         m_subspaces = len(codebook)
         sub_dim = len(codebook[0][0])
         C = [np.asarray(codebook[m], dtype=np.int64) for m in range(m_subspaces)]
-        plans.append((prefix, m_subspaces, sub_dim, C))
+        plans.append((prefix, sub_dim, C))
         fields += [
             T.StructField(f"{prefix}{m}", T.IntegerType()) for m in range(m_subspaces)
         ]
@@ -208,10 +97,10 @@ def _with_multi_codes(df: DataFrame, tagged, iq_col: str = "iq"):
                 continue
             IQ = np.stack(pdf[iq_col].to_numpy()).astype(np.int64)
             out = pdf.copy()
-            for prefix, m_subspaces, sub_dim, C in plans:
-                for m in range(m_subspaces):
+            for prefix, sub_dim, C in plans:
+                for m, Cm in enumerate(C):
                     S = IQ[:, m * sub_dim : (m + 1) * sub_dim]
-                    diff = S[:, None, :] - C[m][None, :, :]
+                    diff = S[:, None, :] - Cm[None, :, :]
                     dist = (diff * diff).sum(axis=2)
                     out[f"{prefix}{m}"] = dist.argmin(axis=1).astype(np.int32)
             yield out
@@ -219,23 +108,59 @@ def _with_multi_codes(df: DataFrame, tagged, iq_col: str = "iq"):
     return df.mapInPandas(assign, schema)
 
 
+def _round_stats(assigned: DataFrame, tagged):
+    """Per-(codebook, subspace, cluster, dim) floor-mean sufficient
+    statistics for every ``(prefix, codebook)`` assigned by
+    :func:`_with_codes`; rows carry the prefix as ``tag``.
+
+    Every codebook's subspaces explode out of ONE pass over ``assigned``: a
+    union of per-subspace projections would physically re-execute the Arrow
+    assignment subtree once per union branch (Spark does not share a common
+    subplan across union children)."""
+    m_structs = [
+        F.struct(
+            F.lit(prefix).alias("tag"),
+            F.lit(m).alias("m"),
+            F.col(f"{prefix}{m}").alias("cluster"),
+            _sub(F.col("iq"), m, len(codebook[0][0])).alias("vals"),
+        )
+        for prefix, codebook in tagged
+        for m in range(len(codebook))
+    ]
+    return (
+        assigned.select(F.explode(F.array(*m_structs)).alias("s"))
+        # posexplode positions are 0-based — they ARE the dim index
+        .select("s.tag", "s.m", "s.cluster", F.posexplode("s.vals").alias("d", "v"))
+        .groupBy("tag", "m", "cluster", "d")
+        .agg(F.floor(F.sum("v") / F.count("*")).cast("bigint").alias("c_int"))
+        .collect()
+    )
+
+
 def pq_train_codebooks(
     iq_df: DataFrame, specs: list[tuple[int, int, int]]
 ) -> list[list[list[list[int]]]]:
-    """Train SEVERAL independent codebooks over one ``(_id, iq)`` int-grid
-    frame with shared driver actions: ONE seed collect (the max-k prefix
-    seeds every spec — seeds are the smallest-id vectors, so spec i's
-    seeds are exactly the first k_i rows) and, per training round, ONE
-    fused assignment pass + ONE stats collect covering every spec still
-    in training. Each ``specs`` entry is (m_subspaces, k, n_rounds);
-    returns the codebooks in order, each EXACTLY equal to what
-    ``pq_train_codebook`` would produce alone (identical seeds, identical
-    per-round floor-mean updates — equality-tested). Driver payload bound
-    per round: Σ_active k_i·D stats rows.
+    """Integer Lloyd training of one or more independent codebooks over a
+    ``(_id, iq: array<bigint>)`` int-grid frame; each ``specs`` entry is
+    ``(m_subspaces, k, n_rounds)`` and the codebooks come back in order as
+    ``codebook[m][c] = int centroid``.
 
-    This is the job-count optimization for callers like s_ann_ivfpq /
-    s_ann_recall that train a coarse quantizer AND a PQ codebook over the
-    same corpus: 2 seed collects + 3 stats collects become 1 + 2."""
+    Seeds are the ``k`` vectors with smallest ids (deterministic), so ONE
+    seed collect of the max-k prefix seeds every spec. Each round runs ONE
+    fused assignment pass + ONE stats collect covering every spec still in
+    training and updates each centroid dim to the floor-mean of its
+    members; empty clusters keep their previous centroid. A spec's result
+    does not depend on the others it trains with. Driver payload bound per
+    round: Σ_active k_i·D stats rows (M subspaces × k clusters × D/M dims),
+    independent of corpus size; the update aggregation is map-side
+    combinable, so the shuffle carries those rows, not the corpus.
+
+    The int-grid frame is persisted for the training's lifetime (released
+    in the ``finally``): every round scans it, plus the seed collect —
+    without the cache each action re-ran the upstream quantization lineage
+    (residual path: a join) from the source. A frame the CALLER already
+    persisted is left cached on exit, so one cache can serve the trainings
+    plus the retrieval scans."""
     caller_cached = iq_df.is_cached
     if not caller_cached:
         iq_df = iq_df.persist()
@@ -263,75 +188,32 @@ def pq_train_codebooks(
                  for m in range(m_subspaces)]
             )
         for rnd in range(max(r for _, _, r in specs)):
-            active = [i for i, (_, _, r) in enumerate(specs) if rnd < r]
-            tagged = [(f"s{i}_", books[i]) for i in active]
-            assigned = _with_multi_codes(iq_df.select("iq"), tagged)
-            stats = _multi_round_stats(
-                assigned,
-                [(f"s{i}_", len(books[i]), dim // specs[i][0]) for i in active],
-            )
-            for i in active:
-                new_cb = [[list(c) for c in cb] for cb in books[i]]
-                for r in stats:
-                    if r["tag"] == f"s{i}_":
-                        new_cb[r["m"]][r["cluster"]][r["d"]] = r["c_int"]
-                books[i] = new_cb
+            tagged = [
+                (f"s{i}_", books[i]) for i, (_, _, r) in enumerate(specs) if rnd < r
+            ]
+            stats = _round_stats(_with_codes(iq_df.select("iq"), tagged), tagged)
+            # the round's assignment has run; each book updates in place
+            by_tag = dict(tagged)
+            for r in stats:
+                by_tag[r["tag"]][r["m"]][r["cluster"]][r["d"]] = r["c_int"]
         return books
     finally:
         if not caller_cached:
             iq_df.unpersist()
 
 
-def _multi_round_stats(assigned: DataFrame, tagged_shapes):
-    """`_round_stats` across several codebooks in one pass/collect:
-    ``tagged_shapes`` is (prefix, m_subspaces, sub_dim) per codebook; rows
-    carry the prefix as ``tag``."""
-    m_structs = []
-    for tag, m_subspaces, sub_dim in tagged_shapes:
-        for m in range(m_subspaces):
-            m_structs.append(
-                F.struct(
-                    F.lit(tag).alias("tag"),
-                    F.lit(m).alias("m"),
-                    F.col(f"{tag}{m}").alias("cluster"),
-                    _sub(F.col("iq"), m, sub_dim).alias("vals"),
-                )
-            )
-    return (
-        assigned.select(F.explode(F.array(*m_structs)).alias("s"))
-        .select("s.tag", "s.m", "s.cluster", F.posexplode("s.vals").alias("d", "v"))
-        .groupBy("tag", "m", "cluster", "d")
-        .agg(F.floor(F.sum("v") / F.count("*")).cast("bigint").alias("c_int"))
-        .collect()
-    )
-
-
-def _round_stats(assigned: DataFrame, m_subspaces: int, sub_dim: int):
-    """Per-(subspace, cluster, dim) floor-mean sufficient statistics.
-
-    All M subspaces explode out of ONE pass over ``assigned``: the earlier
-    union-of-M-projections form physically re-executed the Arrow assignment
-    subtree once per union branch (Spark does not share a common subplan
-    across union children), so an M=4 training ran the assignment pass 4x
-    per round. Same rows, one assignment pass."""
-    m_structs = F.array(
-        *[
-            F.struct(
-                F.lit(m).alias("m"),
-                F.col(f"a{m}").alias("cluster"),
-                _sub(F.col("iq"), m, sub_dim).alias("vals"),
-            )
-            for m in range(m_subspaces)
-        ]
-    )
-    return (
-        assigned.select(F.explode(m_structs).alias("s"))
-        # posexplode positions are 0-based — they ARE the dim index
-        .select("s.m", "s.cluster", F.posexplode("s.vals").alias("d", "v"))
-        .groupBy("m", "cluster", "d")
-        .agg(F.floor(F.sum("v") / F.count("*")).cast("bigint").alias("c_int"))
-        .collect()
-    )
+def pq_train_codebook(
+    df: DataFrame,
+    m_subspaces: int = 4,
+    k: int = 16,
+    n_rounds: int = 2,
+    vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> list[list[list[int]]]:
+    """Lloyd-train one PQ codebook on the raw vectors of ``df`` (see
+    :func:`pq_train_codebooks`); returns ``codebook[m][c] = int centroid``."""
+    iq = df.select(F.col(id_col).alias("_id"), _int_grid(vec_col).alias("iq"))
+    return pq_train_codebooks(iq, [(m_subspaces, k, n_rounds)])[0]
 
 
 def pq_adc_topk(
@@ -363,7 +245,7 @@ def pq_adc_topk(
         for m in range(m_subspaces)
     ]
 
-    coded = _with_codes(iq, codebook, prefix="_c")
+    coded = _with_codes(iq, [("_c", codebook)])
     cols = [F.col(id_col)]
     adc = F.lit(0).cast("bigint")
     for m in range(m_subspaces):
@@ -414,15 +296,15 @@ def pq_ivf_adc_topk(
     ]
     probes = sorted(range(kc), key=lambda c: (cdist[c], c))[:n_probe]
 
-    # iq_df: optional pre-built (id_col, iq) int-grid frame — same sharing
-    # contract as pq_train_codebook
+    # iq_df: optional pre-built (id_col, iq) int-grid frame, e.g. the
+    # persisted frame the codebooks trained on — quantizes once per caller
     iq = (
         iq_df
         if iq_df is not None
         else df.select(F.col(id_col).alias(id_col), _int_grid(vec_col).alias("iq"))
     )
     candidates = (
-        _with_codes(iq, coarse_cb, prefix="_cell")
+        _with_codes(iq, [("_cell", coarse_cb)])
         .withColumn("cell", F.col("_cell0").cast("bigint"))
         .filter(F.col("cell").isin([int(p) for p in probes]))
         .drop("_cell0")
@@ -441,7 +323,7 @@ def pq_ivf_adc_topk(
         ]
         for m in range(m_subspaces)
     ]
-    coded = _with_codes(candidates, codebook, prefix="_c")
+    coded = _with_codes(candidates, [("_c", codebook)])
     adc = F.lit(0).cast("bigint")
     for m in range(m_subspaces):
         adc = adc + F.element_at(
@@ -470,7 +352,7 @@ def _cell_and_residual(
     )
     raw = df.select(F.col(id_col).alias("_id"), _int_grid(vec_col).alias("_raw"))
     return (
-        _with_codes(raw, coarse_cb, iq_col="_raw", prefix="_cell")
+        _with_codes(raw, [("_cell", coarse_cb)], iq_col="_raw")
         .withColumn("cell", F.col("_cell0"))
         .withColumn(
             "iq",
@@ -496,12 +378,8 @@ def pq_train_residual_codebook(
     """Train the PQ codebook on coarse-cell RESIDUALS — the classic FAISS
     IVFPQ refinement: residual magnitudes are much smaller than raw vectors,
     so the same k centroids quantize them with less error."""
-    return _train_on_iq(
-        _cell_and_residual(df, coarse_cb, vec_col, id_col).select("_id", "iq"),
-        m_subspaces,
-        k,
-        n_rounds,
-    )
+    iq = _cell_and_residual(df, coarse_cb, vec_col, id_col).select("_id", "iq")
+    return pq_train_codebooks(iq, [(m_subspaces, k, n_rounds)])[0]
 
 
 def pq_ivf_residual_adc_topk(
@@ -552,7 +430,7 @@ def pq_ivf_residual_adc_topk(
     cand = _cell_and_residual(df, coarse_cb, vec_col, id_col).filter(
         F.col("cell").isin([int(p) for p in probes])
     )
-    cand = _with_codes(cand, codebook, prefix="_c")
+    cand = _with_codes(cand, [("_c", codebook)])
     adc = F.lit(0).cast("bigint")
     for m in range(m_subspaces):
         code = F.col(f"_c{m}")

@@ -380,11 +380,10 @@ def s_ann_ivfpq(spark, sf_dir):
     parquet layout, the probe filter becomes partition pruning. Exact int64
     end-to-end; hash-certified vs a CTE unroll of both codebooks.
 
-    r7: the two independent codebooks train through the FUSED trainer
-    (pq_train_codebooks — one shared seed collect, one assignment pass +
-    stats collect per round covering both; equality-tested identical to
-    sequential training) over one persisted int-grid frame that the ADC
-    scan and query row reuse."""
+    Both codebooks train in one pq_train_codebooks call (one shared seed
+    collect, one assignment pass + stats collect per round covering both;
+    each codebook is tested equal to training it alone) over one persisted
+    int-grid frame that the ADC scan and query row reuse."""
     from ..cache import tracked_persist
     from ..operators.pq import _int_grid, pq_train_codebooks
 
@@ -890,8 +889,8 @@ def s_ann_recall(spark, sf_dir):
     iq = tracked_persist(
         e.select(F.col("vec_id").alias("_id"), _int_grid("v").alias("iq"))
     )
-    # fused trainer: one shared seed collect, one assignment+stats job per
-    # round for BOTH codebooks (equality-tested == sequential training)
+    # one shared seed collect, one assignment+stats job per round for BOTH
+    # codebooks (each tested equal to training it alone)
     coarse, codebook = pq_train_codebooks(iq, [(1, 8, 1), (4, 16, 2)])
     # the min-id query vector is already IN the collected panel (vec_ids
     # start below nq), so quantize it driver-side with the identical

@@ -195,38 +195,19 @@ def m_efpi_cells(spark, sf_dir):
 def m_savgol_cells(spark, sf_dir):
     """Generic Savitzky-Golay kernel twin (W6, VERDICT r4 item 7): window 7
     / POLYORDER 2 — the pinv polynomial path the closed-form poly-1 oracle
-    (w6_savgol_oracle) cannot reach — run through the same grouped Arrow
-    kernel shape as m_savgol_events on a deterministic 2-group series,
-    rounded to 6 decimals against a literal VALUES oracle."""
-    import pandas as pd
-
-    from pyspark.sql import types as T
-
-    from ..functions.savgol import savgol_filter
+    (w6_savgol_oracle) cannot reach — run through ``savgol_by_key``, the
+    grouped Arrow kernel m_savgol_events uses, on a deterministic 2-group
+    series, rounded to 6 decimals against a literal VALUES oracle."""
+    from ..functions.savgol import savgol_by_key
 
     rows = [
         (g, i, float((i * 37 + g * 13) % 11)) for g in (0, 1) for i in range(12)
     ]
     src = spark.createDataFrame(rows, "g long, idx long, value double")
-    schema = T.StructType(
-        [
-            T.StructField("g", T.LongType()),
-            T.StructField("idx", T.LongType()),
-            T.StructField("value_smooth", T.DoubleType()),
-        ]
+    return savgol_by_key(
+        src, key_col="g", order_cols=["idx"], value_col="value",
+        out_cols=["g", "idx"], window_length=7, polyorder=2, ndigits=6,
     )
-
-    def smooth(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("idx", kind="stable")
-        return pd.DataFrame(
-            {
-                "g": pdf["g"],
-                "idx": pdf["idx"],
-                "value_smooth": savgol_filter(pdf["value"].to_numpy(), 7, 2).round(6),
-            }
-        )
-
-    return src.groupBy("g").applyInPandas(smooth, schema)
 
 
 def _fp32(col):
