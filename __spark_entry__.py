@@ -53,6 +53,9 @@ _TOUCHED = dict.fromkeys(
         # one Lloyd trainer for the PQ family; m_savgol_cells on savgol_by_key
         "s_ann_pq", "s_kmeans_fit", "s_ann_ivfpq", "s_ann_ivfpq_residual",
         "s_ann_recall", "m_savgol_cells",
+        # write_warc without the CDX index option; read_warc calls the shared
+        # shard decoder directly
+        "o19_warc_roundtrip",
     ),
     15,
 )

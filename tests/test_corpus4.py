@@ -329,29 +329,6 @@ def test_ivfpq_scan_is_projection_only(spark):
         assert bad not in plan, bad
 
 
-def test_ivf_cell_partitioned_layout_prunes_scan(spark, tmp_path):
-    """The 100 TB claim in pq_ivf_adc_topk's docstring, demonstrated through
-    the public layout API: write the corpus partitioned by coarse cell, and
-    the probe filter becomes partition pruning — the scan reads only the
-    probed cells' directories."""
-    from unravelsports_spark.operators.pq import pq_train_codebook
-    from unravelsports_spark.sources.layout import (
-        read_probed_cells,
-        write_embeddings_by_cell,
-    )
-
-    emb = spark.read.parquet(f"{SF}/embeddings.parquet")
-    coarse = pq_train_codebook(emb, m_subspaces=1, k=8, n_rounds=1)
-    out = str(tmp_path / "by_cell")
-    write_embeddings_by_cell(emb, coarse, out)
-    probed = read_probed_cells(spark, out, [1, 4])
-    plan = probed._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "cell" in plan.split("PartitionFilters")[1][:120]
-    # pruning is effective: only the two probed partitions' rows are read
-    total = spark.read.parquet(out).count()
-    assert 0 < probed.count() < total
-
-
 def test_dsir_select_keeps_about_the_target_fraction(spark):
     """Histogram-threshold selection keeps ~keep_frac of the raw pool
     (within one score bucket of exact-p) and only scores above everything

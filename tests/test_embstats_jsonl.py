@@ -177,17 +177,10 @@ def test_embedding_dim_stats_property_matches_numpy(spark):
 def test_jsonl_type_corruption_pruning_hazard(spark, tmp_path):
     """JSONL shares the TYPE-level pruning hazard (r11 pass 6 #1/#2): a
     valid-JSON row whose doc_id fails the long cast leaks as clean under a
-    pruned projection on the raw read; read_jsonl_checked closes it. (The
-    o17 oracle is immune regardless: its injected line is SYNTAX-corrupt,
-    and its rollup references every schema column.) Raw assertions run
-    BEFORE the checked read exists — the persisted twin plan would serve
-    the raw frame and mask the leak (the csvio cache-masking lesson)."""
-    from unravelsports_spark.cache import release_tracked
-    from unravelsports_spark.sources.jsonl import (
-        read_jsonl,
-        read_jsonl_checked,
-        write_jsonl,
-    )
+    pruned projection on the raw read. (The o17 oracle is immune
+    regardless: its injected line is SYNTAX-corrupt, and its rollup
+    references every schema column.)"""
+    from unravelsports_spark.sources.jsonl import read_jsonl, write_jsonl
 
     df = spark.createDataFrame(
         [(0, "a", "x")], "doc_id long, source string, text string"
@@ -203,26 +196,19 @@ def test_jsonl_type_corruption_pruning_hazard(spark, tmp_path):
         .collect()
     )
     assert len(leaked) == 2, "Spark now casts pruned JSON columns - update docs"
-    checked = read_jsonl_checked(spark, p)
-    try:
-        clean = (
-            checked.where(F.col("_corrupt_record").isNull())
-            .select("source", "text")
-            .collect()
-        )
-        assert len(clean) == 1 and clean[0]["source"] == "a"
-    finally:
-        # an assertion failure must not leak the persisted frame into the
-        # shared-session suite (r11 pass 7 #3)
-        release_tracked()
 
 
 def test_jsonl_materialized_checked_read_survives_release(spark, tmp_path):
-    """materialize= on the JSONL side (VERDICT r11 #5): type-corrupt rows
-    stay flagged under a pruned projection after release_tracked + a full
-    cache clear, because the parse landed to parquet."""
+    """materialize_checked on the JSONL side (VERDICT r11 #5) closes the
+    hazard: type-corrupt rows stay flagged under a pruned projection after
+    release_tracked + a full cache clear, because the parse landed to
+    parquet."""
     from unravelsports_spark.cache import release_tracked
-    from unravelsports_spark.sources.jsonl import read_jsonl_checked, write_jsonl
+    from unravelsports_spark.sources.jsonl import (
+        materialize_checked,
+        read_jsonl,
+        write_jsonl,
+    )
 
     df = spark.createDataFrame(
         [(0, "a", "x")], "doc_id long, source string, text string"
@@ -232,7 +218,7 @@ def test_jsonl_materialized_checked_read_survives_release(spark, tmp_path):
     with open(f"{p}/part-typebad.json", "w") as fh:
         fh.write('{"doc_id": "notanumber", "source": "bad", "text": "oops"}\n')
 
-    checked = read_jsonl_checked(spark, p, materialize=str(tmp_path / "landed"))
+    checked = materialize_checked(read_jsonl(spark, p), spark, str(tmp_path / "landed"))
     release_tracked()
     spark.catalog.clearCache()
     clean = (

@@ -15,6 +15,25 @@ from unravelsports_spark.operators.filtering import (
 )
 
 
+def lang_scores(text_col: str = "text") -> dict:
+    """Column-form reference for `with_lang_id`'s SQL text: per-language
+    stopword occurrence counts from the same anchored patterns. The document
+    is scanned once with the all-languages union pattern; the per-language
+    counts scan only the space-joined matches."""
+    from unravelsports_spark.operators.text import (
+        LANG_STOPWORDS, _all_stopwords_pattern, _stopword_pattern,
+    )
+
+    c = F.trim(F.lower(F.col(text_col)))
+    reduced = F.array_join(
+        F.regexp_extract_all(c, F.lit(_all_stopwords_pattern()), F.lit(0)), " "
+    )
+    return {
+        lang: F.size(F.regexp_extract_all(reduced, F.lit(_stopword_pattern(stops)), F.lit(0)))
+        for lang, stops in LANG_STOPWORDS.items()
+    }
+
+
 def test_repetition_stats_known_values(spark):
     df = spark.createDataFrame(
         pd.DataFrame(
@@ -105,15 +124,16 @@ def test_contamination_semantics(spark):
 
 
 def test_lang_scores_regex_equals_filter_form(spark):
-    """The anchored-regex stopword counter (operators/text.py:lang_scores)
-    must equal the whitespace-token filter form on adversarial texts:
-    punctuation-attached tokens, prefix stopwords (le/les, e/en), repeats,
-    mixed whitespace, empties, and randomized token soups."""
+    """The anchored-regex stopword counter (the shared patterns behind
+    with_lang_id, in Column form) must equal the whitespace-token filter
+    form on adversarial texts: punctuation-attached tokens, prefix
+    stopwords (le/les, e/en), repeats, mixed whitespace, empties, and
+    randomized token soups."""
     import random
 
     from pyspark.sql import functions as F
 
-    from unravelsports_spark.operators.text import LANG_STOPWORDS, lang_scores, tokens
+    from unravelsports_spark.operators.text import LANG_STOPWORDS, tokens
 
     fixed = [
         "", " ", "the", "the the", "the, and", ",the and.", "le les les",
@@ -152,9 +172,7 @@ def test_with_lang_id_shares_pattern_and_quotes_column(spark):
     pick exactly the argmax of lang_scores with first-wins ties."""
     from pyspark.sql import functions as F
 
-    from unravelsports_spark.operators.text import (
-        LANG_STOPWORDS, lang_scores, with_lang_id,
-    )
+    from unravelsports_spark.operators.text import LANG_STOPWORDS, with_lang_id
 
     texts = [
         "the quick brown fox and the dog",          # en

@@ -14,18 +14,31 @@ from unravelsports_spark.functions.imagecodec import (
     decode_bmp,
     decode_image,
     decode_png,
-    encode_bmp,
     encode_png,
-    resize_nearest,
     sniff_format,
 )
-from unravelsports_spark.operators.multimodal import (
-    decode_images,
-    extract_image_features,
-    resize_images,
-)
+from unravelsports_spark.operators.multimodal import decode_images
 
 rng = np.random.default_rng(7)
+
+
+def encode_bmp(img: np.ndarray) -> bytes:
+    """24-bit bottom-up BGR BMP writer: the fixture source for the decoder."""
+    img = np.asarray(img, np.uint8)
+    if img.ndim == 2:
+        img = img[:, :, None]
+    if img.shape[2] == 1:
+        img = np.dstack([img[:, :, 0]] * 3)
+    elif img.shape[2] == 4:
+        img = img[:, :, :3]
+    h, w, _ = img.shape
+    stride = (w * 3 + 3) & ~3
+    rows = np.zeros((h, stride), np.uint8)
+    rows[:, : w * 3] = img[::-1, :, ::-1].reshape(h, -1)  # bottom-up BGR
+    body = rows.tobytes()
+    header = struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
+    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
+    return header + info + body
 
 
 # -- pure codec --------------------------------------------------------------
@@ -143,13 +156,6 @@ def test_sniff_and_generic_decode():
         decode_image(b"II*\x00 tiff-ish not supported")
 
 
-def test_resize_nearest():
-    img = np.arange(24, dtype=np.uint8).reshape(4, 2, 3)
-    out = resize_nearest(img, 4, 2)
-    assert out.shape == (2, 4, 3)
-    np.testing.assert_array_equal(out[0, 0], img[0, 0])
-
-
 # -- Spark non-fake path -----------------------------------------------------
 
 
@@ -169,24 +175,6 @@ def test_decode_images_real(media_df):
         r = out[f"m{i}"]
         assert (r.dec_height, r.dec_width) == (4 + i, 5 + i)
         assert r.mean_pixel == pytest.approx(10 * i / 255.0)
-
-
-def test_resize_images_real(media_df):
-    resized = resize_images(media_df, 8, 6, fake=False)
-    out = decode_images(resized, fake=False).collect()
-    assert all((r.dec_width, r.dec_height) == (8, 6) for r in out)
-    # format preserved through resize
-    first = next(r for r in resized.collect() if r.media_id == "m1")
-    assert bytes(first.payload)[:2] == b"BM"
-
-
-def test_extract_features_real(media_df):
-    out = {r.media_id: r.features for r in
-           extract_image_features(media_df, fake=False).collect()}
-    f0 = out["m0"]
-    assert len(f0) == 8
-    assert f0[0] == pytest.approx(0.0)  # solid black → zero channel means
-    assert out["m2"][0] == pytest.approx(20 / 255.0, abs=1e-6)
 
 
 # -- property tests (hypothesis) ---------------------------------------------
@@ -217,14 +205,6 @@ try:
             np.testing.assert_array_equal(out, np.dstack([img[:, :, 0]] * 3))
         else:
             np.testing.assert_array_equal(out, img[:, :, :3])
-
-    @given(_images(), st.integers(1, 20), st.integers(1, 20))
-    @settings(max_examples=40, deadline=None)
-    def test_resize_property(img, w, h):
-        out = resize_nearest(img, w, h)
-        assert out.shape == (h, w, img.shape[2])
-        # every output pixel exists somewhere in the input
-        assert out.dtype == np.uint8
 
 except ImportError:  # pragma: no cover
     pass

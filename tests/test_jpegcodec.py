@@ -7,9 +7,10 @@ import struct
 import numpy as np
 import pytest
 
-from unravelsports_spark.functions.imagecodec import decode_image, encode_image, sniff_format
+from unravelsports_spark.functions.imagecodec import decode_image, sniff_format
 from unravelsports_spark.functions.jpegcodec import decode_jpeg, encode_jpeg
-from unravelsports_spark.sources.avi import read_mjpeg_avi, write_mjpeg_avi
+from unravelsports_spark.operators.multimodal import _parse_avi_frames
+from unravelsports_spark.sources.avi import write_mjpeg_avi
 
 
 def _psnr(a, b):
@@ -61,7 +62,7 @@ def test_jpeg_sof0_dimensions():
 
 def test_jpeg_dispatch_via_image_codec():
     img = _gradient(24, 32)
-    data = encode_image(img, "jpeg")
+    data = encode_jpeg(img)
     assert sniff_format(data) == "jpeg"
     assert _psnr(decode_image(data), img) > 35
 
@@ -84,7 +85,8 @@ def test_avi_roundtrip(tmp_path):
     raw = open(path, "rb").read()
     assert raw[:4] == b"RIFF" and raw[8:12] == b"AVI "
     assert struct.unpack("<I", raw[4:8])[0] == len(raw) - 8
-    back = read_mjpeg_avi(path)
+    with open(path, "rb") as fh:
+        back = _parse_avi_frames(fh.read())
     assert back == frames
     # every recovered frame decodes
     for f in back:
@@ -185,17 +187,13 @@ def _clip_bytes(n_frames, w=24, h=16, shade_step=10):
     return data
 
 
-def test_video_stats_and_frame_sampling(spark):
-    from unravelsports_spark.operators.multimodal import sample_avi_frames, video_stats
+def test_avi_frame_sampling(spark):
+    from unravelsports_spark.operators.multimodal import sample_avi_frames
 
     df = spark.createDataFrame(
         [("c0", bytearray(_clip_bytes(12))), ("c1", bytearray(_clip_bytes(3)))],
         "clip_id string, payload binary",
     )
-    stats = {r.clip_id: r for r in video_stats(df).collect()}
-    assert stats["c0"].n_frames == 12 and stats["c1"].n_frames == 3
-    assert stats["c0"].total_frame_bytes > 0
-
     sampled = sample_avi_frames(df, every_k=5).collect()
     by_clip = {}
     for r in sampled:
@@ -212,13 +210,12 @@ def test_video_stats_and_frame_sampling(spark):
 
 
 def test_video_rejects_non_avi(spark):
-    from unravelsports_spark.operators.multimodal import video_stats
+    from unravelsports_spark.operators.multimodal import sample_avi_frames
 
     df = spark.createDataFrame([("x", bytearray(b"not a riff file"))],
                                "clip_id string, payload binary")
-    import pytest as _pytest
-    with _pytest.raises(Exception):
-        video_stats(df).collect()
+    with pytest.raises(Exception):
+        sample_avi_frames(df).collect()
 
 
 # -- MP4 (ISO BMFF) muxer ----------------------------------------------------

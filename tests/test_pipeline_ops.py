@@ -1,6 +1,5 @@
-"""Operator-level tests for dedup / similarity / as-of beyond the oracle
-queries: LSH recall vs brute force, IVF probing, exact dedup keep-min, as-of
-edge semantics."""
+"""Operator-level tests for dedup / as-of beyond the oracle queries: exact
+dedup keep-min, as-of edge semantics."""
 
 import numpy as np
 import pandas as pd
@@ -10,12 +9,6 @@ from pyspark.sql import functions as F
 
 from unravelsports_spark.operators.asof import asof_join
 from unravelsports_spark.operators.dedup import doc_shingles, exact_dedup, jaccard_pairs
-from unravelsports_spark.operators.similarity import (
-    cosine_topk,
-    ivf_topk,
-    kmeans_centroids,
-    lsh_ann_topk,
-)
 
 from .conftest import SF_CORRECT
 
@@ -199,38 +192,6 @@ def test_jaccard_hot_shingle_cap_bounds_skew(spark):
     assert (100, 101) in survivors
 
 
-@pytest.fixture(scope="module")
-def embeddings(spark):
-    return spark.read.parquet(f"{SF_CORRECT}/embeddings.parquet").cache()
-
-
-def test_lsh_ann_recall(spark, embeddings):
-    qvec = [float(v) for v in embeddings.filter("vec_id = 7").head().embedding]
-    exact = [r.vec_id for r in cosine_topk(embeddings, qvec, k=10).collect()]
-    approx = [
-        r.vec_id
-        for r in lsh_ann_topk(embeddings, qvec, k=10, n_planes=6, multiprobe=2).collect()
-    ]
-    recall = len(set(exact) & set(approx)) / 10
-    assert exact[0] == 7  # self-similarity = 1.0
-    assert 7 in approx  # the query's own bucket is always probed
-    # synthetic embeddings are near-isotropic (worst case for LSH); with 6
-    # planes and 2-bit multiprobe ~1/3 of buckets are probed
-    assert recall >= 0.5, f"LSH recall too low: {recall}"
-
-
-def test_ivf_topk(spark, embeddings):
-    qvec = [float(v) for v in embeddings.filter("vec_id = 3").head().embedding]
-    cents = kmeans_centroids(embeddings, n_cells=8, sample_limit=500)
-    assert cents.shape == (8, 64)
-    res = ivf_topk(embeddings, qvec, cents, k=5, n_probe=4).collect()
-    assert res[0].vec_id == 3
-    assert res[0].cosine == pytest.approx(1.0, abs=1e-6)
-    exact = [r.vec_id for r in cosine_topk(embeddings, qvec, k=5).collect()]
-    recall = len({r.vec_id for r in res} & set(exact)) / 5
-    assert recall >= 0.4
-
-
 def test_asof_join_semantics(spark):
     left = spark.createDataFrame(
         pd.DataFrame({"k": ["a", "a", "b"], "t": [10, 20, 10], "lv": [1, 2, 3]})
@@ -247,39 +208,6 @@ def test_asof_join_semantics(spark):
     assert out.rv_right.tolist()[0] == 100  # a@10 ← right a@10
     assert out.rv_right.tolist()[1] == 150  # a@20 ← right a@15
     assert np.isnan(out.rv_right.tolist()[2])  # b@10: right only at 99
-
-
-def test_ivf_cell_broadcast_parity_and_plan(spark, embeddings):
-    """VERDICT r1 #7: above BROADCAST_CENTROID_THRESHOLD the IVF assignment
-    switches to a broadcast centroid join (BroadcastNestedLoopJoin with a
-    broadcast build side — the replicate-join physical form; no n_cells-wide
-    literal projection); assignments match the literal path exactly."""
-    from unravelsports_spark.operators.similarity import (
-        BROADCAST_CENTROID_THRESHOLD,
-        with_ivf_cell,
-    )
-
-    cents = kmeans_centroids(embeddings, n_cells=8, sample_limit=300)
-    lit = with_ivf_cell(embeddings, cents, method="literal")
-    bc = with_ivf_cell(embeddings, cents, method="broadcast")
-    a = {r.vec_id: r.cell for r in lit.select("vec_id", "cell").collect()}
-    b = {r.vec_id: r.cell for r in bc.select("vec_id", "cell").collect()}
-    assert a == b
-    assert sorted(bc.columns) == sorted(embeddings.columns + ["cell"])
-
-    plan = bc._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastNestedLoopJoin" in plan and "BroadcastExchange" in plan
-    # map-side combinable argmin: partial min_by before the single shuffle
-    assert "partial_min_by" in plan
-    lit_plan = lit._jdf.queryExecution().executedPlan().toString()
-    assert "Join" not in lit_plan  # literal path is a pure projection
-
-    # auto switches on the documented threshold
-    many = np.tile(cents, (BROADCAST_CENTROID_THRESHOLD // 8 + 1, 1))
-    auto_big = with_ivf_cell(embeddings, many)
-    assert "BroadcastNestedLoopJoin" in auto_big._jdf.queryExecution().executedPlan().toString()
-    auto_small = with_ivf_cell(embeddings, cents)
-    assert "Join" not in auto_small._jdf.queryExecution().executedPlan().toString()
 
 
 def test_asof_directions_and_tolerance(spark):

@@ -351,6 +351,27 @@ def test_pagerank_reference_parity(spark):
     assert got[2] > got[6] and got[3] > got[6]
 
 
+def _fold_merge(arr_col, a: str, b: str):
+    """The executable specification of one BPE merge: a greedy left-to-right
+    fold over the token array with a string accumulator seeded by the first
+    token (O(len²) chars per document, so the package runs the regex form)."""
+    from pyspark.sql import functions as F
+
+    from unravelsports_spark.operators.bpe import JOIN, SEP
+
+    tail = F.slice(arr_col, 2, F.greatest(F.size(arr_col) - 1, F.lit(0)))
+
+    def step(acc, x):
+        hit = ((acc == F.lit(a)) | acc.endswith(SEP + a)) & (x == F.lit(b))
+        merged = F.concat(
+            F.substring(acc, F.lit(1), F.length(acc) - F.lit(len(a))),
+            F.lit(a + JOIN + b),
+        )
+        return F.when(hit, merged).otherwise(F.concat(acc, F.lit(SEP), x))
+
+    return F.aggregate(tail, F.element_at(arr_col, 1), step)
+
+
 def test_merge_via_regex_equals_fold(spark):
     """The regex merge application (hot path) must be byte-identical to the
     fold specification on adversarial token sequences: adjacent runs
@@ -361,7 +382,7 @@ def test_merge_via_regex_equals_fold(spark):
 
     from pyspark.sql import functions as F
 
-    from unravelsports_spark.operators.bpe import SEP, _fold_merge, _merge_via_regex
+    from unravelsports_spark.operators.bpe import SEP, _merge_via_regex
 
     cases = [
         (["a", "a", "a"], ("a", "a")),

@@ -388,77 +388,19 @@ def test_vertical_tab_before_colon_portable(spark):
                    "http://d.example/ok": True}
 
 
-def test_robots_sitemaps_extraction(spark):
-    """Sitemap: directives (r14): position-independent (inside or outside
-    groups), case-insensitive directive name, comments stripped, body
-    order preserved, duplicates kept, absent -> zero rows; same canonical
-    host identity as the rule parser."""
-    from unravelsports_spark.operators.robots import robots_sitemaps
-
-    body = (
-        "Sitemap: http://d.example/sm-index.xml # leading, outside groups\n"
-        "User-agent: *\n"
-        "Disallow: /private\n"
-        "sitemap: http://cdn.example/sm-2.xml\n"   # inside a group, lower
-        "SITEMAP: http://d.example/sm-3.xml\n"
-        "Sitemap: http://d.example/sm-index.xml\n"  # duplicate preserved
-        "Sitemap:\n"                                # empty value dropped
-        "Crawl-delay: 5\n"
-    )
-    robots = spark.createDataFrame(
-        [("D.Example.:80", body), ("empty.example", "User-agent: *\nAllow: /\n")],
-        "domain string, robots_txt string",
-    )
-    # body order rides the pos column (a DataFrame has no implicit
-    # order) - sort on it, never on collect order
-    got = sorted(robots_sitemaps(robots).collect(), key=lambda r: r["pos"])
-    by_domain = {}
-    for r in got:
-        by_domain.setdefault(r["domain"], []).append(r["sitemap_url"])
-    assert by_domain == {
-        "d.example": [
-            "http://d.example/sm-index.xml",
-            "http://cdn.example/sm-2.xml",
-            "http://d.example/sm-3.xml",
-            "http://d.example/sm-index.xml",
-        ]
-    }
-
-
-def test_robots_sitemaps_feed_sitemap_parser(spark):
-    """Loop closure: robots -> Sitemap: discovery -> parse_sitemaps on
-    the fetched bodies, no hand-maintained seed list."""
-    from unravelsports_spark.operators.robots import robots_sitemaps
-    from unravelsports_spark.operators.sitemap import parse_sitemaps
-
-    robots = spark.createDataFrame(
-        [("d.example", "Sitemap: http://d.example/sitemap.xml\n")],
-        "domain string, robots_txt string",
-    )
-    seeds = robots_sitemaps(robots)
-    # "fetch" the seed: the body arrives keyed by the seed URL's host
-    fetched = seeds.select(
-        F.col("domain"),
-        F.lit(
-            "<urlset><url><loc>http://d.example/page1</loc></url>"
-            "<url><loc>http://d.example/page2</loc></url></urlset>"
-        ).alias("sitemap_xml"),
-    )
-    locs = sorted(r["loc"] for r in parse_sitemaps(fetched).collect())
-    assert locs == ["http://d.example/page1", "http://d.example/page2"]
-
-
-def test_robots_sitemaps_shares_duplicate_tripwire(spark):
+def test_parse_robots_duplicate_host_tripwire(spark):
+    """Two robots rows resolving to one canonical host fail loud instead
+    of merging: a host has exactly one /robots.txt."""
     import pytest
     from py4j.protocol import Py4JJavaError
     from pyspark.errors.exceptions.base import PySparkException
 
-    from unravelsports_spark.operators.robots import robots_sitemaps
+    from unravelsports_spark.operators.robots import parse_robots
 
     robots = spark.createDataFrame(
-        [("d.example", "Sitemap: http://a/s.xml\n"),
-         ("D.EXAMPLE", "Sitemap: http://b/s.xml\n")],
+        [("d.example", "User-agent: *\nDisallow: /a\n"),
+         ("D.EXAMPLE", "User-agent: *\nDisallow: /b\n")],
         "domain string, robots_txt string",
     )
     with pytest.raises((PySparkException, Py4JJavaError), match="ONE /robots.txt"):
-        robots_sitemaps(robots).collect()
+        parse_robots(robots, "trainbot").collect()

@@ -1,8 +1,8 @@
-"""Salted aggregation / join equivalence with their unsalted forms."""
+"""Salted aggregation equivalence with its unsalted form."""
 
 from pyspark.sql import functions as F
 
-from unravelsports_spark.operators.skew import salted_agg, salted_explode_join, with_salt
+from unravelsports_spark.operators.skew import salted_agg, with_salt
 
 from .conftest import SF_CORRECT
 
@@ -30,18 +30,6 @@ def test_salted_agg_matches_plain(spark):
         ).collect()
     }
     assert salted == plain
-
-
-def test_salted_join_matches_plain(spark):
-    orders = spark.read.parquet(f"{SF_CORRECT}/orders.parquet")
-    cust = spark.read.parquet(f"{SF_CORRECT}/customer.parquet").select(
-        F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
-    )
-    plain = orders.join(cust, ["o_custkey"]).groupBy("c_mktsegment").count()
-    salted = salted_explode_join(orders, cust, on=["o_custkey"], n_salts=4).groupBy(
-        "c_mktsegment"
-    ).count()
-    assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
 
 
 def test_salt_distribution(spark):

@@ -232,7 +232,7 @@ def test_to_video_real_sportec(sportec, tmp_path):
     """Video sink: 5 real DFL frames → playable MJPEG AVI whose recovered
     frames decode to the canvas dimensions."""
     from unravelsports_spark.functions.jpegcodec import decode_jpeg
-    from unravelsports_spark.sources.avi import read_mjpeg_avi
+    from unravelsports_spark.operators.multimodal import _parse_avi_frames
     from unravelsports_spark.sources.media import to_video
 
     df, settings = sportec
@@ -240,7 +240,8 @@ def test_to_video_real_sportec(sportec, tmp_path):
             df.select("frame_id").distinct().orderBy("frame_id").limit(5).collect()]
     out = to_video(df, df.head().game_id, fids, str(tmp_path / "clip.avi"),
                    home_team_id=settings.home_team_id, fps=5)
-    frames = read_mjpeg_avi(out)
+    with open(out, "rb") as fh:
+        frames = _parse_avi_frames(fh.read())
     assert len(frames) == 5
     img = decode_jpeg(frames[0])
     assert img.ndim == 3 and img.shape[2] == 3 and img.shape[0] > 100
@@ -251,7 +252,7 @@ def test_to_mp4_real_sportec(sportec, tmp_path):
     whose sample table recovers decodable JPEG frames, pixel-identical to
     the AVI sink's frames (same renderer, same encoder)."""
     from unravelsports_spark.functions.jpegcodec import decode_jpeg
-    from unravelsports_spark.sources.avi import read_mjpeg_avi
+    from unravelsports_spark.operators.multimodal import _parse_avi_frames
     from unravelsports_spark.sources.media import to_mp4, to_video
     from unravelsports_spark.sources.mp4 import read_mjpeg_mp4
 
@@ -267,4 +268,5 @@ def test_to_mp4_real_sportec(sportec, tmp_path):
     assert img.ndim == 3 and img.shape[2] == 3 and img.shape[0] > 100
     avi = to_video(df, gid, fids, str(tmp_path / "clip.avi"),
                    home_team_id=settings.home_team_id, fps=5)
-    assert frames == read_mjpeg_avi(avi)
+    with open(avi, "rb") as fh:
+        assert frames == _parse_avi_frames(fh.read())

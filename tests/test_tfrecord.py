@@ -37,10 +37,10 @@ def test_crc32c_known_vectors():
 
 
 def test_framing_roundtrip_and_quarantine():
-    from unravelsports_spark.sources.tfrecord import (
-        decode_tfrecords,
-        encode_tfrecords,
-    )
+    from unravelsports_spark.sources.tfrecord import encode_tfrecords, iter_tfrecords
+
+    def decode_tfrecords(data):
+        return list(iter_tfrecords(data))
 
     payloads = [b"", b"x", b"hello \x00\xff world", b"z" * 10_000]
     blob = encode_tfrecords(payloads)

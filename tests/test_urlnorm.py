@@ -237,10 +237,10 @@ SURT_CASES = [
 
 
 def test_surt_hand_cases(spark):
-    from unravelsports_spark.operators.urlnorm import with_surt_key
+    from unravelsports_spark.operators.urlnorm import surt_key
 
     df = spark.createDataFrame([(u,) for u, _ in SURT_CASES], "url string")
-    got = {r["url"]: r["surt"] for r in with_surt_key(df).collect()}
+    got = {r["url"]: r["surt"] for r in df.withColumn("surt", surt_key(F.col("url"))).collect()}
     for u, want in SURT_CASES:
         assert got[u] == want, (u, want, got[u])
 
@@ -249,7 +249,7 @@ def test_surt_prefix_locality(spark):
     """The layout property the key exists for: every subdomain of one
     registrable domain shares a byte prefix, so a byte-ordered range
     partitioning co-locates the site subtree."""
-    from unravelsports_spark.operators.urlnorm import with_surt_key
+    from unravelsports_spark.operators.urlnorm import surt_key
 
     urls = [
         "http://a.example.com/1", "http://b.a.example.com/2",
@@ -257,7 +257,7 @@ def test_surt_prefix_locality(spark):
         "http://other.net/y",
     ]
     df = spark.createDataFrame([(u,) for u in urls], "url string")
-    keys = sorted(r["surt"] for r in with_surt_key(df).collect())
+    keys = sorted(r["surt"] for r in df.withColumn("surt", surt_key(F.col("url"))).collect())
     com = [k for k in keys if k.startswith("com,example")]
     assert len(com) == 3
     # byte order clusters them contiguously
@@ -266,13 +266,13 @@ def test_surt_prefix_locality(spark):
 
 
 def test_surt_zero_shuffle_plan(spark):
-    from unravelsports_spark.operators.urlnorm import with_surt_key
+    from unravelsports_spark.operators.urlnorm import surt_key
     from unravelsports_spark.session import read_table
 
     docs = read_table(spark, SF_CORRECT, "documents")
     urls = docs.select(
         F.concat(F.lit("http://"), "source", F.lit(".example/d"), "doc_id").alias("url")
     )
-    plan = with_surt_key(urls)._jdf.queryExecution().executedPlan().toString()
+    plan = urls.withColumn("surt", surt_key(F.col("url")))._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

@@ -1,19 +1,14 @@
-"""Semantic tests for vocabulary/TF-IDF, mixture resampling, and k-means —
-the exact-value checks live in the oracle sweep (test_relational_oracle);
-these cover behavior the SQL can't express (convergence, determinism)."""
+"""Semantic tests for vocabulary/TF-IDF and mixture resampling — the
+exact-value checks live in the oracle sweep (test_relational_oracle); these
+cover behavior the SQL can't express (tie-breaks, determinism)."""
 
 import math
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
 from unravelsports_spark.operators.sampling import PPM, mixture_rates, sample_mixture
-from unravelsports_spark.operators.similarity import (
-    kmeans_fit_distributed,
-    with_nearest_centroid,
-)
-from unravelsports_spark.operators.vocab import doc_top_terms, tfidf_terms, vocab_topk
+from unravelsports_spark.operators.vocab import tfidf_terms, vocab_topk
 from unravelsports_spark.session import read_table
 
 from .conftest import SF_CORRECT
@@ -40,13 +35,6 @@ def test_tfidf_rare_term_outranks_common(docs):
     n = 4
     exp = round(math.log((n + 1) / (1 + 1)) + 1, 6)
     assert rows["snowflake"]["idf"] == pytest.approx(exp, abs=0)
-
-
-def test_doc_top_terms_deterministic(docs):
-    top = {r["doc_id"]: r["term"] for r in doc_top_terms(docs, k=1).collect()}
-    assert top[3] == "cat"  # tf=3 of a 2-doc term beats everything else
-    # rank-1 per doc, exactly one row per doc
-    assert len(top) == 4
 
 
 def test_vocab_topk_tiebreak(docs):
@@ -77,66 +65,6 @@ def test_mixture_rates_and_sample(spark):
     ids1 = sorted(r["doc_id"] for r in samp.select("doc_id").collect())
     ids2 = sorted(r["doc_id"] for r in sample_mixture(d, targets).select("doc_id").collect())
     assert ids1 == ids2
-
-
-def test_kmeans_inertia_decreases(spark):
-    emb = read_table(spark, SF_CORRECT, "embeddings")
-
-    def inertia(c):
-        return (
-            with_nearest_centroid(emb, c)
-            .agg(F.sum("d2").alias("i"))
-            .collect()[0]["i"]
-        )
-
-    init = np.asarray(
-        [[float(v) for v in r[1]] for r in emb.select("vec_id", "embedding").orderBy("vec_id").limit(8).collect()]
-    )
-    c3 = kmeans_fit_distributed(emb, k=8, iters=3)
-    assert inertia(c3) < inertia(init)
-    c5 = kmeans_fit_distributed(emb, k=8, iters=5)
-    assert inertia(c5) <= inertia(c3) + 1e-9
-
-
-def test_kmeans_matches_numpy_lloyds(spark):
-    """The distributed sufficient-stats loop must equal plain NumPy Lloyd's
-    on the same init — same assignment, same means, bitwise-close."""
-    emb = read_table(spark, SF_CORRECT, "embeddings")
-    X = np.asarray(
-        [[float(v) for v in r[1]] for r in emb.select("vec_id", "embedding").orderBy("vec_id").collect()]
-    )
-    k, iters = 8, 3
-    cent = X[:k].copy()
-    for _ in range(iters):
-        d = ((X[:, None, :] - cent[None, :, :]) ** 2).sum(-1)
-        a = d.argmin(1)
-        for c in range(k):
-            m = X[a == c]
-            if len(m):
-                cent[c] = m.mean(0)
-    got = kmeans_fit_distributed(emb, k=k, iters=iters)
-    np.testing.assert_allclose(got, cent, rtol=1e-9, atol=1e-12)
-
-
-def test_sentence_udtf_matches_catalyst(spark):
-    """Native Python UDTF (U4 surface) ≡ the Catalyst split_sentences."""
-    from unravelsports_spark.operators.text import make_sentence_udtf, split_sentences
-    from unravelsports_spark.session import read_table
-
-    d = read_table(spark, SF_CORRECT, "documents").filter(F.col("doc_id") % 50 == 0)
-    catalyst = {
-        (r["doc_id"], r["sentence_idx"]): r["sentence"]
-        for r in split_sentences(d).collect()
-    }
-    SentenceSplitter = make_sentence_udtf()
-    spark.udtf.register("split_sentences_udtf", SentenceSplitter)
-    d.select("doc_id", "text").createOrReplaceTempView("_udtf_docs")
-    udtf_rows = spark.sql(
-        "SELECT d.doc_id, s.sentence_idx, s.sentence "
-        "FROM _udtf_docs d, LATERAL split_sentences_udtf(d.text) s"
-    ).collect()
-    got = {(r["doc_id"], r["sentence_idx"]): r["sentence"] for r in udtf_rows}
-    assert got == catalyst and len(got) > 0
 
 
 def test_chunk_tokens_windows(spark):

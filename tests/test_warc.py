@@ -421,57 +421,6 @@ def test_warc_feeds_the_crawl_chain(spark, tmp_path):
                {x["source"] for x in docs.select("source").collect()})
 
 
-def test_warc_stream_equals_batch(spark, tmp_path):
-    """The §2.9 batch≡stream discipline at the WARC boundary: an
-    availableNow pass of read_warc_stream over a static landing dir
-    produces EXACTLY the batch read's rows — including the corrupt-shard
-    quarantine row, so streaming ingest health checks see the same
-    contract."""
-    import os
-
-    from unravelsports_spark.sources.warc import (
-        read_warc,
-        read_warc_stream,
-        write_warc,
-    )
-
-    df = spark.createDataFrame(
-        [(f"http://s.example/{i}", f"payload {i}".encode()) for i in range(6)],
-        "target_uri string, payload binary",
-    )
-    land = str(tmp_path / "landing")
-    os.makedirs(land)
-    write_warc(df, land, gzip_records=True).collect()
-    with open(os.path.join(land, "part-bad.warc"), "wb") as fh:
-        fh.write(b"garbage shard \x00")
-
-    batch = sorted(
-        map(tuple, read_warc(spark, land).drop("shard", "record_id").collect()),
-        key=repr,  # rows mix None and str across columns
-    )
-    q = (
-        read_warc_stream(spark, land, options={"maxFilesPerTrigger": "2"})
-        .writeStream.format("memory")
-        .queryName("warc_stream_tbl")
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        finished = q.awaitTermination(180)
-        assert finished, "stream did not finish within 180s"
-    finally:
-        q.stop()  # a timeout must not leak a live query into the suite
-    stream = sorted(
-        map(
-            tuple,
-            spark.table("warc_stream_tbl").drop("shard", "record_id").collect(),
-        ),
-        key=repr,
-    )
-    assert stream == batch and len(stream) == 7  # 6 clean + 1 quarantine
-
-
 def test_iter_warc_records_equals_decode_everywhere():
     """The lazy reader's equivalence contract (VERDICT r12 #3):
     list(iter_warc_records(x)) == decode_warc_records(x) for every layout

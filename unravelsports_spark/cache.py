@@ -56,11 +56,10 @@ def release_tracked() -> int:
     number released. Safe to call at any time for RESULT correctness — a
     consumer that re-runs a released query simply recomputes and
     re-persists. One class of persist is correctness-LOAD-BEARING though:
-    the checked boundary readers (sources/jsonl.read_jsonl_checked,
-    sources/csvio.read_csv_checked) rely on the cache to defeat the CSV/
-    JSON pruned-parse quarantine hazard, and a still-held checked frame
-    recomputes with RAW semantics after release — their docstrings carry
-    the lifetime contract."""
+    the checked boundary reader (sources/csvio.read_csv_checked) relies
+    on the cache to defeat the CSV pruned-parse quarantine hazard, and a
+    still-held checked frame recomputes with RAW semantics after release —
+    its docstring carries the lifetime contract."""
     n = 0
     while _TRACKED:
         df = _TRACKED.pop()

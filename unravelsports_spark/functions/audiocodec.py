@@ -60,52 +60,3 @@ def encode_wav(samples: np.ndarray, sample_rate: int = 16_000) -> bytes:
         + b"data" + struct.pack("<I", len(body)) + body
     )
     return b"RIFF" + struct.pack("<I", len(chunks)) + chunks
-
-
-# --- G.711 companding (μ-law / A-law) ---------------------------------------
-# Public ITU-T G.711 spec: logarithmic 8-bit companding of 16-bit PCM — the
-# telephony interchange format. Pure vectorized NumPy; exact per the
-# segment/step tables, verified against the closed-form reference in tests.
-
-_MU = 255.0
-_A = 87.6
-
-
-def mulaw_encode(samples: np.ndarray) -> np.ndarray:
-    """int16 PCM → uint8 μ-law."""
-    x = np.asarray(samples, np.float64) / 32768.0
-    y = np.sign(x) * np.log1p(_MU * np.abs(x)) / np.log1p(_MU)
-    return np.round((y + 1) / 2 * 255).astype(np.uint8)
-
-
-def mulaw_decode(data: np.ndarray) -> np.ndarray:
-    """uint8 μ-law → int16 PCM."""
-    y = np.asarray(data, np.float64) / 255.0 * 2 - 1
-    x = np.sign(y) * (np.expm1(np.abs(y) * np.log1p(_MU))) / _MU
-    return np.round(x * 32767.0).astype(np.int16)
-
-
-def alaw_encode(samples: np.ndarray) -> np.ndarray:
-    """int16 PCM → uint8 A-law."""
-    x = np.asarray(samples, np.float64) / 32768.0
-    ax = np.abs(x)
-    y = np.where(
-        ax < 1.0 / _A,
-        _A * ax / (1 + np.log(_A)),
-        (1 + np.log(_A * np.clip(ax, 1.0 / _A, None))) / (1 + np.log(_A)),
-    )
-    y = np.sign(x) * y
-    return np.round((y + 1) / 2 * 255).astype(np.uint8)
-
-
-def alaw_decode(data: np.ndarray) -> np.ndarray:
-    """uint8 A-law → int16 PCM."""
-    y = np.asarray(data, np.float64) / 255.0 * 2 - 1
-    ay = np.abs(y)
-    lim = 1.0 / (1 + np.log(_A))
-    x = np.where(
-        ay < lim,
-        ay * (1 + np.log(_A)) / _A,
-        np.exp(ay * (1 + np.log(_A)) - 1) / _A,
-    )
-    return np.round(np.sign(y) * x * 32767.0).astype(np.int16)

@@ -1,6 +1,6 @@
-"""Pure-Python image codec: PNG (stdlib zlib) + uncompressed BMP, plus
-nearest/box resize — no PIL/opencv, so the multimodal operators' non-fake
-path works in any environment.
+"""Pure-Python image codec: PNG (stdlib zlib) + uncompressed BMP decode —
+no PIL/opencv, so the multimodal operators' non-fake path works in any
+environment.
 
 Scope (documented, raises beyond it):
 
@@ -8,7 +8,7 @@ Scope (documented, raises beyond it):
   4 (gray+alpha), 6 (RGBA), non-interlaced. All five scanline filters
   (None/Sub/Up/Average/Paeth) per the PNG spec (RFC 2083 §6).
 - PNG encode: 8-bit gray/RGB/RGBA, filter 0 scanlines, one IDAT.
-- BMP decode/encode: BITMAPINFOHEADER, 24-bit BI_RGB (the classic
+- BMP decode: BITMAPINFOHEADER, 24-bit BI_RGB (the classic
   bottom-up, BGR, 4-byte-padded layout).
 
 Everything operates on ``numpy`` ``uint8`` arrays shaped (H, W, C); decode
@@ -195,24 +195,6 @@ def decode_bmp(data: bytes) -> np.ndarray:
     return px[:, :, ::-1].copy()  # BGR → RGB
 
 
-def encode_bmp(img: np.ndarray) -> bytes:
-    img = np.asarray(img, np.uint8)
-    if img.ndim == 2:
-        img = img[:, :, None]
-    if img.shape[2] == 1:
-        img = np.dstack([img[:, :, 0]] * 3)
-    elif img.shape[2] == 4:
-        img = img[:, :, :3]
-    h, w, _ = img.shape
-    stride = (w * 3 + 3) & ~3
-    rows = np.zeros((h, stride), np.uint8)
-    rows[:, : w * 3] = img[::-1, :, ::-1].reshape(h, -1)  # bottom-up BGR
-    body = rows.tobytes()
-    header = struct.pack("<2sIHHI", b"BM", 54 + len(body), 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(body), 2835, 2835, 0, 0)
-    return header + info + body
-
-
 # -- generic entry points ----------------------------------------------------
 
 
@@ -234,26 +216,3 @@ def decode_image(data: bytes) -> np.ndarray:
         "unsupported image format (PNG, 24-bit BMP, baseline JPEG and GIF "
         "supported; other formats need external codecs not in this environment)"
     )
-
-
-def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
-    h, w = img.shape[:2]
-    ys = (np.arange(height) * h // height).clip(0, h - 1)
-    xs = (np.arange(width) * w // width).clip(0, w - 1)
-    return img[ys][:, xs]
-
-
-def encode_image(img: np.ndarray, fmt: str = "png") -> bytes:
-    if fmt == "png":
-        return encode_png(img)
-    if fmt == "bmp":
-        return encode_bmp(img)
-    if fmt in ("jpeg", "jpg"):
-        from .jpegcodec import encode_jpeg
-
-        return encode_jpeg(img)
-    if fmt == "gif":
-        from .gifcodec import encode_gif
-
-        return encode_gif(img)
-    raise ValueError(f"unsupported encode format {fmt!r}")

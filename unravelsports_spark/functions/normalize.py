@@ -37,13 +37,6 @@ def normalize_acceleration(value, max_acceleration):
     return np.clip(value / max_acceleration, -1.0, 1.0)
 
 
-def unit_vector(vector: np.ndarray) -> np.ndarray:
-    n = np.linalg.norm(vector)
-    if n == 0:
-        return np.zeros_like(vector, dtype=float)
-    return vector / n
-
-
 def unit_vectors(vectors: np.ndarray) -> np.ndarray:
     """Row-wise unit vectors; zero rows stay zero."""
     mags = np.linalg.norm(vectors, axis=-1, keepdims=True)

@@ -31,30 +31,12 @@ SEP = "\x1f"
 JOIN = "~"
 
 
-def _fold_merge(arr_col, a: str, b: str):
-    """Greedy left-to-right application of merge (a, b) over a token array:
-    fold with a string accumulator seeded by the first token. Retained as
-    the executable specification (tests assert :func:`_merge_via_regex`
-    equals it); the hot path uses the regex form — this fold re-copies the
-    whole accumulator per token (O(len²) chars per document) and the HOF
-    lambda is interpreted per element."""
-    tail = F.slice(arr_col, 2, F.greatest(F.size(arr_col) - 1, F.lit(0)))
-
-    def step(acc, x):
-        hit = ((acc == F.lit(a)) | acc.endswith(SEP + a)) & (x == F.lit(b))
-        merged = F.concat(
-            F.substring(acc, F.lit(1), F.length(acc) - F.lit(len(a))),
-            F.lit(a + JOIN + b),
-        )
-        return F.when(hit, merged).otherwise(F.concat(acc, F.lit(SEP), x))
-
-    return F.aggregate(tail, F.element_at(arr_col, 1), step)
-
-
 def _merge_via_regex(s_col, a: str, b: str):
     """Greedy left-to-right application of merge (a, b) over the
     SEP-joined tokenization string via ``regexp_replace`` — semantically
-    IDENTICAL to :func:`_fold_merge` (property-tested head-to-head):
+    IDENTICAL to a left-to-right ``aggregate`` fold over the token array
+    (tests/test_retrieval.py keeps that fold as the executable
+    specification and property-tests the two head-to-head):
 
     - Java's replaceAll scans left-to-right and resumes AFTER each
       replacement, which is exactly greedy BPE ("a a a" with merge (a, a)

@@ -145,9 +145,8 @@ def minhash_signatures(
 def band_keys(
     signatures: DataFrame, id_col: str = "doc_id", bands: int = 4, rows_per_band: int = 2
 ) -> DataFrame:
-    """(id, band, key) rows: each band's key concatenates its minhash run.
-    Shared by the batch self-join (:func:`lsh_candidate_pairs`) and the
-    streaming band ledger (streaming/windows.py:streaming_neardup_dedup)."""
+    """(id, band, key) rows: each band's key concatenates its minhash run;
+    the join keys of :func:`lsh_candidate_pairs`."""
     band_rows = []
     for b in range(bands):
         cols = [F.col(f"minhash_{b * rows_per_band + r}") for r in range(rows_per_band)]

@@ -241,14 +241,10 @@ def k_anonymity_report(
 
 
 def class_size_histogram(classes: DataFrame, k: int) -> DataFrame:
-    """The shared histogram stage of every k-anonymity surface: a frame
+    """The histogram stage of the k-anonymity report: a frame
     carrying a ``class_size`` column → (class_size, n_classes, n_rows,
-    at_risk) ordered by size. Extracted (r10 review pass 2 finding #4) so
-    the batch report and the streaming ledger report
-    (streaming/privacy_stream.py) CANNOT drift — their tested contract is
-    bit-equality, which two copy-pasted blocks only maintain by luck.
-    Pure code move: the expression tree is identical to the inline form
-    the a23 oracle certified."""
+    at_risk) ordered by size. The expression tree is identical to the
+    inline form the a23 oracle certified."""
     return (
         classes.groupBy("class_size")
         .agg(F.count("*").alias("n_classes"))

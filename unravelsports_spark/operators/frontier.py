@@ -90,179 +90,3 @@ def frontier_plan(
         .withColumn("slot", F.expr(f"_rk % {n}"))
         .drop("_rk")
     )
-
-
-def frontier_summary(planned: DataFrame) -> DataFrame:
-    """The schedule audit: per wave — URLs, distinct hosts, and the max
-    slot actually used (must stay < per_host_limit). Tiny output, one
-    combinable rollup."""
-    return (
-        planned.groupBy("wave")
-        .agg(
-            F.count("*").alias("n_urls"),
-            F.countDistinct("host").alias("n_hosts"),
-            F.max("slot").alias("max_slot"),
-        )
-        .orderBy("wave")
-    )
-
-
-def allocate_crawl_budget(
-    hosts: DataFrame,
-    total_budget: int,
-    weight_col: str = "weight",
-    cap_col: str | None = None,
-    host_col: str = "host",
-) -> DataFrame:
-    """Apportion a global per-cycle fetch budget across hosts (r14) — the
-    quota step between recrawl priorities and the frontier: a crawl cycle
-    has a total page budget; each host deserves a share proportional to
-    its WEIGHT (page count, overdue mass, quality score in ppm — any
-    non-negative integer measure), and the allocation must be exact
-    (sums to the budget), deterministic, and engine-portable.
-
-    Hamilton/largest-remainder apportionment in pure integer arithmetic:
-    base_h = (B·w_h) div W, and the R = B − Σ base leftover units go to
-    the R largest remainders ((B·w_h) mod W), ties broken by host name —
-    a closed-form method (no iteration, no floats, no divisor search),
-    so the DuckDB twin is hash-exact. With ``cap_col`` (per-host
-    ceiling, e.g. the host's actual URL count) the apportioned value
-    clips to the cap; clipped surplus is NOT redistributed in-pass
-    (re-run on the uncapped remainder when the surplus matters — one
-    pass stays closed-form, the documented trade).
-
-    Output: (host, weight, budget[, cap]); Σ budget = total_budget when
-    no cap clips (audit with one agg). PRECONDITIONS, loud: weights
-    non-negative with a positive total (apportioning zero mass is caller
-    error), one row per host, and B·w_h must fit int64 — enforced via
-    the shared tripwire on w_h ≤ 2⁶² div B (at the documented operating
-    sizes — budgets ≤ 10⁹ pages, ppm weights — the headroom is ×4000).
-
-    At 100 TB: a naive global row_number over remainders would
-    single-reduce the whole hosts table, so the leftover units land via
-    the t_shard_manifest two-level pattern — 256 fixed remainder
-    buckets counted with one combinable aggregate (256 rows to the
-    driver), the bucket holding the R-th boundary found there, and the
-    rank read from a window PARTITIONED BY BUCKET (256 independent
-    in-partition sorts — every bucket still sorts its own rows, but no
-    single reducer ever sees the table); buckets above the boundary
-    take their +1 with no rank consulted. A degenerate remainder
-    distribution (most hosts in one bucket) concentrates that bucket's
-    sort in one partition — the frontier's hot-host caveat, documented
-    not hidden. Weight totals are bounded to 2⁵⁵ (loud) so the bucket
-    arithmetic stays inside int64.
-    """
-    from ..cache import tracked_persist
-    from . import precondition_filter, require_new_column
-
-    if total_budget < 0:
-        raise ValueError(f"total_budget must be >= 0, got {total_budget}")
-    # every temp actually created below is guarded (r14 review-3 #1: the
-    # first list checked a never-created '_wsum' and missed three real
-    # temps, the exact silent-overwrite class require_new_column exists
-    # to make loud)
-    for col in ("budget", "_base", "_rem", "_rbk", "_rrk", "_plus", "_hn"):
-        require_new_column(hosts, col)
-    b = int(total_budget)
-    w = F.col(weight_col).cast("long")
-    guarded = precondition_filter(
-        hosts,
-        w.isNotNull() & (w >= 0) & ((b == 0) | (w <= (2**62) // max(b, 1))),
-        "allocate_crawl_budget precondition: weights must be non-negative "
-        f"integers with B*w inside int64 (B={b})",
-    )
-    if cap_col is not None:
-        # a negative cap would emit a negative fetch quota; NULL cap =
-        # uncapped is the DOCUMENTED semantic (least() skips NULLs), so
-        # only genuinely negative values trip (r14 review-3 #3)
-        guarded = precondition_filter(
-            guarded,
-            F.col(cap_col).isNull() | (F.col(cap_col) >= 0),
-            "allocate_crawl_budget precondition: caps must be "
-            "non-negative (NULL = uncapped)",
-        )
-    guarded = precondition_filter(
-        guarded.withColumn(
-            "_hn", F.count("*").over(Window.partitionBy(host_col))
-        ),
-        F.col("_hn") == 1,
-        "allocate_crawl_budget precondition: one row per host — duplicate "
-        "host rows double-count their weight; aggregate upstream",
-    ).drop("_hn")
-    # persisted: the totals/bucket collects below AND the caller's
-    # consumption all read this frame — without it every action re-scans
-    # the input and re-runs the tripwire window, and a nondeterministic
-    # source could diverge between the driver's W snapshot and the final
-    # plan (r14 review-3 #4); released at the usual query boundary
-    guarded = tracked_persist(guarded)
-    totals = guarded.agg(F.sum(w).alias("W")).first()
-    W = int(totals["W"] or 0)
-    if W <= 0:
-        raise ValueError(
-            "allocate_crawl_budget: total weight must be positive "
-            f"(got {W}) — apportioning zero mass is caller error"
-        )
-    if W > (2**55):
-        # the bucket expression multiplies remainders (< W) by 256; the
-        # per-host tripwire bounds B*w but not the TOTAL (r14 review-3
-        # #2: three huge legal weights overflowed _rem*256 negative and
-        # silently misrouted the leftover units). Scale weights down —
-        # ppm-style measures keep W far below this.
-        raise ValueError(
-            f"allocate_crawl_budget: total weight {W} > 2^55 — the "
-            "remainder bucketing would overflow int64; rescale weights"
-        )
-    base = F.expr(f"({b} * CAST({weight_col} AS BIGINT)) div {W}")
-    rem = F.expr(f"({b} * CAST({weight_col} AS BIGINT)) % {W}")
-    # 256 fixed remainder buckets (rem in [0, W)): the R-th-largest
-    # boundary is located from a 256-row combinable count, never a
-    # global sort (see docstring)
-    bucket = F.expr(f"(_rem * 256) div {W}")
-    with_parts = (
-        guarded.withColumn("_base", base)
-        .withColumn("_rem", rem)
-        .withColumn("_rbk", bucket)
-    )
-    # ONE combinable pass yields both the leftover and the bucket counts
-    # (r14 review-3 #5: separate agg + groupBy actions scanned twice)
-    stats = with_parts.groupBy("_rbk").agg(
-        F.count("*").alias("c"), F.sum("_base").alias("sb")
-    ).collect()
-    leftover = b - sum(int(r["sb"] or 0) for r in stats)
-    out = with_parts
-    if leftover > 0:
-        counts = {r["_rbk"]: r["c"] for r in stats}
-        cum, q = 0, -1
-        for bk in sorted(counts, reverse=True):
-            if cum + counts[bk] >= leftover:
-                q = bk
-                break
-            cum += counts[bk]
-        # buckets above q take their +1 with no rank consulted; bucket
-        # q's rank comes from a window PARTITIONED BY BUCKET — 256
-        # independent in-partition sorts (the point: no single global
-        # reducer), though every bucket's rows do sort within their
-        # partition; only bucket q's ranks are read
-        in_q = F.col("_rbk") == q
-        rrk = F.row_number().over(
-            Window.partitionBy("_rbk").orderBy(
-                F.col("_rem").desc(), F.col(host_col).asc()
-            )
-        )
-        need = leftover - cum
-        out = out.withColumn("_rrk", rrk).withColumn(
-            "_plus",
-            F.when(F.col("_rbk") > q, F.lit(1))
-            .when(in_q & (F.col("_rrk") <= need), F.lit(1))
-            .otherwise(F.lit(0)),
-        )
-    else:
-        out = out.withColumn("_plus", F.lit(0))
-    out = out.withColumn(
-        "budget", F.col("_base") + F.col("_plus").cast("long")
-    ).drop("_base", "_rem", "_rbk", "_rrk", "_plus")
-    if cap_col is not None:
-        out = out.withColumn(
-            "budget", F.least(F.col("budget"), F.col(cap_col).cast("long"))
-        )
-    return out

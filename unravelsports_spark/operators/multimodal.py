@@ -29,7 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ..functions.imagecodec import decode_image, encode_image, resize_nearest, sniff_format
+from ..functions.imagecodec import decode_image
 
 IMAGE_SCHEMA = T.StructType(
     [
@@ -41,8 +41,6 @@ IMAGE_SCHEMA = T.StructType(
     ]
 )
 
-_FEATURE_DIM = 8
-
 
 def _fake_decode(payload: bytes) -> dict:
     h = hashlib.md5(payload).digest()
@@ -51,29 +49,6 @@ def _fake_decode(payload: bytes) -> dict:
         "height": 64 + h[1] % 64,
         "mean_pixel": h[2] / 255.0,
     }
-
-
-def _fake_features(payload: bytes) -> list[float]:
-    h = hashlib.md5(payload).digest()
-    return [b / 255.0 for b in h[:_FEATURE_DIM]]
-
-
-def _real_features(payload: bytes) -> list[float]:
-    img = decode_image(payload).astype(np.float32) / 255.0
-    if img.ndim == 2:
-        img = img[:, :, None]
-    gray = img.mean(axis=2)
-    chans = [float(img[:, :, c].mean()) for c in range(min(img.shape[2], 3))]
-    chans += [chans[-1]] * (3 - len(chans))
-    gx = float(np.abs(np.diff(gray, axis=1)).mean()) if gray.shape[1] > 1 else 0.0
-    gy = float(np.abs(np.diff(gray, axis=0)).mean()) if gray.shape[0] > 1 else 0.0
-    return [
-        chans[0], chans[1], chans[2],
-        float(gray.std()),
-        float(img.shape[1] / img.shape[0]),
-        gx, gy,
-        float((gray > 0.5).mean()),
-    ]
 
 
 def _real_decode(payload: bytes) -> dict:
@@ -109,81 +84,6 @@ def decode_images(df: DataFrame, payload_col: str = "payload", fake: bool = Fals
             yield pdf
 
     return df.mapInPandas(run, schema)
-
-
-def extract_image_features(
-    df: DataFrame, payload_col: str = "payload", fake: bool = False
-) -> DataFrame:
-    """payload → embedding array<float> (feeds the similarity operators).
-
-    Real path: an 8-dim deterministic pixel-statistics descriptor (per-channel
-    means, global std, aspect ratio, horizontal/vertical gradient energy,
-    fill ratio) from the decoded PNG/BMP — a stand-in for a learned encoder
-    with the same Spark shape (decode → ndarray → fixed-dim vector)."""
-    schema = T.StructType(
-        df.schema.fields + [T.StructField("features", T.ArrayType(T.FloatType()))]
-    )
-    features = _fake_features if fake else _real_features
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf["features"] = [features(bytes(p)) for p in pdf[payload_col]]
-            yield pdf
-
-    return df.mapInPandas(run, schema)
-
-
-def resize_images(
-    df: DataFrame,
-    target_width: int,
-    target_height: int,
-    payload_col: str = "payload",
-    fake: bool = False,
-) -> DataFrame:
-    """payload → resized payload + (width, height) overwritten to the target.
-    Real path: decode (PNG/BMP) → nearest-neighbor resample → re-encode in the
-    source format, inside the same mapInPandas batch loop. The fake path
-    re-encodes deterministically as md5(payload || WxH) so downstream stages
-    (dedup by payload hash, size filters) see a stable, size-annotated blob."""
-    if target_width <= 0 or target_height <= 0:
-        raise ValueError("target dimensions must be positive")
-    schema = df.schema
-
-    def _real_resize(p: bytes) -> bytes:
-        fmt = sniff_format(p) or "png"
-        return encode_image(resize_nearest(decode_image(p), target_width, target_height), fmt)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        tag = f"{target_width}x{target_height}".encode()
-        for pdf in batches:
-            pdf = pdf.copy()
-            if fake:
-                pdf[payload_col] = [
-                    hashlib.md5(bytes(p) + tag).digest() for p in pdf[payload_col]
-                ]
-            else:
-                pdf[payload_col] = [_real_resize(bytes(p)) for p in pdf[payload_col]]
-            if "width" in pdf.columns:
-                pdf["width"] = np.int32(target_width)
-            if "height" in pdf.columns:
-                pdf["height"] = np.int32(target_height)
-            yield pdf
-
-    return df.mapInPandas(run, schema)
-
-
-def sample_video_frames(
-    df: DataFrame, frames_col: str = "frames", every_n: int = 10
-) -> DataFrame:
-    """array<binary> frame lists → every Nth frame (pure Catalyst `filter` on
-    the array index — no Python, no shuffle)."""
-    from pyspark.sql import functions as F
-
-    return df.withColumn(
-        frames_col,
-        F.filter(F.col(frames_col), lambda _, i: i % every_n == 0),
-    )
 
 
 def extract_audio_features(df: DataFrame, payload_col: str = "payload") -> DataFrame:
@@ -416,29 +316,6 @@ def sample_avi_frames(
                         rec["frame_mean"] = float(img.mean() / 255.0)
                     out_rows.append(rec)
             yield pd.DataFrame(out_rows, columns=[f.name for f in schema.fields])
-
-    return df.mapInPandas(run, schema)
-
-
-def video_stats(df: DataFrame, payload_col: str = "payload") -> DataFrame:
-    """Clip-level metadata without decoding any frame: container parse only
-    (frame count, total/mean frame bytes). Cheap first pass for corpus
-    triage before the expensive sampled decode."""
-    schema = T.StructType(
-        df.schema.fields
-        + [
-            T.StructField("n_frames", T.IntegerType()),
-            T.StructField("total_frame_bytes", T.LongType()),
-        ]
-    )
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            parsed = [_parse_avi_frames(bytes(p)) for p in pdf[payload_col]]
-            pdf["n_frames"] = [len(f) for f in parsed]
-            pdf["total_frame_bytes"] = [sum(len(x) for x in f) for f in parsed]
-            yield pdf
 
     return df.mapInPandas(run, schema)
 

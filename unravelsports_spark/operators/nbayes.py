@@ -199,108 +199,3 @@ def nb_confusion_sql(
     FROM predicted WHERE rk = 1
     GROUP BY 1, 2
     """
-
-
-def nb_train(
-    df: DataFrame,
-    label_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 1024,
-) -> dict:
-    """Train the hashing-trick NB model on the full frame and collect it to
-    the driver: ``{"grid": [(label, bucket, logp_micro)...], "priors":
-    [(label, prior_micro)...], "n_buckets": B}`` — ≤ classes×B rows of
-    integer micro-nats, the broadcastable artifact a production pipeline
-    ships to its ingest filter (same contract as the PQ codebooks: the
-    model is O(kB), the corpus never moves). Driver payload bound: the
-    three collects pull ≤ classes, ≤ classes, and ≤ classes×B aggregate
-    rows respectively — never per-document rows."""
-    conf_input = df.select(
-        F.col(id_col).alias(id_col), F.col(label_col).alias(label_col),
-        F.col(text_col).alias(text_col),
-    )
-    df = fan_out(conf_input, id_col)
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(label_col).alias("label"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TERM_RE), F.lit(0))
-        ).alias("term"),
-    )
-    dbc = tracked_persist(
-        toks.withColumn("bucket", _bucket(F.col("term"), n_buckets))
-        .groupBy("doc_id", "label", "bucket")
-        .agg(F.count("*").alias("n"))
-    )
-    tb = dbc.groupBy("label", "bucket").agg(F.sum("n").alias("c"))
-    class_tok = tb.groupBy("label").agg(F.sum("c").alias("tot"))
-    class_docs = dbc.select("doc_id", "label").distinct().groupBy("label").agg(
-        F.count("*").alias("n_docs")
-    )
-    import math
-
-    n_total = class_docs.agg(F.sum("n_docs")).first()[0]
-    priors = [
-        (r["label"], int(round(math.log(r["n_docs"] / n_total) * MICRO)))
-        for r in class_docs.collect()
-    ]
-    tots = {r["label"]: r["tot"] for r in class_tok.collect()}
-    counts = {(r["label"], r["bucket"]): r["c"] for r in tb.collect()}
-    grid = [
-        (label, bucket, int(round(math.log((counts.get((label, bucket), 0) + 1.0)
-                                           / (tots[label] + float(n_buckets))) * MICRO)))
-        for label in tots
-        for bucket in range(n_buckets)
-    ]
-    return {"grid": grid, "priors": priors, "n_buckets": n_buckets}
-
-
-def nb_predict(
-    df: DataFrame,
-    model: dict,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Score any frame (a batch table or a foreachBatch micro-batch) with a
-    collected :func:`nb_train` model: ``(id, predicted, score_micro)``.
-    Pure projection + broadcast join + argmax — stateless, so it drops into
-    streaming ingest unchanged; ``tests`` prove batch ≡ streamed-in-batches.
-    Zero-token documents carry no evidence and are excluded (the
-    :func:`nb_confusion` contract)."""
-    spark = df.sparkSession
-    n_buckets = model["n_buckets"]
-    grid = spark.createDataFrame(
-        model["grid"], "label string, bucket bigint, logp_micro bigint"
-    )
-    priors = spark.createDataFrame(model["priors"], "label string, prior_micro bigint")
-    toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TERM_RE), F.lit(0))
-        ).alias("term"),
-    )
-    dbc = (
-        toks.withColumn("bucket", _bucket(F.col("term"), n_buckets))
-        .groupBy("doc_id", "bucket")
-        .agg(F.count("*").alias("n"))
-    )
-    scores = (
-        dbc.join(F.broadcast(grid), "bucket")
-        .groupBy("doc_id", "label")
-        .agg(F.sum(F.col("n") * F.col("logp_micro")).alias("ll_micro"))
-        .join(F.broadcast(priors), "label")
-        .withColumn("score_micro", F.col("ll_micro") + F.col("prior_micro"))
-    )
-    # same combinable argmax as nb_confusion (min of (-score, label) struct)
-    best = scores.groupBy("doc_id").agg(
-        F.min_by(
-            F.struct(F.col("label"), F.col("score_micro")),
-            F.struct((-F.col("score_micro")).alias("_neg"), F.col("label")),
-        ).alias("_b")
-    )
-    return best.select(
-        F.col("doc_id").alias(id_col),
-        F.col("_b.label").alias("predicted"),
-        F.col("_b.score_micro").alias("score_micro"),
-    )

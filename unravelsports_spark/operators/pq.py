@@ -216,6 +216,41 @@ def pq_train_codebook(
     return pq_train_codebooks(iq, [(m_subspaces, k, n_rounds)])[0]
 
 
+def _adc_lut(query_int: list[int], codebook: list[list[list[int]]]) -> list[list[int]]:
+    """The ADC trick: ``lut[m][c]`` is the squared distance from the query's
+    m-th subvector to centroid c — an M×k python-side table, so candidates
+    never touch the query vector."""
+    sub_dim = len(codebook[0][0])
+    return [
+        [
+            sum((query_int[m * sub_dim + i] - cent[i]) ** 2 for i in range(sub_dim))
+            for cent in cents
+        ]
+        for m, cents in enumerate(codebook)
+    ]
+
+
+def _adc_sum(lut: list[list[int]]):
+    """BIGINT asymmetric distance of a row coded ``_c0.._cM-1``: the sum of
+    the table entries its codes select."""
+    adc = F.lit(0).cast("bigint")
+    for m, row in enumerate(lut):
+        adc = adc + F.element_at(
+            F.array(*[F.lit(int(x)).cast("bigint") for x in row]), F.col(f"_c{m}") + 1
+        )
+    return adc
+
+
+def _probe_cells(
+    query_int: list[int], coarse_cb: list[list[list[int]]], n_probe: int
+) -> list[int]:
+    """The ``n_probe`` coarse cells nearest the query, ties to the lower
+    cell — driver-side integer math over kc centroids."""
+    cents = coarse_cb[0]
+    d2 = [sum((query_int[d] - x) ** 2 for d, x in enumerate(c)) for c in cents]
+    return sorted(range(len(cents)), key=lambda c: (d2[c], c))[:n_probe]
+
+
 def pq_adc_topk(
     df: DataFrame,
     codebook: list[list[list[int]]],
@@ -227,35 +262,12 @@ def pq_adc_topk(
     """Encode every vector against ``codebook`` and rank by asymmetric
     distance to ``query_int`` (already on the int grid). Returns
     ``(vec_id, code0..codeM-1, adc_dist)`` — all BIGINT, hash-exact."""
-    m_subspaces = len(codebook)
-    k = len(codebook[0])
-    sub_dim = len(codebook[0][0])
     iq = df.select(F.col(id_col).alias(id_col), _int_grid(vec_col).alias("iq"))
-
-    # the query's distance to every centroid: a python-side lookup table
-    # (M×k ints) — the ADC trick; candidates never touch the query vector
-    lut = [
-        [
-            sum(
-                (query_int[m * sub_dim + i] - codebook[m][c][i]) ** 2
-                for i in range(sub_dim)
-            )
-            for c in range(k)
-        ]
-        for m in range(m_subspaces)
-    ]
-
     coded = _with_codes(iq, [("_c", codebook)])
-    cols = [F.col(id_col)]
-    adc = F.lit(0).cast("bigint")
-    for m in range(m_subspaces):
-        code = F.col(f"_c{m}")
-        cols.append(code.cast("bigint").alias(f"code{m}"))
-        adc = adc + F.element_at(
-            F.array(*[F.lit(int(x)).cast("bigint") for x in lut[m]]), code + 1
-        )
+    codes = [F.col(f"_c{m}").cast("bigint").alias(f"code{m}") for m in range(len(codebook))]
+    adc = _adc_sum(_adc_lut(query_int, codebook))
     return (
-        coded.select(*cols, adc.alias("adc_dist"))
+        coded.select(id_col, *codes, adc.alias("adc_dist"))
         .orderBy("adc_dist", id_col)
         .limit(top)
     )
@@ -280,22 +292,14 @@ def pq_ivf_adc_topk(
     original vectors against a global PQ codebook (residual encoding is the
     classic refinement — the pruning/ADC plumbing is identical).
 
-    At scale the corpus would be WRITTEN partitioned by ``cell`` (see
-    sources/layout.py), turning the probe filter into partition pruning;
-    here it evaluates in the scan's codegen stage. The whole query remains a
-    projection + filter + TakeOrderedAndProject — zero joins, zero shuffles.
+    At scale the corpus would be WRITTEN partitioned by ``cell`` (as
+    ``s_ann_from_index`` does), turning the probe filter into partition
+    pruning; here it evaluates in the scan's codegen stage. The whole query
+    remains a projection + filter + TakeOrderedAndProject — zero joins,
+    zero shuffles.
 
     Returns ``(vec_id, cell, adc_dist)`` — exact int64, hash-certifiable.
     """
-    kc = len(coarse_cb[0])
-    dim = len(coarse_cb[0][0])
-    # probe selection is driver-side integer math over kc centroids
-    cdist = [
-        sum((query_int[d] - coarse_cb[0][c][d]) ** 2 for d in range(dim))
-        for c in range(kc)
-    ]
-    probes = sorted(range(kc), key=lambda c: (cdist[c], c))[:n_probe]
-
     # iq_df: optional pre-built (id_col, iq) int-grid frame, e.g. the
     # persisted frame the codebooks trained on — quantizes once per caller
     iq = (
@@ -306,30 +310,11 @@ def pq_ivf_adc_topk(
     candidates = (
         _with_codes(iq, [("_cell", coarse_cb)])
         .withColumn("cell", F.col("_cell0").cast("bigint"))
-        .filter(F.col("cell").isin([int(p) for p in probes]))
+        .filter(F.col("cell").isin(_probe_cells(query_int, coarse_cb, n_probe)))
         .drop("_cell0")
     )
-
-    m_subspaces = len(codebook)
-    k = len(codebook[0])
-    sub_dim = len(codebook[0][0])
-    lut = [
-        [
-            sum(
-                (query_int[m * sub_dim + i] - codebook[m][c][i]) ** 2
-                for i in range(sub_dim)
-            )
-            for c in range(k)
-        ]
-        for m in range(m_subspaces)
-    ]
     coded = _with_codes(candidates, [("_c", codebook)])
-    adc = F.lit(0).cast("bigint")
-    for m in range(m_subspaces):
-        adc = adc + F.element_at(
-            F.array(*[F.lit(int(x)).cast("bigint") for x in lut[m]]),
-            F.col(f"_c{m}") + 1,
-        )
+    adc = _adc_sum(_adc_lut(query_int, codebook))
     return (
         coded.select(id_col, "cell", adc.alias("adc_dist"))
         .orderBy("adc_dist", id_col)
@@ -398,41 +383,18 @@ def pq_ivf_residual_adc_topk(
     lookup is kc×M×k ints — still driver-trivial). Exact int64 end-to-end;
     still a projection + filter + TakeOrderedAndProject."""
     kc = len(coarse_cb[0])
-    dim = len(coarse_cb[0][0])
-    m_subspaces = len(codebook)
-    k = len(codebook[0])
-    sub_dim = len(codebook[0][0])
-
-    cdist = [
-        sum((query_int[d] - coarse_cb[0][c][d]) ** 2 for d in range(dim))
-        for c in range(kc)
-    ]
-    probes = sorted(range(kc), key=lambda c: (cdist[c], c))[:n_probe]
     # per-cell query residual → per-(cell, m, code) ADC entries
     lut = [
-        [
-            [
-                sum(
-                    (
-                        (query_int[m * sub_dim + i] - coarse_cb[0][cell][m * sub_dim + i])
-                        - codebook[m][c][i]
-                    )
-                    ** 2
-                    for i in range(sub_dim)
-                )
-                for c in range(k)
-            ]
-            for m in range(m_subspaces)
-        ]
+        _adc_lut([q - x for q, x in zip(query_int, coarse_cb[0][cell])], codebook)
         for cell in range(kc)
     ]
 
     cand = _cell_and_residual(df, coarse_cb, vec_col, id_col).filter(
-        F.col("cell").isin([int(p) for p in probes])
+        F.col("cell").isin(_probe_cells(query_int, coarse_cb, n_probe))
     )
     cand = _with_codes(cand, [("_c", codebook)])
     adc = F.lit(0).cast("bigint")
-    for m in range(m_subspaces):
+    for m in range(len(codebook)):
         code = F.col(f"_c{m}")
         lut_m = F.array(
             *[

@@ -181,11 +181,9 @@ def bm25_scores(
         dfs_list = [int(srow[f"df_{i}"]) for i in range(len(terms))]
     else:
         # incremental-index mode: (n_docs, sum_dl, {term: df}) supplied
-        # externally — e.g. summed from the streaming term-stats ledger
-        # (streaming/windows.py:streaming_term_stats). Identical integer
-        # inputs → bit-identical scoring; the scored frame can be any
-        # subset (a fresh batch) while idf/avgdl reflect the whole
-        # indexed corpus.
+        # externally. Identical integer inputs → bit-identical scoring;
+        # the scored frame can be any subset (a fresh batch) while
+        # idf/avgdl reflect the whole indexed corpus.
         n_docs, sum_dl, dfs = corpus_stats
         n_docs, sum_dl = int(n_docs), int(sum_dl)
         if n_docs <= 0:

@@ -87,8 +87,7 @@ def _robots_directives(
     the chain parse_robots carried inline): canonical-host keying with
     the empty-host drop + one-robots-per-host tripwire, line explode,
     comment strip, and (directive, value) extraction. parse_robots
-    consumes the group/rule subset; :func:`robots_sitemaps` the
-    ``Sitemap:`` rows."""
+    consumes the group/rule subset."""
     from . import precondition_filter, require_new_column
     from .filtering import canonical_host
 
@@ -120,9 +119,7 @@ def _robots_directives(
             "_rbn", F.count("*").over(Window.partitionBy("_canon"))
         ),
         F.col("_rbn") == 1,
-        # names the SHARED ingestion, not one caller (r14 review #4: a
-        # robots_sitemaps user got an error blaming parse_robots)
-        "robots ingestion precondition (parse_robots / robots_sitemaps): "
+        "robots ingestion precondition (parse_robots): "
         "multiple robots rows resolve to one canonical host — a host has "
         "exactly ONE /robots.txt; dedupe the fetch join upstream",
     ).drop("_rbn")
@@ -147,34 +144,6 @@ def _robots_directives(
         F.trim(
             F.regexp_extract(body, f"^[A-Za-z-]+[{_WS}]*:(.*)$", 1)
         ).alias("_val"),
-    )
-
-
-def robots_sitemaps(
-    robots: DataFrame,
-    domain_col: str = "domain",
-    text_col: str = "robots_txt",
-) -> DataFrame:
-    """``Sitemap:`` directives per robots.txt (r14) — the discovery seed
-    real crawlers (and Common Crawl) take from robots bodies: RFC 9309
-    lets a parser ignore them, but §2.2.4's companion convention
-    (sitemaps.org) publishes them in robots.txt, OUTSIDE any User-agent
-    group and position-independent. Output: (domain, pos, sitemap_url),
-    one row per directive with its body line position — a DataFrame
-    carries no implicit order, so ``pos`` IS the body order (sort on it
-    for first-directive-wins policies; r14 review #1). Duplicates
-    preserved (caller dedupes; a repeated directive is a publisher
-    fact). Values are
-    absolute URLs by the convention; pass them straight to
-    parse_sitemaps' fetch join, closing robots → sitemap → frontier
-    discovery without a hand-maintained seed list. Same ingestion (and
-    the same loud one-robots-per-host tripwire) as parse_robots — the
-    two can never disagree about a body's lines."""
-    parsed = _robots_directives(robots, domain_col, text_col)
-    return (
-        parsed.where(F.col("_dir") == "sitemap")
-        .where(F.length("_val") > 0)
-        .select("domain", F.col("_pos").alias("pos"), F.col("_val").alias("sitemap_url"))
     )
 
 
@@ -204,9 +173,8 @@ def parse_robots(
     tripwire loud instead of merging.
 
     Ingestion (canonical host, empty-host drop, duplicate tripwire, line
-    explode, comment strip, directive extraction) lives in the shared
-    :func:`_robots_directives` since r14 — robots_sitemaps consumes the
-    same chain, so the two parsers can never disagree about a line."""
+    explode, comment strip, directive extraction) lives in
+    :func:`_robots_directives` since r14."""
     parsed = _robots_directives(robots, domain_col, text_col)
     # blank lines, comment-only lines, and unrecognized directives
     # (Sitemap, Crawl-delay, …) are dropped BEFORE the adjacency window

@@ -88,9 +88,8 @@ def shard_assignments(
     the cluster (e.g. 4× executor count); the per-bucket offset table is P
     rows regardless of corpus size.
 
-    ``base_tokens`` shifts the running total — the continuation hook for the
-    streaming producer (:func:`streaming_shard_append`), which packs each
-    micro-batch onto the tail shard the previous batch left partially full.
+    ``base_tokens`` shifts the running total, so a later batch packs onto
+    the tail shard the previous batch left partially full.
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")

@@ -1,15 +1,12 @@
-"""Skew mitigation: salted aggregation and salted broadcast-side join.
+"""Skew mitigation: salted aggregation.
 
 AQE's skew-join splitting (on in session.py) covers sort-merge joins at
-runtime; these helpers cover the two cases AQE cannot fix:
+runtime; this helper covers the case AQE cannot fix:
 
 - `salted_agg`: a hot grouping key (one team, one game, one language
   dominating a 100 TB corpus) overloads a single reducer. Two-phase
   aggregation over (key, salt) then key re-aggregates partial results —
   correct for any commutative-associative aggregate list.
-- `salted_explode_join`: a broadcast-unfriendly dimension with hot keys:
-  replicate each dim row `n_salts` times, salt the fact side uniformly, join
-  on (key, salt) so one hot key spreads over n_salts reducers.
 
 Salt is `pmod(hash(unique_col), n)` when a unique column exists (stable,
 shuffle-free) or `floor(rand(seed) * n)` otherwise.
@@ -51,22 +48,3 @@ def salted_agg(
     salted = with_salt(df, n_salts, unique_col)
     partial = salted.groupBy(*keys, "_salt").agg(*partial_aggs)
     return partial.groupBy(*keys).agg(*final_aggs)
-
-
-def salted_explode_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    on: Sequence[str],
-    n_salts: int = 16,
-    how: str = "inner",
-    seed: int = 7,
-) -> DataFrame:
-    """Join where `dim`'s hot keys would skew a shuffle join: replicate dim
-    across all salts (explode — dim must be the small side), salt fact
-    uniformly, join on keys + salt."""
-    dim_rep = dim.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))).withColumn(
-        "_salt", F.col("_salt").cast("int")
-    )
-    fact_s = with_salt(fact, n_salts, seed=seed)
-    out = fact_s.join(dim_rep, [*on, "_salt"], how)
-    return out.drop("_salt")

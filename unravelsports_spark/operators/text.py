@@ -73,8 +73,9 @@ def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
 
 def _stopword_pattern(stops: list[str]) -> str:
     """The anchored stopword-alternation regex, built ONCE and shared by
-    `lang_scores` (Column form) and `with_lang_id` (SQL-text form) so the
-    two formulations can never drift (ADVICE r6)."""
+    `with_lang_id` (SQL-text form) and the Column-form reference in
+    tests/test_filtering.py so the two formulations can never drift
+    (ADVICE r6)."""
     return r"(?<=^|\s)(?:" + "|".join(stops) + r")(?=\s|$)"
 
 
@@ -107,31 +108,6 @@ def _sql_identifier(name: str) -> str:
     return "`" + name.replace("`", "``") + "`"
 
 
-def lang_scores(text_col: str = "text") -> dict[str, SqlCol]:
-    """Per-language stopword occurrence counts.
-
-    Anchored JVM regexes — ``(?<=^|\\s)(?:stop1|stop2|...)(?=\\s|$)`` —
-    which is exactly "token == stopword" under the whitespace tokenization
-    the filter-HOF form used: the lookarounds reject matches inside
-    punctuation-attached tokens, and alternation backtracking handles
-    prefix stopwords (le/les). Property-tested equal to the filter form
-    (test_filtering.py) and verified 0 per-doc mismatches corpus-wide.
-    r7: the document is scanned ONCE with the all-languages union pattern
-    and the per-language counts scan only the joined matches — see
-    ``_all_stopwords_pattern`` for why counts are provably unchanged."""
-    c = F.trim(F.lower(F.col(text_col)))
-    reduced = F.array_join(
-        F.regexp_extract_all(c, F.lit(_all_stopwords_pattern()), F.lit(0)), " "
-    )
-    out = {}
-    for lang, stops in LANG_STOPWORDS.items():
-        pat = _stopword_pattern(stops)
-        # the identical `reduced` subtree in every count → whole-stage
-        # codegen subexpression elimination runs the document scan ONCE
-        out[lang] = F.size(F.regexp_extract_all(reduced, F.lit(pat), F.lit(0)))
-    return out
-
-
 def with_lang_id(df: DataFrame, text_col: str = "text", out: str = "predicted_lang") -> DataFrame:
     """Stopword-voting language ID; ties resolve in LANG_STOPWORDS order.
 
@@ -150,7 +126,7 @@ def with_lang_id(df: DataFrame, text_col: str = "text", out: str = "predicted_la
     parses the same tree in a single call (~30 ms, measured)."""
     langs = list(LANG_STOPWORDS)
     col_sql = _sql_identifier(text_col)
-    # the SAME pattern objects lang_scores uses, escaped programmatically
+    # the SAME pattern objects the Column form uses, escaped programmatically
     # for SQL literals (ADVICE r6: no hand-doubled backslash twin). The
     # reduced string is HOISTED into its own named column: the argmax fold
     # below is an interpreted HOF, so codegen subexpression elimination
@@ -208,30 +184,6 @@ def split_sentences(df: DataFrame, text_col: str = "text", id_col: str = "doc_id
     return df.select(
         id_col, F.posexplode(cleaned).alias("sentence_idx", "sentence")
     )
-
-
-def make_sentence_udtf():
-    """Native Python UDTF twin of `split_sentences` (the U4 surface — Spark
-    4's lateral-join table functions). Row-at-a-time by design, so it's the
-    API-parity path, not the hot path; tests assert it matches the Catalyst
-    formulation exactly."""
-    import re
-
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="sentence_idx int, sentence string")
-    class SentenceSplitter:
-        def eval(self, text: str):
-            if text is None:
-                return
-            idx = 0
-            for part in re.split(SENTENCE_SPLIT_RE, text):
-                part = part.strip()
-                if part:
-                    yield idx, part
-                    idx += 1
-
-    return SentenceSplitter
 
 
 def chunk_tokens(

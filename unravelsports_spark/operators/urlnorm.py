@@ -214,19 +214,6 @@ def surt_key(url_col, strip_params=DEFAULT_TRACKING_PARAMS) -> Column:
     return F.when(canon.isNotNull(), F.concat(rev, F.lit(")"), rest))
 
 
-def with_surt_key(
-    df: DataFrame,
-    url_col: str = "url",
-    out_col: str = "surt",
-    strip_params=DEFAULT_TRACKING_PARAMS,
-) -> DataFrame:
-    """Append ``out_col`` = SURT key (see :func:`surt_key`)."""
-    from . import require_new_column
-
-    require_new_column(df, out_col)
-    return df.withColumn(out_col, surt_key(F.col(url_col), strip_params))
-
-
 def with_canonical_url(
     df: DataFrame,
     url_col: str = "url",

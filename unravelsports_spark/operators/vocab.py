@@ -17,7 +17,7 @@ the live corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 #: lowercase alnum runs — identical semantics in Java regex and RE2 (DuckDB)
@@ -78,31 +78,6 @@ def tfidf_terms(
         .withColumn("idf", idf)
         .withColumn("max_tfidf", F.round(F.col("max_tf") * F.col("idf"), 6))
         .drop("_n", "max_tf")
-    )
-
-
-def doc_top_terms(
-    df: DataFrame,
-    k: int = 1,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Top-k TF-IDF terms per document (rank ties broken by term asc —
-    fully deterministic). One extra shuffle vs tfidf_terms (the join back
-    of idf onto (doc, term) rows); idf is a term-level dimension — small
-    relative to the corpus but VOCABULARY-sized, so it carries no forced
-    broadcast hint (AQE broadcasts it when small; at web scale the noise
-    tail can push a vocabulary past the broadcast hard limit)."""
-    tf = term_frequencies(df, text_col, id_col)
-    idf = tfidf_terms(df, text_col, id_col).select("term", "idf")
-    scored = tf.join(idf, "term").withColumn(
-        "tfidf", F.round(F.col("tf") * F.col("idf"), 6)
-    )
-    w = Window.partitionBy(id_col).orderBy(F.desc("tfidf"), F.asc("term"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(id_col, "term", "tf", "tfidf", "rank")
     )
 
 

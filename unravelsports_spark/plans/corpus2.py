@@ -204,8 +204,7 @@ def s_kmeans_assign(spark, sf_dir):
 
 # NOTE: s_kmeans_fit moved to plans/corpus4.py in round 5 — it now runs the
 # exact int64 Lloyd (2^-20 grid, the PQ trainer with one subspace) and is
-# hash-certified against a CTE-unrolled DuckDB oracle. The float-path
-# operator (kmeans_fit_distributed) remains tested in tests/test_vocab.py.
+# hash-certified against a CTE-unrolled DuckDB oracle.
 
 
 @query(
@@ -229,9 +228,8 @@ def s_kmeans_assign(spark, sf_dir):
 )
 def t_sentences(spark, sf_dir):
     """Sentence segmentation (engine addition §2.12): split + transform +
-    filter + posexplode, all inside whole-stage codegen. The native Python
-    UDTF twin (`make_sentence_udtf`) is asserted equal in tests — the U4
-    surface without putting Python in the hot path."""
+    filter + posexplode, all inside whole-stage codegen — no Python in the
+    hot path."""
     from ..operators.text import split_sentences
 
     d = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0)

@@ -609,8 +609,7 @@ def d_semantic_contamination(spark, sf_dir):
 # ---------------------------------------------------------------------------
 # Round-5 certification: s_kmeans_fit on the exact int64 grid — the same
 # 2^-20 quantization + floor-mean Lloyd discipline that made the PQ family
-# hash-certifiable (the float-path operator kmeans_fit_distributed stays
-# tested in tests/test_vocab.py; this query is its certifiable twin).
+# hash-certifiable.
 # ---------------------------------------------------------------------------
 
 _KM_K = 8

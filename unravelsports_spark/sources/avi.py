@@ -84,33 +84,3 @@ def write_mjpeg_avi(
     with open(path, "wb") as fh:
         fh.write(b"RIFF" + struct.pack("<I", len(riff_payload)) + riff_payload)
     return path
-
-
-def read_mjpeg_avi(path: str) -> list[bytes]:
-    """Minimal reader for verification/tests: returns the JPEG frame blobs."""
-    with open(path, "rb") as fh:
-        data = fh.read()
-    if data[:4] != b"RIFF" or data[8:12] != b"AVI ":
-        raise ValueError("not an AVI file")
-    frames = []
-    pos = 12
-    while pos + 8 <= len(data):
-        fourcc = data[pos:pos + 4]
-        size = struct.unpack("<I", data[pos + 4:pos + 8])[0]
-        if fourcc == b"LIST":
-            listtype = data[pos + 8:pos + 12]
-            if listtype == b"movi":
-                p = pos + 12
-                end = pos + 8 + size
-                while p + 8 <= end:
-                    ck = data[p:p + 4]
-                    cksz = struct.unpack("<I", data[p + 4:p + 8])[0]
-                    if ck == b"00dc":
-                        frames.append(data[p + 8:p + 8 + cksz])
-                    p += 8 + cksz + (cksz % 2)
-                pos += 8 + size + (size % 2)
-                continue
-            pos += 12  # descend into other lists
-            continue
-        pos += 8 + size + (size % 2)
-    return frames

@@ -24,7 +24,7 @@ cache; the audit you came for costs exactly that parse). Use the raw
 :func:`read_csv` only when every downstream query references all schema
 columns. JSONL shares the TYPE-level leg of this hazard (a valid-JSON row
 whose field fails the schema cast also leaks under pruning — see
-read_jsonl/read_jsonl_checked); only SYNTAX-level corruption is
+read_jsonl); only SYNTAX-level corruption is
 pruning-immune there. CSV corruption is usually type-level (every field is
 a bare string until cast), which is why the hazard bites hardest here.
 

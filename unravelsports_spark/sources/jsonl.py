@@ -64,8 +64,8 @@ def read_jsonl(
     Spark's pruned parse skips the cast, so a narrow projection ingests
     such rows as clean (measured; the same hazard as csvio's, which is
     worse there because CSV corruption is USUALLY type-level). For
-    audit-grade semantics across arbitrary projections use
-    :func:`read_jsonl_checked`."""
+    audit-grade semantics across arbitrary projections land one full parse
+    with :func:`materialize_checked`."""
     full = with_corrupt_record(schema)
     return (
         spark.read.schema(full)
@@ -78,8 +78,9 @@ def read_jsonl(
 def materialize_checked(raw: DataFrame, spark: SparkSession, dest: str) -> DataFrame:
     """Land ONE full-schema parse of a PERMISSIVE boundary read to parquet
     at ``dest`` (clean rows AND the ``_corrupt_record`` quarantine column)
-    and return a reader over the landed copy — shared by the jsonl and
-    csvio checked readers (VERDICT r11 #5).
+    and return a reader over the landed copy — csvio's checked reader
+    lands through it, and a :func:`read_jsonl` frame takes it directly
+    (VERDICT r11 #5).
 
     Writing projects EVERY schema column, which is exactly the full parse
     the pruning hazard requires, and parquet stores parsed VALUES — so the
@@ -92,31 +93,6 @@ def materialize_checked(raw: DataFrame, spark: SparkSession, dest: str) -> DataF
     parse once at the boundary, let every later query read columnar."""
     raw.write.mode("overwrite").parquet(dest)
     return spark.read.parquet(dest)
-
-
-def read_jsonl_checked(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType = DOC_SCHEMA,
-    materialize: str | None = None,
-) -> DataFrame:
-    """Quarantine-CORRECT read (the csvio.read_csv_checked pattern): one
-    full-schema parse materialized through the tracked cache, so every
-    downstream projection — however narrow — sees type-corrupt rows
-    flagged. Release caveat (r11 pass 6 #3): after ``release_tracked()``
-    a STILL-HELD frame recomputes from the raw source and silently
-    reverts to pruned-parse semantics — treat the checked frame's
-    lifetime as ending at the release boundary, OR pass
-    ``materialize=<scratch dir>`` to land the parse to parquet instead
-    (:func:`materialize_checked`): the landed copy's quarantine semantics
-    live in the files, not the cache, at the cost of one scratch write —
-    the 100 TB-correct move anyway."""
-    from ..cache import tracked_persist
-
-    raw = read_jsonl(spark, path, schema)
-    if materialize is not None:
-        return materialize_checked(raw, spark, materialize)
-    return tracked_persist(raw)
 
 
 def quarantine_counts(df: DataFrame) -> DataFrame:

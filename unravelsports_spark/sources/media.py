@@ -515,16 +515,3 @@ def to_mp4(
         dims = dims or (img.shape[1], img.shape[0])
         jpegs.append(encode_jpeg(img, quality=quality))
     return write_mjpeg_mp4(out_path, jpegs, dims[0], dims[1], fps=fps)
-
-
-def plot_frame(
-    tracking: DataFrame,
-    game_id: str,
-    frame_id: int,
-    out_path: Optional[str] = None,
-    home_team_id: str = "home",
-):
-    """Back-compat shim over to_png (the r1 surface raised here; the renderer
-    is real now)."""
-    out_path = out_path or f"{game_id}_{frame_id}.png"
-    return to_png(tracking, game_id, frame_id, out_path, home_team_id)

@@ -344,11 +344,6 @@ def iter_tfrecords(data: bytes):
         pos = body + length + 4
 
 
-def decode_tfrecords(data: bytes) -> list:
-    """Materialized form of :func:`iter_tfrecords` (tests, small shards)."""
-    return list(iter_tfrecords(data))
-
-
 def _corrupt(bad: bytes) -> dict:
     return {
         "payload": None,

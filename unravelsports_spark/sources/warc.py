@@ -73,22 +73,14 @@ def _hval(v) -> bytes:
     return str(v).replace("\r", " ").replace("\n", " ").encode()
 
 
-def encode_warc_records(
-    records: list, gzip_records: bool = False, spans: list | None = None
-) -> bytes:
+def encode_warc_records(records: list, gzip_records: bool = False) -> bytes:
     """Serialize records (dicts with rec_type, record_id, warc_date,
     target_uri, content_type, payload: bytes) to WARC/1.0 bytes —
     header block, CRLF-CRLF, payload, CRLF-CRLF; optionally one gzip
     member per record (the Common Crawl layout). Header values are
     CRLF-sanitized (:func:`_hval`); ``target_uri`` omits its header ONLY
     when None — an EMPTY STRING round-trips as '' (pass 4 #7: truthiness
-    here silently turned '' into NULL on read-back).
-
-    ``spans`` (r14, the CDX leg): pass a list to receive one
-    ``(offset, length)`` per record — the byte span of the record's gzip
-    MEMBER (gzip_records) or plain record — measured in the returned
-    blob. Write time is where offsets are FREE; the archive convention
-    (CDX files generated alongside WARCs) for the same reason."""
+    here silently turned '' into NULL on read-back)."""
     def hv(r, key, default):
         # an EXPLICIT None normalizes to the same default as an absent
         # key (pass 5 #5 — dict.get defaults only cover absence, so any
@@ -96,7 +88,7 @@ def encode_warc_records(
         v = r.get(key)
         return _hval(default if v is None else v)
 
-    out, off = [], 0
+    out = []
     for r in records:
         payload = bytes(r.get("payload") or b"")
         headers = [
@@ -116,9 +108,6 @@ def encode_warc_records(
         # make byte-identical inputs produce byte-different shards and
         # defeat reproducible exports (r12 review pass 3 #7)
         out.append(gzip.compress(rec, mtime=0) if gzip_records else rec)
-        if spans is not None:
-            spans.append((off, len(out[-1])))
-        off += len(out[-1])
     return b"".join(out)
 
 
@@ -542,7 +531,6 @@ def write_warc(
     path: str,
     gzip_records: bool = False,
     date: str = "2026-01-01T00:00:00Z",
-    index: bool = False,
 ) -> DataFrame:
     """Distributed sharded WARC export. ``df`` columns: ``target_uri``
     (string, nullable — a NULL simply omits the WARC-Target-URI header),
@@ -571,26 +559,7 @@ def write_warc(
     members are mtime-0. Byte-identical re-exports require the caller to
     supply a ``record_id`` column (pass 4 #5) — without one, fresh uuids
     are generated per attempt, so shards are structurally identical but
-    not byte-identical across runs.
-
-    ``index=True`` (r14, the CDX leg) writes a ``part-….cdx`` JSONL
-    sidecar per shard — one line per record: shard basename, uri, date,
-    rec_type, byte offset + length of the record's gzip member (or plain
-    record) — published through the same deterministic-name + atomic-
-    rename scaffold, so retries rewrite the same sidecar. Offsets are
-    captured DURING encoding (where they are free — the archive
-    convention); :func:`read_warc_index` turns the sidecars into the
-    SURT-keyed index table and :func:`fetch_warc_record` is the O(1)
-    seek they exist for. The manifest gains an ``index_shard`` column
-    (NULL when index=False).
-
-    Pair-consistency caveat (r14 review #3): shard and sidecar are each
-    published atomically but not AS A PAIR, so overlapping attempts with
-    non-identical bytes (no ``record_id`` column + gzip_records → fresh
-    uuids change member lengths per attempt) can interleave into B's
-    archive under A's offsets. Supply ``record_id`` with ``index=True``
-    — byte-identical attempts make any interleaving harmless (the same
-    contract byte-identical re-export already documents above)."""
+    not byte-identical across runs."""
     import pandas as pd
 
     cols = df.columns
@@ -641,86 +610,22 @@ def write_warc(
                     pdf["target_uri"], pdf["payload"], rid, wd, ct
                 )
             ]
-            spans: list | None = [] if index else None
-            blob = encode_warc_records(records, gzip_records, spans=spans)
+            blob = encode_warc_records(records, gzip_records)
             ext = ".warc.gz" if gzip_records else ".warc"
             # deterministic name + dotfile tmp + atomic rename (pass 4
             # #2) — the scaffold now lives in shardio.write_shard, shared
             # with the TFRecord writer (r13 review pass 26 #4: two
             # verbatim copies of the idempotency contract)
             shard = write_shard(path, pid, batch_idx, ext, blob)
-            index_shard = None
-            if index:
-                import json as _json
-                import os as _os
-
-                # JSONL, not whitespace-delimited text: a scraped URI can
-                # legally carry tabs/spaces; json.dumps is unambiguous.
-                # The shard BASENAME rides inside each line so the index
-                # table needs no filename arithmetic at read time.
-                # String values pass through the SAME _hval CRLF fold the
-                # archive headers get (r14 review #4: the raw spelling
-                # diverged from the fetched record's target_uri, breaking
-                # index↔archive joins on uri for CR/LF-carrying inputs).
-                base = _os.path.basename(shard)
-
-                def clean(v):
-                    return None if v is None else _hval(v).decode()
-
-                lines = "".join(
-                    _json.dumps(
-                        {
-                            "shard": base,
-                            "uri": clean(rec["target_uri"]),
-                            "date": clean(rec["warc_date"]),
-                            "rec_type": clean(rec["rec_type"]),
-                            "offset": o,
-                            "length": n,
-                        }
-                    )
-                    + "\n"
-                    for rec, (o, n) in zip(records, spans)
-                ).encode()
-                # plain .cdx (NOT .warc.cdx): read_warc / read_warc_stream
-                # glob '*.warc*', which would sweep a .warc.cdx sidecar
-                # into the record decoder as a corrupt shard
-                index_shard = write_shard(path, pid, batch_idx, ".cdx", lines)
             yield pd.DataFrame(
                 {
                     "shard": [shard],
                     "n_records": [len(records)],
                     "n_bytes": [len(blob)],
-                    "index_shard": [index_shard],
                 }
             )
 
-    return df.mapInPandas(
-        writer, "shard string, n_records long, n_bytes long, index_shard string"
-    )
-
-
-def _decode_shard_batches(batches, max_records_per_batch: int | None = 4096):
-    """The ONE Arrow decode stage shared by the batch and stream readers
-    (r12 review: a copy in each would let the quarantine contract drift
-    between them and silently break the advertised batch≡stream
-    equivalence). Since r13 the loop itself lives in
-    :func:`~unravelsports_spark.sources.shardio.decode_shard_batches`,
-    shared with the TFRecord reader for the same reason.
-
-    ``max_records_per_batch`` (VERDICT r12 #3) flushes the row buffer to
-    a pandas batch every N records, so a multi-GB gzip shard never
-    materializes all its decoded rows at once — peak task memory is
-    (compressed shard bytes, binaryFile's unit) + one gzip member +
-    N buffered rows. ``None`` restores whole-shard emission. Rows are
-    IDENTICAL either way (mapInPandas concatenates batches)."""
-    from .shardio import decode_shard_batches
-
-    return decode_shard_batches(
-        batches,
-        iter_warc_records,
-        [f.name for f in WARC_SCHEMA.fields],
-        max_records_per_batch,
-    )
+    return df.mapInPandas(writer, "shard string, n_records long, n_bytes long")
 
 
 def read_warc(
@@ -730,19 +635,27 @@ def read_warc(
     with the shared quarantine contract — one Arrow decode pass per
     shard; no pruned-parse hazard (see module note).
 
-    ``max_records_per_batch`` bounds decoded-row materialization per task
-    (chunked emission off the lazy codec — see
-    :func:`_decode_shard_batches`); the default keeps even a multi-GB
-    decompressed shard within (shard bytes + one member + 4096 rows) of
-    peak task memory. ``None`` = whole-shard batches (the r12 behavior)."""
+    ``max_records_per_batch`` (VERDICT r12 #3) flushes the row buffer to
+    a pandas batch every N records (chunked emission off the lazy codec,
+    through :func:`~unravelsports_spark.sources.shardio.decode_shard_batches`,
+    the loop shared with the TFRecord reader), so even a multi-GB
+    decompressed shard stays within (shard bytes + one member + N rows)
+    of peak task memory. ``None`` = whole-shard batches (the r12
+    behavior). Rows are IDENTICAL either way."""
+    from .shardio import decode_shard_batches
+
     files = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.warc*")
         .load(path)
         .select("path", "content")
     )
+    names = [f.name for f in WARC_SCHEMA.fields]
     return files.mapInPandas(
-        lambda it: _decode_shard_batches(it, max_records_per_batch), WARC_SCHEMA
+        lambda it: decode_shard_batches(
+            it, iter_warc_records, names, max_records_per_batch
+        ),
+        WARC_SCHEMA,
     )
 
 
@@ -788,218 +701,4 @@ def warc_to_documents(df: DataFrame, invalid: str = "replace") -> DataFrame:
     )
     return with_url_parts(clean, "url").select(
         F.col("domain").alias("source"), "url", "text"
-    )
-
-
-def read_warc_stream(
-    spark: SparkSession,
-    path: str,
-    options: dict | None = None,
-    max_records_per_batch: int | None = 4096,
-) -> DataFrame:
-    """STREAMING twin of :func:`read_warc` (engine §2.9 surface): a crawl
-    drops shards into a landing directory continuously; this watches it
-    with the binaryFile STREAM source and runs the IDENTICAL Arrow decode
-    (one shared stage — :func:`_decode_shard_batches`) per new shard —
-    the batch≡stream discipline every other boundary in the repo follows
-    (equivalence-tested: availableNow over a static directory produces
-    exactly the batch read's rows).
-
-    Exactly-once scope: FileStreamSource keys seen files BY PATH, so the
-    guarantee holds when a published shard's bytes are stable — i.e. the
-    landing dir is written once, or write_warc retries republish
-    byte-identical shards (supply a ``record_id`` column; without one a
-    retried attempt re-rolls uuids under the same deterministic name, and
-    a shard republished AFTER its micro-batch was read would diverge from
-    a later batch read). ``options`` passes source options through —
-    ``{"maxFilesPerTrigger": "64"}`` bounds per-batch work when
-    backfilling a large landing directory. The quarantine contract rides
-    through unchanged — corrupt shards surface as `_corrupt_record` rows
-    in the stream, so a `n_quarantined > 0` alert works on the sink."""
-    reader = (
-        spark.readStream.format("binaryFile")
-        # streaming sources require an explicit schema; this is the
-        # binaryFile datasource's FIXED schema, not an inference skip
-        .schema(
-            "path string, modificationTime timestamp, "
-            "length long, content binary"
-        )
-        .option("pathGlobFilter", "*.warc*")
-    )
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    files = reader.load(path).select("path", "content")
-    return files.mapInPandas(
-        lambda it: _decode_shard_batches(it, max_records_per_batch), WARC_SCHEMA
-    )
-
-
-def read_warc_index(spark: SparkSession, path: str) -> DataFrame:
-    """The CDX index table from ``write_warc(…, index=True)`` sidecars:
-    one row per archived record — (surt, uri, date, rec_type, shard,
-    offset, length). ``surt`` is computed here via the single-source
-    :func:`~unravelsports_spark.operators.urlnorm.surt_key` column
-    function (the writer stays canonicalization-free: re-keying an
-    archive after a canonicalizer fix is a metadata re-read, not a
-    100 TB rewrite). Sort or range-partition on ``surt`` for the lookup
-    layout (`write_surt_clustered`); join ``(shard, offset, length)``
-    into :func:`fetch_warc_record` for the O(1) page fetch the index
-    exists for. A NULL/unparseable uri yields a NULL surt — still
-    fetchable by span, just not host-addressable."""
-    from ..operators.urlnorm import surt_key
-
-    idx = (
-        spark.read.schema(
-            "shard string, uri string, date string, rec_type string, "
-            "offset long, length long"
-        )
-        .option("pathGlobFilter", "*.cdx")
-        .json(path)
-    )
-    return idx.select(
-        surt_key(F.col("uri")).alias("surt"),
-        "uri", "date", "rec_type", "shard", "offset", "length",
-    )
-
-
-def fetch_warc_record(dir_path: str, shard: str, offset: int, length: int) -> dict:
-    """Random-access fetch of ONE archived record by its index span:
-    seek to ``offset`` in ``shard`` (basename under ``dir_path``), read
-    ``length`` bytes, decode through the SAME hardened codec as the bulk
-    reader. This is the point of the CDX layout: serving one page out of
-    a 100 TB archive costs one seek + one member's decode, not a shard
-    scan. Driver/service-side helper by design — an index-driven BULK
-    re-read is :func:`read_warc_by_index`, not a fetch loop.
-
-    LOUD by contract (r14 review #6 aligned the docstring with the
-    behavior): a span outside the shard, or one that decodes to 0 or >1
-    records, raises ValueError — a single-page serving path wants the
-    exception, not a quarantine row to inspect. The tolerate-and-
-    quarantine contract belongs to the bulk path. A tamper can in
-    principle still decode to exactly one quarantine row (its
-    ``_corrupt_record`` is then set) — check it when the payload
-    matters. Returns the decoded row dict (WARC_SCHEMA minus
-    ``shard``)."""
-    import os
-
-    fpath = os.path.join(dir_path, os.path.basename(shard))
-    size = os.path.getsize(fpath)
-    if offset < 0 or length < 1 or offset + length > size:
-        raise ValueError(
-            f"span ({offset}, {length}) outside shard {shard!r} ({size} bytes)"
-        )
-    with open(fpath, "rb") as fh:
-        fh.seek(offset)
-        span = fh.read(length)
-    rows = decode_warc_records(span)
-    if len(rows) != 1:
-        # a span that decodes to 0 or >1 rows is an index/archive
-        # mismatch (stale index after a rewrite) — loud, like the bounds
-        raise ValueError(
-            f"span ({offset}, {length}) in {shard!r} decoded to "
-            f"{len(rows)} records (expected exactly 1)"
-        )
-    return rows[0]
-
-
-def read_warc_by_index(
-    index: DataFrame, dir_path: str, max_records_per_batch: int | None = 4096
-) -> DataFrame:
-    """DISTRIBUTED random-access read: decode exactly the records an
-    index frame names — (shard, offset, length) rows from
-    :func:`read_warc_index` (filtered/joined down to the wanted set) —
-    into WARC_SCHEMA rows. Each task opens a shard at most once per
-    distinct shard in its partition (rows are pre-sorted per batch), then
-    seek+read+decode per span through the same hardened codec. At 100 TB
-    this is the "re-read 0.1 % of the archive" path: IO is sum(length)
-    of the wanted spans, not the archive scan read_warc would do.
-
-    The bulk-reader QUARANTINE contract holds for every per-row failure
-    (r14 review #1/#2 — a stale index must not crash a 10k-page fetch
-    job): a missing/renamed shard, a NULL or non-numeric field (a
-    malformed sidecar line arrives from the permissive JSON read as
-    all-NULLs), a negative or out-of-bounds span, and a span decoding to
-    0 or >1 records ALL surface as ``_corrupt_record`` rows carrying the
-    reason, while clean spans in the same batch still decode.
-    ``max_records_per_batch`` flushes decoded rows every N spans (the
-    shardio chunked-emission discipline — review #5: payloads of a whole
-    Arrow batch of spans must not materialize at once).
-
-    Repartition the index by ``shard`` upstream when fetching a large
-    set, so each shard's spans land in few tasks."""
-    import os
-
-    import pandas as pd
-
-    cols = [f.name for f in WARC_SCHEMA.fields]
-
-    def _bad(shard, msg: str) -> dict:
-        row = _corrupt_row(msg.encode())
-        row["shard"] = None if shard is None or pd.isna(shard) else str(shard)
-        return row
-
-    def fetch(batches):
-        rows = []
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            pdf = pdf.sort_values(
-                ["shard", "offset"], kind="stable", na_position="last"
-            )
-            cur, fh = None, None
-            try:
-                for shard, off, length in zip(
-                    pdf["shard"], pdf["offset"], pdf["length"]
-                ):
-                    if (
-                        shard is None
-                        or pd.isna(shard)
-                        or off is None
-                        or pd.isna(off)
-                        or length is None
-                        or pd.isna(length)
-                        or int(off) < 0
-                        or int(length) < 1
-                    ):
-                        rows.append(
-                            _bad(shard, f"bad index row: span ({off}, {length})")
-                        )
-                        continue
-                    fpath = os.path.join(dir_path, os.path.basename(str(shard)))
-                    if cur != fpath:
-                        if fh is not None:
-                            fh.close()
-                        fh, cur = None, fpath
-                        try:
-                            fh = open(fpath, "rb")
-                        except OSError:
-                            fh = None  # every span of this shard quarantines
-                    if fh is None:
-                        rows.append(_bad(shard, f"missing shard: {fpath}"))
-                        continue
-                    try:
-                        fh.seek(int(off))
-                        span = fh.read(int(length))
-                    except OSError as e:
-                        rows.append(_bad(shard, f"read failed: {e}"))
-                        continue
-                    decoded = decode_warc_records(span)
-                    if len(decoded) == 1:
-                        row = decoded[0]
-                    else:  # 0 or >1: index/archive mismatch -> quarantine
-                        row = _corrupt_row(span)
-                    row["shard"] = str(shard)
-                    rows.append(row)
-                    if max_records_per_batch and len(rows) >= max_records_per_batch:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-            finally:
-                if fh is not None:
-                    fh.close()
-            if rows:
-                yield pd.DataFrame(rows, columns=cols)
-                rows = []
-
-    return index.select("shard", "offset", "length").mapInPandas(
-        fetch, WARC_SCHEMA
     )
