@@ -1,9 +1,10 @@
-"""Batched graph-kernel fast path vs the per-frame plugin path on random
-frames: same formulas and op order, so agreement is to the last couple of
-ulps (NumPy's SIMD transcendental kernels round the vector lanes and the
-scalar tail slightly differently for different array shapes — exact bitwise
-equality across shapes is not attainable). Tolerance here is 4e-15 absolute;
-the reference goldens are checked at rtol 1e-3."""
+"""The graph kernels on a stack of frames vs the same kernels one frame at a
+time, through the same public drivers: same formulas, so agreement is to the
+last couple of ulps (NumPy's SIMD transcendental kernels round the vector
+lanes and the scalar tail slightly differently for different array shapes
+and alignments — exact bitwise equality across shapes is not attainable).
+Tolerance here is 4e-15 absolute; the reference goldens are checked at
+rtol 1e-3."""
 
 import numpy as np
 import pytest
@@ -15,12 +16,6 @@ from unravelsports_spark.functions.graph_features import (
     compute_edge_features,
     compute_node_features,
     frame_kwargs,
-)
-from unravelsports_spark.functions.graph_features_batch import (
-    batch_kwargs,
-    compute_adjacency_batch,
-    compute_edge_channels_batch,
-    compute_node_features_batch,
 )
 from unravelsports_spark.settings import GraphSettings
 
@@ -48,33 +43,37 @@ def _random_frames(rng, n_frames=6, n=23):
     return frames
 
 
+def _stacked_vs_single(frames, gs):
+    """Run the drivers once on the stack and once per frame; compare."""
+    fk = frame_kwargs({k: np.stack([d[k] for d in frames]) for k in frames[0]}, gs)
+    adj_s = compute_adjacency_matrix(gs, **fk)
+    node_s, node_dims = compute_node_features(DEFAULT_NODE_FEATURES, None, gs, **fk)
+    edge_s, edge_dims = compute_edge_features(adj_s, DEFAULT_EDGE_FEATURES, None, gs, **fk)
+    offset = 0
+    for i, d in enumerate(frames):
+        fk = frame_kwargs(d, gs)
+        adj = compute_adjacency_matrix(gs, **fk)
+        np.testing.assert_array_equal(adj_s[i], adj, err_msg=f"adjacency frame {i}")
+        node, dims = compute_node_features(DEFAULT_NODE_FEATURES, None, gs, **fk)
+        assert dims == node_dims
+        np.testing.assert_allclose(node_s[i], node, rtol=0, atol=4e-15, err_msg=f"nodes frame {i}")
+        edge, dims = compute_edge_features(adj, DEFAULT_EDGE_FEATURES, None, gs, **fk)
+        assert dims == edge_dims
+        np.testing.assert_allclose(
+            edge_s[offset:offset + len(edge)], edge, rtol=0, atol=4e-15, err_msg=f"edges frame {i}"
+        )
+        offset += len(edge)
+    assert offset == len(edge_s)
+
+
 @pytest.mark.parametrize("atype", ["dense", "dense_ap", "dense_dp", "split_by_team"])
 @pytest.mark.parametrize("ctype", ["ball", "ball_carrier", "no_connection"])
 def test_batch_matches_per_frame(atype, ctype):
-    rng = np.random.default_rng(11)
-    frames = _random_frames(rng)
     gs = GraphSettings(
         home_team_id="home", away_team_id="away",
         adjacency_matrix_type=atype, adjacency_matrix_connect_type=ctype,
     )
-
-    stacked = {k: np.stack([d[k] for d in frames]) for k in frames[0]}
-    bk = batch_kwargs(stacked, gs)
-    adj_b = compute_adjacency_batch(bk, gs)
-    node_b = compute_node_features_batch(bk, gs)
-    edge_b = compute_edge_channels_batch(bk, gs)
-
-    for i, d in enumerate(frames):
-        fk = frame_kwargs(d, gs)
-        adj = compute_adjacency_matrix(gs, **fk)
-        np.testing.assert_array_equal(adj_b[i], adj, err_msg=f"adjacency frame {i}")
-        node, _ = compute_node_features(DEFAULT_NODE_FEATURES, None, gs, **fk)
-        np.testing.assert_allclose(node_b[i], node, rtol=0, atol=4e-15, err_msg=f"nodes frame {i}")
-        edge, _ = compute_edge_features(adj, DEFAULT_EDGE_FEATURES, None, gs, **fk)
-        nz = np.where(adj == 1)
-        np.testing.assert_allclose(
-            np.nan_to_num(edge_b[i][nz]), edge, rtol=0, atol=4e-15, err_msg=f"edges frame {i}"
-        )
+    _stacked_vs_single(_random_frames(np.random.default_rng(11)), gs)
 
 
 def test_batch_no_ball_frame():
@@ -83,11 +82,4 @@ def test_batch_no_ball_frame():
     for d in frames:
         d["team_id"] = np.array(["home"] * 11 + ["away"] * 11, dtype=object)
         d["position_name"] = np.array(["GK"] + ["CB"] * 10 + ["GK"] + ["ST"] * 10, dtype=object)
-    gs = GraphSettings(home_team_id="home", away_team_id="away")
-    stacked = {k: np.stack([d[k] for d in frames]) for k in frames[0]}
-    bk = batch_kwargs(stacked, gs)
-    node_b = compute_node_features_batch(bk, gs)
-    for i, d in enumerate(frames):
-        fk = frame_kwargs(d, gs)
-        node, _ = compute_node_features(DEFAULT_NODE_FEATURES, None, gs, **fk)
-        np.testing.assert_allclose(node_b[i], node, rtol=0, atol=4e-15)
+    _stacked_vs_single(frames, GraphSettings(home_team_id="home", away_team_id="away"))

@@ -218,3 +218,73 @@ def test_prediction_mode_without_labels(tracking, settings):
         SoccerGraphConverter(ds, settings)
     out = SoccerGraphConverter(ds, settings, prediction=True).to_graph_frames().collect()
     assert out[0].label is None
+
+
+def _nodes_by_frame(conv):
+    return {r.frame_id: np.array(r.x) for r in conv.to_graph_frames().collect()}
+
+
+@pytest.mark.parametrize("atype", ["dense_ap", "dense_dp"])
+@pytest.mark.parametrize("custom", [False, True])
+def test_null_ball_owner_frame_is_dropped(tracking, atype, custom):
+    """pad=False drops a frame without a ball owner, as pad=True does, on
+    the default and on a custom feature list alike."""
+    from pyspark.sql import functions as F
+
+    @graph_feature(feature_type="node", is_custom=True)
+    def zeros(**kw):
+        return np.zeros(len(kw["x"]))
+
+    owner = F.col("ball_owning_team_id")
+    ds = tracking.withColumn(
+        "ball_owning_team_id", F.when(F.col("frame_id") == 5, F.lit(None).cast("string")).otherwise(owner)
+    )
+    gs = GraphSettings(home_team_id=HOME, away_team_id=AWAY, adjacency_matrix_type=atype)
+    funcs = list(DEFAULT_NODE_FEATURES) + [zeros] if custom else None
+    out = SoccerGraphConverter(ds, gs, node_feature_funcs=funcs).to_graph_frames().collect()
+    assert len(out) == 27
+    assert 5 not in {r.frame_id for r in out}
+
+
+def test_plugins_receive_one_frame(tracking, settings):
+    """On a stack, a user plugin is still called once per frame with that
+    frame's (N,) kwargs, and the built-in columns beside it equal a
+    default-only run's."""
+
+    @graph_feature(feature_type="node", is_custom=True)
+    def node_probe(**kw):
+        n = len(kw["team_id"])
+        for k in ("x", "v", "team_id", "is_ball", "is_ball_carrier", "id"):
+            assert kw[k].shape == (n,), (k, kw[k].shape)
+        assert kw["position"].shape == (n, 3) and kw["ball_position"].shape == (3,)
+        assert isinstance(kw["possession_team_id"], str)
+        return np.column_stack((kw["x"], kw["y"]))
+
+    @graph_feature(feature_type="edge", is_custom=True)
+    def edge_probe(**kw):
+        n = len(kw["team_id"])
+        assert kw["velocity"].shape == (n, 3)
+        return np.ones((n, n))
+
+    custom = _nodes_by_frame(SoccerGraphConverter(
+        tracking, settings,
+        node_feature_funcs=list(DEFAULT_NODE_FEATURES) + [node_probe],
+        edge_feature_funcs=list(DEFAULT_EDGE_FEATURES) + [edge_probe],
+    ))
+    default = _nodes_by_frame(SoccerGraphConverter(tracking, settings))
+    assert custom.keys() == default.keys()
+    for f, x in default.items():
+        assert custom[f].shape == (x.shape[0], 17)
+        np.testing.assert_allclose(custom[f][:, :15], x, rtol=0, atol=4e-15, err_msg=f"frame {f}")
+
+
+def test_delaunay_node_features_match_default(tracking, settings):
+    gs = GraphSettings(
+        home_team_id=HOME, away_team_id=AWAY,
+        adjacency_matrix_type="delaunay", adjacency_matrix_connect_type="ball",
+    )
+    delaunay = _nodes_by_frame(SoccerGraphConverter(tracking, gs))
+    default = _nodes_by_frame(SoccerGraphConverter(tracking, settings))
+    assert delaunay.keys() == default.keys()
+    for f, x in default.items():
+        np.testing.assert_allclose(delaunay[f], x, rtol=0, atol=4e-15, err_msg=f"frame {f}")

@@ -831,6 +831,7 @@ def one_read_stages(spark, tmp_path_factory):
         synthetic_tracking_pandas,
     )
     from unravelsports_spark.datasets.tracking import TrackingDataset
+    from unravelsports_spark.functions.graph_features import DEFAULT_NODE_FEATURES, graph_feature
     from unravelsports_spark.models.af_graph_converter import AmericanFootballGraphConverter
     from unravelsports_spark.models.efpi import EFPI
     from unravelsports_spark.models.graph_converter import SoccerGraphConverter
@@ -865,6 +866,14 @@ def one_read_stages(spark, tmp_path_factory):
     def settings():
         return DefaultSettings(home_team_id=HOME, away_team_id=AWAY)
 
+    def graphs(adjacency="split_by_team", **kw):
+        gs = GraphSettings(home_team_id=HOME, away_team_id=AWAY, adjacency_matrix_type=adjacency)
+        return SoccerGraphConverter(tracking(), gs, **kw).to_graph_frames()
+
+    @graph_feature(feature_type="node", is_custom=True)
+    def custom_node(**kw):
+        return kw["x"] * 2.0
+
     return {
         **{
             f"efpi_{every}": lambda every=every: EFPI(tracking(), settings()).fit(every=every).output
@@ -874,9 +883,9 @@ def one_read_stages(spark, tmp_path_factory):
             spark.read.parquet(str(root / "wide.parquet")), objects, settings(),
             infer_goalkeepers_flag=True,
         ).data,
-        "graphs_pad": lambda: SoccerGraphConverter(
-            tracking(), GraphSettings(home_team_id=HOME, away_team_id=AWAY), pad=True
-        ).to_graph_frames(),
+        "graphs_pad": lambda: graphs(pad=True),
+        "graphs_custom": lambda: graphs(node_feature_funcs=[*DEFAULT_NODE_FEATURES, custom_node]),
+        "graphs_delaunay": lambda: graphs("delaunay"),
         "af_graphs": lambda: AmericanFootballGraphConverter(
             spark.read.parquet(str(root / "af")), bdb.settings
         ).to_graph_frames(),
@@ -884,18 +893,22 @@ def one_read_stages(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize(
-    "stage", ["efpi_possession", "efpi_period", "efpi_2s", "goalkeepers", "graphs_pad", "af_graphs"]
+    "stage",
+    ["efpi_possession", "efpi_period", "efpi_2s", "goalkeepers", "graphs_pad",
+     "graphs_custom", "graphs_delaunay", "af_graphs"],
 )
 def test_model_stage_reads_its_input_once(one_read_stages, stage):
     """EFPI segmentation, goalkeeper inference, graph padding and the AF
     validity filter are window passes over their input: the executed plan
-    scans the table once, joins nothing and needs no dynamic pruning, and
-    goalkeeper inference runs the smoothing kernel once."""
+    scans the table once, joins nothing and needs no dynamic pruning.
+    Goalkeeper inference runs the smoothing kernel once, and the soccer
+    graph converter runs one grouped-map kernel whatever its feature list
+    or adjacency type."""
     df = one_read_stages[stage]()
     df.write.format("noop").mode("overwrite").save()
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert plan.count("FileScan") == 1, plan
     assert "Join" not in plan, plan
     assert "dynamicpruning" not in plan, plan
-    if stage == "goalkeepers":
+    if stage == "goalkeepers" or stage.startswith("graphs"):
         assert plan.count("FlatMapGroupsInPandas") == 1, plan

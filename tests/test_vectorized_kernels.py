@@ -101,32 +101,41 @@ def test_bucket_cosine_handles_singletons_and_duplicates(spark):
     assert 19 not in got  # the singleton bucket can't produce a pair
 
 
+def _expression_sign_keys(e, planes, n_tables, bits_per_table):
+    """{(vec_id, tbl): bucket} from the literal-array JVM sign-dot expression."""
+    from unravelsports_spark.plans.pipeline import _dot_col
+
+    def lit_dot(plane):
+        return _dot_col(F.col("v"), F.array(*[F.lit(float(x)) for x in plane]))
+
+    keys = {}
+    for t in range(n_tables):
+        bits = [
+            F.when(lit_dot(planes[t * bits_per_table + i]) > 0, F.lit(1 << i)).otherwise(0)
+            for i in range(bits_per_table)
+        ]
+        b = bits[0]
+        for x in bits[1:]:
+            b = b + x
+        for r in e.select("vec_id", b.alias("b")).collect():
+            keys[(r["vec_id"], t)] = r["b"]
+    return keys
+
+
 def test_sign_lsh_keys_match_expression_form(spark):
     """The Arrow sign-dot bucket bits == the literal-array JVM expression."""
-    from unravelsports_spark.plans.pipeline import _dot_col, _sign_lsh_keys
+    from unravelsports_spark.plans.pipeline import _sign_lsh_bev
 
     rows = _rand_vecs(40, 6, seed=11)
     e = spark.createDataFrame(rows, "vec_id long, v array<double>")
     planes = [rows[i][1] for i in range(8)]
     got = {
         (r["vec_id"], r["tbl"]): r["bucket"]
-        for r in _sign_lsh_keys(e, planes, n_tables=2, bits_per_table=4).collect()
+        for r in _sign_lsh_bev(e, planes, n_tables=2, bits_per_table=4).collect()
     }
-    # expression reference
-    def lit_dot(plane):
-        return _dot_col(F.col("v"), F.array(*[F.lit(float(x)) for x in plane]))
-
-    for t in range(2):
-        bits = [
-            F.when(lit_dot(planes[t * 4 + i]) > 0, F.lit(1 << i)).otherwise(0)
-            for i in range(4)
-        ]
-        b = bits[0]
-        for x in bits[1:]:
-            b = b + x
-        ref = {r["vec_id"]: r["b"] for r in e.select("vec_id", b.alias("b")).collect()}
-        for vid, bucket in ref.items():
-            assert got[(vid, t)] == bucket, (vid, t)
+    ref = _expression_sign_keys(e, planes, n_tables=2, bits_per_table=4)
+    for key, bucket in ref.items():
+        assert got[key] == bucket, key
 
 
 def test_bucket_cosine_partitioned_matches_grouped(spark):
@@ -168,17 +177,14 @@ def test_bucket_cosine_partitioned_matches_grouped(spark):
 
 
 def test_sign_lsh_bev_matches_keys_plus_join(spark):
-    """The fused bev kernel == _sign_lsh_keys + (v, n2) attach, bit-exact
-    (same bucket bits, same fold-order self-dot)."""
-    from unravelsports_spark.plans.pipeline import _dot_col, _sign_lsh_bev, _sign_lsh_keys
+    """The fused bev kernel == expression-form keys + (v, n2) attach,
+    bit-exact (same bucket bits, same fold-order self-dot)."""
+    from unravelsports_spark.plans.pipeline import _dot_col, _sign_lsh_bev
 
     rows = _rand_vecs(40, 6, seed=11)
     e = spark.createDataFrame(rows, "vec_id long, v array<double>")
     planes = [rows[i][1] for i in range(8)]
-    keys = {
-        (r["vec_id"], r["tbl"]): r["bucket"]
-        for r in _sign_lsh_keys(e, planes, n_tables=2, bits_per_table=4).collect()
-    }
+    keys = _expression_sign_keys(e, planes, n_tables=2, bits_per_table=4)
     n2 = {
         r["vec_id"]: r["n2"]
         for r in e.select(

@@ -3,8 +3,8 @@
 Parses the public SkillCorner open-data format (github.com/SkillCorner/opendata;
 the same files the reference loads through ``kloppy.skillcorner`` in
 tests/test_soccer.py:43,99-110 and unravel/soccer/dataset/kloppy_polars.py:878)
-straight into the canonical long table, then runs the standard kinematics
-pipeline shared with the Sportec path.
+straight into the canonical long table, then runs the kinematics stage
+shared with the other loaders (`tracking.add_kinematics`).
 
 Format (public):
 
@@ -41,17 +41,10 @@ import pandas as pd
 
 from pyspark.sql import SparkSession
 
-from ..operators.kinematics import (
-    DEFAULT_BALL_SMOOTHING,
-    DEFAULT_PLAYER_SMOOTHING,
-    add_acceleration,
-    add_velocity,
-    apply_speed_acceleration_filters,
-    finalize_kinematics,
-)
-from ..operators.possession import infer_ball_ownership
+from ..operators.kinematics import DEFAULT_BALL_SMOOTHING, DEFAULT_PLAYER_SMOOTHING
 from ..schema import BALL, TRACKING_SCHEMA
 from ..settings import DefaultSettings
+from .tracking import add_kinematics
 
 #: SkillCorner role names → canonical GK marker (only GK matters downstream).
 GK_ROLES = {"Goalkeeper", "GK"}
@@ -218,16 +211,5 @@ def load_skillcorner(
         max_player_acceleration=max_player_acceleration,
         max_ball_acceleration=max_ball_acceleration,
     )
-    df = spark.createDataFrame(pdf[base_cols])
-    df = add_velocity(df, player_smoothing, ball_smoothing)
-    df = add_acceleration(df)
-    df = apply_speed_acceleration_filters(
-        df,
-        max_ball_speed=settings.max_ball_speed,
-        max_player_speed=settings.max_player_speed,
-        max_ball_acceleration=settings.max_ball_acceleration,
-        max_player_acceleration=settings.max_player_acceleration,
-    )
-    df = finalize_kinematics(df)
-    df = infer_ball_ownership(df, settings.ball_carrier_threshold)
+    df = add_kinematics(spark.createDataFrame(pdf[base_cols]), settings, player_smoothing, ball_smoothing)
     return df, settings

@@ -2,9 +2,9 @@
 
 Parses the public DFL PutDataRequest format (one FrameSet per object per
 game section; ball FrameSet carries BallPossession/BallStatus) straight into
-the canonical long table, then runs the standard kinematics pipeline. The
-reference reaches the same table through kloppy
-(kloppy_polars.py:813-921 with sportec.load_tracking); golden-parity of the
+the canonical long table, then runs the shared kinematics stage
+(`tracking.add_kinematics`). The reference reaches the same table through
+kloppy (kloppy_polars.py:813-921 with sportec.load_tracking); golden-parity of the
 downstream Pressing Intensity scalar is asserted in
 tests/test_sportec_golden.py against the reference's published value.
 
@@ -22,17 +22,10 @@ import pandas as pd
 
 from pyspark.sql import SparkSession
 
-from ..operators.kinematics import (
-    DEFAULT_BALL_SMOOTHING,
-    DEFAULT_PLAYER_SMOOTHING,
-    add_acceleration,
-    add_velocity,
-    apply_speed_acceleration_filters,
-    finalize_kinematics,
-)
-from ..operators.possession import infer_ball_ownership
+from ..operators.kinematics import DEFAULT_BALL_SMOOTHING, DEFAULT_PLAYER_SMOOTHING
 from ..schema import BALL, Column, TRACKING_SCHEMA
 from ..settings import DefaultSettings
+from .tracking import add_kinematics
 
 SECTION_PERIOD = {"firstHalf": 1, "secondHalf": 2, "firstHalfExtra": 3, "secondHalfExtra": 4}
 #: DFL position codes → canonical goalkeeper label (only GK matters downstream)
@@ -149,16 +142,5 @@ def load_sportec(
         max_player_acceleration=max_player_acceleration,
         max_ball_acceleration=max_ball_acceleration,
     )
-    df = spark.createDataFrame(pdf[base_cols])
-    df = add_velocity(df, player_smoothing, ball_smoothing)
-    df = add_acceleration(df)
-    df = apply_speed_acceleration_filters(
-        df,
-        max_ball_speed=settings.max_ball_speed,
-        max_player_speed=settings.max_player_speed,
-        max_ball_acceleration=settings.max_ball_acceleration,
-        max_player_acceleration=settings.max_player_acceleration,
-    )
-    df = finalize_kinematics(df)
-    df = infer_ball_ownership(df, settings.ball_carrier_threshold)
+    df = add_kinematics(spark.createDataFrame(pdf[base_cols]), settings, player_smoothing, ball_smoothing)
     return df, settings

@@ -47,6 +47,28 @@ from ..schema import Column, Group
 from ..settings import DefaultSettings
 
 
+def add_kinematics(
+    df: DataFrame,
+    settings: DefaultSettings,
+    player_smoothing: Optional[dict],
+    ball_smoothing: Optional[dict],
+) -> DataFrame:
+    """The kinematics stage every loader runs on a canonical long table:
+    velocity → acceleration → the speed/acceleration caps of ``settings`` →
+    cleanup → ball possession and carrier within its carrier threshold."""
+    df = add_velocity(df, player_smoothing, ball_smoothing)
+    df = add_acceleration(df)
+    df = apply_speed_acceleration_filters(
+        df,
+        max_ball_speed=settings.max_ball_speed,
+        max_player_speed=settings.max_player_speed,
+        max_ball_acceleration=settings.max_ball_acceleration,
+        max_player_acceleration=settings.max_player_acceleration,
+    )
+    df = finalize_kinematics(df)
+    return infer_ball_ownership(df, settings.ball_carrier_threshold)
+
+
 @dataclass
 class TrackingDataset:
     data: DataFrame
@@ -65,17 +87,7 @@ class TrackingDataset:
         infer_goalkeepers_flag: bool = False,
     ) -> "TrackingDataset":
         df = melt_wide_tracking(wide_df, objects, game_id)
-        df = add_velocity(df, player_smoothing, ball_smoothing)
-        df = add_acceleration(df)
-        df = apply_speed_acceleration_filters(
-            df,
-            max_ball_speed=settings.max_ball_speed,
-            max_player_speed=settings.max_player_speed,
-            max_ball_acceleration=settings.max_ball_acceleration,
-            max_player_acceleration=settings.max_player_acceleration,
-        )
-        df = finalize_kinematics(df)
-        df = infer_ball_ownership(df, settings.ball_carrier_threshold)
+        df = add_kinematics(df, settings, player_smoothing, ball_smoothing)
         if orient_ball_owning:
             df = convert_orientation_to_ball_owning(df, settings.home_team_id)
             settings.orientation = "BALL_OWNING_TEAM"

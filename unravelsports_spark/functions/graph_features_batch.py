@@ -1,192 +1,36 @@
-"""Batched (vectorized-over-frames) fast path for the DEFAULT graph kernel.
+"""Former names of the stacked graph kernel, kept only because
+`perfbench/layers.py` imports them; delete at the benchmark's next change.
 
-The plugin contract (graph_features.py) is per-frame: each feature function
-receives one frame's arrays. That is the extensibility surface — but for the
-default feature set the per-frame NumPy dispatch overhead dominates at ~1.4ms
-per 23-node frame. This module computes the same 15 node columns, 6 edge
-channels, and dense adjacency variants for a whole stack of same-size frames
-at once ((B, N) arrays), cutting per-frame CPU several-fold. Bit-identical to
-the per-frame path (same formulas, same op order — asserted by
-tests/test_graph_batch_parity.py), so the grouped kernel picks it
-automatically whenever the caller uses the default features and a dense
-adjacency type; custom plugins and delaunay fall back to the per-frame path.
-
-Reference math: unravel/utils/features/builtin.py:16-173,
-soccer/graphs/features/adjacency_matrix_pl.py:9-48.
+Each is a call into `graph_features.py`, whose kernels take a stack of
+same-size frames as (B, N) arrays directly.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from .normalize import (
-    normalize_between,
-    normalize_distance,
-    normalize_sincos,
-    unit_vectors,
+from .graph_features import (
+    DEFAULT_EDGE_FEATURES,
+    DEFAULT_NODE_FEATURES,
+    compute_adjacency_matrix,
+    compute_node_features,
+    frame_kwargs,
 )
-
-BATCHABLE_ADJACENCY = ("dense", "dense_ap", "dense_dp", "split_by_team")
 
 
 def batch_kwargs(d: dict, settings) -> dict:
-    """Stacked (B, N) analog of frame_kwargs (graph_features.py:350-373)."""
-    bk = dict(d)  # x, y, z, v, vx, vy, vz, team_id, is_ball_carrier, ... as (B, N)
-    bk["ball_id"] = settings.ball_id
-    bk["possession_team_id"] = d["ball_owning_team_id"][:, 0]  # constant per frame
-    bk["is_gk"] = d["position_name"] == settings.goalkeeper_id
-    bk["position"] = np.nan_to_num(
-        np.stack((d["x"], d["y"], d["z"]), axis=-1), nan=1e-10, posinf=1e3, neginf=-1e3
-    )
-    bk["velocity"] = np.nan_to_num(
-        np.stack((d["vx"], d["vy"], d["vz"]), axis=-1), nan=1e-10, posinf=1e3, neginf=-1e3
-    )
-    is_ball = d["team_id"] == settings.ball_id  # (B, N)
-    B = is_ball.shape[0]
-    has_ball = is_ball.any(axis=1)
-    first_ball = np.where(has_ball, is_ball.argmax(axis=1), 0)
-    ball_pos = bk["position"][np.arange(B), first_ball]  # (B, 3)
-    ball_pos[~has_ball] = np.array([0.0, 0.0, 0.0])
-    bk["is_ball"] = is_ball
-    bk["has_ball"] = has_ball
-    bk["ball_idx"] = first_ball
-    bk["ball_position"] = ball_pos
-    return bk
-
-
-def _per_class_clip(values, is_ball, ball_max, player_max):
-    """clip(values / per-class max, 0, 1) with is_ball broadcast on the
-    row-class axis (matches normalize.per_class_normalized semantics)."""
-    maxima = np.where(is_ball, ball_max, player_max)
-    while maxima.ndim < values.ndim:
-        maxima = maxima[..., None]
-    return np.clip(values / maxima, 0.0, 1.0)
-
-
-def compute_node_features_batch(bk: dict, settings) -> np.ndarray:
-    """(B, N, 15) node features, columns ordered exactly as the per-frame
-    driver over DEFAULT_NODE_FEATURES."""
-    dims = settings.pitch_dimensions
-    pos = bk["position"]  # (B, N, 3)
-    vel = bk["velocity"]
-    team = bk["team_id"]
-    is_ball = bk["is_ball"]
-
-    x_n = normalize_between(dims.x_dim.min, dims.x_dim.max, bk["x"])
-    y_n = normalize_between(dims.y_dim.min, dims.y_dim.max, bk["y"])
-    speeds = _per_class_clip(
-        np.asarray(bk["v"], dtype=float), is_ball, settings.max_ball_speed, settings.max_player_speed
-    )
-
-    uv = unit_vectors(vel)
-    ang = (np.arctan2(uv[..., 1], uv[..., 0]) + np.pi) / (2.0 * np.pi)
-    vel_sin = normalize_sincos(np.sin(ang))
-    vel_cos = normalize_sincos(np.cos(ang))
-
-    goal = np.asarray(settings.goal_mouth_position, dtype=float)
-    d_goal = normalize_distance(
-        np.linalg.norm(pos - goal, axis=-1), settings.max_goal_distance
-    )
-    d_ball = normalize_distance(
-        np.linalg.norm(pos - bk["ball_position"][:, None, :], axis=-1), settings.max_distance
-    )
-
-    is_pos_team = np.where(
-        team == bk["possession_team_id"][:, None], 1, settings.defending_team_node_value
-    )
-    gk = np.where(bk["is_gk"], 1, 0.1)
-    ball_col = np.where(is_ball, 1, 0.1)
-
-    gvec = goal - pos
-    gang = np.arctan2(gvec[..., 1], gvec[..., 0])
-    g_sin = normalize_sincos(np.sin(gang))
-    g_cos = normalize_sincos(np.cos(gang))
-    bvec = bk["ball_position"][:, None, :] - pos
-    bang = np.arctan2(bvec[..., 1], bvec[..., 0])
-    b_sin = normalize_sincos(np.sin(bang))
-    b_cos = normalize_sincos(np.cos(bang))
-
-    carrier = np.where(np.asarray(bk["is_ball_carrier"], dtype=bool), 1, 0.1)
-
-    stacked = np.stack(
-        (
-            x_n, y_n, speeds, vel_sin, vel_cos, d_goal, d_ball,
-            is_pos_team, gk, ball_col, g_sin, g_cos, b_sin, b_cos, carrier,
-        ),
-        axis=-1,
-    )
-    return np.nan_to_num(stacked)
-
-
-def compute_edge_channels_batch(bk: dict, settings) -> np.ndarray:
-    """(B, N, N, 6) edge channels ordered as the per-frame driver over
-    DEFAULT_EDGE_FEATURES: distance, speed diff, angle cos, angle sin,
-    velocity-angle cos, velocity-angle sin."""
-    pos = bk["position"]
-    pos2 = pos[..., :2]
-    vel = bk["velocity"]
-    v = np.asarray(bk["v"], dtype=float)
-    is_ball = bk["is_ball"]
-
-    dist = normalize_distance(
-        np.linalg.norm(pos[:, :, None, :] - pos[:, None, :, :], axis=-1),
-        settings.max_distance,
-    )
-
-    vdiff = np.nan_to_num(v[:, None, :] - v[:, :, None])
-    speed_diff = _per_class_clip(
-        vdiff, is_ball, settings.max_ball_speed, settings.max_player_speed
-    ) * np.sign(vdiff)
-
-    pvec = pos2[:, :, None, :] - pos2[:, None, :, :]  # (B, N, N, 2)
-    ang = np.nan_to_num(np.arctan2(pvec[..., 1], pvec[..., 0]))
-    a_cos = normalize_sincos(np.nan_to_num(np.cos(ang)))
-    a_sin = normalize_sincos(np.nan_to_num(np.sin(ang)))
-
-    vvec = vel[:, None, :, :2] - vel[:, :, None, :2]  # (B, N, N, 2)
-    pu = unit_vectors(pvec)
-    vu = unit_vectors(vvec)
-    dots = np.clip(np.sum(pu * vu, axis=-1), -1.0, 1.0)
-    vang = np.arccos(dots)
-    v_cos = normalize_sincos(np.nan_to_num(np.cos(vang)))
-    v_sin = normalize_sincos(np.nan_to_num(np.sin(vang)))
-
-    return np.stack((dist, speed_diff, a_cos, a_sin, v_cos, v_sin), axis=-1)
+    return frame_kwargs(d, settings)
 
 
 def compute_adjacency_batch(bk: dict, settings) -> np.ndarray:
-    """(B, N, N) adjacency for the dense types + ball connect (the per-frame
-    semantics of graph_features.compute_adjacency_matrix, batched)."""
-    team = bk["team_id"]
-    B, N = team.shape
-    atype = settings.adjacency_matrix_type
-    bot = bk["possession_team_id"][:, None]
-    is_ball = bk["is_ball"]
+    return compute_adjacency_matrix(settings, **bk)
 
-    if atype == "dense":
-        adj = np.ones((B, N, N), dtype=np.int32)
-    elif atype == "dense_ap":
-        is_att = team == bot
-        adj = (is_att[:, :, None] & is_att[:, None, :]).astype(np.int32)
-    elif atype == "dense_dp":
-        is_def = (~is_ball) & (team != bot)
-        adj = (is_def[:, :, None] & is_def[:, None, :]).astype(np.int32)
-    elif atype == "split_by_team":
-        adj = (team[:, :, None] == team[:, None, :]).astype(np.int32)
-    else:
-        raise NotImplementedError(f"adjacency type {atype!r} has no batched path")
 
-    ctype = settings.adjacency_matrix_connect_type
-    if ctype and ctype != "no_connection":
-        ball_mask = is_ball[:, :, None] | is_ball[:, None, :]
-        if ctype == "ball":
-            adj = np.where(ball_mask, 1, adj)
-        elif ctype == "ball_carrier":
-            carriers = np.asarray(bk["is_ball_carrier"], dtype=bool)
-            for b in range(B):
-                rows = np.where(carriers[b])[0]
-                if len(rows):
-                    bc = rows[0]
-                    adj[b, bc, ball_mask[b, bc, :]] = 1
-                    adj[b, ball_mask[b, :, bc], bc] = 1
-    return adj
+def compute_node_features_batch(bk: dict, settings) -> np.ndarray:
+    return compute_node_features(DEFAULT_NODE_FEATURES, None, settings, **bk)[0]
+
+
+def compute_edge_channels_batch(bk: dict, settings) -> np.ndarray:
+    """(B, N, N, 6): the default edge channels at every cell."""
+    values = [f(**bk, settings=settings) for f in DEFAULT_EDGE_FEATURES]
+    return np.stack([m for v in values for m in (v if isinstance(v, tuple) else (v,))], axis=-1)

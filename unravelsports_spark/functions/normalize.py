@@ -56,12 +56,13 @@ def angle_between_rows(a: np.ndarray, b: np.ndarray) -> np.ndarray:
 def per_class_normalized(values, is_ball, ball_max, player_max, clip_lo=0.0, clip_hi=1.0):
     """Normalize per object class (ball vs player): the reference's
     normalize_speeds / normalize_accelerations_nfl pattern. `is_ball` is a
-    boolean (N,) mask broadcast against `values` of shape (N,) or (N, N)
-    (row-wise class assignment, matching features/utils.py:179-186)."""
+    boolean (..., N) mask broadcast against `values` of shape (..., N) or
+    (..., N, N) (row-wise class assignment, matching
+    features/utils.py:179-186)."""
     values = np.asarray(values, dtype=float)
     maxima = np.where(np.asarray(is_ball), ball_max, player_max)
-    if values.ndim == 2:
-        maxima = maxima[:, None]
+    while maxima.ndim < values.ndim:
+        maxima = maxima[..., None]
     return np.clip(values / maxima, clip_lo, clip_hi)
 
 

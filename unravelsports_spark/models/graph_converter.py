@@ -8,10 +8,11 @@ unravel/utils/objects/default_graph_converter.py:315-393 Spark-first:
 - sample and padding are native DataFrame ops (modulo filter P5, window +
   sequence/explode row synthesis O12); incomplete frames drop in the kernel;
 - the per-frame kernel runs through models/frames.py over (game_id,
-  period_id, chunk of `frames_per_batch` frames) groups; each frame's
-  matrices are pure NumPy (functions/graph_features.py, golden-tested), and
-  default features are vectorized over same-size frames
-  (functions/graph_features_batch.py);
+  period_id, chunk of `frames_per_batch` frames) groups. Inside a group the
+  frames are stacked by node count and each stack goes once through the
+  pure-NumPy kernels of functions/graph_features.py (golden-tested): the
+  built-in features and dense adjacencies run over the whole stack, user
+  plugins and the Delaunay triangulation once per frame;
 - output is a DataFrame of nested arrays + shape columns, written/read as
   parquet (the reference's gzip-pickle sink S4 ↔ our parquet graph sink).
 """
@@ -22,6 +23,7 @@ from dataclasses import dataclass, field
 from typing import Callable, List, Optional
 
 import numpy as np
+import pandas as pd
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -36,13 +38,6 @@ from ..functions.graph_features import (
     compute_node_features,
     frame_kwargs,
     verify_feature_funcs,
-)
-from ..functions.graph_features_batch import (
-    BATCHABLE_ADJACENCY,
-    batch_kwargs,
-    compute_adjacency_batch,
-    compute_edge_channels_batch,
-    compute_node_features_batch,
 )
 from ..schema import BALL, Column, Group, any_null
 from ..settings import GraphSettings
@@ -186,9 +181,9 @@ class SoccerGraphConverter:
     def to_graph_frames(self) -> DataFrame:
         df = self._sample(self.dataset)
         # pad=False drops incomplete frames (not exactly 2 teams + ball,
-        # reference graph_converter.py:224-238) INSIDE the kernel, a
-        # per-group check that costs no shuffle. pad=True needs the
-        # relational padding stage.
+        # reference graph_converter.py:224-238, or no ball owner) INSIDE the
+        # kernel, a per-group check that costs no shuffle. pad=True needs
+        # the relational padding stage, whose owning-team count drops them.
         drop_incomplete = not self.pad
         if self.pad:
             df = self._apply_padding(df)
@@ -217,44 +212,13 @@ class SoccerGraphConverter:
         graph_id_col, label_col, prediction = self.graph_id_col, self.label_col, self.prediction
         random_seed = self.random_seed
 
-        # Batched fast path: default features + dense adjacency → vectorize
-        # over same-size frames (graph_features_batch.py; several-fold less
-        # per-frame CPU). Custom plugins / feature opts / delaunay keep the
-        # per-frame plugin contract.
-        use_batch = (
-            node_funcs == list(DEFAULT_NODE_FEATURES)
-            and edge_funcs == list(DEFAULT_EDGE_FEATURES)
-            and not opts
-            and settings.adjacency_matrix_type in BATCHABLE_ADJACENCY
-        )
-
-        def compute_batched(frames: list[dict]) -> list[tuple]:
-            by_n: dict[int, list[int]] = {}
-            for i, d in enumerate(frames):
-                by_n.setdefault(len(d["team_id"]), []).append(i)
-            results: list[tuple] = [None] * len(frames)
-            stack_keys = [
-                "x", "y", "z", "v", "vx", "vy", "vz",
-                "team_id", "position_name", "ball_owning_team_id", "is_ball_carrier",
-            ]
-            for idxs in by_n.values():
-                stacked = {
-                    k: np.stack([frames[i][k] for i in idxs]) for k in stack_keys
-                }
-                bk = batch_kwargs(stacked, settings)
-                adj_b = compute_adjacency_batch(bk, settings)
-                node_b = compute_node_features_batch(bk, settings)
-                edge_b = compute_edge_channels_batch(bk, settings)
-                for j, i in enumerate(idxs):
-                    adj = adj_b[j]
-                    nz = np.where(adj == 1)
-                    results[i] = (adj, np.nan_to_num(edge_b[j][nz]), node_b[j])
-            return results
-
         def graphs(runs):
             frames = []
             for d in runs:
-                if drop_incomplete and len(np.unique(d["team_id"])) != 3:
+                # a frame whose owner is unknown has no attacking side
+                if drop_incomplete and (
+                    len(np.unique(d["team_id"])) != 3 or pd.isna(d["ball_owning_team_id"]).any()
+                ):
                     continue
                 if random_seed is not False and random_seed is not None:
                     n = len(d["team_id"])
@@ -267,16 +231,20 @@ class SoccerGraphConverter:
                     raise ValueError("label not constant within a frame group")
                 frames.append(d)
 
-            if use_batch:
-                results = compute_batched(frames)
-            else:
-                results = []
-                for d in frames:
-                    fk = frame_kwargs(d, settings)
-                    adj = compute_adjacency_matrix(settings, **fk)
-                    edge, _ = compute_edge_features(adj, edge_funcs, opts, settings, **fk)
-                    node, _ = compute_node_features(node_funcs, opts, settings, **fk)
-                    results.append((adj, edge, node))
+            # the kernels run once per stack of same-size frames
+            by_n: dict[int, list[int]] = {}
+            for i, d in enumerate(frames):
+                by_n.setdefault(len(d["team_id"]), []).append(i)
+            results: list[tuple] = [None] * len(frames)
+            for idxs in by_n.values():
+                stack = {k: np.stack([frames[i][k] for i in idxs]) for k in frames[idxs[0]]}
+                fk = frame_kwargs(stack, settings)
+                adj = compute_adjacency_matrix(settings, **fk)
+                edge, _ = compute_edge_features(adj, edge_funcs, opts, settings, **fk)
+                node, _ = compute_node_features(node_funcs, opts, settings, **fk)
+                edges = np.split(edge, np.cumsum((adj == 1).sum(axis=(1, 2)))[:-1])
+                for i, a, e, x in zip(idxs, adj, edges, node):
+                    results[i] = (a, e, x)
 
             for d, (adj, edge, node) in zip(frames, results):
                 if global_cols:

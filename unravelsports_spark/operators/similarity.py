@@ -85,55 +85,12 @@ def with_nearest_centroid(
     )
 
 
-def _sign_lsh_keys(e, planes, n_tables, bits_per_table, v_col="v", id_col="vec_id"):
-    """(vec_id, tbl, bucket) sign-LSH keys for ``n_tables`` tables of
-    ``bits_per_table`` hyperplanes each, vectorized in Arrow batches.
-
-    ``planes[t * bits_per_table + i]`` is hyperplane i of table t (a plain
-    float list — O(model), collected once by the caller). Each sign bit is
-    ``dot(v, plane) > 0`` with the dot accumulated one dimension at a time
-    in ascending order — the identical IEEE add sequence as the
-    ``_dot_col`` fold the oracle mirrors, so boundary signs cannot flip.
-    Replaces a 16-literal-array HOF projection whose lambda interpreted
-    ~2M steps per pass."""
-    import numpy as np
-    import pandas as pd
-
-    P = [np.asarray(p, dtype=float) for p in planes]
-
-    def keys(batches):
-        for pdf in batches:
-            n = len(pdf)
-            if n == 0:
-                continue
-            V = np.stack(pdf[v_col].to_numpy())
-            frames = []
-            for t in range(n_tables):
-                bucket = np.zeros(n, dtype=np.int64)
-                for i in range(bits_per_table):
-                    p = P[t * bits_per_table + i]
-                    acc = np.zeros(n)
-                    for d in range(V.shape[1]):
-                        acc += V[:, d] * p[d]
-                    bucket |= (acc > 0).astype(np.int64) << i
-                frames.append(
-                    pd.DataFrame(
-                        {"vec_id": pdf[id_col], "tbl": t, "bucket": bucket}
-                    )
-                )
-            yield pd.concat(frames)
-
-    return e.select(id_col, v_col).mapInPandas(
-        keys, "vec_id bigint, tbl bigint, bucket bigint"
-    )
-
-
 def _sign_lsh_bev(e, planes, n_tables, bits_per_table, v_col="v", id_col="vec_id"):
     """Fused sign-LSH bucketing: ONE Arrow pass over the corpus emitting
     ledger-format rows ``(vec_id, tbl, bucket, v, n2)`` — the direct input
     of :func:`_bucket_cosine_removed`.
 
-    Fuses what used to be two passes plus a join (``_sign_lsh_keys`` then
+    Fuses what used to be two passes plus a join (a keys-only pass, then
     ``keys.join(ev, vec_id)`` to re-attach the vector and its self-dot):
     the vector is already in hand while the sign bits are computed, so the
     kernel emits it alongside the keys and the join disappears entirely.

@@ -379,8 +379,6 @@ from ..operators.similarity import (  # noqa: F401  (re-exports: plans and tests
     _allpairs_cosine_removed,
     _bucket_cosine_removed,
     _sign_lsh_bev,
-    _sign_lsh_keys,
-    auto_bits_per_table,
 )
 
 
