@@ -54,8 +54,8 @@ _TOUCHED = dict.fromkeys(
         "s_ann_pq", "s_kmeans_fit", "s_ann_ivfpq", "s_ann_ivfpq_residual",
         "s_ann_recall", "m_savgol_cells",
         # write_warc without the CDX index option; read_warc calls the shared
-        # shard decoder directly
-        "o19_warc_roundtrip",
+        # shard decoder directly; read_tfrecords lost its batch-size option
+        "o19_warc_roundtrip", "o20_tfrecord_roundtrip",
     ),
     15,
 )

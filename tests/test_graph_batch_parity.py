@@ -83,3 +83,30 @@ def test_batch_no_ball_frame():
         d["team_id"] = np.array(["home"] * 11 + ["away"] * 11, dtype=object)
         d["position_name"] = np.array(["GK"] + ["CB"] * 10 + ["GK"] + ["ST"] * 10, dtype=object)
     _stacked_vs_single(frames, GraphSettings(home_team_id="home", away_team_id="away"))
+
+
+def test_graph_stacks_bounded_memory_on_large_groups():
+    """The converter's stack function on 1,200 same-size frames, as one
+    (game, period, chunk) group can hold: every frame equals its own
+    frame-at-a-time call, and peak NumPy allocation stays bounded (one
+    unsliced stack of 1,200 23-node frames peaks near 82 MiB, and a full
+    20,000-frame chunk near 1.4 GiB)."""
+    import tracemalloc
+
+    from unravelsports_spark.models.graph_converter import graph_stacks
+
+    gs = GraphSettings(home_team_id="home", away_team_id="away")
+    frames = _random_frames(np.random.default_rng(3), n_frames=1200)
+    args = (DEFAULT_NODE_FEATURES, DEFAULT_EDGE_FEATURES, None, gs)
+    tracemalloc.start()
+    try:
+        stacked = graph_stacks(frames, *args)
+        _, peak = tracemalloc.get_traced_memory()
+    finally:
+        tracemalloc.stop()
+    assert peak < 48 << 20, f"peak {peak / 2**20:.1f} MiB"
+    for i, (d, got) in enumerate(zip(frames, stacked)):
+        (want,) = graph_stacks([d], *args)
+        np.testing.assert_array_equal(got[0], want[0], err_msg=f"adjacency frame {i}")
+        for k, name in ((1, "edges"), (2, "nodes")):
+            np.testing.assert_allclose(got[k], want[k], rtol=0, atol=4e-15, err_msg=f"{name} frame {i}")

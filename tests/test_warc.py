@@ -3,12 +3,11 @@
 live in plans/corpus9.py (the corpus7/corpus8 registration discipline);
 this suite imports them, so twin and oracle cannot drift."""
 
-from pyspark.sql import functions as F
-
 from unravelsports_spark.plans.corpus9 import (
     WARC_ROUNDTRIP_SQL,
     warc_roundtrip_frame as _warc_roundtrip_query,
 )
+from unravelsports_spark.sources.warc import iter_warc_records
 
 from .conftest import SF_CORRECT
 
@@ -27,15 +26,17 @@ def _records(n=3, payload=b"hello world"):
     ]
 
 
+def _decode(blob: bytes) -> list:
+    """The rows read_warc emits for one shard, before the shard column."""
+    return list(iter_warc_records(blob))
+
+
 def test_codec_roundtrip_plain_and_gzip():
-    from unravelsports_spark.sources.warc import (
-        decode_warc_records,
-        encode_warc_records,
-    )
+    from unravelsports_spark.sources.warc import encode_warc_records
 
     recs = _records()
     for gz in (False, True):
-        back = decode_warc_records(encode_warc_records(recs, gzip_records=gz))
+        back = _decode(encode_warc_records(recs, gzip_records=gz))
         assert len(back) == 3 and all(r["_corrupt_record"] is None for r in back)
         for want, got in zip(recs, back):
             for k in ("rec_type", "record_id", "warc_date", "target_uri",
@@ -44,35 +45,34 @@ def test_codec_roundtrip_plain_and_gzip():
     # binary payloads (CRLF bytes, fake WARC magic INSIDE a payload) must
     # survive verbatim — Content-Length framing, not delimiter scanning
     tricky = _records(1, payload=b"\r\n\r\nWARC/1.0\r\nnot a header\x00\xff")
-    back = decode_warc_records(encode_warc_records(tricky))
+    back = _decode(encode_warc_records(tricky))
     assert len(back) == 1 and back[0]["payload"] == tricky[0]["payload"]
 
 
 def test_codec_quarantine_and_resync():
     """A malformed span becomes ONE quarantine row and parsing RESYNCS at
     the next magic; truncation at the tail quarantines the tail."""
-    from unravelsports_spark.sources.warc import (
-        decode_warc_records,
-        encode_warc_records,
-    )
+    from unravelsports_spark.sources.warc import encode_warc_records
 
     a, b = _records(2)[0], _records(2)[1]
     good_a = encode_warc_records([a])
     good_b = encode_warc_records([b])
     blob = good_a + b"this is garbage, not a record\r\n" + good_b
-    rows = decode_warc_records(blob)
+    rows = _decode(blob)
     assert [r["_corrupt_record"] is not None for r in rows] == [False, True, False]
     assert rows[0]["payload"] == a["payload"] and rows[2]["payload"] == b["payload"]
     # truncated final record → clean first + quarantined tail
-    rows = decode_warc_records(good_a + good_b[: len(good_b) // 2])
+    rows = _decode(good_a + good_b[: len(good_b) // 2])
     assert len(rows) == 2
     assert rows[0]["_corrupt_record"] is None
     assert rows[1]["_corrupt_record"] is not None
     # truncated gzip member likewise
     gz = encode_warc_records([a], gzip_records=True)
     gz2 = encode_warc_records([b], gzip_records=True)
-    rows = decode_warc_records(gz + gz2[: len(gz2) // 2])
+    rows = _decode(gz + gz2[: len(gz2) // 2])
     assert len(rows) == 2 and rows[1]["_corrupt_record"] is not None
+    # an empty shard, or one of pure CRLF padding, yields no rows at all
+    assert _decode(b"") == [] and _decode(b"\r\n\r\n") == []
 
 
 def test_codec_hostile_and_span_contracts():
@@ -84,10 +84,7 @@ def test_codec_hostile_and_span_contracts():
     the shard; gzip members are mtime-0 (byte-reproducible exports)."""
     import gzip as _gzip
 
-    from unravelsports_spark.sources.warc import (
-        decode_warc_records,
-        encode_warc_records,
-    )
+    from unravelsports_spark.sources.warc import encode_warc_records
 
     a, b = _records(2)
     good_a, good_b = encode_warc_records([a]), encode_warc_records([b])
@@ -96,18 +93,18 @@ def test_codec_hostile_and_span_contracts():
         b"WARC/1.0\r\nWARC-Type: response\r\nContent-Length: -999999\r\n\r\n"
         b"payload\r\n\r\n"
     )
-    rows = decode_warc_records(bad + good_a)
+    rows = _decode(bad + good_a)
     clean = [r for r in rows if r["_corrupt_record"] is None]
     assert len(clean) == 1 and clean[0]["payload"] == a["payload"]
     # fake magic INSIDE a garbage span: still one coalesced quarantine row
-    rows = decode_warc_records(
+    rows = _decode(
         good_a + b"junk WARC/1.0\r\nno length here junk" + good_b
     )
     assert [r["_corrupt_record"] is not None for r in rows] == [False, True, False]
     # gzip mid-stream garbage: resync at the next member magic
     gz_a = encode_warc_records([a], gzip_records=True)
     gz_b = encode_warc_records([b], gzip_records=True)
-    rows = decode_warc_records(gz_a + b"garbage bytes" + gz_b)
+    rows = _decode(gz_a + b"garbage bytes" + gz_b)
     assert [r["_corrupt_record"] is not None for r in rows] == [False, True, False]
     assert rows[2]["payload"] == b["payload"]
     # reproducibility: two encodes of the same records are byte-identical
@@ -116,31 +113,31 @@ def test_codec_hostile_and_span_contracts():
     # r12 pass 4 pins:
     # #3 — leading garbage on a GZIP shard quarantines the prefix and
     # still recovers every member (byte-0 dispatch used to eat the shard)
-    rows = decode_warc_records(b"leading junk" + gz_a + gz_b)
+    rows = _decode(b"leading junk" + gz_a + gz_b)
     assert [r["_corrupt_record"] is not None for r in rows] == [True, False, False]
     assert rows[1]["payload"] == a["payload"] and rows[2]["payload"] == b["payload"]
     # #4 — CRLF in a header value is folded, never smuggled as framing
     evil = dict(a, target_uri="http://x/\r\nContent-Length: 0\r\n\r\nfake")
-    back = decode_warc_records(encode_warc_records([evil]))
+    back = _decode(encode_warc_records([evil]))
     assert len(back) == 1 and back[0]["_corrupt_record"] is None
     assert back[0]["payload"] == a["payload"]
     assert "\r" not in back[0]["target_uri"]
     # #7 — empty-string target_uri round-trips as '', None as NULL
     for uri in ("", None):
         rec = dict(a, target_uri=uri)
-        back = decode_warc_records(encode_warc_records([rec]))
+        back = _decode(encode_warc_records([rec]))
         assert back[0]["target_uri"] == uri
     # r12 pass 5 pins:
     # #3 — a gzip shard whose FIRST member is corrupt (and contains a
     # fake plain magic) still recovers the later intact members
-    rows = decode_warc_records(
+    rows = _decode(
         gz_a[: len(gz_a) // 2] + b" WARC/1.0 fake " + gz_b
     )
     assert rows[-1]["_corrupt_record"] is None
     assert rows[-1]["payload"] == b["payload"]
     # #4 — CRLF padding before the first gzip member is NOT quarantined
     # (the plain path's inter-record-padding exemption, both layouts)
-    rows = decode_warc_records(b"\r\n" + gz_a)
+    rows = _decode(b"\r\n" + gz_a)
     assert [r["_corrupt_record"] for r in rows] == [None]
     # #5 — the PUBLIC codec normalizes explicit None header fields to the
     # absent-key defaults (never the literal 'None')
@@ -149,7 +146,7 @@ def test_codec_hostile_and_span_contracts():
           "content_type": None, "payload": b"x"}]
     )
     assert b"None" not in blob
-    back = decode_warc_records(blob)
+    back = _decode(blob)
     assert back[0]["rec_type"] == "response"
     assert back[0]["content_type"] == "text/plain"
     # r12 pass 6 pins:
@@ -158,21 +155,21 @@ def test_codec_hostile_and_span_contracts():
     # via the plain path (the gzip interpretation yields no clean WARC
     # row, so it must not be committed to)
     embedded = dict(a, payload=b"archive: " + _gzip.compress(b"inner", mtime=0))
-    rows = decode_warc_records(
+    rows = _decode(
         b"\x01\x1f\x8b\x02 junk " + encode_warc_records([embedded])
     )
     clean = [r for r in rows if r["_corrupt_record"] is None]
     assert len(clean) == 1 and clean[0]["payload"] == embedded["payload"]
     # #3 — CRLF padding BETWEEN and AFTER gzip members is legal, exactly
     # as in the plain layout
-    rows = decode_warc_records(gz_a + b"\r\n" + gz_b + b"\r\n")
+    rows = _decode(gz_a + b"\r\n" + gz_b + b"\r\n")
     assert [r["_corrupt_record"] for r in rows] == [None, None]
     # r12 pass 7 pins:
     # #1 — SINGLE-byte padding or garbage between members must not eat
     # the following member (the pos+2 resync skipped a magic at pos+1)
-    rows = decode_warc_records(gz_a + b"\n" + gz_b)
+    rows = _decode(gz_a + b"\n" + gz_b)
     assert [r["_corrupt_record"] for r in rows] == [None, None]
-    rows = decode_warc_records(gz_a + b"X" + gz_b)
+    rows = _decode(gz_a + b"X" + gz_b)
     assert [r["_corrupt_record"] is None for r in rows] == [True, False, True]
     assert rows[2]["payload"] == b["payload"]
     # #2 — a plain record whose payload is a crawled .warc.gz (the gzip
@@ -180,7 +177,7 @@ def test_codec_hostile_and_span_contracts():
     # reading: ties prefer plain, so the OUTER record survives and the
     # payload-embedded one is never reported as shard content
     warc_gz_payload = dict(a, payload=b"archive: " + gz_b)
-    rows = decode_warc_records(
+    rows = _decode(
         b"\x01\x1f\x8b\x02 junk " + encode_warc_records([warc_gz_payload])
     )
     clean = [r for r in rows if r["_corrupt_record"] is None]
@@ -196,10 +193,10 @@ def test_codec_hostile_and_span_contracts():
         nested = good_a
         for _ in range(1000):
             nested = pad + _gzip.compress(nested, mtime=0)
-        rows = decode_warc_records(nested)  # must return, not raise
+        rows = _decode(nested)  # must return, not raise
         assert rows and all(r["_corrupt_record"] is not None for r in rows)
     # ...while one legitimate nesting level still decodes clean
-    rows = decode_warc_records(_gzip.compress(good_a, mtime=0))
+    rows = _decode(_gzip.compress(good_a, mtime=0))
     assert [r["_corrupt_record"] for r in rows] == [None]
     # #2/#3 (rebuilt pass 10) — FAILED decompression bombs: members that
     # inflate ~1000:1 and then fail (truncated trailer) charge the
@@ -212,7 +209,7 @@ def test_codec_hostile_and_span_contracts():
     bomb = _gzip.compress(b"\x00" * (8 << 20), mtime=0)[:-8]
     storm = gz_a + bomb * 400
     t0 = _time.monotonic()
-    rows = decode_warc_records(storm)
+    rows = _decode(storm)
     assert _time.monotonic() - t0 < 8.0
     assert rows[0]["_corrupt_record"] is None  # the real member survived
     assert all(r["_corrupt_record"] is not None for r in rows[1:])
@@ -236,7 +233,7 @@ def test_codec_budget_never_binds_on_legit_data(monkeypatch):
     ]
     blob = W.encode_warc_records(recs, gzip_records=True)
     assert len(blob) < 16 << 10  # genuinely ~1000:1
-    rows = W.decode_warc_records(blob)
+    rows = _decode(blob)
     assert [r["_corrupt_record"] for r in rows] == [None] * 4
     assert all(r["payload"] == b"\x00" * (1 << 20) for r in rows)
     # many tiny members: all decode, no per-member chunk tax
@@ -245,7 +242,7 @@ def test_codec_budget_never_binds_on_legit_data(monkeypatch):
          for i in range(20_000)],
         gzip_records=True,
     )
-    rows = W.decode_warc_records(tiny)
+    rows = _decode(tiny)
     assert len(rows) == 20_000
     assert all(r["_corrupt_record"] is None for r in rows)
     # memory arm, EXACT tipping semantics (pass 11 #5): put the cap 10
@@ -256,7 +253,7 @@ def test_codec_budget_never_binds_on_legit_data(monkeypatch):
     # eof break after the cap check drops member 3 and fails the == 3.
     member_len = len(W.encode_warc_records([recs[0]]))  # decompressed size
     monkeypatch.setattr(W, "_MAX_DECODE_OUTPUT", 3 * member_len - 10)
-    rows = W.decode_warc_records(blob)
+    rows = _decode(blob)
     clean = [r for r in rows if r["_corrupt_record"] is None]
     corrupt = [r for r in rows if r["_corrupt_record"] is not None]
     assert len(clean) == 3 and len(corrupt) == 1
@@ -266,7 +263,7 @@ def test_codec_budget_never_binds_on_legit_data(monkeypatch):
     # remainder — this also pins the cap's STICKINESS (pass 12 #1):
     # member 4 is perfectly valid and under-sized, yet never decoded
     monkeypatch.setattr(W, "_MAX_DECODE_OUTPUT", 3 * member_len - (256 << 10))
-    rows = W.decode_warc_records(blob)
+    rows = _decode(blob)
     assert sum(r["_corrupt_record"] is None for r in rows) == 2
 
 
@@ -282,10 +279,7 @@ def test_codec_discarded_interpretation_work_is_charged():
     import gzip as _gzip
     import time as _time
 
-    from unravelsports_spark.sources.warc import (
-        decode_warc_records,
-        encode_warc_records,
-    )
+    from unravelsports_spark.sources.warc import encode_warc_records
 
     inner = _gzip.compress(b"\x00" * (8 << 20), mtime=0)  # 8 MB discarded/at a time
     rec = encode_warc_records(
@@ -294,7 +288,7 @@ def test_codec_discarded_interpretation_work_is_charged():
     member = _gzip.compress(inner + rec, mtime=0)
     shard = member * 400  # unbudgeted: 400 × 8 MB ≈ 3.2 GB of inflate
     t0 = _time.monotonic()
-    rows = decode_warc_records(shard)
+    rows = _decode(shard)
     assert _time.monotonic() - t0 < 6.0
     n_clean = sum(r["_corrupt_record"] is None for r in rows)
     assert 0 < n_clean < 200  # leading members decoded, then the arm bound
@@ -421,52 +415,13 @@ def test_warc_feeds_the_crawl_chain(spark, tmp_path):
                {x["source"] for x in docs.select("source").collect()})
 
 
-def test_iter_warc_records_equals_decode_everywhere():
-    """The lazy reader's equivalence contract (VERDICT r12 #3):
-    list(iter_warc_records(x)) == decode_warc_records(x) for every layout
-    and corruption shape the r12 battery pinned — clean plain, clean gzip,
-    garbage injections, leading garbage, truncation, ambiguity (both
-    magics), nesting, CRLF padding, negative lengths."""
-    import gzip as _gzip
-
-    from unravelsports_spark.sources.warc import (
-        decode_warc_records,
-        encode_warc_records,
-        iter_warc_records,
-    )
-
-    a, b = _records(2)
-    good_a, good_b = encode_warc_records([a]), encode_warc_records([b])
-    gz_a = encode_warc_records([a], gzip_records=True)
-    gz_b = encode_warc_records([b], gzip_records=True)
-    embedded = dict(a, payload=b"archive: " + gz_b)
-    shapes = [
-        good_a + good_b,                                  # clean plain
-        gz_a + gz_b,                                      # clean gzip
-        good_a + b"garbage, not a record\r\n" + good_b,   # plain resync
-        gz_a + b"garbage bytes" + gz_b,                   # gzip resync
-        b"leading junk" + gz_a + gz_b,                    # gzip w/ prefix
-        good_a + good_b[: len(good_b) // 2],              # truncated plain
-        gz_a + gz_b[: len(gz_b) // 2],                    # truncated gzip
-        b"\x01\x1f\x8b\x02 junk " + encode_warc_records([embedded]),  # vote
-        gz_a + b"\r\n" + gz_b + b"\r\n",                  # CRLF padding
-        gz_a + b"\n" + gz_b,                              # 1-byte padding
-        _gzip.compress(good_a, mtime=0),                  # 1 nesting level
-        b"WARC/1.0\r\nWARC-Type: response\r\nContent-Length: -1\r\n\r\nx"
-        b"\r\n\r\n" + good_a,                             # negative length
-        b"",                                              # empty shard
-    ]
-    for i, blob in enumerate(shapes):
-        assert list(iter_warc_records(blob)) == decode_warc_records(blob), i
-
-
 def test_iter_warc_records_streams_big_gzip_shard_bounded():
     """The chunked-emission memory contract (VERDICT r12 #3): a shard
     whose DECOMPRESSED content is >64 MB streams through
     iter_warc_records with peak Python-heap allocation far below the
     decompressed size — one member's rows at a time, never the whole
-    shard's. (decode_warc_records on the same shard would hold all 80 MB
-    of payloads live.)"""
+    shard's. (A list of the same rows would hold all 80 MB of payloads
+    live.)"""
     import tracemalloc
 
     import unravelsports_spark.sources.warc as W
@@ -493,33 +448,46 @@ def test_iter_warc_records_streams_big_gzip_shard_bounded():
     assert peak < (16 << 20), f"peak {peak >> 20} MiB — streaming broke"
 
 
-def test_read_warc_chunked_batches_equal_whole_shard(spark, tmp_path):
-    """max_records_per_batch changes only the Arrow batch boundaries —
-    the row set is identical to whole-shard emission, quarantine rows
-    included."""
-    import os
+def test_decode_shard_batches_flush_rule(monkeypatch):
+    """decode_shard_batches' one flush rule (every FLUSH_ROWS rows and at
+    the end) changes only the batch boundaries: with the constant at 7 the
+    row set equals the default run's, quarantine row included, and no
+    emitted frame exceeds 7 rows."""
+    import pandas as pd
 
-    from unravelsports_spark.sources.warc import read_warc, write_warc
+    import unravelsports_spark.sources.shardio as S
+    from unravelsports_spark.sources.warc import WARC_SCHEMA, encode_warc_records
 
-    df = spark.createDataFrame(
-        [(f"http://h.example/{i}", f"doc {i}".encode(), f"<urn:uuid:{i}>")
-         for i in range(30)],
-        "target_uri string, payload binary, record_id string",
-    ).coalesce(1)
-    land = str(tmp_path / "land")
-    os.makedirs(land)
-    write_warc(df, land).collect()
-    with open(os.path.join(land, "part-bad.warc"), "wb") as fh:
-        fh.write(b"garbage shard \x00")
-    whole = sorted(
-        map(tuple, read_warc(spark, land, max_records_per_batch=None).collect()),
-        key=repr,
-    )
-    chunked = sorted(
-        map(tuple, read_warc(spark, land, max_records_per_batch=7).collect()),
-        key=repr,
-    )
-    assert chunked == whole and len(whole) == 31
+    shards = [
+        encode_warc_records(
+            [dict(r, record_id=f"<urn:uuid:{k}-{r['record_id']}>")
+             for r in _records(n)]
+        )
+        for k, n in enumerate((13, 30))
+    ] + [b"garbage shard \x00"]
+    names = [f.name for f in WARC_SCHEMA.fields]
+
+    def run():
+        batches = [
+            pd.DataFrame({"path": [f"s{i}.warc"], "content": [blob]})
+            for i, blob in enumerate(shards)
+        ]
+        return list(S.decode_shard_batches(iter(batches), iter_warc_records, names))
+
+    def rows(frames):
+        return sorted(
+            (tuple(r) for f in frames for r in f.itertuples(index=False)),
+            key=repr,
+        )
+
+    default = run()
+    monkeypatch.setattr(S, "FLUSH_ROWS", 7)
+    chunked = run()
+    assert len(default) == 1 and len(chunked) == 7
+    assert all(len(f) <= 7 for f in chunked)
+    assert all(list(f.columns) == names for f in chunked)
+    assert rows(chunked) == rows(default) and len(rows(default)) == 44
+    assert sum(r[-1] is not None for r in rows(default)) == 1
 
 
 def test_warc_to_documents_invalid_utf8_never_crashes(spark):

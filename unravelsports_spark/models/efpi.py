@@ -46,6 +46,14 @@ _OUT_FIELDS = [
     T.StructField("formation", T.StringType()),
     T.StructField(Column.BALL_OWNING_TEAM_ID, T.StringType()),
 ]
+#: per-frame detection: its input columns and output schema, shared by the
+#: batch kernel and the streaming operator (streaming/efpi_stream.py)
+_FRAME_COLS = [Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID, Column.X, Column.Y,
+               Column.TEAM_ID, Column.BALL_OWNING_TEAM_ID, Column.OBJECT_ID,
+               Column.POSITION_NAME]
+_FRAME_SCHEMA = T.StructType(
+    [*_OUT_FIELDS[:2], T.StructField(Column.FRAME_ID, T.LongType()), *_OUT_FIELDS[2:]]
+)
 
 
 def _parse_every(every: str) -> int:
@@ -179,23 +187,24 @@ def _detect_group(d, forms, state_cfg, orientation, home_team_id):
             )
 
 
-def _frames_rows(runs, forms, state_cfg, orientation, home_id, strict=True):
-    """Ordered per-frame detection over one game's frame runs
-    (models/frames.py:split_runs by frame_id), mutating `forms` hysteresis
-    state (K13) as it goes. Shared by the batch kernel and the Structured
-    Streaming stateful operator (streaming/efpi_stream.py) so the two paths
-    cannot diverge. Returns output tuples (game_id, period_id, frame_id, id,
-    team_id, position, formation, ball_owning_team_id). ``strict=False``
-    (chunked batch kernel) emits null position/formation where the
-    reference would raise on a missing team state — the chunked caller
-    forward-fills those from the previous chunk's output."""
+def _frames_rows(runs, forms, state_cfg, orientation, home_id, head=_FRAME_COLS[:3], strict=True):
+    """Ordered detection over one game's frame or segment runs
+    (models/frames.py:split_runs), mutating `forms` hysteresis state (K13)
+    as it goes. Shared by the frame and segment kernels and the Structured
+    Streaming stateful operator (streaming/efpi_stream.py) so the paths
+    cannot diverge. Returns output tuples: the run's ``head`` column values
+    (game_id, period_id, frame_id by default), then id, team_id, position,
+    formation, ball_owning_team_id. ``strict=False`` (chunked batch kernel)
+    emits null position/formation where the reference would raise on a
+    missing team state — the chunked caller forward-fills those from the
+    previous chunk's output."""
     out = []
     for d in runs:
         _detect_group(d, forms, state_cfg, orientation, home_id)
         positions, formation_names = forms.lookup(d["id"], d["team_id"], strict=strict)
-        head = (d[Column.GAME_ID][0], d[Column.PERIOD_ID][0], d[Column.FRAME_ID][0])
+        run_head = tuple(d[c][0] for c in head)
         out.extend(
-            head + row
+            run_head + row
             for row in zip(d["id"], d["team_id"], positions, formation_names,
                            d["ball_owning_team_id"])
         )
@@ -378,10 +387,6 @@ class EFPI:
         pitch = self.settings.pitch_dimensions
         pl_len, pl_wid = pitch.pitch_length, pitch.pitch_width
         orientation, home_id = self.settings.orientation, self.settings.home_team_id
-        schema = T.StructType(
-            [_OUT_FIELDS[0], _OUT_FIELDS[1], T.StructField("frame_id", T.LongType()), *_OUT_FIELDS[2:]]
-        )
-
         chunked = (
             state_cfg["change_threshold"] is None
             and self.stateless_chunk_frames is not None
@@ -391,10 +396,7 @@ class EFPI:
             forms = Formations(pl_len, pl_wid, forms_cfg)
             return _frames_rows(runs, forms, state_cfg, orientation, home_id, strict=not chunked)
 
-        cols = [Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID, Column.X, Column.Y,
-                Column.TEAM_ID, Column.BALL_OWNING_TEAM_ID, Column.OBJECT_ID,
-                Column.POSITION_NAME]
-        sel = df.select(*cols)
+        sel = df.select(*_FRAME_COLS)
         # With hysteresis ON the state is serial within a match, so frames
         # group by game_id alone (streaming/efpi_stream.py carries the same
         # state incrementally). With it OFF every frame re-detects from
@@ -409,7 +411,7 @@ class EFPI:
             keys = [Column.GAME_ID, "_chunk"]
         else:
             keys = [Column.GAME_ID]
-        out = map_runs(sel, keys, [Column.FRAME_ID], [Column.OBJECT_ID], detect, schema)
+        out = map_runs(sel, keys, [Column.FRAME_ID], [Column.OBJECT_ID], detect, _FRAME_SCHEMA)
         if chunked:
             # cross-chunk detection carry: last-non-null per (game, object)
             # in frame order IS the team state the unsharded kernel would
@@ -441,16 +443,11 @@ class EFPI:
         # each (period, segment, owning-team) run is one detection group —
         # a duration bucket can contain possessions of both teams
         by = [Column.PERIOD_ID, *([seg_col] if seg_col else []), Column.BALL_OWNING_TEAM_ID]
+        head = [Column.GAME_ID, *by[:-1]]
 
         def detect(runs):
             forms = Formations(pl_len, pl_wid, forms_cfg)
-            for d in runs:
-                _detect_group(d, forms, state_cfg, orientation, home_id)
-                positions, formation_names = forms.lookup(d["id"], d["team_id"])
-                head = tuple(d[c][0] for c in [Column.GAME_ID, *by[:-1]])
-                for row in zip(d["id"], d["team_id"], positions, formation_names,
-                               d["ball_owning_team_id"]):
-                    yield head + row
+            return _frames_rows(runs, forms, state_cfg, orientation, home_id, head)
 
         # Same parallelism split as _fit_frames: hysteresis state is serial
         # within a match, but with change_threshold=None every segment

@@ -20,29 +20,22 @@ The engine-side contract this module keeps:
 
 from __future__ import annotations
 
+from itertools import islice
 from typing import Iterator
 
 import numpy as np
 
 from pyspark.sql import DataFrame
 
+from ..sources.graph_sink import iter_graph_tuples
+
 
 def graph_loader(graph_frames: DataFrame, batch_size: int = 64) -> Iterator[list[dict]]:
-    """Yield lists of graph dicts (a, x, e, label) of ≤ batch_size."""
-    batch: list[dict] = []
-    for row in graph_frames.toLocalIterator():
-        batch.append(
-            {
-                "a": np.asarray(row.a, dtype=float),
-                "x": np.asarray(row.x, dtype=float),
-                "e": np.asarray(row.e, dtype=float),
-                "label": row.label,
-            }
-        )
-        if len(batch) >= batch_size:
-            yield batch
-            batch = []
-    if batch:
+    """Yield lists of ≤ batch_size graph dicts
+    (:func:`~unravelsports_spark.sources.graph_sink.iter_graph_tuples`:
+    a, x, e, label and the frame locator keys)."""
+    graphs = iter_graph_tuples(graph_frames)
+    while batch := list(islice(graphs, batch_size)):
         yield batch
 
 

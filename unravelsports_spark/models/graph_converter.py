@@ -9,10 +9,11 @@ unravel/utils/objects/default_graph_converter.py:315-393 Spark-first:
   sequence/explode row synthesis O12); incomplete frames drop in the kernel;
 - the per-frame kernel runs through models/frames.py over (game_id,
   period_id, chunk of `frames_per_batch` frames) groups. Inside a group the
-  frames are stacked by node count and each stack goes once through the
-  pure-NumPy kernels of functions/graph_features.py (golden-tested): the
-  built-in features and dense adjacencies run over the whole stack, user
-  plugins and the Delaunay triangulation once per frame;
+  frames are stacked by node count, at most 512 per stack, and each stack
+  goes once through the pure-NumPy kernels of functions/graph_features.py
+  (golden-tested): the built-in features and dense adjacencies run over
+  the whole stack, user plugins and the Delaunay triangulation once per
+  frame;
 - output is a DataFrame of nested arrays + shape columns, written/read as
   parquet (the reference's gzip-pickle sink S4 ↔ our parquet graph sink).
 """
@@ -44,6 +45,38 @@ from ..settings import GraphSettings
 from .frames import map_runs
 
 MATRIX = T.ArrayType(T.ArrayType(T.DoubleType()))
+
+#: most frames in one kernel stack: the stacked edge features hold several
+#: (B, N, N) float arrays at once (~72 KB per 23-node frame), so stacking a
+#: whole 20,000-frame chunk would peak near 1.4 GB per Python worker
+STACK_FRAMES = 512
+
+
+def graph_stacks(frames: list, node_funcs, edge_funcs, opts, settings) -> list[tuple]:
+    """(adjacency, edge features, node features) of each frame dict of (N,)
+    arrays, in input order. Same-size frames stack, at most
+    :data:`STACK_FRAMES` at a time, and each stack goes once through the
+    built-in features and dense adjacencies; user plugins and the Delaunay
+    triangulation run once per frame inside the drivers."""
+    by_n: dict[int, list[int]] = {}
+    for i, d in enumerate(frames):
+        by_n.setdefault(len(d["team_id"]), []).append(i)
+    slices = [
+        same_n[s:s + STACK_FRAMES]
+        for same_n in by_n.values()
+        for s in range(0, len(same_n), STACK_FRAMES)
+    ]
+    results: list[tuple] = [None] * len(frames)
+    for idxs in slices:
+        stack = {k: np.stack([frames[i][k] for i in idxs]) for k in frames[idxs[0]]}
+        fk = frame_kwargs(stack, settings)
+        adj = compute_adjacency_matrix(settings, **fk)
+        edge, _ = compute_edge_features(adj, edge_funcs, opts, settings, **fk)
+        node, _ = compute_node_features(node_funcs, opts, settings, **fk)
+        edges = np.split(edge, np.cumsum((adj == 1).sum(axis=(1, 2)))[:-1])
+        for i, a, e, x in zip(idxs, adj, edges, node):
+            results[i] = (a, e, x)
+    return results
 
 
 def graph_frames_schema(label_col: str = "label", graph_id_col: str = "graph_id") -> T.StructType:
@@ -231,21 +264,7 @@ class SoccerGraphConverter:
                     raise ValueError("label not constant within a frame group")
                 frames.append(d)
 
-            # the kernels run once per stack of same-size frames
-            by_n: dict[int, list[int]] = {}
-            for i, d in enumerate(frames):
-                by_n.setdefault(len(d["team_id"]), []).append(i)
-            results: list[tuple] = [None] * len(frames)
-            for idxs in by_n.values():
-                stack = {k: np.stack([frames[i][k] for i in idxs]) for k in frames[idxs[0]]}
-                fk = frame_kwargs(stack, settings)
-                adj = compute_adjacency_matrix(settings, **fk)
-                edge, _ = compute_edge_features(adj, edge_funcs, opts, settings, **fk)
-                node, _ = compute_node_features(node_funcs, opts, settings, **fk)
-                edges = np.split(edge, np.cumsum((adj == 1).sum(axis=(1, 2)))[:-1])
-                for i, a, e, x in zip(idxs, adj, edges, node):
-                    results[i] = (a, e, x)
-
+            results = graph_stacks(frames, node_funcs, edge_funcs, opts, settings)
             for d, (adj, edge, node) in zip(frames, results):
                 if global_cols:
                     bad = [c for c in global_cols if not np.all(d[c] == d[c][0])]

@@ -1,45 +1,34 @@
 """Shared shard-decode plumbing for binaryFile-backed boundary readers
 (WARC, TFRecord): ONE chunked Arrow decode stage, so the quarantine
-contract and the max_records_per_batch emission semantics cannot drift
-between formats (r13 review pass 25 — tfrecord.py had re-implemented
-warc.py's loop shape verbatim, the divergence class the reviews keep
-removing; warc.py's own r12 comment already said a copy per reader would
-let the contract drift)."""
+contract and the batch emission rule cannot drift between formats (r13
+review pass 25 — tfrecord.py had re-implemented warc.py's loop shape
+verbatim, the divergence class the reviews keep removing)."""
 
 from __future__ import annotations
 
+#: decoded rows per emitted pandas batch: bounds a task's row buffer
+#: whatever a shard decompresses to
+FLUSH_ROWS = 4096
 
-def decode_shard_batches(
-    batches, iter_records, columns, max_records_per_batch: int | None
-):
+
+def decode_shard_batches(batches, iter_records, columns):
     """Yield pandas DataFrames of decoded rows over binaryFile (path,
     content) batches. ``iter_records(bytes)`` yields row dicts (the
     format's lazy record iterator — quarantine rows included);
-    ``columns`` fixes the emission schema; ``max_records_per_batch``
-    flushes every N rows so a large decoded shard never materializes
-    whole (None = whole-shard emission)."""
+    ``columns`` fixes the emission schema. One flush rule: every
+    :data:`FLUSH_ROWS` rows and at the end, so a large decoded shard
+    never materializes whole."""
     import pandas as pd
 
-    if not max_records_per_batch:
-        # normalize falsy (0) to whole-shard mode (pass 28 #4: 0 skipped
-        # BOTH flush branches and buffered the whole partition)
-        max_records_per_batch = None
     out = []
     for pdf in batches:
         for p, content in zip(pdf["path"], pdf["content"]):
             for row in iter_records(bytes(content)):
                 row["shard"] = p
                 out.append(row)
-                if max_records_per_batch and len(out) >= max_records_per_batch:
+                if len(out) >= FLUSH_ROWS:
                     yield pd.DataFrame(out, columns=columns)
                     out = []
-        if max_records_per_batch is None and out:
-            # whole-shard mode flushes PER INPUT BATCH (r13 review pass
-            # 26 #1: buffering across batches accumulated the whole
-            # partition's decoded rows — the documented None semantics
-            # are the r12 per-batch behavior, bounded by one input batch)
-            yield pd.DataFrame(out, columns=columns)
-            out = []
     if out:
         yield pd.DataFrame(out, columns=columns)
 

@@ -49,7 +49,6 @@ from __future__ import annotations
 import struct
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 # ---------------------------------------------------------------------------
@@ -313,8 +312,8 @@ def encode_tfrecords(payloads: list) -> bytes:
 
 
 def iter_tfrecords(data: bytes):
-    """LAZY record iterator (the iter_warc_records twin — r13 review pass
-    26 #3: an eager list made the chunked-emission knob a no-op): yields
+    """LAZY record iterator (like iter_warc_records — r13 review pass 26
+    #3: an eager list defeated the shared decoder's chunked emission): yields
     {'payload': bytes, '_corrupt_record': None} per record; the first
     corruption (bad CRC, truncation, hostile length) quarantines THE
     REMAINDER as one row and stops — the format has no resync magic (see
@@ -431,15 +430,12 @@ def write_tfrecords(df: DataFrame, path: str) -> DataFrame:
     )
 
 
-def read_tfrecords(
-    spark: SparkSession,
-    path: str,
-    max_records_per_batch: int | None = 4096,
-) -> DataFrame:
+def read_tfrecords(spark: SparkSession, path: str) -> DataFrame:
     """Read TFRecord shards into (shard, payload, _corrupt_record) rows —
     payload is the raw tf.Example bytes (project features with
-    :func:`examples_to_columns`). Chunked emission bounds decoded-row
-    materialization per task (the read_warc knob)."""
+    :func:`examples_to_columns`). Rows stream off :func:`iter_tfrecords`
+    into fixed-size pandas batches (the decode loop shared with
+    read_warc), which bounds decoded-row materialization per task."""
     from .shardio import decode_shard_batches
 
     files = (
@@ -450,9 +446,7 @@ def read_tfrecords(
     )
     cols = [f.name for f in TFRECORD_SCHEMA.fields]
     return files.mapInPandas(
-        lambda it: decode_shard_batches(
-            it, iter_tfrecords, cols, max_records_per_batch
-        ),
+        lambda it: decode_shard_batches(it, iter_tfrecords, cols),
         TFRECORD_SCHEMA,
     )
 

@@ -9,9 +9,8 @@ Layout decisions:
 - within a partition, rows are written sorted by (period_id, frame_id,
   id) via ``sortWithinPartitions`` — parquet min/max row-group stats then
   prune frame ranges inside a match without any index;
-- ``compact_per_game`` repartitions to one file per game before the write
-  (small-file avoidance); leave False when a single match exceeds a
-  comfortable file size and let Spark split naturally.
+- rows repartition by ``game_id`` before the write, so each game lands
+  as one file (small-file avoidance).
 
 The reference's equivalent is CSV/pickle round-trips of the Polars frame;
 parquet + partitioning is the Spark-native form of the same contract.
@@ -25,17 +24,14 @@ from pyspark.sql import functions as F
 from ..schema import Column
 
 
-def write_tracking(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    compact_per_game: bool = True,
-) -> None:
-    out = df
-    if compact_per_game:
-        out = out.repartition(F.col(Column.GAME_ID))
-    out = out.sortWithinPartitions(Column.PERIOD_ID, Column.FRAME_ID, Column.OBJECT_ID)
-    out.write.mode(mode).partitionBy(Column.GAME_ID).parquet(path)
+def write_tracking(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+    (
+        df.repartition(F.col(Column.GAME_ID))
+        .sortWithinPartitions(Column.PERIOD_ID, Column.FRAME_ID, Column.OBJECT_ID)
+        .write.mode(mode)
+        .partitionBy(Column.GAME_ID)
+        .parquet(path)
+    )
 
 
 def read_tracking(

@@ -17,7 +17,10 @@ no external WARC library, the format is simple enough to own):
   Common Crawl layout, each record its own mtime-0 gzip member, so
   identical inputs give byte-identical shards).
 - :func:`read_warc` — ``spark.read.format("binaryFile")`` over the shard
-  glob, then one Arrow decode pass per file. Output carries the SAME
+  glob, then one Arrow decode pass per file through
+  :func:`iter_warc_records`, the ONE decoder (lazy, both layouts, every
+  hostile-input bound), emitted in fixed-size row batches by
+  :mod:`~unravelsports_spark.sources.shardio`. Output carries the SAME
   ``_corrupt_record`` quarantine contract as sources/jsonl + sources/csvio
   (:func:`~unravelsports_spark.sources.jsonl.quarantine_counts` works on
   it unchanged): a malformed span surfaces as ONE quarantine row (prefix
@@ -128,9 +131,10 @@ def encode_warc_records(records: list, gzip_records: bool = False) -> bytes:
 #: size — this module's own writer emits legitimate 1000:1 members for
 #: repetitive payloads, so any k·len(data) default would false-quarantine
 #: clean data (the pass-10 lesson, twice). Budget executor memory as
-#: executor_cores × (expected decompressed shard size), and rely on
-#: ``read_warc(max_records_per_batch=...)`` (chunked emission) to keep the
-#: ROW materialization below that bound — the cap is then only the
+#: executor_cores × (expected decompressed shard size); :func:`read_warc`
+#: streams rows off :func:`iter_warc_records` and flushes them in
+#: fixed-size batches (``shardio.FLUSH_ROWS``), which keeps the ROW
+#: materialization below that bound — the cap is then only the
 #: hostile-input backstop, not the working-set size.
 _MAX_DECODE_OUTPUT = 4 << 30
 
@@ -273,18 +277,27 @@ def _split_gzip_members(data: bytes, budget: dict):
         pos = nxt
 
 
-def decode_warc_records(
+def iter_warc_records(
     data: bytes, _depth: int = 0, _budget: dict | None = None
-) -> list:
-    """Parse WARC bytes into row dicts (WARC_SCHEMA minus shard). A
-    malformed span becomes ONE quarantine dict (``_corrupt_record`` =
-    printable prefix of the bad bytes, everything else None) and the
-    parser resyncs at the next ``WARC/1.`` (or gzip) magic — the
-    jsonl/csv PERMISSIVE discipline in codec form. CONSECUTIVE quarantine
-    rows coalesce into one (r12 review pass 3 #6): a corrupt span whose
-    bytes happen to contain a fake magic — entirely plausible, a span can
-    contain a record's own payload — would otherwise split into several
-    rows and flip any oracle that pins the quarantine COUNT.
+):
+    """Parse WARC bytes into row dicts (WARC_SCHEMA minus shard), LAZILY —
+    the one WARC decoder, run by :func:`read_warc` and by every
+    hostile-input test. A malformed span becomes ONE quarantine dict
+    (``_corrupt_record`` = printable prefix of the bad bytes, everything
+    else None) and the parser resyncs at the next ``WARC/1.`` (or gzip)
+    magic — the jsonl/csv PERMISSIVE discipline in codec form.
+    CONSECUTIVE quarantine rows coalesce into one (r12 review pass 3 #6):
+    a corrupt span whose bytes happen to contain a fake magic — entirely
+    plausible, a span can contain a record's own payload — would otherwise
+    split into several rows and flip any oracle that pins the quarantine
+    COUNT.
+
+    Streaming (VERDICT r12 #3): rows are yielded as they decode, and gzip
+    members decode one at a time off the lazy :func:`_split_gzip_members`,
+    so peak memory is (compressed shard) + (one member's rows) + the
+    consumer's batch, never the decompressed shard. Only the gzip/plain
+    AMBIGUITY vote (both magics present — an already-corrupt shard)
+    materializes both readings.
 
     ``_depth`` caps gzip NESTING (r12 review pass 8 #1): a ~23 KB shard
     gzip-wrapped a thousand times would otherwise recurse through the
@@ -319,21 +332,13 @@ def decode_warc_records(
     # heuristic path that only runs for already-corrupt shards.)
     gz_at = data.find(_GZ_MAGIC)
     pl_at = data.find(_MAGIC)
-    if gz_at >= 0 and (pl_at < 0 or gz_at < pl_at) and _depth < 8:
-        # build the gzip interpretation, then commit to it only if no
-        # plain magic exists OR it recovers MORE clean WARC rows than the
-        # plain interpretation of the same bytes (ambiguity rule,
-        # sharpened twice — pass 6 #1, pass 7 #2: the gzip magic, a valid
-        # gzip member, or even a crawled .warc.gz inside a record PAYLOAD
-        # can all appear in/after garbage preceding a plain record; on a
-        # TIE the plain reading wins, because its clean rows prove real
-        # record starts while the gzip hit may be payload-embedded).
-        # The double decode runs only on ambiguous — already corrupt —
-        # shards, never on the clean path.
-        gz_rows, gz_clean = [], 0
-        output_before = _budget["output"]
+    if not (gz_at >= 0 and (pl_at < 0 or gz_at < pl_at) and _depth < 8):
+        yield from _coalesce_rows(_iter_plain(data))
+        return
+
+    def gzip_rows():
         if gz_at > 0 and data[:gz_at].strip(b"\r\n"):
-            _append(gz_rows, _corrupt_row(data[:gz_at]))
+            yield _corrupt_row(data[:gz_at])
         # _split_gzip_members is a GENERATOR (pass 13 #1, the actual
         # leak): nested decodes here charge the shared ledger per member,
         # and the split's loop-top exhaustion check must SEE those
@@ -346,46 +351,48 @@ def decode_warc_records(
         # arm (the pass 10 #4 contract).
         for kind, seg in _split_gzip_members(data[gz_at:], _budget):
             if kind == "member":
-                for row in decode_warc_records(seg, _depth + 1, _budget):
-                    if row["_corrupt_record"] is None:
-                        gz_clean += 1
-                    _append(gz_rows, row)
+                yield from iter_warc_records(seg, _depth + 1, _budget)
             else:
-                _append(gz_rows, _corrupt_row(seg))
-        if pl_at < 0:
-            return gz_rows
-        pl_rows = _decode_plain(data)
-        pl_clean = sum(1 for r in pl_rows if r["_corrupt_record"] is None)
-        if gz_clean > pl_clean:
-            return gz_rows
-        # the gzip interpretation LOST the vote and is discarded — refund
-        # its net output charge to the MEMORY arm (pass 12 #2: it tracks
-        # LIVE bytes; a phantom charge for freed rows would falsely
-        # quarantine later members at outer levels) but charge that same
-        # discarded work to the FAILED arm (pass 13 #1: a bare refund
-        # re-armed the budget, letting K crafted members each spend
-        # sub-cap discarded work — unbounded in K; the work genuinely
-        # happened and a losing interpretation IS hostile-work evidence).
-        # EXCEPTION: a build that tripped the cap stays sticky-negative.
-        if _budget["output"] >= 0:
-            _budget["failed"] -= output_before - _budget["output"]
-            _budget["output"] = output_before
-        return pl_rows
-    return _decode_plain(data)
+                yield _corrupt_row(seg)
 
-
-def _decode_plain(data: bytes) -> list:
-    """The plain-layout record loop (see :func:`decode_warc_records`)."""
-    return list(_coalesce_rows(_iter_plain(data)))
+    if pl_at < 0:
+        yield from _coalesce_rows(gzip_rows())
+        return
+    # AMBIGUOUS: commit to the gzip reading only if it recovers MORE
+    # clean WARC rows than the plain reading of the same bytes (pass 6
+    # #1, pass 7 #2: the gzip magic, a valid gzip member, or even a
+    # crawled .warc.gz inside a record PAYLOAD can all appear in/after
+    # garbage preceding a plain record; on a TIE the plain reading wins,
+    # because its clean rows prove real record starts while the gzip hit
+    # may be payload-embedded).
+    output_before = _budget["output"]
+    gz_rows = list(_coalesce_rows(gzip_rows()))
+    pl_rows = list(_coalesce_rows(_iter_plain(data)))
+    gz_clean = sum(r["_corrupt_record"] is None for r in gz_rows)
+    pl_clean = sum(r["_corrupt_record"] is None for r in pl_rows)
+    if gz_clean > pl_clean:
+        yield from gz_rows
+        return
+    # the gzip reading LOST the vote and is discarded — refund its net
+    # output charge to the MEMORY arm (pass 12 #2: it tracks LIVE bytes;
+    # a phantom charge for freed rows would falsely quarantine later
+    # members at outer levels) but charge that same discarded work to the
+    # FAILED arm (pass 13 #1: a bare refund re-armed the budget, letting K
+    # crafted members each spend sub-cap discarded work — unbounded in K;
+    # the work genuinely happened and a losing reading IS hostile-work
+    # evidence). EXCEPTION: a build that tripped the cap stays
+    # sticky-negative.
+    if _budget["output"] >= 0:
+        _budget["failed"] -= output_before - _budget["output"]
+        _budget["output"] = output_before
+    yield from pl_rows
 
 
 def _iter_plain(data: bytes):
-    """Generator core of :func:`_decode_plain` — yields UNCOALESCED rows
-    (``_coalesce_rows`` restores the consecutive-quarantine merge). Split
-    out for :func:`iter_warc_records` (VERDICT r12 #3): a plain multi-GB
-    shard streams its rows instead of materializing the whole list —
-    payload slices are copies, so the list form doubles the shard in
-    memory."""
+    """The plain-layout record loop of :func:`iter_warc_records` — yields
+    UNCOALESCED rows (``_coalesce_rows`` applies the consecutive-quarantine
+    merge). A plain multi-GB shard streams its rows: payload slices are
+    copies, so a list would double the shard in memory."""
     pos = 0
     while pos < len(data):
         if data[pos:pos + len(_MAGIC)] != _MAGIC:
@@ -435,9 +442,8 @@ def _iter_plain(data: bytes):
 
 
 def _coalesce_rows(rows):
-    """Generator twin of :func:`_append`'s coalescing: consecutive
-    quarantine rows merge into one span, with one-row lookbehind so the
-    stream stays lazy. Byte-equivalent to building a list via _append."""
+    """Consecutive quarantine rows merge into one span (256-char prefix),
+    with one-row lookbehind so the stream stays lazy."""
     held = None
     for row in rows:
         if (
@@ -455,52 +461,6 @@ def _coalesce_rows(rows):
         yield held
 
 
-def iter_warc_records(data: bytes):
-    """LAZY twin of :func:`decode_warc_records` (VERDICT r12 #3 — the
-    chunked-emission path): yields the IDENTICAL row sequence without
-    materializing the whole shard's decoded rows. The valuable case is the
-    per-record-gzip layout, where decompressed content can be orders of
-    magnitude larger than the shard on disk — members decode one at a
-    time off the lazy :func:`_split_gzip_members` generator, so peak
-    memory is (compressed shard) + (one member's rows) + the consumer's
-    batch buffer, never the full decompressed shard.
-
-    The one case that still materializes is the gzip/plain AMBIGUITY vote
-    (both magics present — an already-corrupt shard by definition): the
-    vote needs both complete interpretations, so it delegates to the
-    materializing decoder. Clean shards of either layout never hit it.
-
-    Equivalence contract (tested): ``list(iter_warc_records(x)) ==
-    decode_warc_records(x)`` for every layout and corruption shape."""
-    gz_at = data.find(_GZ_MAGIC)
-    pl_at = data.find(_MAGIC)
-    if gz_at >= 0 and (pl_at < 0 or gz_at < pl_at):
-        if pl_at >= 0:
-            # ambiguous — the vote inherently needs both interpretations
-            yield from decode_warc_records(data)
-            return
-        budget = {
-            "failed": 32 * len(data) + (64 << 20),
-            "output": _MAX_DECODE_OUTPUT,
-        }
-
-        def raw():
-            if gz_at > 0 and data[:gz_at].strip(b"\r\n"):
-                yield _corrupt_row(data[:gz_at])
-            for kind, seg in _split_gzip_members(data[gz_at:], budget):
-                if kind == "member":
-                    # per-member recursion is list-sized BY the member —
-                    # bounded, and the shared ledger still sees charges
-                    # in stream order (the pass-13 generator contract)
-                    yield from decode_warc_records(seg, 1, budget)
-                else:
-                    yield _corrupt_row(seg)
-
-        yield from _coalesce_rows(raw())
-        return
-    yield from _coalesce_rows(_iter_plain(data))
-
-
 def _corrupt_row(bad: bytes) -> dict:
     return {
         "rec_type": None,
@@ -511,19 +471,6 @@ def _corrupt_row(bad: bytes) -> dict:
         "payload": None,
         "_corrupt_record": bad[:256].decode("utf-8", "replace"),
     }
-
-
-def _append(rows: list, row: dict) -> None:
-    """Append, coalescing consecutive quarantine rows into one span."""
-    if (
-        row["_corrupt_record"] is not None
-        and rows
-        and rows[-1]["_corrupt_record"] is not None
-    ):
-        merged = rows[-1]["_corrupt_record"] + row["_corrupt_record"]
-        rows[-1]["_corrupt_record"] = merged[:256]
-        return
-    rows.append(row)
 
 
 def write_warc(
@@ -628,20 +575,15 @@ def write_warc(
     return df.mapInPandas(writer, "shard string, n_records long, n_bytes long")
 
 
-def read_warc(
-    spark: SparkSession, path: str, max_records_per_batch: int | None = 4096
-) -> DataFrame:
+def read_warc(spark: SparkSession, path: str) -> DataFrame:
     """Read WARC shards (plain or per-record-gzip) into WARC_SCHEMA rows
     with the shared quarantine contract — one Arrow decode pass per
-    shard; no pruned-parse hazard (see module note).
-
-    ``max_records_per_batch`` (VERDICT r12 #3) flushes the row buffer to
-    a pandas batch every N records (chunked emission off the lazy codec,
-    through :func:`~unravelsports_spark.sources.shardio.decode_shard_batches`,
+    shard; no pruned-parse hazard (see module note). Rows stream off
+    :func:`iter_warc_records` into fixed-size pandas batches
+    (:func:`~unravelsports_spark.sources.shardio.decode_shard_batches`,
     the loop shared with the TFRecord reader), so even a multi-GB
-    decompressed shard stays within (shard bytes + one member + N rows)
-    of peak task memory. ``None`` = whole-shard batches (the r12
-    behavior). Rows are IDENTICAL either way."""
+    decompressed shard stays within (shard bytes + one member + one
+    batch of rows) of peak task memory."""
     from .shardio import decode_shard_batches
 
     files = (
@@ -652,9 +594,7 @@ def read_warc(
     )
     names = [f.name for f in WARC_SCHEMA.fields]
     return files.mapInPandas(
-        lambda it: decode_shard_batches(
-            it, iter_warc_records, names, max_records_per_batch
-        ),
+        lambda it: decode_shard_batches(it, iter_warc_records, names),
         WARC_SCHEMA,
     )
 

@@ -31,18 +31,14 @@ import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame
-from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupStateTimeout
 
-from ..models.efpi import _OUT_FIELDS, _frames_rows
+from ..models.efpi import _FRAME_COLS, _FRAME_SCHEMA, _frames_rows
 from ..models.formations import DetectedFormation, Formations
 from ..models.frames import split_runs
 from ..schema import Column
 from ..settings import DefaultSettings
 
-_STREAM_SCHEMA = T.StructType(
-    [_OUT_FIELDS[0], _OUT_FIELDS[1], T.StructField("frame_id", T.LongType()), *_OUT_FIELDS[2:]]
-)
 _STATE_SCHEMA = "s string"
 
 
@@ -95,7 +91,7 @@ def streaming_formation_detection(
         "change_threshold": change_threshold,
         "change_after_possession": change_after_possession,
     }
-    out_cols = [f.name for f in _STREAM_SCHEMA.fields]
+    out_cols = _FRAME_SCHEMA.fieldNames()
 
     def fn(key, pdfs, state):
         pdf = pd.concat(list(pdfs), ignore_index=True)
@@ -109,13 +105,10 @@ def streaming_formation_detection(
         state.update((_serialize_state(forms),))
         yield pd.DataFrame(out, columns=out_cols)
 
-    cols = [Column.GAME_ID, Column.PERIOD_ID, Column.FRAME_ID, Column.X, Column.Y,
-            Column.TEAM_ID, Column.BALL_OWNING_TEAM_ID, Column.OBJECT_ID,
-            Column.POSITION_NAME]
     return (
-        df.select(*cols)
+        df.select(*_FRAME_COLS)
         .groupBy(Column.GAME_ID)
         .applyInPandasWithState(
-            fn, _STREAM_SCHEMA, _STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
+            fn, _FRAME_SCHEMA, _STATE_SCHEMA, "append", GroupStateTimeout.NoTimeout
         )
     )
