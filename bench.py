@@ -1,5 +1,10 @@
 #!/usr/bin/env python
-"""Benchmark headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+"""Benchmark the headline queries at $SPARK_GRAFT_SF_DIR (default sf0.1).
+
+The headline set is ``unravelsports_spark.plans.HEADLINE``: the queries
+registered with ``headline=True``, in registry order (the criterion is in
+the ``plans.query`` docstring). Why a query is not headlined is a comment on
+the query where it is defined.
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
@@ -22,102 +27,6 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from unravelsports_spark.session import get_spark  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-HEADLINE = [
-    "q1_pricing_summary",
-    "j5_enrich_revenue",
-    "j2_agg_back_join",
-    "a4_argmin_in_group",
-    "w4_sessionize",
-    "w5_tumbling_window",
-    "o9_explode_tokens",
-    # LLM-pipeline ops (VERDICT r1 #8): dedup banding, ANN probe, tokenizer
-    "d_lsh_candidate_pairs",
-    "s_ann_lsh",
-    "t_bpe_token_stats",
-    # round-2 additions: TF-IDF corpus stats and token-window chunking
-    "t_tfidf_terms",
-    "t_chunking",
-    # round-3 additions: BM25 retrieval and span-level dedup
-    "t_bm25_topk",
-    "d_dup_spans",
-    # round-4 additions: DSIR selection, NB classifier filter, shard packing,
-    # and the composed prep→shards pipeline
-    "t_dsir_scores",
-    "t_nb_confusion",
-    "t_shard_manifest",
-    "t_prep_to_shards_e2e",
-    # round-5 additions: the data-HEAVY pipeline queries (DuckDB itself
-    # spends 0.4-5 s at sf0.1 on these, so the ratios measure plan quality
-    # rather than local-mode scheduling floors): dup-graph analytics,
-    # OR-amplified SemDeDup, exact-Jaccard inverted index, BPE training +
-    # tokenization, and the composed corpus-prep chain
-    "d_pagerank",
-    "d_dup_clusters",
-    "d_cluster_keep_best",
-    "d_minhash_signatures",
-    "d_jaccard_top_pairs",
-    "d_semdedup_multitable",
-    "t_bpe_merges",
-    "t_bpe_tokenized_stats",
-    "t_corpus_prep_e2e",
-    # round-6 additions: the langid argmax rewrite (DuckDB spends ~2.5 s on
-    # the equivalent CASE at sf0.1) and the certified ANN-recall panel
-    # (brute-force ground truth for 20 queries + the IVF/IVFPQ retrievals)
-    "t_langid_confusion",
-    "s_ann_recall",
-    # the full-pipeline flagship: lexical gates + embedding SemDeDup gate +
-    # shard packing, one certified query
-    "t_full_pipeline_e2e",
-    # round-7 additions: hybrid retrieval (BM25 top-k + dense cosine top-k
-    # fused by reciprocal rank — the RAG first-stage ranker), corpus
-    # novelty by source (shingle-df memorization metric), and
-    # label-propagation communities on the near-dup graph
-    "t_hybrid_rrf",
-    "t_ngram_novelty",
-    "d_label_communities",
-    # content-defined chunking stats (the rsync/data-lake dedup primitive)
-    "d_cdc_chunks",
-    # asymmetric containment mining over the same inverted index (the
-    # doc-inside-doc signal a Jaccard threshold misses)
-    "d_containment_top_pairs",
-    # round-12 addition: Hamming-LSH near-dup mining — 128k exact-verified
-    # pairs at sf0.1 (DuckDB ~0.4 s on the same band/verify chain), so the
-    # ratio measures the banded self-join plan, not scheduling floors
-    "d_simhash_neardup",
-    # NOT headlined: t_boilerplate_strip / t_html_extract — their DuckDB
-    # oracles run in 54/73 ms at sf0.1 (source-sized rollups over one
-    # projection pass), so a bench row would measure 2-3 Spark job floors
-    # against a near-zero denominator, like q1/w5 already do. Their scale
-    # behavior is covered by the SCALING.md probes (extract_html_text is a
-    # pure codegen'd projection; boilerplate's shape is plan-guarded).
-    # NOT headlined (r13): a25_t_closeness / d_release_diff — DuckDB runs
-    # their oracles in 28/26 ms at sf0.1 (class-sized collapses over one
-    # scan), the same near-zero-denominator class as boilerplate/html
-    # above; o18_csv_roundtrip / o19_warc_roundtrip round-trip through a
-    # per-invocation tmpdir, so a bench row would measure local-disk IO +
-    # mkdtemp, not plan quality. Scale behavior: t-closeness/release-diff
-    # plan shapes are guarded in tests; the WARC decode path is probed by
-    # the tracemalloc bound + hostile battery.
-    # NOT headlined (r14): t_robots_filter / t_sitemap_extract — their
-    # oracles are CLOSED-FORM (DuckDB states hand-derived verdicts/locs in
-    # 14/28 ms rather than running the parser), so a bench row would
-    # measure job floors against a non-computation; t_frontier_plan's
-    # oracle runs in 16 ms uncontended (a 0.29 s reading taken while the
-    # scale probe had the box led to briefly headlining it — reverted:
-    # the md5 window over 5k rows is a near-zero denominator, the
-    # q1/w5 floor-bound class); o20_tfrecord_roundtrip round-trips
-    # through a per-invocation tmpdir like o18/o19. Scale behavior:
-    # robots/frontier probed in SCALING.md; sitemap is the
-    # extract_html_text projection class.
-    # NOT headlined: d_kcore_peeling — its wall is the edge-table build
-    # plus one live-set materialization per round (five at 4 rounds) over
-    # a ~650-row edge list, each job reporting its curve row through an
-    # observation; the LSH pair chain under it dominates, i.e. a
-    # local-mode fixed-cost artifact like s_ann_lsh, not plan quality.
-    # Its scale behavior is probed directly instead (SCALING.md: 1.1x /
-    # 3.1x per decade at 10x/100x).
-]
 
 
 def sf_from_dir(d: str) -> float:
@@ -158,7 +67,7 @@ def main() -> None:
     from unravelsports_spark.datasets.synthetic import AWAY, HOME, synthetic_tracking_df
     from unravelsports_spark.models.graph_converter import SoccerGraphConverter
     from unravelsports_spark.models.pressing_intensity import PressingIntensity
-    from unravelsports_spark.plans import ORACLE_SQL, QUERIES
+    from unravelsports_spark.plans import HEADLINE, ORACLE_SQL, QUERIES
     from unravelsports_spark.settings import DefaultSettings, GraphSettings
 
     from tools.registry import counted_run, gate_duckdb

@@ -1,12 +1,12 @@
 """Boilerplate line removal (operators/boilerplate.py) — built round 11,
-driver-registered round 12 as `t_boilerplate_strip` (plans/corpus8.py).
+driver-registered round 12 as `t_boilerplate_strip` (plans/crawl.py).
 The canonical oracle SQL moved there at registration; this suite imports
 it (no drift possible) and exercises the operator's contract edges."""
 
 from pyspark.sql import functions as F
 
 from unravelsports_spark.plans import QUERIES
-from unravelsports_spark.plans.corpus8 import BOILERPLATE_SQL
+from unravelsports_spark.plans.crawl import BOILERPLATE_SQL
 
 from .conftest import SF_CORRECT
 

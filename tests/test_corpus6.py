@@ -1,4 +1,4 @@
-"""Round-10 registrations (plans/corpus6.py) and the r9 ADVICE fixes:
+"""Round-10 registrations and the r9 ADVICE fixes:
 streamed-IVF-index search (partition pruning + latest-batch dedup),
 vocab_bound_stats without an n_pieces output, zero-norm cosine guards,
 and the d_cdc_chunks null-text structural invariant."""
@@ -20,7 +20,7 @@ def _index_fixture(spark):
     as a side effect) and return (centroids, query_vec, index_dir,
     result_rows)."""
     from unravelsports_spark.plans import QUERIES
-    from unravelsports_spark.plans.corpus6 import _index_dir
+    from unravelsports_spark.plans.retrieval import _index_dir
     from unravelsports_spark.session import read_table
 
     rows = [tuple(r) for r in QUERIES["s_ann_from_index"](spark, SF_CORRECT).collect()]

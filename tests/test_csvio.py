@@ -1,7 +1,6 @@
 """CSV corpus boundary (sources/csvio.py) — built round 11, REGISTERED
 round 13 as `o18_csv_roundtrip`. The canonical oracle SQL and query shape
-now live in plans/corpus9.py (the corpus7/corpus8 registration
-discipline); this suite imports them, so twin and oracle cannot drift.
+now live in plans/crawl.py; this suite imports them, so twin and oracle cannot drift.
 
 The injected suffixes make RFC-4180 quoting LOAD-BEARING: embedded commas,
 embedded doubled quotes and boundary spaces must survive the write/read
@@ -11,7 +10,7 @@ the CSV bytes exist only between Spark's writer and Spark's reader."""
 
 from pyspark.sql import functions as F
 
-from unravelsports_spark.plans.corpus9 import (
+from unravelsports_spark.plans.crawl import (
     CSV_ROUNDTRIP_SQL,
     o18_csv_roundtrip,
 )
@@ -189,7 +188,7 @@ def test_o18_releases_tracked_caches_in_finally(spark):
     else the cached relation — backed by the just-deleted tmpdir —
     lingers until some later query boundary."""
     from unravelsports_spark.cache import _TRACKED, release_tracked
-    from unravelsports_spark.plans.corpus9 import o18_csv_roundtrip
+    from unravelsports_spark.plans.crawl import o18_csv_roundtrip
 
     release_tracked()
     o18_csv_roundtrip(spark, SF_CORRECT).collect()

@@ -1,11 +1,11 @@
 """Per-dimension embedding stats (operators/embstats.py) and the JSONL
 source boundary (sources/jsonl.py) — built round 10, driver-registered
-round 11 (plans/corpus7.py). The canonical oracle SQL moved there at
+round 11 (plans/retrieval.py, plans/crawl.py). The canonical oracle SQL moved there at
 registration; this test imports it so twin and oracle cannot drift."""
 
 from pyspark.sql import functions as F
 
-from unravelsports_spark.plans.corpus7 import EMB_DIM_STATS_SQL
+from unravelsports_spark.plans.retrieval import EMB_DIM_STATS_SQL
 
 from .conftest import SF_CORRECT
 

@@ -1,14 +1,13 @@
 """URL-frontier politeness planning (operators/frontier.py) — built round
 13, REGISTERED round 14 as `t_frontier_plan`. The canonical oracle SQL and
-query shape now live in plans/corpus10.py (the corpus7/8/9 registration
-discipline); this suite imports them, so twin and oracle cannot drift.
+query shape now live in plans/crawl.py; this suite imports them, so twin and oracle cannot drift.
 The oracle re-derives the identical (wave, slot) assignment with the same
 window arithmetic — both engines sort by md5(url), which is
 engine-independent."""
 
 from pyspark.sql import functions as F
 
-from unravelsports_spark.plans.corpus10 import (
+from unravelsports_spark.plans.crawl import (
     FRONTIER_SQL,
     t_frontier_plan as _frontier_query,
 )

@@ -1,5 +1,5 @@
 """Hamming-LSH near-dup mining (operators/hamming.py) — built round 10,
-driver-registered round 12 as `d_simhash_neardup` (plans/corpus8.py). The
+driver-registered round 12 as `d_simhash_neardup` (plans/dedup.py). The
 canonical twin SQL moved there at registration; this suite imports it and
 pins the pigeonhole/cap/validation contract edges."""
 

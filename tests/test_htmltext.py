@@ -1,5 +1,5 @@
 """HTML/markup-to-text extraction (operators/htmltext.py) — built round 12
-(VERDICT r11 #3), registered as `t_html_extract` (plans/corpus8.py). The
+(VERDICT r11 #3), registered as `t_html_extract` (plans/crawl.py). The
 canonical oracle lives in the registry; this suite imports it, pins the
 nasty contract edges cross-engine, and runs the full crawl-ingest
 composition (extract → normalize → boilerplate) end to end."""

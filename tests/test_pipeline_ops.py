@@ -406,7 +406,7 @@ def test_cdc_chunking_insertion_stability(spark):
     every later boundary. Also: chunk lengths partition the token count."""
     import random
 
-    from unravelsports_spark.plans.corpus4 import cdc_chunk_frame
+    from unravelsports_spark.plans.dedup import cdc_chunk_frame
 
     rng = random.Random(11)
     words = [f"w{rng.randint(0, 500)}" for _ in range(400)]
@@ -479,7 +479,7 @@ def test_perplexity_bucket_sample_matches_duckdb(spark, duck):
     exact integer keep counts."""
     from unravelsports_spark.operators.importance import perplexity_bucket_sample
     from unravelsports_spark.operators.retrieval import unigram_logprob
-    from unravelsports_spark.plans.corpus3 import _unigram_sql
+    from unravelsports_spark.plans.text import _unigram_sql
     from unravelsports_spark.session import read_table
 
     from .conftest import SF_CORRECT

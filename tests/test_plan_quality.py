@@ -63,7 +63,7 @@ def test_single_shuffle_for_model_kernel(spark):
 #: documented exception: s_ann_top_pairs probes via BroadcastNestedLoopJoin
 #: by design (tiny broadcast side). d_embedding_neardup left this set in
 #: round 5: the exact all-pairs query now runs block-pair fan-out
-#: (plans/pipeline.py:_allpairs_cosine_removed) — no CartesianProduct.
+#: (operators/similarity.py:_allpairs_cosine_removed) — no CartesianProduct.
 _ALLOW_CARTESIAN = {"s_ann_top_pairs"}
 
 _SWEEP = [

@@ -1,11 +1,11 @@
 """l-diversity audit (operators/privacy.py) and leakage-safe cluster splits
 (operators/corpus_splits.py) — built round 10, driver-registered round 11
-(plans/corpus7.py). The canonical oracle SQL moved there at registration;
+(plans/relational.py, plans/dedup.py). The canonical oracle SQL moved there at registration;
 these tests import it so twin and oracle cannot drift."""
 
 from pyspark.sql import functions as F
 
-from unravelsports_spark.plans.corpus7 import L_DIVERSITY_SQL
+from unravelsports_spark.plans.relational import L_DIVERSITY_SQL
 
 from .conftest import SF_CORRECT
 
@@ -67,10 +67,10 @@ def test_l_diversity_null_sensitive_is_one_value(spark):
 
 
 # the exact SQL twin for the `d_cluster_safe_split` registration — the
-# canonical string lives in plans/corpus7.py (recursive-CTE closure over
+# canonical string lives in plans/dedup.py (recursive-CTE closure over
 # the certified d_dup_clusters shape)
 def _split_audit_sql() -> str:
-    from unravelsports_spark.plans.corpus7 import _split_audit_sql as canon
+    from unravelsports_spark.plans.dedup import _split_audit_sql as canon
 
     return canon()
 

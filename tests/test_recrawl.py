@@ -1,8 +1,8 @@
 """Change-rate recrawl scheduling (operators/recrawl.py) — built round
 14, driver registration queued r15 (`t_recrawl_schedule`).
 T_RECRAWL_SQL verified here is the r15 oracle; `_recrawl_query` is the
-query shape that moves to the plans registry at registration (the
-corpus10 discipline). The oracle is EXACT SQL (the frontier style): both
+query shape that moves to the plans registry at registration,
+as the crawl queries' did. The oracle is EXACT SQL (the frontier style): both
 engines derive the identical change counts from the same lag window and
 the identical intervals from the same integer-DIV arithmetic — no
 floats, no ln, engine-portable by construction."""

@@ -1,12 +1,11 @@
 """Corpus release diff (operators/releasediff.py) — built round 12,
 REGISTERED round 13 as `d_release_diff`. The canonical oracle SQL and
-query shape now live in plans/corpus9.py (the corpus7/corpus8
-registration discipline); this suite imports them, so twin and oracle
+query shape now live in plans/dedup.py; this suite imports them, so twin and oracle
 cannot drift (r13 review #6: this file initially kept a private copy)."""
 
 from pyspark.sql import functions as F
 
-from unravelsports_spark.plans.corpus9 import (
+from unravelsports_spark.plans.dedup import (
     RELEASE_DIFF_SQL,
     d_release_diff as _diff_query,
 )

@@ -1,7 +1,6 @@
 """Robots Exclusion Protocol filtering (operators/robots.py) — built round
 13, REGISTERED round 14 as `t_robots_filter`. The canonical oracle SQL and
-query shape now live in plans/corpus10.py (the corpus7/8/9 registration
-discipline); this suite imports them, so twin and oracle cannot drift.
+query shape now live in plans/crawl.py; this suite imports them, so twin and oracle cannot drift.
 
 The oracle is CLOSED-FORM (the t_closeness hand-example style, certifiable
 at any scale): the robots bodies are synthesized per source in the query,
@@ -10,7 +9,7 @@ re-implementing the parser — a parser bug cannot hide in both engines."""
 
 from pyspark.sql import functions as F
 
-from unravelsports_spark.plans.corpus10 import (
+from unravelsports_spark.plans.crawl import (
     ROBOTS_FILTER_SQL,
     t_robots_filter as _robots_query,
 )

@@ -1,7 +1,6 @@
 """Sitemap ingestion (operators/sitemap.py) — built round 13, REGISTERED
 round 14 as `t_sitemap_extract`. The canonical oracle SQL and query shape
-now live in plans/corpus10.py (the corpus7/8/9 registration discipline);
-this suite imports them, so twin and oracle cannot drift. The oracle is
+now live in plans/crawl.py; this suite imports them, so twin and oracle cannot drift. The oracle is
 CLOSED-FORM (the robots style): it re-derives locs/lastmods from the same
 synthesis arithmetic rather than re-running the parser, so a parser bug
 cannot hide in both engines; engine behavior of the regex patterns
@@ -9,7 +8,7 @@ themselves is pinned by the hand-case battery below."""
 
 from pyspark.sql import functions as F
 
-from unravelsports_spark.plans.corpus10 import (
+from unravelsports_spark.plans.crawl import (
     SITEMAP_SQL,
     t_sitemap_extract as _sitemap_query,
 )

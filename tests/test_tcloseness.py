@@ -1,10 +1,9 @@
 """t-closeness audit (operators/privacy.py:t_closeness_report) — built
 round 12, REGISTERED round 13 as `a25_t_closeness`. The canonical oracle
-SQL and query shape now live in plans/corpus9.py (the corpus7/corpus8
-registration discipline); this suite imports them, so twin and oracle
+SQL and query shape now live in plans/relational.py; this suite imports them, so twin and oracle
 cannot drift."""
 
-from unravelsports_spark.plans.corpus9 import (
+from unravelsports_spark.plans.relational import (
     T_CLOSENESS_SQL,
     a25_t_closeness as _report,
 )

@@ -1,6 +1,6 @@
 """Unicode text normalization (operators/textnorm.py, built round 11 —
 VERDICT r10 #3). The NFC leg is driver-certified against DuckDB's
-nfc_normalize (plans/corpus7.py t_text_normalize); the NFKC/cleanup leg has
+nfc_normalize (plans/text.py t_text_normalize); the NFKC/cleanup leg has
 no DuckDB builtin, so it is pinned here by a VALUES twin (hardcoded
 expected strings) plus the before/after dedup-key delta the operator
 exists to provide."""
@@ -76,7 +76,7 @@ def test_normalize_str_independent_recompute():
     import unicodedata
 
     from unravelsports_spark.operators.textnorm import _CF_FORWARD, normalize_str
-    from unravelsports_spark.plans.corpus7 import _TEXTNORM_SUFFIXES
+    from unravelsports_spark.plans.text import _TEXTNORM_SUFFIXES
 
     def independent(s, form):
         out = []
@@ -162,7 +162,7 @@ def test_idempotent(spark):
     registered query's suffix corpus — normalized text is a fixed point,
     so re-running ingest canonicalization can never move fingerprints."""
     from unravelsports_spark.operators.textnorm import normalize_str
-    from unravelsports_spark.plans.corpus7 import _TEXTNORM_SUFFIXES
+    from unravelsports_spark.plans.text import _TEXTNORM_SUFFIXES
 
     for form in ("NFC", "NFKC"):
         for sfx in _TEXTNORM_SUFFIXES:

@@ -1,7 +1,6 @@
 """TFRecord / tf.Example boundary (sources/tfrecord.py) — built round 13,
 REGISTERED round 14 as `o20_tfrecord_roundtrip`. The canonical oracle SQL
-and query shape now live in plans/corpus10.py (the corpus7/8/9
-registration discipline); this suite imports them, so twin and oracle
+and query shape now live in plans/crawl.py; this suite imports them, so twin and oracle
 cannot drift. Documents round-trip byte-exactly through the real on-disk
 format (framing CRCs + tf.Example wire bytes); the injected corrupt shard
 is excluded from the rollup AND counted exactly once."""
@@ -10,7 +9,7 @@ import struct
 
 from pyspark.sql import functions as F
 
-from unravelsports_spark.plans.corpus10 import (
+from unravelsports_spark.plans.crawl import (
     TFRECORD_SQL,
     o20_tfrecord_roundtrip as _tfrecord_roundtrip_query,
 )

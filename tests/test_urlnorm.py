@@ -1,8 +1,8 @@
 """URL canonicalization (operators/urlnorm.py) — built round 14, driver
 registration queued r15 (`t_url_canonicalize`). T_URL_CANONICALIZE_SQL
 verified here is the r15 oracle; `_url_canonical_query` is the query shape
-that moves to the plans registry at registration (the corpus10
-discipline). The oracle is CLOSED-FORM (the robots style): the messy URL
+that moves to the plans registry at registration, as
+the crawl queries' did. The oracle is CLOSED-FORM (the robots style): the messy URL
 spellings are synthesized per class inside the query, so DuckDB states
 the hand-derived canonical form from the same synthesis arithmetic
 instead of re-implementing the canonicalizer — a normalizer bug cannot

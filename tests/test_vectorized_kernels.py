@@ -23,7 +23,8 @@ def _rand_vecs(n, dim, seed):
 def test_allpairs_cosine_matches_bruteforce(spark):
     """Block-pair fan-out == naive all-pairs (every pair exactly once,
     identical threshold decisions), across block counts including nb=1."""
-    from unravelsports_spark.plans.pipeline import _allpairs_cosine_removed, _dot_col
+    from unravelsports_spark.operators.similarity import _allpairs_cosine_removed
+    from unravelsports_spark.plans.dedup import _dot_col
 
     rows = _rand_vecs(61, 8, seed=3)
     e = spark.createDataFrame(rows, "vec_id long, v array<double>")
@@ -61,7 +62,8 @@ def test_allpairs_cosine_matches_bruteforce(spark):
 def test_bucket_cosine_handles_singletons_and_duplicates(spark):
     """Cross-table duplicate candidates are allowed (distinct downstream);
     singleton buckets yield nothing; pair decisions match the scalar form."""
-    from unravelsports_spark.plans.pipeline import _bucket_cosine_removed, _dot_col
+    from unravelsports_spark.operators.similarity import _bucket_cosine_removed
+    from unravelsports_spark.plans.dedup import _dot_col
 
     rows = _rand_vecs(20, 4, seed=9)
     e = spark.createDataFrame(rows, "vec_id long, v array<double>")
@@ -103,7 +105,7 @@ def test_bucket_cosine_handles_singletons_and_duplicates(spark):
 
 def _expression_sign_keys(e, planes, n_tables, bits_per_table):
     """{(vec_id, tbl): bucket} from the literal-array JVM sign-dot expression."""
-    from unravelsports_spark.plans.pipeline import _dot_col
+    from unravelsports_spark.plans.dedup import _dot_col
 
     def lit_dot(plane):
         return _dot_col(F.col("v"), F.array(*[F.lit(float(x)) for x in plane]))
@@ -124,7 +126,7 @@ def _expression_sign_keys(e, planes, n_tables, bits_per_table):
 
 def test_sign_lsh_keys_match_expression_form(spark):
     """The Arrow sign-dot bucket bits == the literal-array JVM expression."""
-    from unravelsports_spark.plans.pipeline import _sign_lsh_bev
+    from unravelsports_spark.operators.similarity import _sign_lsh_bev
 
     rows = _rand_vecs(40, 6, seed=11)
     e = spark.createDataFrame(rows, "vec_id long, v array<double>")
@@ -142,7 +144,8 @@ def test_bucket_cosine_partitioned_matches_grouped(spark):
     """partitions=N (repartition + per-partition pandas groupby) must emit
     the same removal multiset-up-to-distinct as the per-group applyInPandas
     path, for plain AND ledger (new_col) semantics, at several widths."""
-    from unravelsports_spark.plans.pipeline import _bucket_cosine_removed, _dot_col
+    from unravelsports_spark.operators.similarity import _bucket_cosine_removed
+    from unravelsports_spark.plans.dedup import _dot_col
 
     rows = _rand_vecs(60, 5, seed=21)
     e = spark.createDataFrame(rows, "vec_id long, v array<double>")
@@ -179,7 +182,8 @@ def test_bucket_cosine_partitioned_matches_grouped(spark):
 def test_sign_lsh_bev_matches_keys_plus_join(spark):
     """The fused bev kernel == expression-form keys + (v, n2) attach,
     bit-exact (same bucket bits, same fold-order self-dot)."""
-    from unravelsports_spark.plans.pipeline import _dot_col, _sign_lsh_bev
+    from unravelsports_spark.operators.similarity import _sign_lsh_bev
+    from unravelsports_spark.plans.dedup import _dot_col
 
     rows = _rand_vecs(40, 6, seed=11)
     e = spark.createDataFrame(rows, "vec_id long, v array<double>")
@@ -302,7 +306,7 @@ def test_doc_shingles_short_docs_and_distinct_modes(spark):
 def test_cosine_vs_refs_matches_expression_form(spark):
     """_cosine_vs_refs == the _dot_col cosine expression, bit-exact."""
     from unravelsports_spark.operators.similarity import _cosine_vs_refs
-    from unravelsports_spark.plans.pipeline import _cos_col
+    from unravelsports_spark.plans.dedup import _cos_col
 
     rows = _rand_vecs(30, 5, seed=33)
     e = spark.createDataFrame(rows, "vec_id long, v array<double>")

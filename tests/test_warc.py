@@ -1,9 +1,8 @@
 """WARC source/sink (sources/warc.py) — built round 12, REGISTERED round
 13 as `o19_warc_roundtrip`. The canonical oracle SQL and query shape now
-live in plans/corpus9.py (the corpus7/corpus8 registration discipline);
-this suite imports them, so twin and oracle cannot drift."""
+live in plans/crawl.py; this suite imports them, so twin and oracle cannot drift."""
 
-from unravelsports_spark.plans.corpus9 import (
+from unravelsports_spark.plans.crawl import (
     WARC_ROUNDTRIP_SQL,
     warc_roundtrip_frame as _warc_roundtrip_query,
 )
@@ -297,7 +296,7 @@ def test_codec_discarded_interpretation_work_is_charged():
 
 def test_write_warc_manifest_counts(spark):
     """The manifest contract the old in-query assert pinned (kept when the
-    query shape moved to plans/corpus9 per the STATUS r12 plan): summed
+    query shape moved to plans/crawl.py): summed
     n_records over the manifest equals the exported row count."""
     df = spark.createDataFrame(
         [(f"http://h.example/{i}", f"doc {i}".encode()) for i in range(17)],

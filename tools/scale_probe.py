@@ -111,7 +111,7 @@ def main() -> None:
     from unravelsports_spark.operators.retrieval import bm25_scores
     from unravelsports_spark.operators.sharding import shard_manifest
     from unravelsports_spark.operators.similarity import auto_bits_per_table
-    from unravelsports_spark.plans.corpus3 import semdedup_multitable_stats
+    from unravelsports_spark.plans.dedup import semdedup_multitable_stats
 
     spark = get_spark("scale-probe")
     spark.sparkContext.setLogLevel("ERROR")

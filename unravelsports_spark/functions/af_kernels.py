@@ -11,6 +11,7 @@ from __future__ import annotations
 import numpy as np
 
 from ..settings import AmericanFootballGraphSettings
+from .graph_features import compute_adjacency_matrix
 from .normalize import (
     normalize_between,
     normalize_distance,
@@ -36,22 +37,15 @@ def unit_vector_from_angle(value: np.ndarray, angle_radians: np.ndarray) -> np.n
 
 def compute_af_adjacency_matrix(settings: AmericanFootballGraphSettings, team: np.ndarray) -> np.ndarray:
     """K2: soccer adjacency minus ball_carrier support
-    (american_football/graphs/features/adjacency_matrix.py:7-43)."""
-    n = team.shape[0]
+    (american_football/graphs/features/adjacency_matrix.py:7-43): the
+    ``dense`` and ``split_by_team`` types with the ``ball`` connect type of
+    the shared soccer kernel."""
     atype = settings.adjacency_matrix_type
-    if atype == "dense":
-        adj = np.ones((n, n), dtype=np.int32)
-    elif atype == "split_by_team":
-        adj = (team[:, None] == team[None, :]).astype(np.int32)
-    else:
+    if atype not in ("dense", "split_by_team"):
         raise NotImplementedError(f"adjacency_matrix_type {atype!r} not supported for AF")
-    ctype = settings.adjacency_matrix_connect_type
-    if ctype == "ball":
-        ball_mask = (team[:, None] == settings.ball_id) | (team[None, :] == settings.ball_id)
-        adj = np.where(ball_mask, 1, adj)
-    elif ctype == "ball_carrier":
+    if settings.adjacency_matrix_connect_type == "ball_carrier":
         raise NotImplementedError("ball_carrier connect type is unsupported for AF (parity)")
-    return adj
+    return compute_adjacency_matrix(settings, team_id=team)
 
 
 def compute_af_node_features(d: dict, settings: AmericanFootballGraphSettings, graph_features=None):

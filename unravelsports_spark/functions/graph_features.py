@@ -93,15 +93,14 @@ def compute_adjacency_matrix(settings, **kw) -> np.ndarray:
     team = kw["team_id"]
     is_ball = team == settings.ball_id
     n = team.shape[-1]
-    owner = kw["ball_owning_team_id"][..., :1]
     atype = settings.adjacency_matrix_type
 
     if atype == "dense":
         adj = np.ones((*team.shape, n), dtype=np.int32)
     elif atype == "dense_ap":
-        adj = _outer(team == owner)
+        adj = _outer(team == kw["ball_owning_team_id"][..., :1])
     elif atype == "dense_dp":
-        adj = _outer(~is_ball & (team != owner))
+        adj = _outer(~is_ball & (team != kw["ball_owning_team_id"][..., :1]))
     elif atype == "split_by_team":
         adj = (team[..., :, None] == team[..., None, :]).astype(np.int32)
     elif atype == "delaunay":

@@ -8,7 +8,7 @@ Designed for 100 TB corpora:
 - the pairwise Jaccard join is bounded by LSH banding (candidates only meet
   inside a band bucket) instead of an all-pairs cross join;
 - all hashes are md5-hex→bigint, bit-identical across engines so every stage
-  has an exact DuckDB oracle (plans/pipeline.py).
+  has an exact DuckDB oracle (plans/dedup.py).
 """
 
 from __future__ import annotations

@@ -134,7 +134,7 @@ def extract_html_text(
 def html_text_sql(expr: str) -> str:
     """The IDENTICAL chain as DuckDB SQL over ``expr`` — the oracle
     builder (kept beside the operator so the two pattern lists are one
-    edit apart; plans/corpus8.py imports it, tests import both and a
+    edit apart; plans/crawl.py imports it, tests import both and a
     parity check pins that the pattern tables match)."""
     c = expr
     for pat in _BLOCK_PATTERNS:

@@ -67,7 +67,7 @@ def shard_precompute(df: DataFrame, text_col: str = "text") -> DataFrame:
     Both columns are pure per-row functions of ``text_col``, so computing
     them before a dedup ``min_by`` / semantic anti-join yields the identical
     values on every surviving row — same discipline as scoring quality /
-    langid before the dedup aggregate (plans/corpus3.py)."""
+    langid before the dedup aggregate (plans/text.py)."""
     return df.withColumn(SKEY_PRE, _skey(text_col)).withColumn(
         NTOK_PRE, _ntokens(text_col)
     )

@@ -2,7 +2,7 @@
 counting, quality scoring, n-gram/stopword language ID, document
 fingerprinting. All pure Catalyst expressions (whole-stage codegen, no
 Python in the hot path); every operator has an exact DuckDB oracle in
-plans/pipeline.py.
+plans/text.py.
 """
 
 from __future__ import annotations

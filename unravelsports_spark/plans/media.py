@@ -1,0 +1,1039 @@
+"""Media queries: image, GIF, audio and video decode and feature extraction
+(perceptual hashes, spectra, MFCCs, activity segments, scene cuts).
+
+The payloads are synthesized from doc_id arithmetic inside each query, so
+most oracles derive the expected detector output in closed form, certifying
+the codecs and detectors end to end on integer-exact fields; the rest are
+literal VALUES pins of the test-verified operators.
+"""
+
+from __future__ import annotations
+
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from ..session import read_table, widen_narrow_scan
+from . import query
+
+
+# ---------------------------------------------------------------------------
+# multimodal plumbing (operators/multimodal.py): binary payload columns
+# decoded via Arrow-batched mapInPandas. The deterministic hash pseudo-decoder
+# makes even this path oracle-checkable: DuckDB recomputes the same md5-derived
+# metadata from the payload bytes.
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_decode_stats",
+    oracle="""
+    WITH m AS (SELECT source, md5(text) AS h FROM documents),
+    d AS (SELECT source,
+                 64 + CAST(('0x' || substring(h, 1, 2)) AS INT) % 64 AS w,
+                 64 + CAST(('0x' || substring(h, 3, 2)) AS INT) % 64 AS ht
+          FROM m)
+    SELECT source, COUNT(*) AS n_images,
+           CAST(SUM(w) AS BIGINT) AS sum_width,
+           CAST(SUM(ht) AS BIGINT) AS sum_height,
+           MIN(w) AS min_width, MAX(ht) AS max_height
+    FROM d GROUP BY source
+    """,
+)
+def mm_decode_stats(spark, sf_dir):
+    """Multimodal decode pipeline end-to-end: text bytes stand in for image
+    payloads (binary column), mapInPandas fake-decode derives (width, height)
+    from the payload hash, and the aggregate never touches the blob column
+    after decode. A real codec slots into the same plumbing unchanged."""
+    from ..operators.multimodal import decode_images
+
+    docs = read_table(spark, sf_dir, "documents")
+    media = docs.select("source", F.encode("text", "UTF-8").alias("payload"))
+    decoded = decode_images(media, fake=True)
+    return decoded.groupBy("source").agg(
+        F.count("*").alias("n_images"),
+        F.sum("dec_width").alias("sum_width"),
+        F.sum("dec_height").alias("sum_height"),
+        F.min("dec_width").alias("min_width"),
+        F.max("dec_height").alias("max_height"),
+    )
+
+
+@query(
+    "mm_decode_real",
+    oracle="""
+    WITH d AS (SELECT doc_id, source,
+                      4 + doc_id % 13 AS w, 4 + doc_id % 7 AS h,
+                      doc_id % 256 AS c
+               FROM documents)
+    SELECT source, COUNT(*) AS n_images,
+           CAST(SUM(w) AS BIGINT) AS sum_width,
+           CAST(SUM(h) AS BIGINT) AS sum_height,
+           CAST(SUM(c) AS BIGINT) AS sum_color
+    FROM d GROUP BY source
+    """,
+)
+def mm_decode_real(spark, sf_dir):
+    """REAL codec end-to-end: synthesize a PNG per document (solid color
+    ``doc_id % 256``, size ``(4 + doc_id % 13) × (4 + doc_id % 7)``) with the
+    pure-Python encoder in one mapInPandas stage, decode it back with
+    ``decode_images(fake=False)`` (functions/imagecodec.py), and aggregate the
+    decoded metadata. The oracle recomputes the same values from doc_id
+    arithmetic — any codec bug (dimensions, pixel values, filter handling)
+    breaks the hash match. ``round(mean_pixel*255)`` recovers the exact solid
+    color, so the aggregate is integer-exact."""
+    import numpy as np
+    import pandas as pd
+    from ..functions.imagecodec import encode_png
+    from ..operators.multimodal import decode_images
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
+
+    def synth(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["payload"] = [
+                encode_png(
+                    np.full((4 + int(i) % 7, 4 + int(i) % 13, 3), int(i) % 256, np.uint8),
+                    compress_level=1,
+                )
+                for i in pdf["doc_id"]
+            ]
+            yield pdf
+
+    media = docs.mapInPandas(
+        synth,
+        T.StructType(docs.schema.fields + [T.StructField("payload", T.BinaryType())]),
+    )
+    decoded = decode_images(media, fake=False)
+    return decoded.groupBy("source").agg(
+        F.count("*").alias("n_images"),
+        F.sum("dec_width").alias("sum_width"),
+        F.sum("dec_height").alias("sum_height"),
+        F.sum(F.round(F.col("mean_pixel") * 255.0).cast("long")).alias("sum_color"),
+    )
+
+
+@query(
+    "mm_image_dhash_dedup",
+    oracle="""
+    WITH g AS (SELECT doc_id, doc_id % 25 AS grp FROM documents),
+    hh AS (SELECT grp,
+                  CAST(('0x' || substring(md5(CAST(grp AS VARCHAR)), 1, 15))
+                       AS BIGINT) AS dhash
+           FROM (SELECT DISTINCT grp FROM g)),
+    j AS (SELECT hh.dhash, g.doc_id FROM g JOIN hh USING (grp))
+    SELECT dhash, COUNT(*) AS n_docs, MIN(doc_id) AS min_doc_id
+    FROM j GROUP BY dhash ORDER BY dhash
+    """,
+)
+def mm_image_dhash_dedup(spark, sf_dir):
+    """Image near-duplicate dedup via perceptual difference hash, REAL
+    codec end-to-end: synthesize a 32×36 PNG per document whose 8×9
+    block-brightness grid encodes a ±8 random walk driven by 60 md5 bits
+    of the doc's group id (doc_id % 25), plus per-document ±2 pixel
+    jitter so every PNG's bytes are unique. dHash's block means absorb
+    the jitter (|mean jitter| ≤ 2 < 4 = half the 8-level gradient), so
+    each group's visually-near-identical images collapse onto ONE hash —
+    and that hash is analytically int(md5(grp)[:15], 16), which the
+    oracle recomputes in SQL. Any defect in the PNG round-trip, the
+    block-mean downsample, or the bit packing breaks the hash match.
+
+    Scale shape: one mapInPandas synth pass + the image_dhash Arrow pass
+    (operators/multimodal.py), then a combinable groupBy on the 64-bit
+    key — the image-dedup mirror of d_simhash."""
+    import hashlib
+
+    import numpy as np
+    from ..functions.imagecodec import encode_png
+    from ..operators.multimodal import image_dhash
+
+    docs = widen_narrow_scan(read_table(spark, sf_dir, "documents").select("doc_id"))
+
+    def synth(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            pdf = pdf.copy()
+            payloads = []
+            for i in pdf["doc_id"]:
+                i = int(i)
+                g = i % 25
+                v = int(hashlib.md5(str(g).encode()).hexdigest()[:15], 16)
+                bits = [0, 0, 0, 0] + [(v >> (59 - j)) & 1 for j in range(60)]
+                # brightness walk per row: start 128, step ±8 per bit
+                grid = np.empty((8, 9), np.int64)
+                grid[:, 0] = 128
+                for r in range(8):
+                    for c in range(8):
+                        step = 8 if bits[r * 8 + c] else -8
+                        grid[r, c + 1] = grid[r, c] + step
+                img = np.repeat(np.repeat(grid, 4, axis=0), 4, axis=1)
+                idx = np.arange(img.size, dtype=np.int64).reshape(img.shape)
+                jitter = (i * 1000003 + idx * 97) % 5 - 2
+                img = np.clip(img + jitter, 0, 255).astype(np.uint8)
+                payloads.append(
+                    encode_png(np.repeat(img[:, :, None], 3, axis=2), compress_level=1)
+                )
+            pdf["payload"] = payloads
+            yield pdf
+
+    media = docs.mapInPandas(
+        synth,
+        T.StructType(docs.schema.fields + [T.StructField("payload", T.BinaryType())]),
+    )
+    return (
+        image_dhash(media)
+        .groupBy("dhash")
+        .agg(F.count("*").alias("n_docs"), F.min("doc_id").alias("min_doc_id"))
+        # r15: terminal no-LIMIT sort removed (guide §2.4) — the driver
+        # comparator and every repo harness sort before hashing (proven by
+        # the 60k-row w2_partitioned_min certifying with no ORDER BY on
+        # either side), so the rangepartitioning exchange + global sort
+        # bought nothing at any scale
+    )
+
+
+@query(
+    "mm_audio_real",
+    oracle=r"""
+    WITH base AS (SELECT doc_id, source, 200 + doc_id % 50 AS n FROM documents),
+    samples AS (
+      SELECT doc_id, source, n, k,
+             ((doc_id * 31 + k * 7) % 2001) - 1000 AS v
+      FROM base, LATERAL unnest(range(0, n)) AS t(k)),
+    feats AS (
+      SELECT doc_id, source,
+             COUNT(*) AS n_samples,
+             MAX(ABS(v)) AS peak,
+             SUM(v * v) AS energy,
+             SUM(CASE WHEN k > 0 AND ((v < 0) <> (lagv < 0)) THEN 1 ELSE 0 END) AS zc
+      FROM (SELECT *, LAG(v) OVER (PARTITION BY doc_id ORDER BY k) AS lagv FROM samples)
+      GROUP BY doc_id, source)
+    SELECT source, COUNT(*) AS n_clips,
+           CAST(SUM(n_samples) AS BIGINT) AS total_samples,
+           CAST(SUM(n_samples * 1000 // 16000) AS BIGINT) AS total_ms,
+           CAST(MAX(peak) AS BIGINT) AS max_peak,
+           CAST(SUM(energy) AS BIGINT) AS total_energy,
+           CAST(SUM(zc) AS BIGINT) AS total_zero_crossings
+    FROM feats GROUP BY source
+    """,
+)
+def mm_audio_real(spark, sf_dir):
+    """REAL audio codec end-to-end: synthesize a 16-bit PCM WAV per document
+    (sample k = ((doc_id·31 + k·7) mod 2001) − 1000, length 200 + doc_id%50)
+    with the pure-Python encoder, decode it back with
+    functions/audiocodec.decode_wav inside extract_audio_features, and roll
+    up integer-exact descriptors. The oracle regenerates the identical sample
+    series in SQL — any RIFF/PCM bug breaks the hash match."""
+    import numpy as np
+    from ..functions.audiocodec import encode_wav
+    from ..operators.multimodal import extract_audio_features
+
+    docs = read_table(spark, sf_dir, "documents").select("doc_id", "source")
+
+    def synth(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            payloads = []
+            for i in pdf["doc_id"]:
+                n = 200 + int(i) % 50
+                k = np.arange(n, dtype=np.int64)
+                v = ((int(i) * 31 + k * 7) % 2001) - 1000
+                payloads.append(encode_wav(v.astype(np.int16), 16_000))
+            pdf["payload"] = payloads
+            yield pdf
+
+    media = docs.mapInPandas(
+        synth,
+        T.StructType(docs.schema.fields + [T.StructField("payload", T.BinaryType())]),
+    )
+    feats = extract_audio_features(media)
+    return feats.groupBy("source").agg(
+        F.count("*").alias("n_clips"),
+        F.sum("n_samples").alias("total_samples"),
+        F.sum("duration_ms").alias("total_ms"),
+        F.max("peak").alias("max_peak"),
+        F.sum("energy").alias("total_energy"),
+        F.sum("zero_crossings").alias("total_zero_crossings"),
+    )
+
+
+@query(
+    "mm_video_real",
+    oracle="""
+    WITH d AS (SELECT doc_id FROM documents WHERE doc_id % 25 = 0),
+    f AS (
+      SELECT doc_id,
+             unnest(range(0, 2 + doc_id % 4, 2)) AS frame_index
+      FROM d
+    )
+    SELECT doc_id, CAST(frame_index AS INT) AS frame_index,
+           CAST(16 + doc_id % 8 AS INT) AS frame_width,
+           CAST(12 + doc_id % 4 AS INT) AS frame_height
+    FROM f
+    """,
+)
+def mm_video_real(spark, sf_dir):
+    """REAL video pipeline, exact oracle on the integer metadata: per doc a
+    genuine MJPEG-AVI clip is muxed in an Arrow batch stage (frame count /
+    dims derived from doc_id arithmetic), then `sample_avi_frames` parses
+    the container, samples every 2nd frame, and DECODES each sampled JPEG —
+    the emitted width/height come from the decoder (SOF0), so the oracle
+    (which recomputes the expected geometry in SQL) certifies container
+    parse + JPEG decode end-to-end. frame_mean is excluded: JPEG DC
+    quantization makes it near- but not bit-exact."""
+    import pandas as pd
+
+    from pyspark.sql import types as T
+
+    from ..functions.jpegcodec import encode_jpeg
+    from ..operators.multimodal import sample_avi_frames
+
+    # the per-row AVI synth + frame resample below is CPU-bound Python; a
+    # sub-4MB documents scan is ONE split, which would serialize the whole
+    # kernel on a single task (guide §2: spread CPU-bound stages; no-op on
+    # a wide cluster scan)
+    d = widen_narrow_scan(
+        read_table(spark, sf_dir, "documents").filter(F.col("doc_id") % 25 == 0).select("doc_id")
+    )
+
+    def build(batches):
+        import numpy as np
+
+        from ..sources.avi import write_mjpeg_avi
+        import os, tempfile
+
+        for pdf in batches:
+            payloads = []
+            for doc_id in pdf["doc_id"]:
+                n = 2 + int(doc_id) % 4
+                w, h = 16 + int(doc_id) % 8, 12 + int(doc_id) % 4
+                frames = [
+                    encode_jpeg(np.full((h, w, 3), (i * 10) % 200, np.uint8), 95)
+                    for i in range(n)
+                ]
+                fd, path = tempfile.mkstemp(suffix=".avi")
+                os.close(fd)
+                write_mjpeg_avi(path, frames, w, h, fps=10)
+                with open(path, "rb") as fh:
+                    payloads.append(fh.read())
+                os.unlink(path)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    clips = d.mapInPandas(
+        build,
+        T.StructType(
+            [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+        ),
+    )
+    return sample_avi_frames(clips, every_k=2).select(
+        "doc_id", "frame_index", "frame_width", "frame_height"
+    )
+
+
+@query(
+    "mm_gif_real",
+    oracle="""
+    WITH d AS (SELECT doc_id, source,
+                      3 + doc_id % 11 AS w, 3 + doc_id % 5 AS h,
+                      (doc_id * 37) % 256 AS c
+               FROM documents WHERE doc_id % 5 = 0)
+    SELECT source, COUNT(*) AS n_images,
+           CAST(SUM(w) AS BIGINT) AS sum_width,
+           CAST(SUM(h) AS BIGINT) AS sum_height,
+           CAST(SUM(c) AS BIGINT) AS sum_color
+    FROM d GROUP BY source
+    """,
+)
+def mm_gif_real(spark, sf_dir):
+    """REAL GIF codec end-to-end (mirror of mm_decode_real for the LZW
+    path): synthesize a solid-color GIF per document, decode through the
+    shared multimodal path, aggregate decoded metadata. GIF is lossless for
+    palettized content so round(mean*255) recovers the exact color —
+    integer-exact oracle certifying LZW encode+decode, palette handling and
+    dispatch."""
+    import numpy as np
+    import pandas as pd
+
+    from pyspark.sql import types as T
+
+    from ..functions.gifcodec import encode_gif
+    from ..operators.multimodal import decode_images
+
+    docs = (
+        read_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 5 == 0)
+        .select("doc_id", "source")
+    )
+
+    def synth(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["payload"] = [
+                encode_gif(
+                    np.full((3 + int(i) % 5, 3 + int(i) % 11, 3), (int(i) * 37) % 256, np.uint8)
+                )
+                for i in pdf["doc_id"]
+            ]
+            yield pdf
+
+    media = docs.mapInPandas(
+        synth,
+        T.StructType(docs.schema.fields + [T.StructField("payload", T.BinaryType())]),
+    )
+    dec_df = decode_images(media, fake=False)
+    return dec_df.groupBy("source").agg(
+        F.count("*").alias("n_images"),
+        F.sum("dec_width").cast("bigint").alias("sum_width"),
+        F.sum("dec_height").cast("bigint").alias("sum_height"),
+        F.sum(F.round(F.col("mean_pixel") * 255).cast("bigint")).alias("sum_color"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# multimodal: real-DSP spectral certification + pHash twin
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_audio_spectral",
+    oracle="""
+    WITH d AS (SELECT doc_id, 100 + (doc_id % 18) * 50 AS f FROM documents)
+    SELECT CAST(f AS DOUBLE) AS dominant_hz,
+           COUNT(*) AS n_clips,
+           CAST(f AS DOUBLE) AS min_rolloff_hz,
+           CAST(f AS DOUBLE) AS max_rolloff_hz
+    FROM d GROUP BY f
+    """,
+)
+def mm_audio_spectral(spark, sf_dir):
+    """REAL spectral DSP end-to-end: synthesize a 1-second int16 pure tone
+    per document at f = 100 + (doc_id % 18)*50 Hz (rate 2000 → 1 Hz bins,
+    every tone exactly on a bin), run the WAV encode → decode → rFFT
+    pipeline (operators/multimodal.audio_spectral_features), and group by
+    the MEASURED dominant frequency. The oracle regenerates f analytically
+    — the hash match certifies that argmax-bin and 85%-rolloff-bin both
+    recover the synthesized frequency exactly for every clip (min = max =
+    f within each group; a single wrong clip splits a group). Centroid and
+    flatness are noise-floor-sensitive under int16 quantization (~0.03 Hz
+    centroid shift) and are covered by tests, not the hash."""
+    import numpy as np
+    from ..functions.audiocodec import encode_wav
+    from ..operators.multimodal import audio_spectral_features
+
+    # CPU-bound codec/DSP kernel over a single-split scan: widen so the
+    # Arrow pass parallelizes (no-op on a wide cluster scan)
+    docs = widen_narrow_scan(read_table(spark, sf_dir, "documents").select("doc_id"))
+    rate = 2000
+
+    def synth(batches):
+        t = np.arange(rate)
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["payload"] = [
+                encode_wav(
+                    np.round(
+                        10_000
+                        * np.sin(2 * np.pi * (100 + int(i) % 18 * 50) * t / rate)
+                    ).astype(np.int16),
+                    rate,
+                )
+                for i in pdf["doc_id"]
+            ]
+            yield pdf
+
+    media = docs.mapInPandas(
+        synth,
+        T.StructType(docs.schema.fields + [T.StructField("payload", T.BinaryType())]),
+    )
+    feats = audio_spectral_features(media)
+    return feats.groupBy("dominant_hz").agg(
+        F.count("*").alias("n_clips"),
+        F.min("rolloff85_hz").alias("min_rolloff_hz"),
+        F.max("rolloff85_hz").alias("max_rolloff_hz"),
+    )
+
+
+@query(
+    "mm_image_phash",
+    oracle="""
+    SELECT * FROM (VALUES
+      (CAST(0 AS BIGINT), CAST(-796639149958253559 AS BIGINT)),
+      (CAST(1 AS BIGINT), CAST(-2748565064733148377 AS BIGINT)),
+      (CAST(2 AS BIGINT), CAST(-3056751518483616982 AS BIGINT)),
+      (CAST(3 AS BIGINT), CAST(14574818227059713 AS BIGINT)),
+      (CAST(4 AS BIGINT), CAST(7404381586088336595 AS BIGINT)),
+      (CAST(5 AS BIGINT), CAST(1757094836499081098 AS BIGINT)),
+      (CAST(6 AS BIGINT), CAST(-4482550311305827990 AS BIGINT)),
+      (CAST(7 AS BIGINT), CAST(3097451047555205606 AS BIGINT)),
+      (CAST(8 AS BIGINT), CAST(5767018255185975436 AS BIGINT)),
+      (CAST(9 AS BIGINT), CAST(-196931230679899493 AS BIGINT)),
+      (CAST(10 AS BIGINT), CAST(3729145816445636510 AS BIGINT)),
+      (CAST(11 AS BIGINT), CAST(5926349089983706285 AS BIGINT)),
+      (CAST(12 AS BIGINT), CAST(-6359900924491115484 AS BIGINT)),
+      (CAST(13 AS BIGINT), CAST(-3406265419990394423 AS BIGINT)),
+      (CAST(14 AS BIGINT), CAST(-7702171443849735555 AS BIGINT)),
+      (CAST(15 AS BIGINT), CAST(-2456645603371056727 AS BIGINT)),
+      (CAST(16 AS BIGINT), CAST(-5611665082695013645 AS BIGINT)),
+      (CAST(17 AS BIGINT), CAST(-6491947601932246307 AS BIGINT)),
+      (CAST(18 AS BIGINT), CAST(5650025742190420434 AS BIGINT)),
+      (CAST(19 AS BIGINT), CAST(5343256111693837224 AS BIGINT)),
+      (CAST(20 AS BIGINT), CAST(300480151615434665 AS BIGINT)),
+      (CAST(21 AS BIGINT), CAST(8091846354677264241 AS BIGINT)),
+      (CAST(22 AS BIGINT), CAST(-2654914160891359456 AS BIGINT)),
+      (CAST(23 AS BIGINT), CAST(-5263113540442315191 AS BIGINT)),
+      (CAST(24 AS BIGINT), CAST(-7204432637901251986 AS BIGINT))
+    ) AS t(grp, phash)
+    """,
+)
+def mm_image_phash(spark, sf_dir):
+    """Perceptual-hash (DCT pHash) VALUES twin: each document synthesizes
+    the deterministic 64x64 PNG of its group (grp = doc_id % 25; pixel
+    (r, c) = (a·r + b·c + c2·r·c + d) mod 256 with a,b,c2,d from
+    md5(grp)), the REAL codec + block-mean + DCT-II + median-threshold
+    pipeline hashes it, and the query returns the 25 DISTINCT
+    (grp, phash) pairs — sf-independent, so the oracle is a literal
+    snapshot from the test-verified operator (brightness-invariance and
+    discrimination are pinned in tests/test_imagecodec.py). Any defect in
+    the PNG round-trip, the 32x32 downsample, the cosine basis, or the
+    bit packing moves at least one of the 25 hashes."""
+    import hashlib
+
+    import numpy as np
+    from ..functions.imagecodec import encode_png
+    from ..operators.multimodal import image_phash
+
+    # CPU-bound codec/DSP kernel over a single-split scan: widen so the
+    # Arrow pass parallelizes (no-op on a wide cluster scan)
+    docs = widen_narrow_scan(read_table(spark, sf_dir, "documents").select("doc_id"))
+
+    def synth(batches):
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["grp"] = [int(i) % 25 for i in pdf["doc_id"]]
+            payloads = []
+            for g in pdf["grp"]:
+                h = hashlib.md5(str(int(g)).encode()).digest()
+                a, b, c2, d = h[0], h[1], h[2], h[3]
+                r = np.arange(64, dtype=np.int64).reshape(-1, 1)
+                c = np.arange(64, dtype=np.int64).reshape(1, -1)
+                img = ((a * r + b * c + c2 * r * c + d) % 256).astype(np.uint8)
+                payloads.append(
+                    encode_png(np.repeat(img[:, :, None], 3, axis=2), compress_level=1)
+                )
+            pdf["payload"] = payloads
+            yield pdf
+
+    media = docs.mapInPandas(
+        synth,
+        T.StructType(
+            docs.schema.fields
+            + [T.StructField("grp", T.LongType()), T.StructField("payload", T.BinaryType())]
+        ),
+    )
+    return image_phash(media).select("grp", "phash").distinct()
+
+
+# ---------------------------------------------------------------------------
+# MFCC front end (operators/multimodal.py audio_mfcc): tone VALUES twin
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_audio_mfcc",
+    oracle="""
+    SELECT * FROM (VALUES
+      (CAST(0 AS BIGINT), CAST(0 AS BIGINT), CAST(36.487918 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(1 AS BIGINT), CAST(19.890968 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(2 AS BIGINT), CAST(15.492113 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(3 AS BIGINT), CAST(3.354768 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(4 AS BIGINT), CAST(-2.529542 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(5 AS BIGINT), CAST(-7.488191 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(6 AS BIGINT), CAST(-12.398986 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(7 AS BIGINT), CAST(-11.134695 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(8 AS BIGINT), CAST(-12.575497 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(9 AS BIGINT), CAST(-7.766681 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(10 AS BIGINT), CAST(-0.662974 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(11 AS BIGINT), CAST(-2.88941 AS DOUBLE)),
+      (CAST(0 AS BIGINT), CAST(12 AS BIGINT), CAST(1.876315 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(0 AS BIGINT), CAST(36.417994 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(1 AS BIGINT), CAST(15.042658 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(2 AS BIGINT), CAST(6.230649 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(3 AS BIGINT), CAST(-5.505266 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(4 AS BIGINT), CAST(-11.47965 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(5 AS BIGINT), CAST(-13.225172 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(6 AS BIGINT), CAST(-10.218383 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(7 AS BIGINT), CAST(-3.836819 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(8 AS BIGINT), CAST(2.296218 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(9 AS BIGINT), CAST(6.497235 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(10 AS BIGINT), CAST(7.01524 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(11 AS BIGINT), CAST(6.875886 AS DOUBLE)),
+      (CAST(1 AS BIGINT), CAST(12 AS BIGINT), CAST(3.119347 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(0 AS BIGINT), CAST(36.331166 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(1 AS BIGINT), CAST(11.997276 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(2 AS BIGINT), CAST(-1.180367 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(3 AS BIGINT), CAST(-13.531536 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(4 AS BIGINT), CAST(-14.233957 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(5 AS BIGINT), CAST(-6.869796 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(6 AS BIGINT), CAST(3.880027 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(7 AS BIGINT), CAST(10.044386 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(8 AS BIGINT), CAST(8.051441 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(9 AS BIGINT), CAST(2.032192 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(10 AS BIGINT), CAST(-4.130761 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(11 AS BIGINT), CAST(-7.862178 AS DOUBLE)),
+      (CAST(2 AS BIGINT), CAST(12 AS BIGINT), CAST(-6.066194 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(0 AS BIGINT), CAST(37.491909 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(1 AS BIGINT), CAST(10.265167 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(2 AS BIGINT), CAST(-9.249992 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(3 AS BIGINT), CAST(-19.192276 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(4 AS BIGINT), CAST(-11.090309 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(5 AS BIGINT), CAST(6.058039 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(6 AS BIGINT), CAST(14.231209 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(7 AS BIGINT), CAST(6.411439 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(8 AS BIGINT), CAST(-3.105485 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(9 AS BIGINT), CAST(-9.263301 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(10 AS BIGINT), CAST(-5.462848 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(11 AS BIGINT), CAST(2.271107 AS DOUBLE)),
+      (CAST(3 AS BIGINT), CAST(12 AS BIGINT), CAST(5.758888 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(0 AS BIGINT), CAST(35.192168 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(1 AS BIGINT), CAST(6.100125 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(2 AS BIGINT), CAST(-11.821964 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(3 AS BIGINT), CAST(-15.302454 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(4 AS BIGINT), CAST(0.847668 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(5 AS BIGINT), CAST(12.906372 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(6 AS BIGINT), CAST(6.82043 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(7 AS BIGINT), CAST(-5.073795 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(8 AS BIGINT), CAST(-10.093365 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(9 AS BIGINT), CAST(-0.960103 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(10 AS BIGINT), CAST(8.143437 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(11 AS BIGINT), CAST(5.690999 AS DOUBLE)),
+      (CAST(4 AS BIGINT), CAST(12 AS BIGINT), CAST(-1.547095 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(0 AS BIGINT), CAST(32.090226 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(1 AS BIGINT), CAST(-0.230638 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(2 AS BIGINT), CAST(-18.0087 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(3 AS BIGINT), CAST(-13.365984 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(4 AS BIGINT), CAST(7.930687 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(5 AS BIGINT), CAST(10.711513 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(6 AS BIGINT), CAST(-2.33562 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(7 AS BIGINT), CAST(-10.189209 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(8 AS BIGINT), CAST(-3.944618 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(9 AS BIGINT), CAST(8.55094 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(10 AS BIGINT), CAST(7.523979 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(11 AS BIGINT), CAST(-5.526601 AS DOUBLE)),
+      (CAST(5 AS BIGINT), CAST(12 AS BIGINT), CAST(-6.363163 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(0 AS BIGINT), CAST(34.531282 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(1 AS BIGINT), CAST(-0.915521 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(2 AS BIGINT), CAST(-16.376425 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(3 AS BIGINT), CAST(-5.344985 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(4 AS BIGINT), CAST(14.369887 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(5 AS BIGINT), CAST(6.991107 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(6 AS BIGINT), CAST(-9.126722 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(7 AS BIGINT), CAST(-6.739437 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(8 AS BIGINT), CAST(7.806567 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(9 AS BIGINT), CAST(7.867346 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(10 AS BIGINT), CAST(-3.426726 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(11 AS BIGINT), CAST(-6.855792 AS DOUBLE)),
+      (CAST(6 AS BIGINT), CAST(12 AS BIGINT), CAST(1.772471 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(0 AS BIGINT), CAST(36.290843 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(1 AS BIGINT), CAST(-4.223792 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(2 AS BIGINT), CAST(-19.859595 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(3 AS BIGINT), CAST(2.057181 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(4 AS BIGINT), CAST(16.251495 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(5 AS BIGINT), CAST(-4.178556 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(6 AS BIGINT), CAST(-13.029082 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(7 AS BIGINT), CAST(5.891215 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(8 AS BIGINT), CAST(10.637463 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(9 AS BIGINT), CAST(-5.281012 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(10 AS BIGINT), CAST(-6.952694 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(11 AS BIGINT), CAST(3.990853 AS DOUBLE)),
+      (CAST(7 AS BIGINT), CAST(12 AS BIGINT), CAST(4.54406 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(0 AS BIGINT), CAST(33.302453 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(1 AS BIGINT), CAST(-6.679067 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(2 AS BIGINT), CAST(-14.956155 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(3 AS BIGINT), CAST(9.630999 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(4 AS BIGINT), CAST(10.70371 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(5 AS BIGINT), CAST(-11.127537 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(6 AS BIGINT), CAST(-2.83817 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(7 AS BIGINT), CAST(11.885182 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(8 AS BIGINT), CAST(-3.053132 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(9 AS BIGINT), CAST(-8.76432 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(10 AS BIGINT), CAST(4.556122 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(11 AS BIGINT), CAST(4.45744 AS DOUBLE)),
+      (CAST(8 AS BIGINT), CAST(12 AS BIGINT), CAST(-6.41578 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(0 AS BIGINT), CAST(33.665928 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(1 AS BIGINT), CAST(-7.861598 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(2 AS BIGINT), CAST(-12.300951 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(3 AS BIGINT), CAST(13.108257 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(4 AS BIGINT), CAST(3.373541 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(5 AS BIGINT), CAST(-12.904862 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(6 AS BIGINT), CAST(5.366086 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(7 AS BIGINT), CAST(7.232404 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(8 AS BIGINT), CAST(-9.765569 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(9 AS BIGINT), CAST(0.697302 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(10 AS BIGINT), CAST(8.886151 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(11 AS BIGINT), CAST(-5.196939 AS DOUBLE)),
+      (CAST(9 AS BIGINT), CAST(12 AS BIGINT), CAST(-3.021334 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(0 AS BIGINT), CAST(32.551296 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(1 AS BIGINT), CAST(-8.207154 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(2 AS BIGINT), CAST(-10.6255 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(3 AS BIGINT), CAST(15.216097 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(4 AS BIGINT), CAST(-2.404643 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(5 AS BIGINT), CAST(-11.055529 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(6 AS BIGINT), CAST(11.770643 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(7 AS BIGINT), CAST(-3.134284 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(8 AS BIGINT), CAST(-7.438785 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(9 AS BIGINT), CAST(9.251241 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(10 AS BIGINT), CAST(0.700271 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(11 AS BIGINT), CAST(-8.328342 AS DOUBLE)),
+      (CAST(10 AS BIGINT), CAST(12 AS BIGINT), CAST(5.077566 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(0 AS BIGINT), CAST(33.152237 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(1 AS BIGINT), CAST(-10.446863 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(2 AS BIGINT), CAST(-7.058138 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(3 AS BIGINT), CAST(15.103061 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(4 AS BIGINT), CAST(-9.207294 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(5 AS BIGINT), CAST(-3.449891 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(6 AS BIGINT), CAST(11.767511 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(7 AS BIGINT), CAST(-9.5602 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(8 AS BIGINT), CAST(-0.534711 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(9 AS BIGINT), CAST(7.469058 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(10 AS BIGINT), CAST(-8.083776 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(11 AS BIGINT), CAST(1.820473 AS DOUBLE)),
+      (CAST(11 AS BIGINT), CAST(12 AS BIGINT), CAST(5.711853 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(0 AS BIGINT), CAST(34.239793 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(1 AS BIGINT), CAST(-15.847683 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(2 AS BIGINT), CAST(-5.317131 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(3 AS BIGINT), CAST(15.596353 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(4 AS BIGINT), CAST(-13.742019 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(5 AS BIGINT), CAST(2.825189 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(6 AS BIGINT), CAST(9.153475 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(7 AS BIGINT), CAST(-13.400546 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(8 AS BIGINT), CAST(6.124864 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(9 AS BIGINT), CAST(3.081595 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(10 AS BIGINT), CAST(-9.27839 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(11 AS BIGINT), CAST(6.802444 AS DOUBLE)),
+      (CAST(12 AS BIGINT), CAST(12 AS BIGINT), CAST(-0.286518 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(0 AS BIGINT), CAST(32.349826 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(1 AS BIGINT), CAST(-12.667927 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(2 AS BIGINT), CAST(-2.040905 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(3 AS BIGINT), CAST(10.402135 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(4 AS BIGINT), CAST(-15.529984 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(5 AS BIGINT), CAST(7.617318 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(6 AS BIGINT), CAST(4.867726 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(7 AS BIGINT), CAST(-8.998261 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(8 AS BIGINT), CAST(10.961758 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(9 AS BIGINT), CAST(-3.466313 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(10 AS BIGINT), CAST(-2.484512 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(11 AS BIGINT), CAST(8.242304 AS DOUBLE)),
+      (CAST(13 AS BIGINT), CAST(12 AS BIGINT), CAST(-5.588415 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(0 AS BIGINT), CAST(32.828918 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(1 AS BIGINT), CAST(-12.694896 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(2 AS BIGINT), CAST(3.442678 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(3 AS BIGINT), CAST(7.709514 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(4 AS BIGINT), CAST(-13.182283 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(5 AS BIGINT), CAST(12.421335 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(6 AS BIGINT), CAST(-4.543631 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(7 AS BIGINT), CAST(-4.340658 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(8 AS BIGINT), CAST(9.228638 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(9 AS BIGINT), CAST(-9.933543 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(10 AS BIGINT), CAST(5.307673 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(11 AS BIGINT), CAST(0.329935 AS DOUBLE)),
+      (CAST(14 AS BIGINT), CAST(12 AS BIGINT), CAST(-5.045583 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(0 AS BIGINT), CAST(31.243053 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(1 AS BIGINT), CAST(-13.241356 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(2 AS BIGINT), CAST(7.169028 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(3 AS BIGINT), CAST(5.293591 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(4 AS BIGINT), CAST(-11.374519 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(5 AS BIGINT), CAST(13.355179 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(6 AS BIGINT), CAST(-11.472681 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(7 AS BIGINT), CAST(4.252972 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(8 AS BIGINT), CAST(1.772443 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(9 AS BIGINT), CAST(-4.605269 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(10 AS BIGINT), CAST(7.962826 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(11 AS BIGINT), CAST(-9.402372 AS DOUBLE)),
+      (CAST(15 AS BIGINT), CAST(12 AS BIGINT), CAST(5.205197 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(0 AS BIGINT), CAST(31.710862 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(1 AS BIGINT), CAST(-16.281566 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(2 AS BIGINT), CAST(7.646746 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(3 AS BIGINT), CAST(-1.912068 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(4 AS BIGINT), CAST(-5.968846 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(5 AS BIGINT), CAST(9.253391 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(6 AS BIGINT), CAST(-11.884987 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(7 AS BIGINT), CAST(12.062011 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(8 AS BIGINT), CAST(-5.934601 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(9 AS BIGINT), CAST(3.055562 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(10 AS BIGINT), CAST(2.53848 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(11 AS BIGINT), CAST(-4.841479 AS DOUBLE)),
+      (CAST(16 AS BIGINT), CAST(12 AS BIGINT), CAST(7.753553 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(0 AS BIGINT), CAST(34.924322 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(1 AS BIGINT), CAST(-17.995979 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(2 AS BIGINT), CAST(10.914336 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(3 AS BIGINT), CAST(-6.223074 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(4 AS BIGINT), CAST(-3.369193 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(5 AS BIGINT), CAST(7.475251 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(6 AS BIGINT), CAST(-12.078535 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(7 AS BIGINT), CAST(12.486768 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(8 AS BIGINT), CAST(-11.625252 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(9 AS BIGINT), CAST(9.028253 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(10 AS BIGINT), CAST(-3.561482 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(11 AS BIGINT), CAST(0.948956 AS DOUBLE)),
+      (CAST(17 AS BIGINT), CAST(12 AS BIGINT), CAST(2.003462 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(0 AS BIGINT), CAST(30.618101 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(1 AS BIGINT), CAST(-16.884097 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(2 AS BIGINT), CAST(10.912463 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(3 AS BIGINT), CAST(-6.360639 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(4 AS BIGINT), CAST(1.782916 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(5 AS BIGINT), CAST(0.284443 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(6 AS BIGINT), CAST(-7.971285 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(7 AS BIGINT), CAST(9.839178 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(8 AS BIGINT), CAST(-10.476922 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(9 AS BIGINT), CAST(9.283356 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(10 AS BIGINT), CAST(-8.711186 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(11 AS BIGINT), CAST(7.112011 AS DOUBLE)),
+      (CAST(18 AS BIGINT), CAST(12 AS BIGINT), CAST(-2.636472 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(0 AS BIGINT), CAST(32.030559 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(1 AS BIGINT), CAST(-15.511379 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(2 AS BIGINT), CAST(11.988317 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(3 AS BIGINT), CAST(-10.422877 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(4 AS BIGINT), CAST(7.550695 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(5 AS BIGINT), CAST(-3.968771 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(6 AS BIGINT), CAST(1.096249 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(7 AS BIGINT), CAST(1.584805 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(8 AS BIGINT), CAST(-3.836901 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(9 AS BIGINT), CAST(7.506129 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(10 AS BIGINT), CAST(-7.44878 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(11 AS BIGINT), CAST(7.907576 AS DOUBLE)),
+      (CAST(19 AS BIGINT), CAST(12 AS BIGINT), CAST(-7.874518 AS DOUBLE))
+    ) AS t(grp, ci, coef)
+    """,
+)
+def mm_audio_mfcc(spark, sf_dir):
+    """REAL MFCC DSP end-to-end (WAV encode → decode → framing → rFFT power
+    → HTK mel filterbank → log → DCT-II), certified as a VALUES twin: each
+    document synthesizes the deterministic 1-second int16 pure tone of its
+    group (grp = doc_id % 20, f = 150 + grp*80 Hz at rate 4000 — every f
+    below Nyquist), audio_mfcc reduces it to 13 frame-averaged
+    coefficients rounded to 6 decimals, and the query returns the 20*13
+    DISTINCT (grp, ci, coef) rows. sf-independent (same grp → identical
+    payload → identical vector), so the oracle is a literal snapshot from
+    the test-verified operator (scaling/silence/discrimination invariants
+    pinned in tests/test_imagecodec.py). Any defect in the window, the
+    filterbank, the log floor, or the DCT basis moves at least one of the
+    260 cells."""
+    import numpy as np
+
+    from ..functions.audiocodec import encode_wav
+    from ..operators.multimodal import audio_mfcc
+
+    # CPU-bound WAV+MFCC kernel over a single-split scan: widen so the
+    # Arrow pass parallelizes (no-op on a wide cluster scan)
+    docs = widen_narrow_scan(read_table(spark, sf_dir, "documents").select("doc_id"))
+    rate = 4000
+
+    def synth(batches):
+        t = np.arange(rate)
+        for pdf in batches:
+            pdf = pdf.copy()
+            pdf["grp"] = [int(i) % 20 for i in pdf["doc_id"]]
+            pdf["payload"] = [
+                encode_wav(
+                    np.round(
+                        10_000 * np.sin(2 * np.pi * (150 + int(g) * 80) * t / rate)
+                    ).astype(np.int16),
+                    rate,
+                )
+                for g in pdf["grp"]
+            ]
+            yield pdf
+
+    media = docs.mapInPandas(
+        synth,
+        T.StructType(
+            docs.schema.fields
+            + [T.StructField("grp", T.LongType()), T.StructField("payload", T.BinaryType())]
+        ),
+    )
+    return (
+        audio_mfcc(media)
+        .select("grp", F.posexplode("mfcc").alias("ci", "coef"))
+        .select("grp", F.col("ci").cast("bigint").alias("ci"), "coef")
+        .distinct()
+    )
+
+
+# ---------------------------------------------------------------------------
+# mm_video_scene_cuts (operators/videoscene.py — real AVI parse + JPEG
+# decode + hard-cut detector, analytic oracle)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_video_scene_cuts",
+    oracle="""
+    WITH d AS (SELECT doc_id, 4 + doc_id % 5 AS n, 1 + doc_id % 3 AS s
+               FROM documents WHERE doc_id % 25 = 0),
+    k AS (SELECT doc_id, n, s, (n - 1) // s AS kk FROM d)
+    SELECT doc_id, CAST(n AS INT) AS n_frames, CAST(kk AS INT) AS n_cuts,
+           CAST(s * kk * (kk + 1) // 2 AS BIGINT) AS cut_sum
+    FROM k
+    """,
+)
+def mm_video_scene_cuts(spark, sf_dir):
+    """REAL scene-cut pipeline, analytic oracle (the mm_video_real
+    discipline): per sampled doc a genuine MJPEG-AVI clip is muxed in an
+    Arrow stage — n = 4 + doc_id%5 solid frames, a hard luma cut (40↔200)
+    every s = 1 + doc_id%3 frames — then operators/videoscene.scene_cuts
+    parses the container, decodes each JPEG, and scores consecutive-frame
+    mean |Δluma|. Cut COUNT and POSITIONS are quantization-robust
+    (within-scene diffs are exactly 0, cross-scene far above threshold),
+    so the oracle recomputes them in closed form: n_cuts = (n-1)//s and
+    cut_sum = s·k(k+1)/2 (the cuts are s, 2s, …, ks — their sum pins the
+    positions, not just the count). Formula pinned against the operator in
+    tests/test_videoscene.py. One Arrow pass; two decoded frames resident
+    per clip."""
+    import pandas as pd
+
+    from ..operators.videoscene import scene_cuts
+
+    # CPU-bound codec kernel over a single-split scan: widen so the
+    # Arrow pass parallelizes (no-op on a wide cluster scan)
+    d = widen_narrow_scan(
+        read_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 25 == 0)
+        .select("doc_id")
+    )
+
+    def build(batches):
+        import numpy as np
+
+        import os
+        import tempfile
+
+        from ..functions.jpegcodec import encode_jpeg
+        from ..sources.avi import write_mjpeg_avi
+
+        w, h = 16, 12
+        for pdf in batches:
+            payloads = []
+            for doc_id in pdf["doc_id"]:
+                n, s = 4 + int(doc_id) % 5, 1 + int(doc_id) % 3
+                frames = [
+                    encode_jpeg(
+                        np.full((h, w, 3), 40 if (i // s) % 2 == 0 else 200, np.uint8),
+                        95,
+                    )
+                    for i in range(n)
+                ]
+                fd, path = tempfile.mkstemp(suffix=".avi")
+                os.close(fd)
+                write_mjpeg_avi(path, frames, w, h, fps=10)
+                with open(path, "rb") as fh:
+                    payloads.append(fh.read())
+                os.unlink(path)
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    clips = d.mapInPandas(
+        build,
+        T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("payload", T.BinaryType()),
+            ]
+        ),
+    )
+    return scene_cuts(clips).select(
+        "doc_id",
+        "n_frames",
+        "n_cuts",
+        F.expr(
+            "aggregate(cut_indices, 0L, (acc, x) -> acc + cast(x as bigint))"
+        ).alias("cut_sum"),
+    )
+
+
+# ---------------------------------------------------------------------------
+# mm_audio_segments (operators/audioseg.py — real WAV decode + VAD-style
+# segmentation, analytic oracle)
+# ---------------------------------------------------------------------------
+
+
+@query(
+    "mm_audio_segments",
+    oracle="""
+    WITH d AS (SELECT doc_id, 1 + doc_id % 4 AS k, 1 + doc_id % 3 AS b,
+                      1 + doc_id % 2 AS g
+               FROM documents WHERE doc_id % 25 = 0)
+    SELECT doc_id,
+           CAST(k * (b + g) + g AS INT) AS n_frames,
+           CAST(k * b AS INT) AS n_active_frames,
+           CAST(k AS INT) AS n_segments,
+           CAST(k * g + (b + g) * k * (k - 1) // 2 AS BIGINT) AS start_sum
+    FROM d
+    """,
+)
+def mm_audio_segments(spark, sf_dir):
+    """REAL audio-segmentation pipeline, analytic oracle: per sampled doc
+    a genuine 16-bit WAV is synthesized — k = 1 + doc_id%4 tone bursts of
+    b = 1 + doc_id%3 frames, led and separated by g = 1 + doc_id%2 frames
+    of digital silence (frame = 400 samples at 4 kHz, every boundary
+    frame-aligned) — then operators/audioseg.audio_segments decodes it
+    with the repo's own codec and segments by frame RMS. Silence has RMS
+    exactly 0 and a full-scale tone sits orders of magnitude above the
+    threshold, so segment counts and positions are bin-exact and the
+    oracle recomputes the burst arithmetic in closed form: segments start
+    at g + i·(b+g), so start_sum = k·g + (b+g)·k(k-1)/2 pins the
+    positions. Formula pinned against the operator in
+    tests/test_audioseg.py. One Arrow pass, O(samples) per clip."""
+    import pandas as pd
+
+    from ..operators.audioseg import audio_segments
+
+    d = (
+        read_table(spark, sf_dir, "documents")
+        .filter(F.col("doc_id") % 25 == 0)
+        .select("doc_id")
+    )
+
+    def build(batches):
+        import numpy as np
+
+        from ..functions.audiocodec import encode_wav
+
+        rate, fl = 4000, 400
+        for pdf in batches:
+            payloads = []
+            for doc_id in pdf["doc_id"]:
+                k = 1 + int(doc_id) % 4
+                b = 1 + int(doc_id) % 3
+                g = 1 + int(doc_id) % 2
+                sig, t0 = [], 0
+                for _ in range(k):
+                    sig.append(np.zeros(g * fl))
+                    t = np.arange(t0, t0 + b * fl)
+                    sig.append(10_000 * np.sin(2 * np.pi * 440 * t / rate))
+                    t0 += b * fl
+                sig.append(np.zeros(g * fl))
+                payloads.append(
+                    encode_wav(
+                        np.round(np.concatenate(sig)).astype(np.int16), rate
+                    )
+                )
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "payload": payloads})
+
+    clips = d.mapInPandas(
+        build,
+        T.StructType(
+            [
+                T.StructField("doc_id", T.LongType()),
+                T.StructField("payload", T.BinaryType()),
+            ]
+        ),
+    )
+    return audio_segments(clips).select(
+        "doc_id",
+        "n_frames",
+        "n_active_frames",
+        "n_segments",
+        F.expr(
+            "aggregate(segment_starts, 0L, (acc, x) -> acc + cast(x as bigint))"
+        ).alias("start_sum"),
+    )
