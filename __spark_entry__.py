@@ -56,6 +56,8 @@ _TOUCHED = dict.fromkeys(
         # write_warc without the CDX index option; read_warc calls the shared
         # shard decoder directly; read_tfrecords lost its batch-size option
         "o19_warc_roundtrip", "o20_tfrecord_roundtrip",
+        # shard buckets by the shared range-bucket rule; base_tokens removed
+        "t_shard_manifest",
     ),
     15,
 )

@@ -48,7 +48,7 @@ def compute_af_adjacency_matrix(settings: AmericanFootballGraphSettings, team: n
     return compute_adjacency_matrix(settings, team_id=team)
 
 
-def compute_af_node_features(d: dict, settings: AmericanFootballGraphSettings, graph_features=None):
+def compute_af_node_features(d: dict, settings: AmericanFootballGraphSettings):
     """K6: 20-column fixed stack."""
     dims = settings.pitch_dimensions
     x, y, s, a = d["x"], d["y"], d["v"], d["a"]
@@ -61,10 +61,8 @@ def compute_af_node_features(d: dict, settings: AmericanFootballGraphSettings, g
 
     ball_rows = np.where(is_ball_arr)[0]
     if len(ball_rows) >= 1:
-        ball_index = ball_rows
         ball_position = position[ball_rows][0]
     else:
-        ball_index = 0
         ball_position = np.asarray([np.nan, np.nan])
 
     uv_sa = unit_vector_from_angle(s, direction)
@@ -109,10 +107,6 @@ def compute_af_node_features(d: dict, settings: AmericanFootballGraphSettings, g
             axis=-1,
         )
     )
-    if graph_features is not None:
-        eg = np.zeros((X.shape[0], graph_features.shape[0]))
-        eg[ball_index] = graph_features
-        X = np.hstack((X, eg))
     return X
 
 

@@ -36,11 +36,11 @@ def _materialize(df: DataFrame, reliable: bool) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-def _edge_table(pairs: DataFrame, src: str, dst: str) -> tuple[DataFrame, int]:
+def _edge_table(pairs: DataFrame) -> tuple[DataFrame, int]:
     """The one edge table of the iterated graph operators, and its node
-    count: symmetric, self-loop-free (a NULL endpoint drops the pair),
-    distinct, persisted (tracked for ``cache.release_tracked``) and already
-    materialized.
+    count: the ``(id_a, id_b)`` candidate pairs made symmetric,
+    self-loop-free (a NULL endpoint drops the pair), distinct, persisted
+    (tracked for ``cache.release_tracked``) and already materialized.
 
     It is hash-partitioned on ``src`` with a PINNED partition count
     (spark.sql.shuffle.partitions — scale-adaptive config, not a constant).
@@ -71,7 +71,7 @@ def _edge_table(pairs: DataFrame, src: str, dst: str) -> tuple[DataFrame, int]:
         # fall back to the cluster-core default rather than crash here
         # (ADVICE r14)
         n = pairs.sparkSession.sparkContext.defaultParallelism
-    raw = pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    raw = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     rev = raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     edges = tracked_persist(
         raw.unionByName(rev)
@@ -138,13 +138,8 @@ def _star_round(edges: DataFrame) -> DataFrame:
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    src: str = "id_a",
-    dst: str = "id_b",
-    reliable: bool = False,
-) -> DataFrame:
-    """(src, dst) undirected edges → (id, component) with component = min id
+def connected_components(pairs: DataFrame, reliable: bool = False) -> DataFrame:
+    """(id_a, id_b) undirected edges → (id, component) with component = min id
     reachable. Isolated nodes don't appear (callers left-join and coalesce to
     the node's own id). Star rounds run until the edge set is a star forest
     — they always get there (Kiveris et al. 2014), in a number of rounds
@@ -152,7 +147,7 @@ def connected_components(
     fixed cap returns unconverged components on some input.
     ``reliable=True`` checkpoints each round to the session checkpoint dir
     instead of executor memory (see :func:`_materialize`)."""
-    edges = pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    edges = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # materialize each round: truncates the exponentially-growing lineage
     # (the standard pattern for iterative DataFrame algorithms). The loop
     # carries the CANONICAL half-sized form; each round re-symmetrizes
@@ -187,8 +182,6 @@ def pagerank(
     pairs: DataFrame,
     iters: int = 3,
     damping: float = 0.85,
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
     """Fixed-iteration PageRank on an undirected pair graph → (id, pr).
 
@@ -206,7 +199,7 @@ def pagerank(
     DECIMAL(26,12); each iteration's rank is rounded to 9 decimals so the
     next round's inputs are engine-identical.
     """
-    edges, n_nodes = _edge_table(pairs, src, dst)
+    edges, n_nodes = _edge_table(pairs)
     # an exchange-free aggregation over the src-pinned cache
     deg = edges.groupBy("src").agg(F.count("*").alias("deg"))
     ranks = deg.select(
@@ -237,8 +230,6 @@ def kcore_peel(
     pairs: DataFrame,
     k: int = 2,
     rounds: int = 4,
-    src: str = "id_a",
-    dst: str = "id_b",
     reliable: bool = False,
 ) -> DataFrame:
     """Fixed-round k-core peeling on an undirected pair graph →
@@ -276,7 +267,7 @@ def kcore_peel(
     ``reliable=True`` — each round then writes a reliable checkpoint,
     trading per-round HDFS I/O for executor-loss resilience.
     """
-    edges, _ = _edge_table(pairs, src, dst)
+    edges, _ = _edge_table(pairs)
     live = edges
     curve = []
     for i in range(rounds + 1):
@@ -306,12 +297,7 @@ def kcore_peel(
     )
 
 
-def label_propagation(
-    pairs: DataFrame,
-    iters: int = 3,
-    src: str = "id_a",
-    dst: str = "id_b",
-) -> DataFrame:
+def label_propagation(pairs: DataFrame, iters: int = 3) -> DataFrame:
     """Synchronous label propagation on an undirected pair graph →
     (id, label): community detection at finer granularity than connected
     components — a template family and the pages quoting it land in one
@@ -327,7 +313,7 @@ def label_propagation(
     vote counts, then a combinable max_by argmax per node — no window, no
     global sort). Edges persist across rounds; all arithmetic is exact
     integers."""
-    edges, _ = _edge_table(pairs, src, dst)
+    edges, _ = _edge_table(pairs)
     # the node set comes off the src endpoint in the cache's hash(src)
     # layout, so the init distinct runs exchange-free
     labels = edges.select(F.col("src").alias("id")).distinct().withColumn(

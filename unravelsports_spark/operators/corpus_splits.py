@@ -37,8 +37,6 @@ def cluster_safe_split(
     pairs: DataFrame,
     id_col: str = "doc_id",
     pcts: tuple = (80, 10, 10),
-    src: str = "id_a",
-    dst: str = "id_b",
 ) -> DataFrame:
     """Docs + (component, split) where ``split`` ∈ train/val/test with the
     ``pcts`` proportions and component = min doc id reachable through
@@ -53,7 +51,7 @@ def cluster_safe_split(
         raise ValueError("pcts must be three percentages summing to 100")
     from .components import connected_components
 
-    cc = connected_components(pairs, src=src, dst=dst)
+    cc = connected_components(pairs)
     base = docs.join(
         cc.withColumnRenamed("id", id_col), id_col, "left"
     ).withColumn("component", F.coalesce("component", F.col(id_col)))

@@ -13,18 +13,18 @@ tokenizer, not the engine.
 
 Scale shape (r14, guide §2.4/§2.5): ``by`` is typically LOW-cardinality
 (a handful of sources), so the naive one-window-per-group form funnels the
-whole corpus through a handful of reducers. Like
-:mod:`~unravelsports_spark.operators.sharding`, the cumsum therefore runs
-as a two-level prefix sum: ``n_ranges`` fixed integer ranges over the
-order column (boundaries from an exact 1-row min/max collect — the
-stats-literal discipline; range membership is pure bigint arithmetic, so
-bucket order IS order-column order), a per-(group, range) local cumsum
-(groups × n_ranges parallel window partitions), per-range totals
-prefix-summed by a window over the ≤ ``n_ranges``-row-per-group bucket
-table, and a join-back that AQE broadcasts. The decomposition is
-algebraically the same long sum — bit-identical bins — at the cost of one
-extra narrow-column pass for the bounds. Non-integral or absent order
-columns, ``n_ranges=None``, and empty inputs keep the single-window form.
+whole corpus through a handful of reducers. The cumsum therefore runs as a
+two-level prefix sum over ``n_ranges`` fixed integer ranges of the order
+column: a per-(group, range) local cumsum (groups × n_ranges parallel
+window partitions), per-range totals prefix-summed by a window over the
+≤ ``n_ranges``-row-per-group bucket table, and a null-safe join-back that
+AQE broadcasts. When the split may run, the bucket rule and the join-back
+condition are the ones :mod:`~unravelsports_spark.operators.serieswin`
+owns for every such decomposition (integral, NULL-free, non-empty order
+column within 62 bits); token counts must also be integral. The
+decomposition is algebraically the same long sum — identical bins — at the
+cost of one 1-row stats job. Otherwise, and with ``n_ranges=None``, the
+single-window form runs.
 """
 
 from __future__ import annotations
@@ -34,7 +34,7 @@ from typing import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
+from .serieswin import _INTEGRAL, null_safe_on, range_split
 
 
 def pack_sequences(
@@ -56,51 +56,17 @@ def pack_sequences(
         start = F.sum(token_col).over(w) - F.col(token_col)
         return df.withColumn(out, F.floor(start / budget).cast("long"))
 
-    dtypes = dict(df.dtypes)
-    if (
-        n_ranges is None
-        or dtypes.get(order_col) not in _INTEGRAL
-        # token_col must be integral too (ADVICE r14): the decomposed path
-        # casts per-bucket totals to long (truncating a fractional total)
-        # and regrouped float addition is non-associative — either would
-        # silently shift bins vs the naive single-window form
-        or dtypes.get(token_col) not in _INTEGRAL
-    ):
+    # token counts must be integral, not just exact: the bins
+    # divide the running total, and the per-bucket totals are summed as long
+    if dict(df.dtypes).get(token_col) not in _INTEGRAL:
+        return naive()
+    bucket = range_split(df, order_col, n_ranges)
+    if bucket is None:
         return naive()
 
     from ..cache import tracked_persist
 
-    bounds = df.agg(
-        F.min(order_col).alias("lo"), F.max(order_col).alias("hi")
-    ).first()
-    if bounds["lo"] is None:  # empty input: nothing to decompose
-        return naive()
-    lo, hi = int(bounds["lo"]), int(bounds["hi"])
-    span = hi - lo + 1
-    if span > (1 << 62) or abs(lo) > (1 << 62):
-        # a full-64-bit id domain would overflow (x − lo) itself; such ids
-        # are hashes, not the dense ordering key this path targets — keep
-        # the naive form rather than risk silent non-ANSI wraparound
-        # (review finding, r14)
-        return naive()
-    # fixed-width ranges: width is computed driver-side in exact Python
-    # ints, and the per-row arithmetic is one guarded subtraction + `div`
-    # — no multiplication that could wrap for wide domains (review
-    # finding, r14: the earlier (x−lo)·n_ranges form overflowed for
-    # hash-sized ids). (span−1) div width ≤ n_ranges−1, and a NULL
-    # order value yields a NULL bucket, which sorts first in the offset
-    # window exactly as NULL order values sort first in the naive window.
-    width = max(1, -(-span // int(n_ranges)))
-    # backtick-quote the identifier (ADVICE r14): a column name with spaces,
-    # dots or hyphens would otherwise fail to parse on this fast path while
-    # the naive Column-API path would have worked
-    qcol = "`" + order_col.replace("`", "``") + "`"
-    d = tracked_persist(
-        df.withColumn(
-            "_pkb",
-            F.expr(f"(CAST({qcol} AS BIGINT) - {lo}L) div {width}L"),
-        )
-    )
+    d = tracked_persist(df.withColumn("_pkb", bucket))
     # default (RANGE, peers-inclusive) frames on BOTH windows, matching the
     # naive form bit-for-bit when order_col has duplicates: peers share a
     # bucket (the bucket is a function of the order value), so the
@@ -119,12 +85,9 @@ def pack_sequences(
             "_pkoff",
         )
     )
-    # null-SAFE join keys: a NULL group key or NULL bucket must still find
-    # its offset row — a plain equi-join would silently drop those rows
-    # while the naive window keeps them (review finding, r14)
-    cond = F.col("_pkb").eqNullSafe(F.col("_pkbr"))
-    for i, c in enumerate(by):
-        cond = cond & F.col(c).eqNullSafe(F.col(f"_pkg{i}"))
+    cond = null_safe_on(
+        [*by, "_pkb"], [*[f"_pkg{i}" for i in range(len(by))], "_pkbr"]
+    )
     start = F.col("_pkoff") + F.sum(token_col).over(w_local) - F.col(token_col)
     return (
         d.join(off, cond)

@@ -1,14 +1,30 @@
-"""Two-level decompositions for ordered-series windows over LOW-CARDINALITY
-series keys (VERDICT r14 #3; guide §2.5 skew/funnel).
+"""Two-level decompositions for ordered windows over LOW-CARDINALITY keys
+(the skew/funnel shape), and the one rule for splitting such a window into
+fixed integer ranges.
 
 ``Window.partitionBy(series_key)`` plans ONE reducer per key value: with a
-handful of event types, three tasks sort the entire table at any scale —
-the same funnel the r14 w7/w8/pack_sequences rewrites removed for global
-windows. Both operators here shard each series into fixed-boundary ranges
-of the (integral) order column — ``bucket = (order - min) div width``, a
-pure projection, no sampling — run the window WITHIN (key, bucket), and
-restore exactness across bucket boundaries with O(#buckets)-sized carry
-state:
+handful of event types, three tasks sort the entire table at any scale.
+The operators here, :func:`~unravelsports_spark.operators.packing.pack_sequences`
+and :func:`~unravelsports_spark.operators.sharding.shard_assignments` cut
+the order column into fixed ranges, run the window WITHIN (key, bucket),
+and restore exactness across buckets with O(#buckets)-sized carry state.
+Each keeps its own carry math and shares three pieces defined here (the
+shard operator only the bucket rule: its order domain is fixed and its
+offsets ride back as a literal map):
+
+- the gate, :func:`range_split`: the split runs only when the order column
+  is integral and NULL-free, the input is not empty, ``|lo|`` and the span
+  fit in 62 bits (so ``order - lo`` cannot overflow), and every column the
+  operator sums is integral or decimal (regrouped float addition is not
+  associative). Otherwise the operator takes its naive single-window form;
+- the bucket rule, :func:`range_bucket`: ``(order - lo) div
+  ceil(span / n_ranges)``, a pure projection whose order IS order-column
+  order; ties share a bucket;
+- the join-back, :func:`null_safe_on`: null-safe over (keys…, bucket), so
+  a NULL key finds its carry row as the naive window keeps its NULL
+  partition. Null-safe keys are still hash-joinable.
+
+The serieswin operators:
 
 - :func:`moving_sum_count` (w10 shape — ROWS [k PRECEDING, CURRENT]): a
   frame reaches at most ``lookback`` rows behind, so the only cross-bucket
@@ -29,31 +45,50 @@ state:
   it. ``coalesce(in_bucket, carry)`` is then exact for every row, and
   ``rn = offset + local_rn`` reproduces the global row number.
 
-Both fall back to the naive single window when the order column is not an
-integral type, holds NULLs, or the frame is empty — the decomposition's
-bucket arithmetic is only defined there (same guard discipline as
-``operators/packing.py``). Every step is either exact integer arithmetic
-or evaluates the SAME IEEE/decimal expressions on the same operands, so
-results are bit-identical to the single-window form (equivalence-swept in
-``tests/test_serieswin.py``).
+Past the gate every step is exact integer or decimal arithmetic or passes
+values through, so results equal the ``n_ranges=None`` form (equivalence
+battery over both operators and packing in ``tests/test_serieswin.py``).
 """
 
 from __future__ import annotations
 
+from functools import reduce
+from typing import Sequence
+
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-_INTEGRAL = {"tinyint", "smallint", "int", "bigint"}
+_INTEGRAL = ("tinyint", "smallint", "int", "bigint")
 
 #: fixed prefix-sum fan-out; reducers per series key = min(n_ranges, span).
-#: Like packing.py this only controls parallelism — results are invariant.
+#: It only controls parallelism — results are invariant.
 DEFAULT_RANGES = 64
 
 
-def _bucketed(df: DataFrame, order_col: str, n_ranges: int):
-    """Attach the fixed-boundary range bucket ``_skb``; returns ``None``
-    when the decomposition's preconditions fail (caller falls back)."""
-    if dict(df.dtypes).get(order_col) not in _INTEGRAL:
+def range_bucket(order_col: str, lo: int, span: int, n_ranges: int) -> Column:
+    """Fixed-width range bucket of ``order_col`` over ``[lo, lo + span)``;
+    no per-row multiplication that could wrap, and the identifier is
+    backtick-quoted so any column name parses."""
+    width = max(1, -(-span // int(n_ranges)))
+    qcol = "`" + order_col.replace("`", "``") + "`"
+    return F.expr(f"(CAST({qcol} AS BIGINT) - {lo}L) div {width}L")
+
+
+def range_split(
+    df: DataFrame, order_col: str, n_ranges: int | None, sums: Sequence[str] = ()
+) -> Column | None:
+    """The gate: the :func:`range_bucket` of ``order_col`` when an
+    ``n_ranges`` split gives the naive answer, else ``None``. ``sums`` names
+    the columns the caller sums across buckets. One 1-row stats job."""
+    dtypes = dict(df.dtypes)
+    if (
+        not n_ranges
+        or dtypes.get(order_col) not in _INTEGRAL
+        or any(
+            dtypes[c] not in _INTEGRAL and not dtypes[c].startswith("decimal")
+            for c in sums
+        )
+    ):
         return None
     mm = df.agg(
         F.min(order_col).alias("lo"),
@@ -62,12 +97,19 @@ def _bucketed(df: DataFrame, order_col: str, n_ranges: int):
         F.count(order_col).alias("nn"),
     ).first()
     if mm["lo"] is None or mm["n"] != mm["nn"]:
-        return None  # empty input or NULL order values: take the naive path
+        return None  # empty input or NULL order values
     lo, span = int(mm["lo"]), int(mm["hi"]) - int(mm["lo"]) + 1
-    width = max(1, -(-span // int(n_ranges)))
-    qcol = "`" + order_col.replace("`", "``") + "`"
-    return df.withColumn(
-        "_skb", F.expr(f"(CAST({qcol} AS BIGINT) - {lo}L) div {width}L")
+    if span > (1 << 62) or abs(lo) > (1 << 62):
+        return None  # (x − lo) could overflow
+    return range_bucket(order_col, lo, span, n_ranges)
+
+
+def null_safe_on(left: Sequence[str], right: Sequence[str]) -> Column:
+    """``left[i] <=> right[i]`` for every pair: a plain equi-join would drop
+    a NULL key's rows while the naive window keeps them."""
+    return reduce(
+        lambda a, b: a & b,
+        (F.col(x).eqNullSafe(F.col(y)) for x, y in zip(left, right)),
     )
 
 
@@ -95,10 +137,11 @@ def moving_sum_count(
             out_n, F.count(F.lit(1)).over(w_naive)
         )
 
-    b = _bucketed(df, order_col, n_ranges) if n_ranges else None
-    if b is None:
+    d = df.withColumn("_sv", value)
+    bucket = range_split(d, order_col, n_ranges, sums=("_sv",))
+    if bucket is None:
         return naive()
-    d = b.withColumn("_sv", value)
+    d = d.withColumn("_skb", bucket)
     keys = [part_col, "_skb"]
     w_frame = (
         Window.partitionBy(*keys)
@@ -123,7 +166,7 @@ def moving_sum_count(
     t2, f2 = tails.alias("t"), ft.alias("f")
     prev = t2.join(
         f2,
-        (F.col(f"t.{part_col}") == F.col(f"f.{part_col}"))
+        null_safe_on([f"t.{part_col}"], [f"f.{part_col}"])
         & (F.col("t._trn") >= F.col("f._ft") - lookback)
         & (F.col("t._trn") <= F.col("f._ft") - 1),
     ).select(
@@ -145,9 +188,7 @@ def moving_sum_count(
         ],
     )
     joined = rows.join(
-        F.broadcast(carry),
-        (F.col(part_col) == F.col("_p")) & (F.col("_skb") == F.col("_b")),
-        "left",
+        F.broadcast(carry), null_safe_on([part_col, "_skb"], ["_p", "_b"]), "left"
     )
     m = F.lit(lookback) - (F.col("_lrn") - 1)  # rows missing from the frame
     cs = F.lit(None)
@@ -160,10 +201,11 @@ def moving_sum_count(
         joined.withColumn(
             out_sum,
             # SUM ignores NULLs: an all-NULL side contributes nothing, and
-            # the frame is NULL only when both sides are
-            F.when(m <= 0, F.col("_lsum")).otherwise(
-                F.coalesce(F.col("_lsum") + cs, F.col("_lsum"), cs)
-            ),
+            # the frame is NULL only when both sides are. The cast keeps the
+            # naive frame sum's type (a decimal sum of two sums widens).
+            F.when(m <= 0, F.col("_lsum"))
+            .otherwise(F.coalesce(F.col("_lsum") + cs, F.col("_lsum"), cs))
+            .cast(d.select(F.sum("_sv")).dtypes[0][1]),
         )
         .withColumn(
             out_n,
@@ -188,14 +230,16 @@ def gap_neighbors(
 ) -> DataFrame:
     """Attach ``rn`` (row number per key over the order column) and the
     nearest non-null neighbors ``prev_v/prev_rn/next_v/next_rn`` — the w9
-    interpolation inputs — without a per-key-value reducer funnel."""
+    interpolation inputs — without a per-key-value reducer funnel. "Next"
+    follows ``rn``, so rows that tie on the order column see each other in
+    one consistent order."""
 
     def naive():
         w_rn = Window.partitionBy(part_col).orderBy(order_col)
         wp = w_rn.rowsBetween(Window.unboundedPreceding, -1)
         wn = (
             Window.partitionBy(part_col)
-            .orderBy(F.col(order_col).desc())
+            .orderBy(F.col("rn").desc())
             .rowsBetween(Window.unboundedPreceding, -1)
         )
         v = F.col(value_col)
@@ -209,14 +253,15 @@ def gap_neighbors(
             .withColumn("next_rn", F.last(rn_if, ignorenulls=True).over(wn))
         )
 
-    b = _bucketed(df, order_col, n_ranges) if n_ranges else None
-    if b is None:
+    bucket = range_split(df, order_col, n_ranges)
+    if bucket is None:
         return naive()
+    b = df.withColumn("_skb", bucket)
     v = F.col(value_col)
     keys = [part_col, "_skb"]
     w_asc = Window.partitionBy(*keys).orderBy(order_col)
     w_asc_prec = w_asc.rowsBetween(Window.unboundedPreceding, -1)
-    w_desc = Window.partitionBy(*keys).orderBy(F.col(order_col).desc())
+    w_desc = Window.partitionBy(*keys).orderBy(F.col("_lrn").desc())
     w_desc_prec = w_desc.rowsBetween(Window.unboundedPreceding, -1)
     rows = b.withColumn("_lrn", F.row_number().over(w_asc))
     lrn_if = F.when(v.isNotNull(), F.col("_lrn"))
@@ -273,10 +318,7 @@ def gap_neighbors(
         "_carry_prev",
         "_carry_next",
     )
-    joined = rows.join(
-        F.broadcast(bk),
-        (F.col(part_col) == F.col("_p")) & (F.col("_skb") == F.col("_b")),
-    )
+    joined = rows.join(F.broadcast(bk), null_safe_on([part_col, "_skb"], ["_p", "_b"]))
     return (
         joined.withColumn("rn", (F.col("_off") + F.col("_lrn")))
         .withColumn("prev_v", F.coalesce(F.col("_pv"), F.col("_carry_prev.v")))

@@ -11,7 +11,10 @@ prefix sum with *value-based* (not sampled) range partitioning:
 
 1. ``skey = md5(text) mod 1e6`` is the deterministic shuffle order
    (uniform, reproducible, identical in DuckDB); ``doc_id`` breaks ties.
-2. ``bucket = skey * P / 1e6`` — P fixed-boundary ranges. Unlike
+2. ``bucket = skey div ceil(1e6 / P)`` — P fixed-boundary ranges over the
+   fixed ``skey`` domain ``[0, 1e6)``, by the bucket rule every two-level
+   window shares (:func:`~unravelsports_spark.operators.serieswin.range_bucket`);
+   the domain is known, so no bounds job runs. Unlike
    ``repartitionByRange`` there is no sampling pass and no nondeterminism:
    the bucket is a pure projection, and bucket order IS global ``skey``
    order.
@@ -40,6 +43,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..cache import tracked_persist
+from .serieswin import range_bucket
 
 PPM = 1_000_000
 
@@ -79,7 +83,6 @@ def shard_assignments(
     text_col: str = "text",
     id_col: str = "doc_id",
     n_ranges: int = 64,
-    base_tokens: int = 0,
 ) -> DataFrame:
     """Per-document shard ids: ``(doc_id, skey, n_tokens, shard_id)``.
 
@@ -87,16 +90,11 @@ def shard_assignments(
     parallelism — the assignment is identical for every value. Size it to
     the cluster (e.g. 4× executor count); the per-bucket offset table is P
     rows regardless of corpus size.
-
-    ``base_tokens`` shifts the running total, so a later batch packs onto
-    the tail shard the previous batch left partially full.
     """
     if budget <= 0:
         raise ValueError(f"budget must be positive, got {budget}")
     if n_ranges <= 0 or n_ranges > PPM:
         raise ValueError(f"n_ranges must be in [1, {PPM}], got {n_ranges}")
-    if base_tokens < 0:
-        raise ValueError(f"base_tokens must be >= 0, got {base_tokens}")
     if SKEY_PRE in df.columns and NTOK_PRE in df.columns:
         # the caller already computed (skey, n_tokens) upstream (see
         # shard_precompute) — text never reaches this operator at all
@@ -118,7 +116,7 @@ def shard_assignments(
             _ntokens(text_col).alias("n_tokens"),
         )
     d = tracked_persist(
-        src.withColumn("bucket", (F.col("skey") * n_ranges / PPM).cast("bigint"))
+        src.withColumn("bucket", range_bucket("skey", 0, PPM, n_ranges))
     )
 
     # per-bucket totals -> driver (P rows), prefix-summed into a literal map;
@@ -144,9 +142,7 @@ def shard_assignments(
     return (
         d.withColumn("local_run", F.sum("n_tokens").over(local_w))
         .withColumn("offset", F.coalesce(offset_map[F.col("bucket")], F.lit(0)).cast("bigint"))
-        .withColumn(
-            "run", F.lit(base_tokens).cast("bigint") + F.col("offset") + F.col("local_run")
-        )
+        .withColumn("run", F.col("offset") + F.col("local_run"))
         .withColumn(
             # floor division, not `/`+cast: Spark's double→bigint cast
             # truncates but DuckDB's rounds — integer semantics on both

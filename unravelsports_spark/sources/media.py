@@ -458,6 +458,25 @@ def to_png_sequence(
     return paths
 
 
+def _mjpeg_clip(
+    mux, tracking, game_id, frame_ids, out_path, home_team_id, fps, quality,
+    max_frames, render_kw,
+) -> str:
+    """The frame loop :func:`to_video` and :func:`to_mp4` share: render each
+    frame, JPEG-encode it and hand the clip to the container writer ``mux``."""
+    from ..functions.jpegcodec import encode_jpeg
+
+    frame_ids = list(frame_ids)
+    if len(frame_ids) > max_frames:
+        raise ValueError(f"{len(frame_ids)} frames exceeds max_frames={max_frames}")
+    jpegs, dims = [], None
+    for fid in frame_ids:
+        img = render_frame(collect_frame(tracking, game_id, fid), home_team_id, **render_kw)
+        dims = dims or (img.shape[1], img.shape[0])
+        jpegs.append(encode_jpeg(img, quality=quality))
+    return mux(out_path, jpegs, dims[0], dims[1], fps=fps)
+
+
 def to_video(
     tracking: DataFrame,
     game_id: str,
@@ -473,18 +492,12 @@ def to_video(
     by the numpy renderer, JPEG-encoded by functions/jpegcodec.py, muxed by
     sources/avi.py). The container equivalent of the reference's ffmpeg MP4
     export (graph_converter.py:1302) for this codec-free environment."""
-    from ..functions.jpegcodec import encode_jpeg
     from .avi import write_mjpeg_avi
 
-    frame_ids = list(frame_ids)
-    if len(frame_ids) > max_frames:
-        raise ValueError(f"{len(frame_ids)} frames exceeds max_frames={max_frames}")
-    jpegs, dims = [], None
-    for fid in frame_ids:
-        img = render_frame(collect_frame(tracking, game_id, fid), home_team_id, **render_kw)
-        dims = dims or (img.shape[1], img.shape[0])
-        jpegs.append(encode_jpeg(img, quality=quality))
-    return write_mjpeg_avi(out_path, jpegs, dims[0], dims[1], fps=fps)
+    return _mjpeg_clip(
+        write_mjpeg_avi, tracking, game_id, frame_ids, out_path, home_team_id,
+        fps, quality, max_frames, render_kw,
+    )
 
 
 def to_mp4(
@@ -503,15 +516,9 @@ def to_mp4(
     BMFF container (sources/mp4.py) whose sample entry signals MJPEG the
     same way ffmpeg does (mp4v + esds OTI 0x6C) — the direct equivalent of
     the reference's FFMpegWriter MP4 export (graph_converter.py:1302)."""
-    from ..functions.jpegcodec import encode_jpeg
     from .mp4 import write_mjpeg_mp4
 
-    frame_ids = list(frame_ids)
-    if len(frame_ids) > max_frames:
-        raise ValueError(f"{len(frame_ids)} frames exceeds max_frames={max_frames}")
-    jpegs, dims = [], None
-    for fid in frame_ids:
-        img = render_frame(collect_frame(tracking, game_id, fid), home_team_id, **render_kw)
-        dims = dims or (img.shape[1], img.shape[0])
-        jpegs.append(encode_jpeg(img, quality=quality))
-    return write_mjpeg_mp4(out_path, jpegs, dims[0], dims[1], fps=fps)
+    return _mjpeg_clip(
+        write_mjpeg_mp4, tracking, game_id, frame_ids, out_path, home_team_id,
+        fps, quality, max_frames, render_kw,
+    )
