@@ -122,3 +122,62 @@ def test_stratified_split_with_label_ratios(spark):
     assert not (ids["train"] & ids["test"]) and not (ids["train"] & ids["val"])
     with pytest.raises(ValueError):
         split_by_graph_id_stratified(ds.data, label_ratios={"bogus": 0.5})
+
+
+def _naive_rebalance(pdf, hashes, target_ratio):
+    """rebalance_labels in pandas over the distinct (graph_id, label) table:
+    the same int() targets, and the rank by (xxhash64(graph_id, 42),
+    graph_id) within each label class (``hashes`` maps graph_id to Spark's
+    xxhash64). A NULL label (-1 here) is its own class, capped like label 1."""
+    import pandas as pd
+
+    lbl = pdf["label"].map(lambda v: -1 if pd.isna(v) else int(float(v) > 0.5))
+    graphs = pd.DataFrame({"graph_id": pdf["graph_id"], "lbl": lbl}).drop_duplicates()
+    n0, n1 = int((graphs["lbl"] == 0).sum()), int((graphs["lbl"] == 1).sum())
+    current = n1 / (n0 + n1) if n0 + n1 else 0.0
+    if abs(current - target_ratio) < 0.01:
+        return pdf
+    if current > target_ratio:
+        t0, t1 = n0, int(n0 * target_ratio / (1 - target_ratio))
+    else:
+        t0, t1 = int(n1 * (1 - target_ratio) / target_ratio), n1
+    keep = set()
+    for lab, g in graphs.groupby("lbl"):
+        ranked = sorted(g["graph_id"], key=lambda gid: (hashes[gid], gid))
+        keep |= set(ranked[: t0 if lab == 0 else t1])
+    return pdf[pdf["graph_id"].isin(keep)]
+
+
+@pytest.mark.parametrize(
+    "case, labels, target",
+    [
+        ("majority_negative", [0] * 30 + [1] * 10, 0.5),
+        ("majority_positive", [0] * 8 + [1] * 25, 0.4),
+        ("null_labels", [0] * 20 + [1] * 6 + [None] * 9, 0.5),
+        ("empty", [], 0.5),
+        ("already_balanced", [0] * 10 + [1] * 10, 0.5),
+        ("single_class", [1] * 12, 0.5),
+    ],
+)
+def test_rebalance_labels_equals_naive_form(spark, case, labels, target):
+    """Kept rows equal the pandas naive form: whole graphs (three rows
+    each) are kept or dropped, per class, by the seeded hash rank."""
+    from collections import Counter
+
+    from pyspark.sql import functions as F
+
+    from unravelsports_spark.datasets.tracking import rebalance_labels
+
+    rows = [(f"g{i:03d}", lab, k) for i, lab in enumerate(labels) for k in range(3)]
+    df = spark.createDataFrame(rows, "graph_id string, label bigint, row int")
+    hashes = {
+        r["graph_id"]: r["h"]
+        for r in df.select("graph_id", F.xxhash64("graph_id", F.lit(42)).alias("h"))
+        .distinct().collect()
+    }
+    want = _naive_rebalance(df.toPandas(), hashes, target)
+    got = rebalance_labels(df, target).collect()
+    canon = lambda it: Counter((g, None if lab != lab else lab, k) for g, lab, k in it)
+    assert canon(map(tuple, got)) == canon(want.itertuples(index=False)), case
+    if case == "already_balanced":
+        assert len(got) == len(rows)

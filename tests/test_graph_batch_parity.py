@@ -110,3 +110,32 @@ def test_graph_stacks_bounded_memory_on_large_groups():
         np.testing.assert_array_equal(got[0], want[0], err_msg=f"adjacency frame {i}")
         for k, name in ((1, "edges"), (2, "nodes")):
             np.testing.assert_allclose(got[k], want[k], rtol=0, atol=4e-15, err_msg=f"{name} frame {i}")
+
+
+def test_graph_kernel_memory_is_set_by_the_stack_not_the_group():
+    """The soccer graph kernel stacks consecutive slices of at most
+    STACK_FRAMES frames and hands each frame's result on before the next
+    slice is built, so a 5,000-frame group peaks no higher than a
+    1,200-frame one (unsliced, 5,000 23-node frames retain ~18 KB of
+    output views each until the group ends). Both groups cycle one pool of
+    STACK_FRAMES frames, so every full slice allocates the same arrays."""
+    import tracemalloc
+
+    from unravelsports_spark.models.graph_converter import STACK_FRAMES, sliced_graph_stacks
+
+    gs = GraphSettings(home_team_id="home", away_team_id="away")
+    args = (DEFAULT_NODE_FEATURES, DEFAULT_EDGE_FEATURES, None, gs)
+    pool = _random_frames(np.random.default_rng(3), n_frames=STACK_FRAMES)
+
+    def peak(n_frames):
+        frames = [pool[i % STACK_FRAMES] for i in range(n_frames)]
+        tracemalloc.start()
+        try:
+            n = sum(1 for _ in sliced_graph_stacks(frames, *args))
+            return tracemalloc.get_traced_memory()[1], n
+        finally:
+            tracemalloc.stop()
+
+    (small, n_small), (large, n_large) = peak(1200), peak(5000)
+    assert (n_small, n_large) == (1200, 5000)
+    assert large <= small, f"{large / 2**20:.1f} MiB > {small / 2**20:.1f} MiB"

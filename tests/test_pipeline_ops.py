@@ -282,58 +282,6 @@ def test_pack_sequences_two_level_equals_single_window(spark):
         assert got == naive, n_ranges
 
 
-def test_pack_sequences_two_level_ties_and_nulls(spark):
-    """Review-finding coverage (r14): duplicate order values must bin
-    identically to the naive form (both windows use the peers-inclusive
-    default RANGE frame — an explicit ROWS frame diverged on ties), and
-    NULL order/group keys must survive the offset join (null-safe keys —
-    a plain equi-join dropped them)."""
-    from unravelsports_spark.operators.packing import pack_sequences
-
-    rows = [
-        # duplicate doc_ids within a group (peers) + NULL doc_id + NULL source
-        (7, "a", 600), (7, "a", 600), (3, "a", 100), (None, "a", 250),
-        (5, "b", 900), (5, "b", 900), (5, "b", 900), (None, None, 400),
-        (9, None, 300), (1, None, 50),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, source string, n_tokens bigint")
-    from collections import Counter
-
-    def canon(res):
-        # multiset compare: tuples contain None, which Python can't sort
-        return Counter((r.source, r.doc_id, r.n_tokens, r.bin) for r in res.collect())
-
-    naive = canon(pack_sequences(df, budget=1000, n_ranges=None))
-    assert sum(naive.values()) == len(rows)  # nothing dropped by the naive path
-    for n_ranges in (1, 4, 64):
-        got = canon(pack_sequences(df, budget=1000, n_ranges=n_ranges))
-        assert got == naive, n_ranges
-
-
-def test_pack_sequences_fractional_tokens_fall_back_to_naive(spark):
-    """ADVICE r14: a fractional token_col must NOT take the decomposed path
-    (its per-bucket totals are cast('long'), truncating, and regrouped
-    float addition is non-associative) — with n_ranges set it must still
-    reproduce the naive single-window bins exactly."""
-    from unravelsports_spark.operators.packing import pack_sequences
-
-    rows = [
-        (1, "a", 600.25), (2, "a", 600.25), (3, "a", 600.25),
-        (4, "b", 999.5), (5, "b", 0.75), (6, "b", 999.5),
-    ]
-    df = spark.createDataFrame(rows, "doc_id bigint, source string, n_tokens double")
-    naive = {
-        (r.source, r.doc_id): r.bin
-        for r in pack_sequences(df, budget=1000, n_ranges=None).collect()
-    }
-    for n_ranges in (1, 4, 64):
-        got = {
-            (r.source, r.doc_id): r.bin
-            for r in pack_sequences(df, budget=1000, n_ranges=n_ranges).collect()
-        }
-        assert got == naive, n_ranges
-
-
 def test_approx_distinct_within_rsd(spark):
     """a9: HLL++ estimate within 5x rsd of the exact distinct count."""
     from unravelsports_spark.plans import QUERIES

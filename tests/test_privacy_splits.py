@@ -124,14 +124,3 @@ def test_cluster_safe_split_no_near_dup_straddles(spark):
         k: v[1] for k, v in rows.items()
     }
     release_tracked()
-
-
-def test_cluster_safe_split_rejects_bad_pcts(spark):
-    import pytest
-
-    from unravelsports_spark.operators.corpus_splits import cluster_safe_split
-
-    docs = spark.createDataFrame([(1,)], ["doc_id"])
-    pairs = spark.createDataFrame([], "id_a long, id_b long")
-    with pytest.raises(ValueError):
-        cluster_safe_split(docs, pairs, pcts=(80, 10, 5))

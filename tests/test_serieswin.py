@@ -88,10 +88,12 @@ def test_moving_sum_null_values_across_buckets(spark, n_ranges):
 
 _WIDE = (1 << 62) + 5
 
-#: (schema of k/o/v, rows): ROADMAP direction 5's inputs plus the three
-#: three wrong-answer repros (wide span, cancelling doubles, NULL series key). Tied rows
-#: are whole-row duplicates, so the multiset of outputs is independent of
-#: the order a sort leaves them in.
+#: (types of doc_id/n_tokens, rows of (source, doc_id, n_tokens)): ROADMAP
+#: direction 5's inputs plus the three wrong-answer repros (wide span,
+#: cancelling doubles, NULL series key) and packing's tied, NULL and
+#: fractional token counts. The columns are the ones ``pack_sequences``
+#: reads. Tied rows are whole-row duplicates, so the multiset of outputs is
+#: independent of the order a sort leaves them in.
 _CASES = {
     "null_values": ("bigint", "bigint", [
         (f"k{i % 2}", i, None if i % 3 == 0 else i) for i in range(30)
@@ -118,6 +120,17 @@ _CASES = {
     "cancelling_doubles": ("bigint", "double", [
         ("a", i, v) for i, v in enumerate([1e16, 1.0, -1e16, 1.0] * 4)
     ]),
+    # duplicate doc_ids within a source (peers), NULL doc_ids, NULL sources
+    "pack_ties_and_nulls": ("bigint", "bigint", [
+        ("a", 7, 600), ("a", 7, 600), ("a", 3, 100), ("a", None, 250),
+        ("b", 5, 900), ("b", 5, 900), ("b", 5, 900), (None, None, 400),
+        (None, 9, 300), (None, 1, 50),
+    ]),
+    # packing's per-bucket totals are longs: fractional tokens take the naive form
+    "fractional_tokens": ("bigint", "double", [
+        ("a", 1, 600.25), ("a", 2, 600.25), ("a", 3, 600.25),
+        ("b", 4, 999.5), ("b", 5, 0.75), ("b", 6, 999.5),
+    ]),
     "wide_span": ("bigint", "bigint", [
         ("a", -_WIDE, 1), ("a", -5, 2), ("a", 0, None), ("a", 7, 3),
         ("a", _WIDE, 4), ("b", 3, 5),
@@ -126,15 +139,16 @@ _CASES = {
 
 
 def _battery_runs(df):
-    """Each operator's output for a given n_ranges, over the k/o/v frame."""
+    """Each operator's output for a given n_ranges, keyed by source and
+    ordered by doc_id."""
     return {
-        "gap_neighbors": lambda n: gap_neighbors(df, "k", "o", "v", n_ranges=n),
+        "gap_neighbors": lambda n: gap_neighbors(
+            df, "source", "doc_id", "n_tokens", n_ranges=n
+        ),
         "moving_sum_count": lambda n: moving_sum_count(
-            df, "k", "o", F.col("v"), lookback=3, n_ranges=n
+            df, "source", "doc_id", F.col("n_tokens"), lookback=3, n_ranges=n
         ),
-        "pack_sequences": lambda n: pack_sequences(
-            df, budget=5, token_col="v", order_col="o", by=("k",), n_ranges=n
-        ),
+        "pack_sequences": lambda n: pack_sequences(df, budget=5, n_ranges=n),
     }
 
 
@@ -144,7 +158,9 @@ def test_fast_path_equals_naive(spark, case, n_ranges):
     """One input set through all three operators: the ranged path returns
     the naive form's rows and schema exactly (no float tolerance)."""
     order_t, value_t, rows = _CASES[case]
-    df = spark.createDataFrame(rows, f"k string, o {order_t}, v {value_t}")
+    df = spark.createDataFrame(
+        rows, f"source string, doc_id {order_t}, n_tokens {value_t}"
+    )
     for op, run in _battery_runs(df).items():
         naive, got = run(None), run(n_ranges)
         assert got.dtypes == naive.dtypes, (op, got.dtypes, naive.dtypes)

@@ -182,7 +182,7 @@ def test_graph_overlay_rendering_byte_stable(spark, tmp_path):
     assert len(read_mjpeg_mp4(mp4_null)) == 2
 
 
-def test_media_staging_and_nearest_frame(spark, tmp_path):
+def test_media_staging_and_nearest_frame(spark, tmp_path, monkeypatch):
     from unravelsports_spark.functions.imagecodec import decode_png
     from unravelsports_spark.sources.media import (
         collect_frame,
@@ -200,8 +200,12 @@ def test_media_staging_and_nearest_frame(spark, tmp_path):
         collect_frame(tracking, "game_0", 999)
     # collect guard: a selection matching a whole match must refuse
     unfiltered = tracking.withColumn("frame_id", F.lit(3))
-    with pytest.raises(ValueError, match="more than"):
-        collect_frame(unfiltered, "game_0", 3, max_rows=20)
+    from unravelsports_spark.sources import media
+
+    monkeypatch.setattr(media, "MAX_COLLECT_ROWS", 20)
+    with pytest.raises(ValueError, match="more than 20"):
+        collect_frame(unfiltered, "game_0", 3)
+    monkeypatch.undo()
 
     # real renderer: nonzero PNG, decodable, right dimensions, field + teams
     out = to_png(tracking, "game_0", 3, str(tmp_path / "f3.png"), home_team_id=HOME)

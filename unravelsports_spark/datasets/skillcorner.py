@@ -122,8 +122,6 @@ def _iter_frames(structured_path: str):
 def parse_structured(
     structured_path: str,
     meta: SkillCornerMetadata,
-    frame_interval_ms: int = 100,
-    include_empty_frames: bool = False,
     limit: int | None = None,
 ) -> pd.DataFrame:
     """Long-format rows: one per identified object per frame."""
@@ -138,9 +136,7 @@ def parse_structured(
     for fr in _iter_frames(structured_path):
         period = fr.get("period")
         data = fr.get("data") or []
-        if period is None:
-            continue
-        if not data and not include_empty_frames:
+        if period is None or not data:
             continue
         if limit is not None and n_kept >= limit:
             break
@@ -148,7 +144,7 @@ def parse_structured(
         frame_id = int(fr["frame"])
         ts = _parse_time_ms(fr.get("time", fr.get("timestamp")))
         if ts is None:
-            ts = frame_id * frame_interval_ms
+            ts = frame_id * 100  # 10 Hz
         poss = fr.get("possession") or {}
         owning = group_to_team.get((poss.get("group") or "").lower())
         state = "alive" if owning is not None else "dead"

@@ -63,7 +63,7 @@ def parse_meta(meta_path: str) -> SportecMetadata:
     )
 
 
-def parse_tracking(tracking_path: str, meta: SportecMetadata, frame_interval_ms: int = 40, limit: int | None = None):
+def parse_tracking(tracking_path: str, meta: SportecMetadata, limit: int | None = None):
     """Long-format rows: one per object per frame."""
     root = ET.parse(tracking_path).getroot()
     rows = []
@@ -87,7 +87,7 @@ def parse_tracking(tracking_path: str, meta: SportecMetadata, frame_interval_ms:
             if limit is not None and k >= limit:
                 break
             n = int(fr.get("N"))
-            ts = (n - section_start[period]) * frame_interval_ms
+            ts = (n - section_start[period]) * 40  # 25 Hz
             x, y = float(fr.get("X")), float(fr.get("Y"))
             z = float(fr.get("Z")) if fr.get("Z") is not None else (0.0 if not is_ball else 0.0)
             if is_ball:

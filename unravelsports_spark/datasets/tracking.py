@@ -142,7 +142,6 @@ def rebalance_labels(
     graph_id_col: str = Column.GRAPH_ID,
     label_col: str = Column.LABEL,
     seed: int = 42,
-    tolerance: float = 0.01,
 ) -> DataFrame:
     """Downsample whole graphs of the over-represented label class so the
     positive-label ratio ≈ ``target_ratio`` — the reference's
@@ -151,7 +150,8 @@ def rebalance_labels(
     an exact seeded-rank cut over the distinct-graph table (one small
     shuffle), and rows follow via a semi-join. Target counts use the same
     ``int()`` arithmetic as the reference, so kept-graph counts match it
-    exactly for the same inputs.
+    exactly for the same inputs. An input already within 0.01 of the
+    target ratio is returned unchanged.
     """
     from pyspark.sql import Window
 
@@ -163,7 +163,7 @@ def rebalance_labels(
     n0, n1 = counts.get(0, 0), counts.get(1, 0)
     total = n0 + n1
     current = n1 / total if total else 0.0
-    if abs(current - target_ratio) < tolerance:
+    if abs(current - target_ratio) < 0.01:
         return df
     if current > target_ratio:
         target = {0: n0, 1: int(n0 * target_ratio / (1 - target_ratio))}

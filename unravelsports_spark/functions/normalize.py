@@ -53,7 +53,7 @@ def angle_between_rows(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     return np.arccos(dots)
 
 
-def per_class_normalized(values, is_ball, ball_max, player_max, clip_lo=0.0, clip_hi=1.0):
+def per_class_normalized(values, is_ball, ball_max, player_max, clip_lo=0.0):
     """Normalize per object class (ball vs player): the reference's
     normalize_speeds / normalize_accelerations_nfl pattern. `is_ball` is a
     boolean (..., N) mask broadcast against `values` of shape (..., N) or
@@ -63,7 +63,7 @@ def per_class_normalized(values, is_ball, ball_max, player_max, clip_lo=0.0, cli
     maxima = np.where(np.asarray(is_ball), ball_max, player_max)
     while maxima.ndim < values.ndim:
         maxima = maxima[..., None]
-    return np.clip(values / maxima, clip_lo, clip_hi)
+    return np.clip(values / maxima, clip_lo, 1.0)
 
 
 def signed_speed_difference_normed(diff_matrix, is_ball, ball_max, player_max):

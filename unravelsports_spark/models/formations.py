@@ -179,7 +179,7 @@ class Formations:
         else:
             cur.update(is_attack, name, cost, labels, ids)
 
-    def lookup(self, object_ids, team_ids, ball_id="ball", strict=True):
+    def lookup(self, object_ids, team_ids, strict=True):
         """Rows (position, formation) for each object from current state
         (reference detection.py:128-151). ``strict=True`` mirrors the
         reference exactly: a team with no detection yet (or an object absent
@@ -190,9 +190,9 @@ class Formations:
         ``stateless_chunk_frames`` doc)."""
         positions, formations = [], []
         for object_id, team_id in zip(object_ids, team_ids):
-            if object_id == ball_id or team_id == ball_id:
-                positions.append(ball_id)
-                formations.append(ball_id)
+            if object_id == "ball" or team_id == "ball":
+                positions.append("ball")
+                formations.append("ball")
                 continue
             if strict:
                 state = self.detected_formations[team_id]

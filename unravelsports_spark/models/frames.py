@@ -10,12 +10,15 @@ call per chunk amortizes it while keeping full parallelism across matches.
 Spark's groupBy does not preserve order, so the order inside a group is
 re-established here with a stable sort. A model supplies only its per-run
 math: ``fn(runs)`` receives the group's runs and yields output tuples in the
-order of the output schema's fields.
+order of the output schema's fields. The group's output leaves the worker in
+pandas frames of at most :data:`~unravelsports_spark.sources.shardio.FLUSH_ROWS`
+rows, so a large group never holds all of its output at once.
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterable, Sequence
+from itertools import islice
+from typing import Callable, Iterable, Iterator, Sequence
 
 import numpy as np
 import pandas as pd
@@ -24,6 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ..session import repartition_for_kernel
+from ..sources.shardio import FLUSH_ROWS
 
 
 def split_runs(pdf: pd.DataFrame, by: Sequence[str], order: Sequence[str]) -> list[dict]:
@@ -52,12 +56,16 @@ def map_runs(
     schema: T.StructType,
 ) -> DataFrame:
     """Group ``df`` by ``keys`` and build each group's output rows from the
-    tuples ``fn(split_runs(group, by, order))`` yields. The explicit hash
-    partitioning on ``keys`` keeps AQE from packing the CPU-bound kernel
-    groups into a few tasks (session.repartition_for_kernel)."""
+    tuples ``fn(split_runs(group, by, order))`` yields, in frames of at most
+    ``FLUSH_ROWS`` rows. The group's input batches are concatenated, because
+    the stable sort needs all of them. The explicit hash partitioning on
+    ``keys`` keeps AQE from packing the CPU-bound kernel groups into a few
+    tasks (session.repartition_for_kernel)."""
     names = schema.fieldNames()
 
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return pd.DataFrame(list(fn(split_runs(pdf, by, order))), columns=names)
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        rows = iter(fn(split_runs(pd.concat(batches, ignore_index=True), by, order)))
+        while chunk := list(islice(rows, FLUSH_ROWS)):
+            yield pd.DataFrame(chunk, columns=names)
 
     return repartition_for_kernel(df, keys).groupBy(*keys).applyInPandas(kernel, schema)

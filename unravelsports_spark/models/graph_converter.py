@@ -21,7 +21,8 @@ unravel/utils/objects/default_graph_converter.py:315-393 Spark-first:
 from __future__ import annotations
 
 from dataclasses import dataclass, field
-from typing import Callable, List, Optional
+from itertools import islice
+from typing import Callable, Iterable, Iterator, List, Optional
 
 import numpy as np
 import pandas as pd
@@ -77,6 +78,18 @@ def graph_stacks(frames: list, node_funcs, edge_funcs, opts, settings) -> list[t
         for i, a, e, x in zip(idxs, adj, edges, node):
             results[i] = (a, e, x)
     return results
+
+
+def sliced_graph_stacks(
+    frames: Iterable[dict], node_funcs, edge_funcs, opts, settings
+) -> Iterator[tuple[dict, tuple]]:
+    """``(frame, (adjacency, edge features, node features))`` for each frame
+    in input order: :func:`graph_stacks` over consecutive slices of at most
+    :data:`STACK_FRAMES` frames, so only one slice's stacked arrays are live
+    at a time, whatever the group size."""
+    it = iter(frames)
+    while chunk := list(islice(it, STACK_FRAMES)):
+        yield from zip(chunk, graph_stacks(chunk, node_funcs, edge_funcs, opts, settings))
 
 
 def graph_frames_schema(label_col: str = "label", graph_id_col: str = "graph_id") -> T.StructType:
@@ -245,8 +258,7 @@ class SoccerGraphConverter:
         graph_id_col, label_col, prediction = self.graph_id_col, self.label_col, self.prediction
         random_seed = self.random_seed
 
-        def graphs(runs):
-            frames = []
+        def frames(runs):
             for d in runs:
                 # a frame whose owner is unknown has no attacking side
                 if drop_incomplete and (
@@ -262,10 +274,11 @@ class SoccerGraphConverter:
                     raise ValueError("graph_id not constant within a frame group")
                 if not prediction and not np.all(d[label_col] == d[label_col][0]):
                     raise ValueError("label not constant within a frame group")
-                frames.append(d)
+                yield d
 
-            results = graph_stacks(frames, node_funcs, edge_funcs, opts, settings)
-            for d, (adj, edge, node) in zip(frames, results):
+        def graphs(runs):
+            stacked = sliced_graph_stacks(frames(runs), node_funcs, edge_funcs, opts, settings)
+            for d, (adj, edge, node) in stacked:
                 if global_cols:
                     bad = [c for c in global_cols if not np.all(d[c] == d[c][0])]
                     if bad:

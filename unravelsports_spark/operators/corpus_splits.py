@@ -32,14 +32,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def cluster_safe_split(
-    docs: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    pcts: tuple = (80, 10, 10),
-) -> DataFrame:
-    """Docs + (component, split) where ``split`` ∈ train/val/test with the
-    ``pcts`` proportions and component = min doc id reachable through
+def cluster_safe_split(docs: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Docs + (component, split) where ``split`` ∈ train/val/test with
+    80/10/10 proportions and component = min doc id reachable through
     ``pairs`` (a doc in no pair is its own component). The split is a pure
     function of the component id, so near-dup members agree by
     construction.
@@ -47,29 +42,26 @@ def cluster_safe_split(
     The assignment hash is md5(component)'s 16-bit prefix mod 100 — the
     repo-wide sampling discipline (exactly expressible in DuckDB), applied
     to the CLUSTER key instead of the row key."""
-    if len(pcts) != 3 or sum(int(p) for p in pcts) != 100:
-        raise ValueError("pcts must be three percentages summing to 100")
     from .components import connected_components
 
     cc = connected_components(pairs)
     base = docs.join(
-        cc.withColumnRenamed("id", id_col), id_col, "left"
-    ).withColumn("component", F.coalesce("component", F.col(id_col)))
+        cc.withColumnRenamed("id", "doc_id"), "doc_id", "left"
+    ).withColumn("component", F.coalesce("component", F.col("doc_id")))
     pct = (
         F.conv(F.substring(F.md5(F.col("component").cast("string")), 1, 4), 16, 10)
         .cast("int")
         % 100
     )
-    t, v = int(pcts[0]), int(pcts[0]) + int(pcts[1])
     split = (
-        F.when(pct < t, F.lit("train"))
-        .when(pct < v, F.lit("val"))
+        F.when(pct < 80, F.lit("train"))
+        .when(pct < 90, F.lit("val"))
         .otherwise(F.lit("test"))
     )
     return base.withColumn("split", split)
 
 
-def split_audit(assigned: DataFrame, id_col: str = "doc_id") -> DataFrame:
+def split_audit(assigned: DataFrame) -> DataFrame:
     """Certifiable rollup over :func:`cluster_safe_split` output: per
     split, the doc count, the cluster count, how many docs sit in
     multi-member (actual near-dup) clusters, and ``n_straddling`` — the

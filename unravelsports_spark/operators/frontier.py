@@ -37,7 +37,6 @@ from pyspark.sql import functions as F
 def frontier_plan(
     urls: DataFrame,
     per_host_limit: int,
-    url_col: str = "url",
     priority_col: str | None = None,
 ) -> DataFrame:
     """Annotate ``urls`` with (``host``, ``wave``, ``slot``): slot <
@@ -54,10 +53,10 @@ def frontier_plan(
         raise ValueError(f"per_host_limit must be >= 1, got {per_host_limit}")
     for col in ("host", "wave", "slot", "_rk", "_fdup"):
         require_new_column(urls, col)
-    host = url_canonical_host(F.col(url_col))  # the shared identity
+    host = url_canonical_host(F.col("url"))  # the shared identity
     order = (
         [F.col(priority_col).desc()] if priority_col else []
-    ) + [F.md5(F.col(url_col)).asc()]
+    ) + [F.md5(F.col("url")).asc()]
     w = Window.partitionBy("host").orderBy(*order)
     n = int(per_host_limit)
     hosted = urls.withColumn("host", F.coalesce(host, F.lit("")))
@@ -77,7 +76,7 @@ def frontier_plan(
     ranked = precondition_filter(
         ranked.withColumn(
             "_fdup",
-            F.count("*").over(Window.partitionBy("host", F.col(url_col))),
+            F.count("*").over(Window.partitionBy("host", F.col("url"))),
         ),
         F.col("_fdup") == 1,
         "frontier_plan precondition: duplicate url rows (or multiple "

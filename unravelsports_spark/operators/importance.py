@@ -142,26 +142,22 @@ def dsir_select(
     df: DataFrame,
     target: Column,
     keep_frac: float = 0.2,
-    bucket_width: int = 10_000,
     label_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 1024,
 ) -> DataFrame:
     """DSIR *selection*: keep the most target-like ~``keep_frac`` of the
     raw (non-target) pool and account for what was kept per ``label_col``.
 
     The 100 TB shape for "top p% by score" — which is naively a global sort
-    — is a histogram threshold: bucket the integer scores (fixed width),
-    aggregate bucket counts (tiny), walk the cumulative from the top on that
-    ≤few-thousand-row table, and broadcast the crossing bucket back as a
-    pure filter. Deterministic (integer buckets, exact counts), within one
+    — is a histogram threshold: bucket the integer scores (fixed width,
+    10,000 micro-nats), aggregate bucket counts (tiny), walk the cumulative
+    from the top on that ≤few-thousand-row table, and broadcast the
+    crossing bucket back as a pure filter. Deterministic (integer buckets, exact counts), within one
     bucket of exact-p, and the corpus is never sorted. Returns
     ``(label, n_selected, sel_tokens, min_score)`` — all exact ints."""
-    scores = dsir_scores(df, target, text_col, id_col, n_buckets, carry=(label_col,))
+    scores = dsir_scores(df, target, carry=(label_col,))
     raw = scores.filter(~F.col("is_target"))
     hist = raw.groupBy(
-        F.floor(F.col("score_micro") / F.lit(float(bucket_width)))
+        F.floor(F.col("score_micro") / F.lit(10_000.0))
         .cast("bigint")
         .alias("b")
     ).agg(F.count("*").alias("n"))
@@ -181,7 +177,7 @@ def dsir_select(
     return (
         raw.crossJoin(F.broadcast(thr))
         .filter(
-            F.floor(F.col("score_micro") / F.lit(float(bucket_width))).cast("bigint")
+            F.floor(F.col("score_micro") / F.lit(10_000.0)).cast("bigint")
             >= F.col("tb")
         )
         .groupBy(F.col(label_col).alias("label"))
@@ -224,23 +220,16 @@ def dsir_sql(
     """
 
 
-def dsir_select_sql(
-    target_pred: str,
-    keep_frac: float = 0.2,
-    bucket_width: int = 10_000,
-    label_col: str = "lang",
-    n_buckets: int = 1024,
-    table: str = "documents",
-) -> str:
+def dsir_select_sql(target_pred: str, keep_frac: float = 0.2) -> str:
     """DuckDB oracle for :func:`dsir_select` (the label rides a plain join —
     single-node; scores are identical, so the histogram/threshold/accounting
     arithmetic mirrors the Spark plan exactly)."""
-    fb = f"CAST(FLOOR(score_micro / CAST({float(bucket_width)!r} AS DOUBLE)) AS BIGINT)"
+    fb = "CAST(FLOOR(score_micro / CAST(10000.0 AS DOUBLE)) AS BIGINT)"
     return f"""
-    WITH scores AS ({dsir_sql(target_pred, n_buckets, table)}),
+    WITH scores AS ({dsir_sql(target_pred)}),
     lab AS (
-      SELECT s.doc_id, s.n_tokens, s.score_micro, d.{label_col}
-      FROM scores s JOIN {table} d USING (doc_id)
+      SELECT s.doc_id, s.n_tokens, s.score_micro, d.lang
+      FROM scores s JOIN documents d USING (doc_id)
       WHERE NOT ({target_pred})),
     hist AS (SELECT {fb} AS b, COUNT(*) AS n FROM lab GROUP BY 1),
     tot AS (SELECT SUM(n) AS total FROM hist),
@@ -249,7 +238,7 @@ def dsir_select_sql(
       SELECT MAX(b) AS tb FROM cum, tot
       WHERE c >= CAST(FLOOR(total * CAST({float(keep_frac)!r} AS DOUBLE)) AS BIGINT)),
     sel AS (SELECT lab.* FROM lab, thr WHERE {fb} >= thr.tb)
-    SELECT {label_col} AS label, COUNT(*) AS n_selected,
+    SELECT lang AS label, COUNT(*) AS n_selected,
            CAST(SUM(n_tokens) AS BIGINT) AS sel_tokens,
            CAST(MIN(score_micro) AS BIGINT) AS min_score
     FROM sel GROUP BY 1

@@ -30,17 +30,20 @@ def _sql_string(v: Optional[str]) -> str:
     return "'" + str(v).replace("\\", "\\\\").replace("'", "\\'") + "'"
 
 
+#: the per-frame columns every melted object row carries, where present
+_INDEX_COLUMNS = (
+    Column.PERIOD_ID,
+    Column.TIMESTAMP,
+    Column.FRAME_ID,
+    Column.BALL_STATE,
+    Column.BALL_OWNING_TEAM_ID,
+)
+
+
 def melt_wide_tracking(
     df: DataFrame,
     objects: Iterable[TrackedObject],
     game_id: str,
-    index_columns: Iterable[str] = (
-        Column.PERIOD_ID,
-        Column.TIMESTAMP,
-        Column.FRAME_ID,
-        Column.BALL_STATE,
-        Column.BALL_OWNING_TEAM_ID,
-    ),
 ) -> DataFrame:
     columns = set(df.columns)
     rows = []
@@ -61,7 +64,7 @@ def melt_wide_tracking(
         f"stack({len(rows)}, {', '.join(rows)}) as "
         f"(`{Column.OBJECT_ID}`, `{Column.TEAM_ID}`, `{Column.POSITION_NAME}`, x, y, z)"
     )
-    idx = [c for c in index_columns if c in columns]
+    idx = [c for c in _INDEX_COLUMNS if c in columns]
     return df.selectExpr(*[f"`{c}`" for c in idx], stack_expr).select(
         Column.OBJECT_ID,
         *idx,

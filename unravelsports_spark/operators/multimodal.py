@@ -352,9 +352,9 @@ def _bits_to_signed64(bits) -> int:
     return v - (1 << 64) if v >= (1 << 63) else v
 
 
-def image_dhash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def image_dhash(df: DataFrame) -> DataFrame:
     """Difference-hash (dHash) perceptual fingerprint per image → input
-    columns + ``dhash`` (long): decode the binary payload with the
+    columns + ``dhash`` (long): decode the binary ``payload`` with the
     pure-Python codec, grayscale, block-mean downsample to an 8×9 grid,
     and take the 64 horizontal gradient signs as a 64-bit integer
     (row-major, MSB first). Near-identical images (recompressions, small
@@ -383,7 +383,7 @@ def image_dhash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            pdf["dhash"] = [one(p) for p in pdf[payload_col]]
+            pdf["dhash"] = [one(p) for p in pdf["payload"]]
             yield pdf
 
     return df.mapInPandas(run, schema)
@@ -479,7 +479,7 @@ _PHASH_BASIS = np.array(
 )
 
 
-def image_phash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
+def image_phash(df: DataFrame) -> DataFrame:
     """Perceptual hash (pHash) per image → input columns + ``phash``
     (long): decode, grayscale, block-mean resample to 32×32, 2-D DCT-II,
     keep the 8×8 low-frequency block, threshold each coefficient against
@@ -513,7 +513,7 @@ def image_phash(df: DataFrame, payload_col: str = "payload") -> DataFrame:
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             pdf = pdf.copy()
-            pdf["phash"] = [one(p) for p in pdf[payload_col]]
+            pdf["phash"] = [one(p) for p in pdf["payload"]]
             yield pdf
 
     return df.mapInPandas(run, schema)

@@ -44,8 +44,6 @@ from .importance import MICRO, TERM_RE, _bucket, fan_out
 def nb_confusion(
     df: DataFrame,
     label_col: str = "lang",
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_buckets: int = 1024,
 ) -> DataFrame:
     """Train multinomial NB on even ``doc_id`` rows, score odd rows; return
@@ -59,14 +57,13 @@ def nb_confusion(
     them identically, and ``tests/test_corpus4.py`` asserts full coverage
     on the certified corpus.
     """
-    df = fan_out(df, id_col)
-    is_train = (F.col(id_col) % 2 == 0).alias("is_train")
+    df = fan_out(df)
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.col(label_col).alias("label"),
-        is_train,
+        (F.col("doc_id") % 2 == 0).alias("is_train"),
         F.explode(
-            F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TERM_RE), F.lit(0))
+            F.regexp_extract_all(F.lower(F.col("text")), F.lit(TERM_RE), F.lit(0))
         ).alias("term"),
     )
     dbc = tracked_persist(
@@ -156,15 +153,13 @@ def nb_confusion(
     )
 
 
-def nb_confusion_sql(
-    label_col: str = "lang", n_buckets: int = 1024, table: str = "documents"
-) -> str:
+def nb_confusion_sql(label_col: str = "lang", n_buckets: int = 1024) -> str:
     """DuckDB oracle: the identical split / micro-nat model / argmax."""
     return f"""
     WITH toks AS (
       SELECT doc_id, {label_col} AS label, doc_id % 2 = 0 AS is_train,
              CAST(('0x' || substring(md5(t.term), 1, 15)) AS BIGINT) % {n_buckets} AS bucket
-      FROM {table}, unnest(regexp_extract_all(lower(text), '{TERM_RE}')) AS t(term)),
+      FROM documents, unnest(regexp_extract_all(lower(text), '{TERM_RE}')) AS t(term)),
     dbc AS (
       SELECT doc_id, label, is_train, bucket, COUNT(*) AS n
       FROM toks GROUP BY 1, 2, 3, 4),

@@ -1,23 +1,22 @@
 """Sequence packing: assign documents to fixed-token-budget bins — the step
 that turns a filtered corpus into training sequences.
 
-Formulation: within each ``by`` group, documents are ordered deterministically
-(``order_col``) and binned by the START offset of each doc in the
-concatenated token stream: ``bin = floor((cumsum(tokens) − tokens) /
-budget)``. One window cumsum per group — a single shuffle, no sequential
-driver loop, and an exact DuckDB oracle (same SQL window). This is
-streaming-concatenation packing (documents may straddle a boundary and get
-truncated/continued by the tokenizer downstream), not bin packing — the
-greedy first-fit variant is inherently sequential and belongs in the
-tokenizer, not the engine.
+Formulation: within each ``source``, documents are ordered by ``doc_id`` and
+binned by the START offset of each doc in the concatenated token stream:
+``bin = floor((cumsum(n_tokens) − n_tokens) / budget)``. One window cumsum
+per source — a single shuffle, no sequential driver loop, and an exact
+DuckDB oracle (same SQL window). This is streaming-concatenation packing
+(documents may straddle a boundary and get truncated/continued by the
+tokenizer downstream), not bin packing — the greedy first-fit variant is
+inherently sequential and belongs in the tokenizer, not the engine.
 
-Scale shape (r14, guide §2.4/§2.5): ``by`` is typically LOW-cardinality
-(a handful of sources), so the naive one-window-per-group form funnels the
+Scale shape (r14, guide §2.4/§2.5): ``source`` is LOW-cardinality (a
+handful of sources), so the naive one-window-per-group form funnels the
 whole corpus through a handful of reducers. The cumsum therefore runs as a
 two-level prefix sum over ``n_ranges`` fixed integer ranges of the order
-column: a per-(group, range) local cumsum (groups × n_ranges parallel
+column: a per-(source, range) local cumsum (sources × n_ranges parallel
 window partitions), per-range totals prefix-summed by a window over the
-≤ ``n_ranges``-row-per-group bucket table, and a null-safe join-back that
+≤ ``n_ranges``-row-per-source bucket table, and a null-safe join-back that
 AQE broadcasts. When the split may run, the bucket rule and the join-back
 condition are the ones :mod:`~unravelsports_spark.operators.serieswin`
 owns for every such decomposition (integral, NULL-free, non-empty order
@@ -29,8 +28,6 @@ single-window form runs.
 
 from __future__ import annotations
 
-from typing import Sequence
-
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -40,10 +37,6 @@ from .serieswin import _INTEGRAL, null_safe_on, range_split
 def pack_sequences(
     df: DataFrame,
     budget: int,
-    token_col: str = "n_tokens",
-    order_col: str = "doc_id",
-    by: Sequence[str] = ("source",),
-    out: str = "bin",
     n_ranges: int | None = 64,
 ) -> DataFrame:
     if budget <= 0:
@@ -52,15 +45,15 @@ def pack_sequences(
         raise ValueError("n_ranges must be positive or None")
 
     def naive() -> DataFrame:
-        w = Window.partitionBy(*by).orderBy(order_col)
-        start = F.sum(token_col).over(w) - F.col(token_col)
-        return df.withColumn(out, F.floor(start / budget).cast("long"))
+        w = Window.partitionBy("source").orderBy("doc_id")
+        start = F.sum("n_tokens").over(w) - F.col("n_tokens")
+        return df.withColumn("bin", F.floor(start / budget).cast("long"))
 
     # token counts must be integral, not just exact: the bins
     # divide the running total, and the per-bucket totals are summed as long
-    if dict(df.dtypes).get(token_col) not in _INTEGRAL:
+    if dict(df.dtypes).get("n_tokens") not in _INTEGRAL:
         return naive()
-    bucket = range_split(df, order_col, n_ranges)
+    bucket = range_split(df, "doc_id", n_ranges)
     if bucket is None:
         return naive()
 
@@ -68,29 +61,25 @@ def pack_sequences(
 
     d = tracked_persist(df.withColumn("_pkb", bucket))
     # default (RANGE, peers-inclusive) frames on BOTH windows, matching the
-    # naive form bit-for-bit when order_col has duplicates: peers share a
+    # naive form bit-for-bit when doc_id has duplicates: peers share a
     # bucket (the bucket is a function of the order value), so the
     # peers-inclusive local sum + prior-bucket offset IS the naive
     # peers-inclusive global sum (review finding, r14: an explicit ROWS
     # frame here diverged on ties and was order-nondeterministic)
-    w_local = Window.partitionBy(*by, "_pkb").orderBy(order_col)
-    w_off = Window.partitionBy(*by).orderBy("_pkb")
+    w_local = Window.partitionBy("source", "_pkb").orderBy("doc_id")
+    w_off = Window.partitionBy("source").orderBy("_pkb")
     off = (
-        d.groupBy(*by, "_pkb")
-        .agg(F.sum(token_col).cast("long").alias("_pkt"))
+        d.groupBy("source", "_pkb")
+        .agg(F.sum("n_tokens").cast("long").alias("_pkt"))
         .withColumn("_pkoff", F.sum("_pkt").over(w_off) - F.col("_pkt"))
         .select(
-            *[F.col(c).alias(f"_pkg{i}") for i, c in enumerate(by)],
-            F.col("_pkb").alias("_pkbr"),
-            "_pkoff",
+            F.col("source").alias("_pkg"), F.col("_pkb").alias("_pkbr"), "_pkoff"
         )
     )
-    cond = null_safe_on(
-        [*by, "_pkb"], [*[f"_pkg{i}" for i in range(len(by))], "_pkbr"]
-    )
-    start = F.col("_pkoff") + F.sum(token_col).over(w_local) - F.col(token_col)
+    cond = null_safe_on(["source", "_pkb"], ["_pkg", "_pkbr"])
+    start = F.col("_pkoff") + F.sum("n_tokens").over(w_local) - F.col("n_tokens")
     return (
         d.join(off, cond)
-        .withColumn(out, F.floor(start / budget).cast("long"))
-        .drop("_pkb", "_pkbr", "_pkoff", *[f"_pkg{i}" for i in range(len(by))])
+        .withColumn("bin", F.floor(start / budget).cast("long"))
+        .drop("_pkb", "_pkbr", "_pkoff", "_pkg")
     )

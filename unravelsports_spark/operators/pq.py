@@ -207,12 +207,10 @@ def pq_train_codebook(
     m_subspaces: int = 4,
     k: int = 16,
     n_rounds: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list[list[list[int]]]:
     """Lloyd-train one PQ codebook on the raw vectors of ``df`` (see
     :func:`pq_train_codebooks`); returns ``codebook[m][c] = int centroid``."""
-    iq = df.select(F.col(id_col).alias("_id"), _int_grid(vec_col).alias("iq"))
+    iq = df.select(F.col("vec_id").alias("_id"), _int_grid().alias("iq"))
     return pq_train_codebooks(iq, [(m_subspaces, k, n_rounds)])[0]
 
 
@@ -256,19 +254,17 @@ def pq_adc_topk(
     codebook: list[list[list[int]]],
     query_int: list[int],
     top: int = 20,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Encode every vector against ``codebook`` and rank by asymmetric
     distance to ``query_int`` (already on the int grid). Returns
     ``(vec_id, code0..codeM-1, adc_dist)`` — all BIGINT, hash-exact."""
-    iq = df.select(F.col(id_col).alias(id_col), _int_grid(vec_col).alias("iq"))
+    iq = df.select("vec_id", _int_grid().alias("iq"))
     coded = _with_codes(iq, [("_c", codebook)])
     codes = [F.col(f"_c{m}").cast("bigint").alias(f"code{m}") for m in range(len(codebook))]
     adc = _adc_sum(_adc_lut(query_int, codebook))
     return (
-        coded.select(id_col, *codes, adc.alias("adc_dist"))
-        .orderBy("adc_dist", id_col)
+        coded.select("vec_id", *codes, adc.alias("adc_dist"))
+        .orderBy("adc_dist", "vec_id")
         .limit(top)
     )
 
@@ -280,8 +276,6 @@ def pq_ivf_adc_topk(
     query_int: list[int],
     n_probe: int = 2,
     top: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     iq_df: DataFrame | None = None,
 ) -> DataFrame:
     """IVF-PQ scan: coarse cells prune the corpus to ``n_probe`` probed
@@ -300,12 +294,12 @@ def pq_ivf_adc_topk(
 
     Returns ``(vec_id, cell, adc_dist)`` — exact int64, hash-certifiable.
     """
-    # iq_df: optional pre-built (id_col, iq) int-grid frame, e.g. the
+    # iq_df: optional pre-built (vec_id, iq) int-grid frame, e.g. the
     # persisted frame the codebooks trained on — quantizes once per caller
     iq = (
         iq_df
         if iq_df is not None
-        else df.select(F.col(id_col).alias(id_col), _int_grid(vec_col).alias("iq"))
+        else df.select("vec_id", _int_grid().alias("iq"))
     )
     candidates = (
         _with_codes(iq, [("_cell", coarse_cb)])
@@ -316,18 +310,13 @@ def pq_ivf_adc_topk(
     coded = _with_codes(candidates, [("_c", codebook)])
     adc = _adc_sum(_adc_lut(query_int, codebook))
     return (
-        coded.select(id_col, "cell", adc.alias("adc_dist"))
-        .orderBy("adc_dist", id_col)
+        coded.select("vec_id", "cell", adc.alias("adc_dist"))
+        .orderBy("adc_dist", "vec_id")
         .limit(top)
     )
 
 
-def _cell_and_residual(
-    df: DataFrame,
-    coarse_cb: list[list[list[int]]],
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
+def _cell_and_residual(df: DataFrame, coarse_cb: list[list[list[int]]]) -> DataFrame:
     """``(vec_id, cell, iq)`` where ``iq`` is the RESIDUAL int vector
     (quantized vector minus its coarse centroid) — a pure projection against
     the literal kc×D coarse matrix."""
@@ -335,7 +324,7 @@ def _cell_and_residual(
     centroid_matrix = F.array(
         *[F.array(*[F.lit(x) for x in coarse_cb[0][c]]) for c in range(kc)]
     )
-    raw = df.select(F.col(id_col).alias("_id"), _int_grid(vec_col).alias("_raw"))
+    raw = df.select(F.col("vec_id").alias("_id"), _int_grid().alias("_raw"))
     return (
         _with_codes(raw, [("_cell", coarse_cb)], iq_col="_raw")
         .withColumn("cell", F.col("_cell0"))
@@ -357,13 +346,11 @@ def pq_train_residual_codebook(
     m_subspaces: int = 4,
     k: int = 16,
     n_rounds: int = 2,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> list[list[list[int]]]:
     """Train the PQ codebook on coarse-cell RESIDUALS — the classic FAISS
     IVFPQ refinement: residual magnitudes are much smaller than raw vectors,
     so the same k centroids quantize them with less error."""
-    iq = _cell_and_residual(df, coarse_cb, vec_col, id_col).select("_id", "iq")
+    iq = _cell_and_residual(df, coarse_cb).select("_id", "iq")
     return pq_train_codebooks(iq, [(m_subspaces, k, n_rounds)])[0]
 
 
@@ -374,8 +361,6 @@ def pq_ivf_residual_adc_topk(
     query_int: list[int],
     n_probe: int = 2,
     top: int = 10,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Residual IVF-PQ scan: probe the ``n_probe`` cells nearest the query,
     encode each candidate's RESIDUAL against ``codebook``, and rank by the
@@ -389,7 +374,7 @@ def pq_ivf_residual_adc_topk(
         for cell in range(kc)
     ]
 
-    cand = _cell_and_residual(df, coarse_cb, vec_col, id_col).filter(
+    cand = _cell_and_residual(df, coarse_cb).filter(
         F.col("cell").isin(_probe_cells(query_int, coarse_cb, n_probe))
     )
     cand = _with_codes(cand, [("_c", codebook)])
@@ -406,7 +391,7 @@ def pq_ivf_residual_adc_topk(
             F.element_at(lut_m, F.col("cell").cast("int") + 1), code + 1
         )
     return (
-        cand.select(F.col("_id").alias(id_col), "cell", adc.alias("adc_dist"))
-        .orderBy("adc_dist", id_col)
+        cand.select(F.col("_id").alias("vec_id"), "cell", adc.alias("adc_dist"))
+        .orderBy("adc_dist", "vec_id")
         .limit(top)
     )

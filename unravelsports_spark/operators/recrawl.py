@@ -61,9 +61,6 @@ def recrawl_schedule(
     asof,
     min_interval_sec: int = 3600,
     max_interval_sec: int = 30 * 24 * 3600,
-    url_col: str = "url",
-    ts_col: str = "fetch_ts",
-    fp_col: str = "content_fp",
 ) -> DataFrame:
     """Per-url recrawl schedule from fetch history (see module
     docstring). ``asof`` is the scheduling instant — a timestamp Column
@@ -103,21 +100,21 @@ def recrawl_schedule(
     # parse so every eagerly-validated spelling also executes
     asof_ts = asof if isinstance(asof, Column) else F.lit(asof)
     asof_sec = F.unix_timestamp(asof_ts.cast("timestamp"))
-    ts_sec = F.unix_timestamp(F.col(ts_col))
+    ts_sec = F.unix_timestamp(F.col("fetch_ts"))
 
     # full-precision fetch_ts order (unix_timestamp truncates to seconds —
     # ordering by it would make sub-second-distinct fetches tie)
-    w = Window.partitionBy(url_col).orderBy(F.col(ts_col))
+    w = Window.partitionBy("url").orderBy(F.col("fetch_ts"))
     # duplicate (url, fetch_ts) rows tie in the lag order → loud, not
     # nondeterministic (count rides the same url partitioning)
-    n_at_ts = F.count("*").over(Window.partitionBy(url_col, ts_col))
+    n_at_ts = F.count("*").over(Window.partitionBy("url", "fetch_ts"))
     marked = (
         history.withColumn("_dup", n_at_ts)
         .withColumn(
             "_changed",
             (
-                F.lag(fp_col).over(w).isNotNull()
-                & (F.lag(fp_col).over(w) != F.col(fp_col))
+                F.lag("content_fp").over(w).isNotNull()
+                & (F.lag("content_fp").over(w) != F.col("content_fp"))
             ).cast("long"),
         )
         .withColumn("_ts_sec", ts_sec)
@@ -125,12 +122,12 @@ def recrawl_schedule(
     marked = precondition_filter(
         marked,
         F.col("_dup") == 1,
-        f"recrawl_schedule: duplicate ({url_col}, {ts_col}) fetch row — "
+        "recrawl_schedule: duplicate (url, fetch_ts) fetch row — "
         "the change order is nondeterministic; dedupe the history upstream",
     )
-    per_url = marked.groupBy(url_col).agg(
+    per_url = marked.groupBy("url").agg(
         F.count("*").alias("n_fetches"),
-        F.max(ts_col).alias("last_ts"),
+        F.max("fetch_ts").alias("last_ts"),
         F.max("_ts_sec").alias("_last_sec"),
         (F.max("_ts_sec") - F.min("_ts_sec")).alias("_span_sec"),
         F.sum("_changed").alias("n_changes"),

@@ -119,13 +119,12 @@ def moving_sum_count(
     order_col: str,
     value: Column,
     lookback: int,
-    out_sum: str = "win_sum",
-    out_n: str = "win_n",
     n_ranges: int | None = DEFAULT_RANGES,
 ) -> DataFrame:
     """``SUM(value) / COUNT(*) OVER (PARTITION BY part ORDER BY order ROWS
     BETWEEN lookback PRECEDING AND CURRENT ROW)`` without a per-key-value
-    reducer funnel. Output columns ride on the input rows."""
+    reducer funnel. Output columns ``win_sum`` and ``win_n`` ride on the
+    input rows."""
     w_naive = (
         Window.partitionBy(part_col)
         .orderBy(order_col)
@@ -133,8 +132,8 @@ def moving_sum_count(
     )
 
     def naive():
-        return df.withColumn(out_sum, F.sum(value).over(w_naive)).withColumn(
-            out_n, F.count(F.lit(1)).over(w_naive)
+        return df.withColumn("win_sum", F.sum(value).over(w_naive)).withColumn(
+            "win_n", F.count(F.lit(1)).over(w_naive)
         )
 
     d = df.withColumn("_sv", value)
@@ -199,7 +198,7 @@ def moving_sum_count(
     zero_n = F.lit(0).cast("long")
     return (
         joined.withColumn(
-            out_sum,
+            "win_sum",
             # SUM ignores NULLs: an all-NULL side contributes nothing, and
             # the frame is NULL only when both sides are. The cast keeps the
             # naive frame sum's type (a decimal sum of two sums widens).
@@ -208,7 +207,7 @@ def moving_sum_count(
             .cast(d.select(F.sum("_sv")).dtypes[0][1]),
         )
         .withColumn(
-            out_n,
+            "win_n",
             F.when(m <= 0, F.col("_lcnt")).otherwise(
                 F.col("_lcnt") + F.coalesce(cc, zero_n)
             ),

@@ -53,37 +53,27 @@ SKEY_PRE = "_skey_pre"
 NTOK_PRE = "_ntok_pre"
 
 
-def _skey(text_col: str = "text") -> F.Column:
-    return (
-        F.conv(F.substring(F.md5(F.col(text_col)), 1, 15), 16, 10).cast("bigint") % PPM
-    )
+def _skey() -> F.Column:
+    return F.conv(F.substring(F.md5(F.col("text")), 1, 15), 16, 10).cast("bigint") % PPM
 
 
-def _ntokens(text_col: str = "text") -> F.Column:
-    return F.size(F.split(F.trim(F.col(text_col)), r"\s+")).cast("bigint")
+def _ntokens() -> F.Column:
+    return F.size(F.split(F.trim(F.col("text")), r"\s+")).cast("bigint")
 
 
-def shard_precompute(df: DataFrame, text_col: str = "text") -> DataFrame:
+def shard_precompute(df: DataFrame) -> DataFrame:
     """Attach the packer's shuffle key and token count as per-row columns so
     an upstream survivor-selecting aggregate or anti-join can DROP ``text``
     from its shuffle (guide §2.3: move keys and metadata, not payloads).
 
-    Both columns are pure per-row functions of ``text_col``, so computing
+    Both columns are pure per-row functions of ``text``, so computing
     them before a dedup ``min_by`` / semantic anti-join yields the identical
     values on every surviving row — same discipline as scoring quality /
     langid before the dedup aggregate (plans/text.py)."""
-    return df.withColumn(SKEY_PRE, _skey(text_col)).withColumn(
-        NTOK_PRE, _ntokens(text_col)
-    )
+    return df.withColumn(SKEY_PRE, _skey()).withColumn(NTOK_PRE, _ntokens())
 
 
-def shard_assignments(
-    df: DataFrame,
-    budget: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_ranges: int = 64,
-) -> DataFrame:
+def shard_assignments(df: DataFrame, budget: int, n_ranges: int = 64) -> DataFrame:
     """Per-document shard ids: ``(doc_id, skey, n_tokens, shard_id)``.
 
     ``n_ranges`` is the prefix-sum fan-out (P above). It only controls
@@ -99,7 +89,7 @@ def shard_assignments(
         # the caller already computed (skey, n_tokens) upstream (see
         # shard_precompute) — text never reaches this operator at all
         src = df.select(
-            F.col(id_col).alias("doc_id"),
+            "doc_id",
             F.col(SKEY_PRE).alias("skey"),
             F.col(NTOK_PRE).alias("n_tokens"),
         )
@@ -110,11 +100,7 @@ def shard_assignments(
         # exchange + 32-task granularity on every downstream tiny stage
         # costs more than the one-core md5/split saves; fan-out overhead is
         # exactly the anti-scaling mode VERDICT r14 flagged for this query
-        src = df.select(
-            F.col(id_col).alias("doc_id"),
-            _skey(text_col).alias("skey"),
-            _ntokens(text_col).alias("n_tokens"),
-        )
+        src = df.select("doc_id", _skey().alias("skey"), _ntokens().alias("n_tokens"))
     d = tracked_persist(
         src.withColumn("bucket", range_bucket("skey", 0, PPM, n_ranges))
     )
@@ -154,17 +140,11 @@ def shard_assignments(
     )
 
 
-def shard_manifest(
-    df: DataFrame,
-    budget: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_ranges: int = 64,
-) -> DataFrame:
+def shard_manifest(df: DataFrame, budget: int, n_ranges: int = 64) -> DataFrame:
     """Shard-level manifest ``(shard_id, n_docs, shard_tokens)`` — what a
     loader reads to plan epochs. Pure integer output, exact oracle."""
     return (
-        shard_assignments(df, budget, text_col, id_col, n_ranges)
+        shard_assignments(df, budget, n_ranges)
         .groupBy("shard_id")
         .agg(
             F.count("*").alias("n_docs"),

@@ -211,7 +211,7 @@ def _cosine_vs_refs(e, refs, id_col="vec_id", v_col="v", ref_id_name="ref_id"):
     )
 
 
-def _cosine_vs_queries_with_cell(e, queries, cents, id_col="vec_id", v_col="v"):
+def _cosine_vs_queries_with_cell(e, queries, cents):
     """(row_id, qid, cosine, cell): cosine of every corpus row against each
     QUERY vector, with the row's nearest-CENTROID id (max cosine, ties to
     the lowest centroid id) riding along on every emitted row. The centroid
@@ -249,7 +249,7 @@ def _cosine_vs_queries_with_cell(e, queries, cents, id_col="vec_id", v_col="v"):
                 continue
             # C-level conversion + in-place accumulation (r14): identical
             # IEEE sequence as the allocating form — see _cosine_vs_refs
-            V = np.asarray(pdf[v_col].tolist(), dtype=float)
+            V = np.asarray(pdf["v"].tolist(), dtype=float)
             n2v = np.zeros(n)
             acc = np.zeros((n, m))
             tmp = np.empty((n, m))
@@ -266,30 +266,30 @@ def _cosine_vs_queries_with_cell(e, queries, cents, id_col="vec_id", v_col="v"):
             with np.errstate(divide="ignore", invalid="ignore"):
                 cos = np.where(denom > 0.0, acc / denom, 0.0)
             cell = cids[np.argmax(cos[:, mq:], axis=1)]
-            ids = pdf[id_col].to_numpy()
+            ids = pdf["vec_id"].to_numpy()
             yield pd.DataFrame(
                 {
-                    id_col: np.repeat(ids, mq),
+                    "vec_id": np.repeat(ids, mq),
                     "qid": np.tile(qids, n),
                     "cosine": cos[:, :mq].ravel(),
                     "cell": np.repeat(cell, mq),
                 }
             )
 
-    return e.select(id_col, v_col).mapInPandas(
-        gen, f"{id_col} bigint, qid bigint, cosine double, cell bigint"
+    return e.select("vec_id", "v").mapInPandas(
+        gen, "vec_id bigint, qid bigint, cosine double, cell bigint"
     )
 
 
-def auto_bits_per_table(n_rows: int, target_bucket: int = 64, min_bits: int = 4, max_bits: int = 24) -> int:
-    """The sign-LSH operating rule as code: pick ``bits_per_table`` so the
-    expected bucket size ``n / 2^bits`` stays ~``target_bucket`` as the
+def auto_bits_per_table(n_rows: int) -> int:
+    """The sign-LSH operating rule as code: pick ``bits_per_table`` in
+    [4, 24] so the expected bucket size ``n / 2^bits`` stays ~64 as the
     corpus grows — i.e. bits grow by log2(growth), keeping the quadratic
     within-bucket verify linear in n overall. Used programmatically by
     tools/scale_probe.py so scale runs never rely on hand-set bits."""
     import math
 
-    return max(min_bits, min(max_bits, int(math.ceil(math.log2(max(2.0, n_rows / float(target_bucket)))))))
+    return max(4, min(24, int(math.ceil(math.log2(max(2.0, n_rows / 64.0))))))
 
 
 def _allpairs_cosine_removed(ev, threshold, n_blocks=8):
@@ -474,8 +474,6 @@ def incremental_semdedup(
     threshold: float = 0.4,
     n_tables: int = 4,
     bits_per_table: int = 4,
-    id_col: str = "vec_id",
-    v_col: str = "v",
 ) -> DataFrame:
     """Cross-batch SemDeDup: flag vectors of ``new_batch`` that are within
     ``cosine >= threshold`` of any previously-SEEN vector in the ``seen``
@@ -509,7 +507,7 @@ def incremental_semdedup(
     its join key, the key build is the fused one-pass ``_sign_lsh_bev``
     kernel (nothing broadcast, nothing all-pairs at any batch count)."""
     bev_new = _sign_lsh_bev(
-        new_batch.select(F.col(id_col).alias("vec_id"), F.col(v_col).alias("v")),
+        new_batch.select("vec_id", "v"),
         planes,
         n_tables=n_tables,
         bits_per_table=bits_per_table,

@@ -190,7 +190,7 @@ def surt_host(host_col: Column) -> Column:
     return F.array_join(F.reverse(F.split(host_col, r"\.")), ",")
 
 
-def surt_key(url_col, strip_params=DEFAULT_TRACKING_PARAMS) -> Column:
+def surt_key(url_col) -> Column:
     """Canonical SURT key of a URL: ``scheme://news.example.com:8080/a?q``
     → ``com,example,news:8080)/a?q`` (scheme dropped — one resource, one
     key, whatever the fetch scheme). Built ON the canonical spelling
@@ -203,7 +203,7 @@ def surt_key(url_col, strip_params=DEFAULT_TRACKING_PARAMS) -> Column:
     and each registrable domain's — pages into contiguous ranges, so
     host-scoped scans (robots re-checks, per-site exports, link-graph
     locality) prune to a few partitions instead of shuffling the corpus."""
-    canon = url_canonicalize(url_col, strip_params)
+    canon = url_canonicalize(url_col)
     auth = F.regexp_extract(canon, URL_HOST_RE, 1)
     rest = F.regexp_extract(canon, r"^[a-z][a-z0-9+.-]*://[^/?#]+([^#]*)", 1)
     host = F.regexp_replace(auth, r":\d+$", "")
@@ -214,21 +214,16 @@ def surt_key(url_col, strip_params=DEFAULT_TRACKING_PARAMS) -> Column:
     return F.when(canon.isNotNull(), F.concat(rev, F.lit(")"), rest))
 
 
-def with_canonical_url(
-    df: DataFrame,
-    url_col: str = "url",
-    out_col: str = "url_canonical",
-    strip_params=DEFAULT_TRACKING_PARAMS,
-) -> DataFrame:
-    """Append ``out_col`` = canonical URL. LOUD tripwire (the
+def with_canonical_url(df: DataFrame) -> DataFrame:
+    """Append ``url_canonical`` = canonical ``url``. LOUD tripwire (the
     precondition_filter contract): a path still carrying a dot segment
     after the bounded fixpoint — nesting deeper than ``_DOT_ITERS`` —
     throws instead of emitting a wrong identity."""
     from . import precondition_filter, require_new_column
 
-    require_new_column(df, out_col)
-    out = df.withColumn(out_col, url_canonicalize(F.col(url_col), strip_params))
-    c = F.col(out_col)
+    require_new_column(df, "url_canonical")
+    out = df.withColumn("url_canonical", url_canonicalize(F.col("url")))
+    c = F.col("url_canonical")
     # check the PATH only — a query param legitimately carrying "/../"
     # (?next=/a/../b) must not trip the path-resolution wire
     path = F.regexp_extract(c, URL_PATH_RE, 1)
@@ -237,5 +232,5 @@ def with_canonical_url(
         out,
         resolved,
         f"url_canonicalize: dot segments deeper than {_DOT_ITERS} levels "
-        f"in {url_col!r} — raise _DOT_ITERS or clean the input",
+        "in 'url' — raise _DOT_ITERS or clean the input",
     )

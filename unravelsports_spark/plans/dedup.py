@@ -847,7 +847,7 @@ def d_semdedup_multitable(spark, sf_dir):
     return semdedup_multitable_stats(_emb(spark, sf_dir, extra_cols=("label",)))
 
 
-def _pagerank_sql(iters: int = 3, damping: float = 0.85) -> str:
+def _pagerank_sql() -> str:
     parts = [
         "WITH pairs AS (" + _lsh_sql() + ")",
         """sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
@@ -857,7 +857,7 @@ def _pagerank_sql(iters: int = 3, damping: float = 0.85) -> str:
         f"""r0 AS (SELECT src, deg, ROUND({_dbl(1.0)} / nn.n, 9) AS pr
                    FROM deg CROSS JOIN nn)""",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, 4):
         parts.append(
             f"""c{i} AS (SELECT e.dst AS dst,
                       CAST(ROUND(r.pr / r.deg, 12) AS DECIMAL(26,12)) AS c
@@ -868,11 +868,11 @@ def _pagerank_sql(iters: int = 3, damping: float = 0.85) -> str:
         )
         parts.append(
             f"""r{i} AS (SELECT d.src, d.deg,
-                      ROUND({_dbl(1.0 - damping)} / nn.n
-                            + {_dbl(damping)} * COALESCE(s.s, {_dbl(0.0)}), 9) AS pr
+                      ROUND({_dbl(1.0 - 0.85)} / nn.n
+                            + {_dbl(0.85)} * COALESCE(s.s, {_dbl(0.0)}), 9) AS pr
                FROM deg d LEFT JOIN s{i} s ON d.src = s.dst CROSS JOIN nn)"""
         )
-    return ",\n".join(parts) + f"\nSELECT src AS id, pr FROM r{iters}"
+    return ",\n".join(parts) + "\nSELECT src AS id, pr FROM r3"
 
 
 @query("d_pagerank", oracle=_pagerank_sql(), headline=True)
@@ -1240,14 +1240,14 @@ def d_lsh_recall(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 
-def _label_communities_sql(iters: int = 3) -> str:
+def _label_communities_sql() -> str:
     parts = [
         "WITH pairs AS (" + _lsh_sql() + ")",
         """sym AS (SELECT id_a AS src, id_b AS dst FROM pairs
                    UNION SELECT id_b, id_a FROM pairs)""",
         "l0 AS (SELECT DISTINCT src AS id, src AS label FROM sym)",
     ]
-    for i in range(1, iters + 1):
+    for i in range(1, 4):
         parts.append(
             f"""v{i} AS (SELECT e.src AS id, l.label, COUNT(*) AS cnt
                FROM sym e JOIN l{i - 1} l ON e.dst = l.id GROUP BY 1, 2)"""
@@ -1260,8 +1260,8 @@ def _label_communities_sql(iters: int = 3) -> str:
                  FROM v{i}) WHERE rk = 1)"""
         )
     parts.append(
-        f"""sizes AS (SELECT label, COUNT(*) AS community_size
-             FROM l{iters} GROUP BY label)"""
+        """sizes AS (SELECT label, COUNT(*) AS community_size
+             FROM l3 GROUP BY label)"""
     )
     return (
         ",\n".join(parts)
@@ -1294,7 +1294,7 @@ def d_label_communities(spark, sf_dir):
     )
 
 
-def _kcore_sql(k: int = 2, rounds: int = 4) -> str:
+def _kcore_sql() -> str:
     # every e{i} is referenced three times (its count branch, the k{i+1}
     # degree agg, and the e{i+1} filter) and each k{i+1} twice — AS
     # MATERIALIZED pins single evaluation; with DuckDB's default inlining
@@ -1306,18 +1306,18 @@ def _kcore_sql(k: int = 2, rounds: int = 4) -> str:
                   UNION SELECT id_b, id_a FROM pairs)""",
     ]
     selects = []
-    for i in range(rounds + 1):
+    for i in range(5):
         selects.append(
             f"""SELECT CAST({i} AS INTEGER) AS round,
                        COUNT(DISTINCT src) AS n_nodes,
                        COUNT(*) FILTER (WHERE src < dst) AS n_edges
                 FROM e{i}"""
         )
-        if i == rounds:
+        if i == 4:
             break
         parts.append(
             f"""k{i + 1} AS MATERIALIZED (SELECT src FROM e{i} GROUP BY src
-                             HAVING COUNT(*) >= {k})"""
+                             HAVING COUNT(*) >= 2)"""
         )
         parts.append(
             f"""e{i + 1} AS MATERIALIZED (SELECT e.src, e.dst FROM e{i} e

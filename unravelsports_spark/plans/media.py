@@ -150,8 +150,6 @@ def mm_image_dhash_dedup(spark, sf_dir):
     docs = widen_narrow_scan(read_table(spark, sf_dir, "documents").select("doc_id"))
 
     def synth(batches):
-        import pandas as pd
-
         for pdf in batches:
             pdf = pdf.copy()
             payloads = []

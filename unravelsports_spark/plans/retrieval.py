@@ -377,7 +377,7 @@ def _lloyd_rounds_sql(dims: str, cb0: str, n_rounds: int, prefix: str) -> tuple[
     return ",".join(rounds), cb
 
 
-def _pq_sql(m_sub: int = 4, k: int = 16, n_rounds: int = 2, sub_dim: int = 16, top: int = 20) -> str:
+def _pq_sql() -> str:
     """DuckDB oracle for s_ann_pq: unrolls the identical integer Lloyd
     rounds as CTEs (per-dim row formulation — algebraically the same exact
     int64 math as the Spark array-fold projections)."""
@@ -385,19 +385,19 @@ def _pq_sql(m_sub: int = 4, k: int = 16, n_rounds: int = 2, sub_dim: int = 16, t
     def assign(cb: str, out: str) -> str:
         return _assign_sql("dims", cb, out)
 
-    rounds_sql, cb = _lloyd_rounds_sql("dims", "cb0", n_rounds, "")
+    rounds_sql, cb = _lloyd_rounds_sql("dims", "cb0", 2, "")
     code_cols = ", ".join(
-        f"MAX(CASE WHEN m = {m} THEN cluster END) AS code{m}" for m in range(m_sub)
+        f"MAX(CASE WHEN m = {m} THEN cluster END) AS code{m}" for m in range(4)
     )
     return f"""
     WITH iq AS (
       SELECT vec_id, u.i - 1 AS pos,
              CAST(FLOOR(CAST(embedding[u.i] AS DOUBLE) * {float(Q)!r}) AS BIGINT) AS v
       FROM embeddings, unnest(range(1, len(embedding) + 1)) AS u(i)),
-    dims AS (SELECT vec_id, pos // {sub_dim} AS m, pos % {sub_dim} AS d, v FROM iq),
+    dims AS (SELECT vec_id, pos // 16 AS m, pos % 16 AS d, v FROM iq),
     seeds AS (
       SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster, vec_id
-      FROM (SELECT DISTINCT vec_id FROM iq ORDER BY vec_id LIMIT {k})),
+      FROM (SELECT DISTINCT vec_id FROM iq ORDER BY vec_id LIMIT 16)),
     cb0 AS (
       SELECT d.m, s.cluster, d.d, d.v AS c FROM seeds s JOIN dims d USING (vec_id)),
     {rounds_sql},
@@ -414,11 +414,11 @@ def _pq_sql(m_sub: int = 4, k: int = 16, n_rounds: int = 2, sub_dim: int = 16, t
       SELECT codes.vec_id, CAST(SUM(lut.qd) AS BIGINT) AS adc_dist
       FROM codes JOIN lut ON codes.m = lut.m AND codes.cluster = lut.cluster
       GROUP BY codes.vec_id)
-    SELECT p.vec_id, {", ".join(f"CAST(p.code{m} AS BIGINT) AS code{m}" for m in range(m_sub))},
+    SELECT p.vec_id, {", ".join(f"CAST(p.code{m} AS BIGINT) AS code{m}" for m in range(4))},
            a.adc_dist
     FROM pivoted p JOIN adc a USING (vec_id)
     ORDER BY a.adc_dist, p.vec_id
-    LIMIT {top}
+    LIMIT 20
     """
 
 
@@ -438,31 +438,22 @@ def s_ann_pq(spark, sf_dir):
     return pq_adc_topk(emb, codebook, query_int, top=20)
 
 
-def _ivfpq_sql(
-    kc: int = 8,
-    nc_rounds: int = 1,
-    m_sub: int = 4,
-    k: int = 16,
-    n_rounds: int = 2,
-    sub_dim: int = 16,
-    n_probe: int = 2,
-    top: int = 10,
-) -> str:
+def _ivfpq_sql() -> str:
     """DuckDB oracle for s_ann_ivfpq: coarse Lloyd (1 subspace over the full
     vector) for cell assignment + probe selection, then the PQ rounds, then
     ADC over candidates in the probed cells only."""
-    coarse_rounds, ccb = _lloyd_rounds_sql("cdims", "ccb0", nc_rounds, "c")
-    pq_rounds, cb = _lloyd_rounds_sql("dims", "cb0", n_rounds, "")
+    coarse_rounds, ccb = _lloyd_rounds_sql("cdims", "ccb0", 1, "c")
+    pq_rounds, cb = _lloyd_rounds_sql("dims", "cb0", 2, "")
     return f"""
     WITH iq AS (
       SELECT vec_id, u.i - 1 AS pos,
              CAST(FLOOR(CAST(embedding[u.i] AS DOUBLE) * {float(Q)!r}) AS BIGINT) AS v
       FROM embeddings, unnest(range(1, len(embedding) + 1)) AS u(i)),
-    dims AS (SELECT vec_id, pos // {sub_dim} AS m, pos % {sub_dim} AS d, v FROM iq),
+    dims AS (SELECT vec_id, pos // 16 AS m, pos % 16 AS d, v FROM iq),
     cdims AS (SELECT vec_id, 0 AS m, pos AS d, v FROM iq),
     cseeds AS (
       SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster, vec_id
-      FROM (SELECT DISTINCT vec_id FROM iq ORDER BY vec_id LIMIT {kc})),
+      FROM (SELECT DISTINCT vec_id FROM iq ORDER BY vec_id LIMIT 8)),
     ccb0 AS (
       SELECT d.m, s.cluster, d.d, d.v AS c FROM cseeds s JOIN cdims d USING (vec_id)),
     {coarse_rounds},
@@ -473,10 +464,10 @@ def _ivfpq_sql(
         SELECT c.cluster,
                ROW_NUMBER() OVER (ORDER BY SUM((q.v - c.c) * (q.v - c.c)), c.cluster) AS rk
         FROM {ccb} c JOIN q ON c.d = q.d
-        GROUP BY c.cluster) WHERE rk <= {n_probe}),
+        GROUP BY c.cluster) WHERE rk <= 2),
     seeds AS (
       SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster, vec_id
-      FROM (SELECT DISTINCT vec_id FROM iq ORDER BY vec_id LIMIT {k})),
+      FROM (SELECT DISTINCT vec_id FROM iq ORDER BY vec_id LIMIT 16)),
     cb0 AS (
       SELECT d.m, s.cluster, d.d, d.v AS c FROM seeds s JOIN dims d USING (vec_id)),
     {pq_rounds},
@@ -495,35 +486,26 @@ def _ivfpq_sql(
     SELECT a.vec_id, CAST(cl.cluster AS BIGINT) AS cell, a.adc_dist
     FROM adc a JOIN cells cl ON a.vec_id = cl.vec_id
     ORDER BY a.adc_dist, a.vec_id
-    LIMIT {top}
+    LIMIT 10
     """
 
 
-def _ivfpq_residual_sql(
-    kc: int = 8,
-    nc_rounds: int = 1,
-    m_sub: int = 4,
-    k: int = 16,
-    n_rounds: int = 2,
-    sub_dim: int = 16,
-    n_probe: int = 2,
-    top: int = 10,
-) -> str:
+def _ivfpq_residual_sql() -> str:
     """DuckDB oracle for s_ann_ivfpq_residual: the FAISS IVFPQ recipe —
     PQ codebook trained on coarse-cell residuals; ADC uses the query's
     per-cell residual."""
-    coarse_rounds, ccb = _lloyd_rounds_sql("cdims", "ccb0", nc_rounds, "c")
-    pq_rounds, rcb = _lloyd_rounds_sql("rdims", "rcb0", n_rounds, "r")
+    coarse_rounds, ccb = _lloyd_rounds_sql("cdims", "ccb0", 1, "c")
+    pq_rounds, rcb = _lloyd_rounds_sql("rdims", "rcb0", 2, "r")
     return f"""
     WITH iq AS (
       SELECT vec_id, u.i - 1 AS pos,
              CAST(FLOOR(CAST(embedding[u.i] AS DOUBLE) * {float(Q)!r}) AS BIGINT) AS v
       FROM embeddings, unnest(range(1, len(embedding) + 1)) AS u(i)),
-    dims AS (SELECT vec_id, pos // {sub_dim} AS m, pos % {sub_dim} AS d, v FROM iq),
+    dims AS (SELECT vec_id, pos // 16 AS m, pos % 16 AS d, v FROM iq),
     cdims AS (SELECT vec_id, 0 AS m, pos AS d, v FROM iq),
     cseeds AS (
       SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster, vec_id
-      FROM (SELECT DISTINCT vec_id FROM iq ORDER BY vec_id LIMIT {kc})),
+      FROM (SELECT DISTINCT vec_id FROM iq ORDER BY vec_id LIMIT 8)),
     ccb0 AS (
       SELECT d.m, s.cluster, d.d, d.v AS c FROM cseeds s JOIN cdims d USING (vec_id)),
     {coarse_rounds},
@@ -534,21 +516,21 @@ def _ivfpq_residual_sql(
         SELECT c.cluster,
                ROW_NUMBER() OVER (ORDER BY SUM((q.v - c.c) * (q.v - c.c)), c.cluster) AS rk
         FROM {ccb} c JOIN q ON c.d = q.d
-        GROUP BY c.cluster) WHERE rk <= {n_probe}),
+        GROUP BY c.cluster) WHERE rk <= 2),
     rdims AS (
       SELECT d.vec_id, d.m, d.d, d.v - cc.c AS v
       FROM dims d
       JOIN cells cl ON d.vec_id = cl.vec_id
-      JOIN {ccb} cc ON cc.cluster = cl.cluster AND cc.d = d.m * {sub_dim} + d.d),
+      JOIN {ccb} cc ON cc.cluster = cl.cluster AND cc.d = d.m * 16 + d.d),
     rseeds AS (
       SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster, vec_id
-      FROM (SELECT DISTINCT vec_id FROM rdims ORDER BY vec_id LIMIT {k})),
+      FROM (SELECT DISTINCT vec_id FROM rdims ORDER BY vec_id LIMIT 16)),
     rcb0 AS (
       SELECT d.m, s.cluster, d.d, d.v AS c FROM rseeds s JOIN rdims d USING (vec_id)),
     {pq_rounds},
     {_assign_sql("rdims", rcb, "rcodes").strip()},
     qres AS (
-      SELECT cc.cluster AS cell, q.d // {sub_dim} AS m, q.d % {sub_dim} AS d,
+      SELECT cc.cluster AS cell, q.d // 16 AS m, q.d % 16 AS d,
              q.v - cc.c AS v
       FROM q JOIN {ccb} cc ON cc.d = q.d),
     lut AS (
@@ -565,7 +547,7 @@ def _ivfpq_residual_sql(
       GROUP BY 1, 2)
     SELECT vec_id, cell, adc_dist FROM adc
     ORDER BY adc_dist, vec_id
-    LIMIT {top}
+    LIMIT 10
     """
 
 
@@ -624,11 +606,11 @@ _KM_K = 8
 _KM_ROUNDS = 3
 
 
-def _kmeans_fit_sql(k: int = _KM_K, n_rounds: int = _KM_ROUNDS) -> str:
+def _kmeans_fit_sql() -> str:
     """DuckDB oracle: CTE-unrolled integer Lloyd (single subspace = plain
     k-means over the whole vector), then the final assignment's cluster
     profile. Same _assign/_update CTE builders as the PQ oracles."""
-    rounds_sql, cb = _lloyd_rounds_sql("dims", "cb0", n_rounds, "")
+    rounds_sql, cb = _lloyd_rounds_sql("dims", "cb0", _KM_ROUNDS, "")
     return f"""
     WITH iq AS (
       SELECT vec_id, u.i - 1 AS pos,
@@ -637,7 +619,7 @@ def _kmeans_fit_sql(k: int = _KM_K, n_rounds: int = _KM_ROUNDS) -> str:
     dims AS (SELECT vec_id, 0 AS m, pos AS d, v FROM iq),
     seeds AS (
       SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS cluster, vec_id
-      FROM (SELECT DISTINCT vec_id FROM iq ORDER BY vec_id LIMIT {k})),
+      FROM (SELECT DISTINCT vec_id FROM iq ORDER BY vec_id LIMIT {_KM_K})),
     cb0 AS (
       SELECT d.m, s.cluster, d.d, d.v AS c FROM seeds s JOIN dims d USING (vec_id)),
     {rounds_sql},

@@ -473,12 +473,11 @@ def _corrupt_row(bad: bytes) -> dict:
     }
 
 
-def write_warc(
-    df: DataFrame,
-    path: str,
-    gzip_records: bool = False,
-    date: str = "2026-01-01T00:00:00Z",
-) -> DataFrame:
+#: the WARC-Date of a record whose ``warc_date`` is absent or NULL
+DEFAULT_WARC_DATE = "2026-01-01T00:00:00Z"
+
+
+def write_warc(df: DataFrame, path: str, gzip_records: bool = False) -> DataFrame:
     """Distributed sharded WARC export. ``df`` columns: ``target_uri``
     (string, nullable — a NULL simply omits the WARC-Target-URI header),
     ``payload`` (binary, nullable — NULL writes an empty-payload record;
@@ -502,11 +501,11 @@ def write_warc(
     path leaves stale shards (start from a fresh dir, like every
     df.write mode="overwrite" user expects).
 
-    ``date`` is the fixed default WARC-Date; with ``gzip_records`` the
-    members are mtime-0. Byte-identical re-exports require the caller to
-    supply a ``record_id`` column (pass 4 #5) — without one, fresh uuids
-    are generated per attempt, so shards are structurally identical but
-    not byte-identical across runs."""
+    :data:`DEFAULT_WARC_DATE` is the fixed default WARC-Date; with
+    ``gzip_records`` the members are mtime-0. Byte-identical re-exports
+    require the caller to supply a ``record_id`` column (pass 4 #5) —
+    without one, fresh uuids are generated per attempt, so shards are
+    structurally identical but not byte-identical across runs."""
     import pandas as pd
 
     cols = df.columns
@@ -526,7 +525,11 @@ def write_warc(
                 if "record_id" in cols
                 else [f"<urn:uuid:{uuid.uuid4()}>" for _ in range(len(pdf))]
             )
-            wd = pdf["warc_date"].tolist() if "warc_date" in cols else [date] * len(pdf)
+            wd = (
+                pdf["warc_date"].tolist()
+                if "warc_date" in cols
+                else [DEFAULT_WARC_DATE] * len(pdf)
+            )
             ct = (
                 pdf["content_type"].tolist()
                 if "content_type" in cols
@@ -548,7 +551,7 @@ def write_warc(
                     "record_id": (
                         f"<urn:uuid:{uuid.uuid4()}>" if isnull(r) else str(r)
                     ),
-                    "warc_date": date if isnull(w) else str(w),
+                    "warc_date": DEFAULT_WARC_DATE if isnull(w) else str(w),
                     "target_uri": None if isnull(u) else str(u),
                     "content_type": "text/html" if isnull(c) else str(c),
                     "payload": b"" if isnull(p) else bytes(p),
@@ -599,7 +602,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def warc_to_documents(df: DataFrame, invalid: str = "replace") -> DataFrame:
+def warc_to_documents(df: DataFrame) -> DataFrame:
     """Clean WARC rows → the (source, url, text) document shape the text
     stages consume: utf-8 decoded payloads of clean ``response`` records,
     ``source`` = the lowercased URI host via the SAME
@@ -608,36 +611,24 @@ def warc_to_documents(df: DataFrame, invalid: str = "replace") -> DataFrame:
     second hand-rolled host regex had already diverged on scheme case,
     host case, and ``?#`` handling).
 
-    ``invalid`` governs non-UTF-8 payloads (ADVICE r12 #1: the original
+    Non-UTF-8 payloads (ADVICE r12 #1: the original
     ``F.decode(payload, 'UTF-8')`` threw MALFORMED_CHARACTER_CODING under
     Spark 4 ANSI and aborted the whole job on the FIRST latin-1 page or
     mislabeled binary response — near-certain on real crawl data, and a
-    violation of this module's never-crash quarantine contract):
-
-    - ``"replace"`` (default) — malformed byte sequences degrade to U+FFFD
-      replacement characters (``make_valid_utf8``; the Python
-      ``errors="replace"`` semantic, JVM-side). Every clean record stays a
-      document; mojibake is downstream quality-filtering's job (the
-      t_quality/langid stages already score it out).
-    - ``"skip"`` — drop records whose payload is not valid UTF-8
-      (``is_valid_utf8`` gate). Use when a lost latin-1 minority is
-      preferable to replacement-char noise.
-
-    The binary→string cast reinterprets bytes without validation (unlike
-    ``decode``), so both modes are pure Catalyst and never throw."""
+    violation of this module's never-crash quarantine contract) degrade
+    to U+FFFD replacement characters (``make_valid_utf8``; the Python
+    ``errors="replace"`` semantic, JVM-side). Every clean record stays a
+    document; mojibake is downstream quality-filtering's job (the
+    t_quality/langid stages already score it out). The binary→string cast
+    reinterprets bytes without validation (unlike ``decode``), so the
+    decode is pure Catalyst and never throws."""
     from ..operators.filtering import with_url_parts
 
-    if invalid not in ("replace", "skip"):
-        raise ValueError(f"invalid= must be 'replace' or 'skip', got {invalid!r}")
-    raw = F.col("payload").cast("string")
     clean = df.where(
         F.col("_corrupt_record").isNull() & (F.col("rec_type") == "response")
-    )
-    if invalid == "skip":
-        clean = clean.where(F.is_valid_utf8(raw))
-    clean = clean.select(
+    ).select(
         F.col("target_uri").alias("url"),
-        F.make_valid_utf8(raw).alias("text"),
+        F.make_valid_utf8(F.col("payload").cast("string")).alias("text"),
     )
     return with_url_parts(clean, "url").select(
         F.col("domain").alias("source"), "url", "text"

@@ -87,13 +87,7 @@ def retention_cohorts(ud: DataFrame) -> DataFrame:
     )
 
 
-def streaming_user_days(
-    stream_df,
-    ledger_dir: str,
-    checkpoint_dir: str,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-):
+def streaming_user_days(stream_df, ledger_dir: str, checkpoint_dir: str):
     """Maintain the (user_id, day) activity SET incrementally over an event
     stream: each micro-batch appends its distinct user-days to a durable
     parquet ledger keyed by ``batch_id`` (overwrite semantics — a replayed
@@ -105,8 +99,7 @@ def streaming_user_days(
 
     def _process(batch_df, batch_id: int):
         out = batch_df.select(
-            F.col(user_col).alias("user_id"),
-            F.date_trunc("day", F.col(ts_col)).cast("date").alias("day"),
+            "user_id", F.date_trunc("day", F.col("ts")).cast("date").alias("day")
         ).distinct()
         out.write.mode("overwrite").parquet(f"{ledger_dir}/batch_id={batch_id}")
 
@@ -117,10 +110,8 @@ def streaming_user_days(
     )
 
 
-def rolling_active_users_from_ledger(
-    spark, ledger_dir: str, window_days: int = 7
-) -> DataFrame:
-    """(day_ms, active_users_Nd) from the streaming user-day ledger — the
+def rolling_active_users_from_ledger(spark, ledger_dir: str) -> DataFrame:
+    """(day_ms, active_users_7d) from the streaming user-day ledger — the
     incremental twin of the certified w12 batch query: distinct across the
     batch partitions (a user-day seen in several batches collapses), then
     the shared rolling_active_users rewrite."""
@@ -129,7 +120,7 @@ def rolling_active_users_from_ledger(
         .select("user_id", "day")
         .distinct()
     )
-    return rolling_active_users(ud, window_days=window_days)
+    return rolling_active_users(ud, window_days=7)
 
 
 def retention_cohorts_from_ledger(spark, ledger_dir: str) -> DataFrame:
